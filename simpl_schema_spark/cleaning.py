@@ -54,7 +54,7 @@ from .schema.types import (
     String,
     TypeToken,
 )
-from .compiler.compile import _type_matches, _FRACTIONAL_TYPES, _NUMERIC_TYPES
+from .compiler.rules import type_matches, FRACTIONAL_TYPES, NUMERIC_TYPES
 
 __all__ = ["clean", "spark_auto_value", "js_trim", "JS_WS_CLASS", "js_number_to_string"]
 
@@ -76,7 +76,7 @@ def js_trim(col: Column) -> Column:
 
 def js_number_to_string(col: Column, dtype: T.DataType) -> Column:
     """JS Number#toString: whole doubles render without '.0'."""
-    if isinstance(dtype, _FRACTIONAL_TYPES):
+    if isinstance(dtype, FRACTIONAL_TYPES):
         return F.when(
             (~F.isnan(col))
             & (col == F.floor(col))
@@ -294,7 +294,7 @@ class _Cleaner:
         out_dtype = dtype
         if self.opts["auto_convert"]:
             type_ok = any(
-                isinstance(t, TypeToken) and _type_matches(t, dtype)
+                isinstance(t, TypeToken) and type_matches(t, dtype)
                 for t in types
                 if t is not None and not isinstance(t, SimpleSchema)
             )
@@ -355,7 +355,7 @@ def _convert(
                 F.try_to_timestamp(value, F.lit("yyyy-MM-dd'T'HH:mm:ssXXX")),
             )
             return ts, T.TimestampType()
-        if isinstance(dtype, _NUMERIC_TYPES):
+        if isinstance(dtype, NUMERIC_TYPES):
             # epoch milliseconds (convertToProperType.ts:46)
             return F.timestamp_millis(value.cast("long")), T.TimestampType()
         return None
@@ -368,8 +368,8 @@ def _convert(
                 .when(lowered == "false", F.lit(False))
             )
             return converted, T.BooleanType()
-        if isinstance(dtype, _NUMERIC_TYPES):
-            if isinstance(dtype, _FRACTIONAL_TYPES):
+        if isinstance(dtype, NUMERIC_TYPES):
+            if isinstance(dtype, FRACTIONAL_TYPES):
                 return (
                     F.when(~F.isnan(value), value != 0),
                     T.BooleanType(),

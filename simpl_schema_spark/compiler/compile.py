@@ -1,4 +1,4 @@
-"""Schema → Spark expression compiler.
+"""Schema → Spark expression compiler for typed DataFrames.
 
 Compiles a :class:`~simpl_schema_spark.schema.SimpleSchema` against a concrete
 DataFrame schema into ONE Catalyst projection producing an
@@ -8,6 +8,12 @@ the entire validator chain — required decision table, per-type checks
 recursion with per-index violation naming — is pure Spark SQL expressions
 (higher-order functions for arrays), so whole-stage codegen fuses it with the
 scan.  Opaque Python ``custom`` validators ride Arrow-vectorized pandas UDFs.
+
+This module owns the traversal (keys, objects, arrays, required, custom
+validators).  The per-value decision tables — type, string/number/date/array
+rules, allowedValues, oneOf — live in :mod:`.rules`, written once over a
+typed-column view (used here) and a JSON-token view (used by JSON documents
+and modifier rows).
 
 Semantics parity map (reference = longshotlabs/simpl-schema):
 
@@ -20,11 +26,9 @@ Semantics parity map (reference = longshotlabs/simpl-schema):
   object fire; of a missing *optional* object don't):
   ``src/validation/validateField.ts:313-321`` → the ``opt_gate`` conjunction
   of ``isNotNull`` over *optional* ancestors only.
-- type checks: ``src/validation/typeValidator/*.ts`` (string max-before-min
-  order, NaN rejection, ``Number.isInteger(5.0) === true``, exclusive bounds,
-  date payload as YYYY-MM-DD, minCount/maxCount).
-- oneOf: first matching alternative wins, errors reported from the LAST
-  alternative: ``src/validation/validateField.ts:171-256`` → CASE WHEN.
+- type checks and oneOf: :mod:`.rules` (``src/validation/typeValidator/*.ts``,
+  ``src/validation/validateField.ts:171-256``); a column whose dtype does not
+  conform fails at compile time, one ``expectedType`` per non-null value.
 - ``SimpleSchema.Any`` / ``blackbox: true`` subtrees: no rules compiled
   (``src/validation/validateField.ts:112-113,174-175``).
 - per-item array violations named with concrete indexes (``friends.0.name``):
@@ -34,100 +38,20 @@ Semantics parity map (reference = longshotlabs/simpl-schema):
 
 from __future__ import annotations
 
-import datetime
 import inspect
 from dataclasses import dataclass, field
-from functools import reduce
 from typing import Any, Callable, Optional
 
 from pyspark.sql import Column, functions as F, types as T
 
-from ..errors import ErrorTypes, VIOLATION_FIELDS, VIOLATION_SCHEMA
+from ..errors import ErrorTypes, VIOLATION_SCHEMA
 from ..schema.definition import make_key_generic
 from ..schema.schema import SimpleSchema
-from ..schema.types import (
-    AnyType,
-    ArrayType,
-    Binary,
-    Boolean,
-    DateType,
-    Integer,
-    Number,
-    ObjectType,
-    String,
-    TypeToken,
-)
-from .regex import js_regex_repr, to_java_regex
+from ..schema.types import AnyType, ArrayType, ObjectType
+from . import rules
+from .rules import ColumnView, check, violation
 
-__all__ = ["RuleCompiler", "compile_violations", "spark_rule"]
-
-# Plan-construction cost note (guide §1.2 step 2 applied to the DRIVER):
-# schema compilation issues thousands of py4j round-trips (~0.14 ms each)
-# building Column fragments; the fragments below are identical every time
-# (unbound literal expressions — immutable Catalyst trees, safe to share
-# across parents and across queries), so they are built once per process.
-# Data-size-independent, but at bench scale construction was ~60% of the
-# validate-family wall (measured 1.0s construct vs 0.6s run at sf0.1).
-from functools import lru_cache
-
-
-@lru_cache(maxsize=None)
-def _null_str() -> Column:
-    return F.lit(None).cast("string")
-
-
-@lru_cache(maxsize=None)
-def _null_str_alias(fname: str) -> Column:
-    return _null_str().alias(fname)
-
-
-@lru_cache(maxsize=None)
-def _errtype_lit(errtype: str) -> Column:
-    return F.lit(errtype).cast("string").alias("type")
-
-
-@lru_cache(maxsize=None)
-def _null_violation() -> Column:
-    return F.lit(None).cast(VIOLATION_SCHEMA)
-
-
-def violation(
-    name: Column,
-    errtype: "Column | str",
-    value: Optional[Column] = None,
-    dataType: "Column | str | None" = None,
-    min: "Column | str | None" = None,  # noqa: A002
-    max: "Column | str | None" = None,  # noqa: A002
-    regExp: "Column | str | None" = None,
-    minCount: "Column | str | None" = None,
-    maxCount: "Column | str | None" = None,
-) -> Column:
-    """Build a violation struct with canonical field order/types."""
-    extras = {
-        "dataType": dataType,
-        "min": min,
-        "max": max,
-        "regExp": regExp,
-        "minCount": minCount,
-        "maxCount": maxCount,
-    }
-    if value is None:
-        value = _null_str()
-    cols = [
-        name.cast("string").alias("name"),
-        _errtype_lit(errtype)
-        if isinstance(errtype, str)
-        else errtype.cast("string").alias("type"),
-        value.cast("string").alias("value"),
-    ]
-    for fname, v in extras.items():
-        if v is None:
-            cols.append(_null_str_alias(fname))
-        elif isinstance(v, Column):
-            cols.append(v.cast("string").alias(fname))
-        else:
-            cols.append(F.lit(str(v)).alias(fname))
-    return F.struct(*cols)
+__all__ = ["RuleCompiler", "compile_violations", "spark_rule", "violation"]
 
 
 def spark_rule(fn: Callable) -> Callable:
@@ -142,7 +66,11 @@ def spark_rule(fn: Callable) -> Callable:
     return fn
 
 
-def _wants_context(fn: Callable) -> bool:
+def is_spark_rule(fn: Callable) -> bool:
+    return getattr(fn, "_is_spark_rule", False)
+
+
+def wants_context(fn: Callable) -> bool:
     """True if a Python custom validator takes a (value, ctx) pair.
 
     One-parameter validators keep the value-only fast path; two-parameter
@@ -215,64 +143,6 @@ class _PandasRule:
     between_subpaths: list[str] = field(default_factory=list)
 
 
-_NUMERIC_TYPES = (
-    T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-    T.FloatType, T.DoubleType, T.DecimalType,
-)
-_INTEGRAL_TYPES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-_FRACTIONAL_TYPES = (T.FloatType, T.DoubleType)
-
-
-def _type_matches(token: TypeToken, dtype: T.DataType) -> bool:
-    if token is AnyType:
-        return True
-    if token is String:
-        return isinstance(dtype, T.StringType)
-    if token in (Number, Integer):
-        return isinstance(dtype, _NUMERIC_TYPES)
-    if token is Boolean:
-        return isinstance(dtype, T.BooleanType)
-    if token is DateType:
-        return isinstance(dtype, (T.TimestampType, T.DateType, T.TimestampNTZType))
-    if token is ArrayType:
-        return isinstance(dtype, T.ArrayType)
-    if token is ObjectType:
-        return isinstance(dtype, T.StructType)
-    if token is Binary:
-        return isinstance(dtype, T.BinaryType)
-    return False
-
-
-def _token_name(token: Any) -> str:
-    if isinstance(token, SimpleSchema):
-        return "Object"
-    if isinstance(token, TypeToken):
-        if token is Binary:
-            return "Uint8Array"  # parity: reference uses the ctor name
-        return token.name
-    return str(token)
-
-
-def _date_str(value: Any) -> str:
-    """YYYY-MM-DD payload (reference dateToDateString, utility/index.ts:11-17)."""
-    if isinstance(value, datetime.datetime):
-        value = value.astimezone(datetime.timezone.utc) if value.tzinfo else value
-        return value.strftime("%Y-%m-%d")
-    if isinstance(value, datetime.date):
-        return value.strftime("%Y-%m-%d")
-    return str(value)
-
-
-def _stringify(value: Column, dtype: T.DataType) -> Column:
-    if isinstance(dtype, T.StringType):
-        return value
-    if isinstance(dtype, T.BinaryType):
-        return F.base64(value)
-    if isinstance(dtype, (T.ArrayType, T.StructType, T.MapType)):
-        return F.to_json(value)
-    return value.cast("string")
-
-
 class RuleCompiler:
     """Compile one SimpleSchema against one DataFrame schema."""
 
@@ -284,14 +154,12 @@ class RuleCompiler:
         keys: Optional[list[str]] = None,
         ignore: Optional[list[str]] = None,
         extra_key_policy: str = "violation",  # violation | ignore | error
-        modifier_op: Optional[str] = None,
     ) -> None:
         self.schema = schema
         self.df_schema = df_schema
         self.keys = [make_key_generic(k) for k in keys] if keys else None
         self.ignore = list(ignore or [])
         self.extra_key_policy = extra_key_policy
-        self.modifier_op = modifier_op
         self.merged = schema.merged_schema()
         self.pandas_rules: list[_PandasRule] = []
         self._pandas_counter = 0
@@ -413,28 +281,15 @@ class RuleCompiler:
         opt_gate: Optional[Column],
         in_lambda: bool,
     ) -> list[Column]:
-        definition = self.merged[generic]
-        if generic in self.schema._blackbox_keys or self.schema.key_is_in_blackbox(
-            generic
-        ):
-            # blackbox/Any: the key itself may still have required/type rules
-            # unless its type IS Any; content below is never validated
-            pass
-
-        resolved = self.schema.get_definition(generic) or {
-            k: v for k, v in definition.items() if k != "type"
-        }
-        optional = resolved.get("optional", definition.get("optional", False))
-        if callable(optional):
-            optional = bool(optional())
-        alternatives = self._resolved_alternatives(generic)
+        alternatives = self.schema.resolved_alternatives(generic)
+        optional = rules.is_optional(alternatives)
+        view = ColumnView(value, dtype)
 
         arrays: list[Column] = []
 
         if self._emit_rules_for(generic):
             key_err = self._key_error(
-                generic, value, name, dtype, alternatives, optional, opt_gate,
-                in_lambda,
+                generic, view, name, alternatives, optional, opt_gate, in_lambda
             )
             if key_err is not None:
                 arrays.append(
@@ -512,27 +367,17 @@ class RuleCompiler:
 
     # ------------------------------------------------------------ key rules
 
-    def _resolved_alternatives(self, generic: str) -> list[dict]:
-        definition = self.merged[generic]
-        resolved = self.schema.get_definition(generic)
-        if resolved is None:
-            # subschema-contributed key: resolve manually
-            outer = {k: v for k, v in definition.items() if k != "type"}
-            return [{**outer, **alt} for alt in definition["type"].definitions]
-        outer = {k: v for k, v in resolved.items() if k != "type"}
-        return [{**outer, **alt} for alt in resolved["type"]]
-
     def _key_error(
         self,
         generic: str,
-        value: Column,
+        view: ColumnView,
         name: Column,
-        dtype: T.DataType,
         alternatives: list[dict],
         optional: bool,
         opt_gate: Optional[Column],
         in_lambda: bool,
     ) -> Optional[Column]:
+        value = view.value
         chain: list[Column] = []
 
         # V1 required (requiredValidator.ts:13-61, doc mode: null==missing)
@@ -540,111 +385,42 @@ class RuleCompiler:
             cond = value.isNull()
             if opt_gate is not None:
                 cond = cond & opt_gate
-            if self.modifier_op in ("$unset", "$rename"):
-                cond = F.lit(True) if opt_gate is None else opt_gate
-            chain.append(
-                F.when(cond, violation(name, ErrorTypes.REQUIRED)).otherwise(
-                    _null_violation()
-                )
-            )
+            chain.append(check(cond, violation(name, ErrorTypes.REQUIRED)))
+
+        # ordered validator tail of one alternative: custom, then
+        # schema-level, then global validators (validateField.ts:192-226 /
+        # SimpleSchema.ts:825-827, 1059-1061)
+        def customs(alt: dict) -> list[Column]:
+            custom = alt.get("custom")
+            tail = ([custom] if custom is not None else []) + self.schema.all_validators()
+            return [
+                self._custom_error(generic, view, name, alt, fn, in_lambda)
+                for fn in tail
+            ]
 
         # value checks only when a value is present; custom validators run on
         # EVERY key visit, set or not (reference validateField.ts:192-226 —
         # typeValidator/allowedValues skip internally when !isSet, custom
         # fns receive isSet=false; conditionally-required depends on this)
-        one_of = self._one_of_error(generic, value, name, dtype, alternatives, in_lambda)
-        custom_only = self._one_of_error(
-            generic, value, name, dtype, alternatives, in_lambda, custom_only=True
+        one_of = rules.one_of(
+            alternatives, lambda alt: rules.value_rules(view, name, alt) + customs(alt)
         )
+        custom_only = rules.one_of(alternatives, customs)
         if one_of is not None:
             chain.append(
                 F.when(value.isNotNull(), one_of).otherwise(
-                    custom_only if custom_only is not None else _null_violation()
+                    custom_only if custom_only is not None else rules.null_violation()
                 )
             )
         elif custom_only is not None:
-            chain.append(
-                F.when(value.isNull(), custom_only).otherwise(_null_violation())
-            )
+            chain.append(check(value.isNull(), custom_only))
 
-        if not chain:
-            return None
-        return chain[0] if len(chain) == 1 else F.coalesce(*chain)
-
-    def _one_of_error(
-        self,
-        generic: str,
-        value: Column,
-        name: Column,
-        dtype: T.DataType,
-        alternatives: list[dict],
-        in_lambda: bool,
-        custom_only: bool = False,
-    ) -> Optional[Column]:
-        if any(a.get("type") is AnyType for a in alternatives):
-            return None  # Any short-circuits valid (validateField.ts:174-175)
-
-        errs = [
-            self._alternative_error(
-                generic, value, name, dtype, alt, in_lambda, custom_only
-            )
-            for alt in alternatives
-        ]
-        errs = [e for e in errs if e is not None]
-        if not errs:
-            return None
-        if len(errs) == 1:
-            return errs[0]
-        any_valid = reduce(lambda a, b: a | b, [e.isNull() for e in errs])
-        return F.when(any_valid, _null_violation()).otherwise(errs[-1])
-
-    def _alternative_error(
-        self,
-        generic: str,
-        value: Column,
-        name: Column,
-        dtype: T.DataType,
-        alt: dict,
-        in_lambda: bool,
-        custom_only: bool = False,
-    ) -> Optional[Column]:
-        chain: list[Column] = []
-        type_err = None if custom_only else self._type_error(value, name, dtype, alt)
-        if type_err is not None:
-            chain.append(type_err)
-
-        allowed = None if custom_only else alt.get("allowedValues")
-        if allowed is not None:
-            vals = sorted(allowed) if isinstance(allowed, set) else list(allowed)
-            chain.append(
-                F.when(
-                    ~value.isin(*vals),
-                    violation(
-                        name,
-                        ErrorTypes.VALUE_NOT_ALLOWED,
-                        value=_stringify(value, dtype),
-                    ),
-                ).otherwise(_null_violation())
-            )
-
-        # ordered validator tail: custom, then schema-level, then global
-        # validators (validateField.ts:192-226 / SimpleSchema.ts:825-827,
-        # 1059-1061)
-        custom = alt.get("custom")
-        tail = ([custom] if custom is not None else []) + self.schema.all_validators()
-        for fn in tail:
-            chain.append(
-                self._custom_error(generic, value, name, dtype, alt, fn, in_lambda)
-            )
-
-        if not chain:
-            return None
-        return chain[0] if len(chain) == 1 else F.coalesce(*chain)
+        return rules.first(chain)
 
     def _context_cols_for(self, custom: Callable) -> list[str]:
         """Columns shipped as the cross-field context struct for a
         two-argument Python validator; empty for value-only fns."""
-        if not _wants_context(custom):
+        if not wants_context(custom):
             return []
         declared = getattr(custom, "context_fields", None)
         if declared:
@@ -656,304 +432,71 @@ class RuleCompiler:
     def _custom_error(
         self,
         generic: str,
-        value: Column,
+        view: ColumnView,
         name: Column,
-        dtype: T.DataType,
         alt: dict,
         custom: Callable,
         in_lambda: bool,
     ) -> Column:
-        if getattr(custom, "_is_spark_rule", False):
-            ctx = RuleContext(key=generic, name=name, definition=alt)
-            err_type = custom(value, ctx)
-            return F.when(
-                err_type.isNotNull(),
-                violation(name, err_type, value=_stringify(value, dtype)),
-            ).otherwise(_null_violation())
+        if is_spark_rule(custom):
+            err_type = custom(view.value, RuleContext(key=generic, name=name, definition=alt))
+        else:
+            err_type = F.col(self._pandas_rule(generic, view.dtype, custom, in_lambda))
+            if in_lambda:
+                for _, frame_idx in self._lambda_frames:
+                    err_type = F.get(err_type, frame_idx)
+        return check(err_type.isNotNull(), violation(name, err_type, value=view.display))
 
-        if in_lambda:
-            # Array-item Python validator (validateField.ts:293-306): one
-            # Arrow-batched UDF over the WHOLE (outer) array column returns
-            # an error-type per element, nested one array level per lambda
-            # frame (array<string> for a.$.b, array<array<string>> for
-            # a.$.b.$.c, and so on for arbitrary depth — matching the
-            # reference's unbounded recursion,
-            # getPositionsForAutoValue.ts:43-148) — and the lambda(s) pick
-            # entries by index per level: no explode, no shuffle,
-            # violations keep concrete-index names.
-            frames = list(self._lambda_frames)
-            outer_generic, _ = frames[0]
-            array_path = outer_generic[: -len(".$")]
-            between_subpaths = [
-                nxt[0][len(prev[0]): -len(".$")].strip(".")
-                for prev, nxt in zip(frames, frames[1:])
-            ]
-            item_subpath = generic[len(frames[-1][0]):].lstrip(".")
-            cache_key = (generic, id(custom))
-            if cache_key in self._pandas_cache:
-                col_name = self._pandas_cache[cache_key]
-            else:
-                self._pandas_counter += 1
-                col_name = (
-                    f"__custom_{self._pandas_counter}_"
-                    f"{generic.replace('.', '_').replace('$', 'I')}"
-                )
-                context_cols = self._context_cols_for(custom)
-                self.pandas_rules.append(
-                    _PandasRule(
-                        key=generic,
-                        column_name=col_name,
-                        fn=custom,
-                        input_cols=[array_path],
-                        context_cols=context_cols,
-                        elementwise=True,
-                        item_subpath=item_subpath,
-                        between_subpaths=between_subpaths,
-                    )
-                )
-                self._pandas_cache[cache_key] = col_name
-            err_type = F.col(col_name)
-            for _, frame_idx in frames:
-                err_type = F.get(err_type, frame_idx)
-            return F.when(
-                err_type.isNotNull(),
-                violation(name, err_type, value=_stringify(value, dtype)),
-            ).otherwise(_null_violation())
-        # Arrow-vectorized deferred rule: the validator DataFrame pass adds a
-        # column with the pandas UDF result before the violations projection.
-        # The UDF input is the LEAF value (F.col resolves dotted struct
-        # paths); two-argument validators additionally receive a per-row
-        # context with field()/sibling_field() resolved from a shipped struct
-        # of context columns (reference ValidatorContext, src/types.ts:230-240).
+    def _pandas_rule(
+        self, generic: str, dtype: T.DataType, custom: Callable, in_lambda: bool
+    ) -> str:
+        """Register a Python validator's Arrow UDF column (once per key and
+        fn: the custom tail is compiled for both the value-present and the
+        value-null branch) and return the column's name.
+
+        The validator DataFrame pass adds the column before the violations
+        projection.  Row-level keys ship the LEAF value (F.col resolves
+        dotted struct paths); two-argument validators also get a per-row
+        context with field()/sibling_field() resolved from a shipped struct
+        of context columns (reference ValidatorContext, src/types.ts:230-240).
+
+        Array-item keys (validateField.ts:293-306) ship the WHOLE outer
+        array: the UDF returns an error type per element, nested one array
+        level per lambda frame (array<string> for a.$.b,
+        array<array<string>> for a.$.b.$.c, and so on — the reference
+        recurses without bound, getPositionsForAutoValue.ts:43-148), and the
+        lambdas pick entries by index: no explode, no shuffle, violations
+        keep concrete-index names.
+        """
         cache_key = (generic, id(custom))
         if cache_key in self._pandas_cache:
-            col_name = self._pandas_cache[cache_key]
-        else:
-            self._pandas_counter += 1
-            col_name = f"__custom_{self._pandas_counter}_{generic.replace('.', '_')}"
-            # absent column (NullType): ship a null literal, not F.col
-            input_cols = [] if isinstance(dtype, T.NullType) else [generic]
-            self.pandas_rules.append(
-                _PandasRule(key=generic, column_name=col_name, fn=custom,
-                            input_cols=input_cols,
-                            context_cols=self._context_cols_for(custom))
-            )
-            self._pandas_cache[cache_key] = col_name
-        err_type = F.col(col_name)
-        return F.when(
-            err_type.isNotNull(),
-            violation(name, err_type, value=_stringify(value, dtype)),
-        ).otherwise(_null_violation())
-
-    # ------------------------------------------------------------ type rules
-
-    def _type_error(
-        self, value: Column, name: Column, dtype: T.DataType, alt: dict
-    ) -> Optional[Column]:
-        token = alt.get("type")
-        if token is AnyType:
-            return None
-        if isinstance(token, SimpleSchema):
-            token = ObjectType
-
-        if isinstance(dtype, T.NullType):
-            return None  # column absent: only required can fire
-
-        if not isinstance(token, TypeToken):
-            return None
-
-        if not _type_matches(token, dtype):
-            return violation(
-                name,
-                ErrorTypes.EXPECTED_TYPE,
-                value=_stringify(value, dtype),
-                dataType=_token_name(token),
-            )
-
-        if token is String:
-            return self._string_checks(value, name, alt)
-        if token in (Number, Integer):
-            return self._number_checks(value, name, dtype, alt, token is Integer)
-        if token is DateType:
-            return self._date_checks(value, name, alt)
-        if token is ArrayType:
-            return self._array_checks(value, name, alt)
-        return None  # Boolean/Object/Binary: schema-type match is enough
-
-    def _string_checks(self, value: Column, name: Column, alt: dict) -> Optional[Column]:
-        """checkStringValue.ts:8-49 — order: max, min, regEx (single then array)."""
-        conds: list[Column] = []
-        if alt.get("max") is not None:
-            mx = alt["max"]
-            conds.append(
-                F.when(
-                    F.length(value) > mx,
-                    violation(name, ErrorTypes.MAX_STRING, value=value, max=str(mx)),
-                ).otherwise(_null_violation())
-            )
-        if alt.get("min") is not None:
-            mn = alt["min"]
-            conds.append(
-                F.when(
-                    F.length(value) < mn,
-                    violation(name, ErrorTypes.MIN_STRING, value=value, min=str(mn)),
-                ).otherwise(_null_violation())
-            )
-        regex = alt.get("regEx")
-        if regex is not None:
-            patterns = regex if isinstance(regex, (list, tuple)) else [regex]
-            skip_empty = alt.get("skipRegExCheckForEmptyStrings") is True
-            for idx, pat in enumerate(patterns):
-                fail = ~value.rlike(to_java_regex(pat))
-                # skip-empty applies to the single-regex form only
-                # (checkStringValue.ts:25)
-                if skip_empty and not isinstance(regex, (list, tuple)):
-                    fail = fail & (value != F.lit(""))
-                conds.append(
-                    F.when(
-                        fail,
-                        violation(
-                            name,
-                            ErrorTypes.FAILED_REGULAR_EXPRESSION,
-                            value=value,
-                            regExp=js_regex_repr(pat),
-                        ),
-                    ).otherwise(_null_violation())
-                )
-        if not conds:
-            return None
-        return conds[0] if len(conds) == 1 else F.coalesce(*conds)
-
-    def _number_checks(
-        self,
-        value: Column,
-        name: Column,
-        dtype: T.DataType,
-        alt: dict,
-        expects_integer: bool,
-    ) -> Optional[Column]:
-        """checkNumberValue.ts:4-54 — NaN, max, min (exclusive variants),
-        integer; min/max skipped under $inc."""
-        conds: list[Column] = []
-        data_type = "Integer" if expects_integer else "Number"
-        is_fractional = isinstance(dtype, _FRACTIONAL_TYPES)
-        if is_fractional:
-            conds.append(
-                F.when(
-                    F.isnan(value),
-                    violation(
-                        name, ErrorTypes.EXPECTED_TYPE, value=value.cast("string"),
-                        dataType=data_type,
-                    ),
-                ).otherwise(_null_violation())
-            )
-        skip_bounds = self.modifier_op == "$inc"
-        if not skip_bounds and alt.get("max") is not None:
-            mx = alt["max"]
-            exclusive = alt.get("exclusiveMax") is True
-            cond = (value >= mx) if exclusive else (value > mx)
-            conds.append(
-                F.when(
-                    cond,
-                    violation(
-                        name,
-                        ErrorTypes.MAX_NUMBER_EXCLUSIVE if exclusive else ErrorTypes.MAX_NUMBER,
-                        value=value.cast("string"),
-                        max=_num_str(mx),
-                    ),
-                ).otherwise(_null_violation())
-            )
-        if not skip_bounds and alt.get("min") is not None:
-            mn = alt["min"]
-            exclusive = alt.get("exclusiveMin") is True
-            cond = (value <= mn) if exclusive else (value < mn)
-            conds.append(
-                F.when(
-                    cond,
-                    violation(
-                        name,
-                        ErrorTypes.MIN_NUMBER_EXCLUSIVE if exclusive else ErrorTypes.MIN_NUMBER,
-                        value=value.cast("string"),
-                        min=_num_str(mn),
-                    ),
-                ).otherwise(_null_violation())
-            )
-        if expects_integer and is_fractional:
-            # Number.isInteger parity: 5.0 passes; NaN/Inf fail (NaN already
-            # caught above; Infinity != floor handled by comparison with itself)
-            not_int = (value != F.floor(value)) | (value == F.lit(float("inf"))) | (
-                value == F.lit(float("-inf"))
-            )
-            conds.append(
-                F.when(
-                    not_int,
-                    violation(
-                        name, ErrorTypes.MUST_BE_INTEGER, value=value.cast("string")
-                    ),
-                ).otherwise(_null_violation())
-            )
-        if not conds:
-            return None
-        return conds[0] if len(conds) == 1 else F.coalesce(*conds)
-
-    def _date_checks(self, value: Column, name: Column, alt: dict) -> Optional[Column]:
-        """checkDateValue.ts:5-32 — min/max epoch compare; payload YYYY-MM-DD."""
-        conds: list[Column] = []
-        if alt.get("min") is not None:
-            mn = alt["min"]
-            conds.append(
-                F.when(
-                    value < F.lit(mn),
-                    violation(
-                        name, ErrorTypes.MIN_DATE, value=value.cast("string"),
-                        min=_date_str(mn),
-                    ),
-                ).otherwise(_null_violation())
-            )
-        if alt.get("max") is not None:
-            mx = alt["max"]
-            conds.append(
-                F.when(
-                    value > F.lit(mx),
-                    violation(
-                        name, ErrorTypes.MAX_DATE, value=value.cast("string"),
-                        max=_date_str(mx),
-                    ),
-                ).otherwise(_null_violation())
-            )
-        if not conds:
-            return None
-        return conds[0] if len(conds) == 1 else F.coalesce(*conds)
-
-    def _array_checks(self, value: Column, name: Column, alt: dict) -> Optional[Column]:
-        """checkArrayValue.ts:4-22 — minCount/maxCount; one error on the array
-        key, not per item (test/SimpleSchema_max.tests.ts:27-30)."""
-        conds: list[Column] = []
-        if alt.get("minCount") is not None:
-            mc = alt["minCount"]
-            conds.append(
-                F.when(
-                    F.size(value) < mc,
-                    violation(
-                        name, ErrorTypes.MIN_COUNT, value=F.to_json(value),
-                        minCount=str(mc),
-                    ),
-                ).otherwise(_null_violation())
-            )
-        if alt.get("maxCount") is not None:
-            mc = alt["maxCount"]
-            conds.append(
-                F.when(
-                    F.size(value) > mc,
-                    violation(
-                        name, ErrorTypes.MAX_COUNT, value=F.to_json(value),
-                        maxCount=str(mc),
-                    ),
-                ).otherwise(_null_violation())
-            )
-        if not conds:
-            return None
-        return conds[0] if len(conds) == 1 else F.coalesce(*conds)
+            return self._pandas_cache[cache_key]
+        self._pandas_counter += 1
+        col_name = (
+            f"__custom_{self._pandas_counter}_"
+            f"{generic.replace('.', '_').replace('$', 'I')}"
+        )
+        rule = _PandasRule(
+            key=generic,
+            column_name=col_name,
+            fn=custom,
+            context_cols=self._context_cols_for(custom),
+        )
+        if in_lambda:
+            frames = [g for g, _ in self._lambda_frames]
+            rule.input_cols = [frames[0][: -len(".$")]]
+            rule.elementwise = True
+            rule.item_subpath = generic[len(frames[-1]):].lstrip(".")
+            rule.between_subpaths = [
+                nxt[len(prev): -len(".$")].strip(".")
+                for prev, nxt in zip(frames, frames[1:])
+            ]
+        elif not isinstance(dtype, T.NullType):
+            # absent column (NullType): a null literal is shipped instead
+            rule.input_cols = [generic]
+        self.pandas_rules.append(rule)
+        self._pandas_cache[cache_key] = col_name
+        return col_name
 
     # --------------------------------------------------------- extra keys
 
@@ -980,19 +523,12 @@ class RuleCompiler:
                             violation(
                                 F.lit(f.name),
                                 ErrorTypes.KEY_NOT_IN_SCHEMA,
-                                value=_stringify(F.col(f.name), f.dataType),
+                                value=rules.stringify(F.col(f.name), f.dataType),
                             )
                         ),
                     ).otherwise(F.array().cast(T.ArrayType(VIOLATION_SCHEMA)))
                 )
         return out
-
-
-def _num_str(v: Any) -> str:
-    """Render numeric bound payloads the way JS does (10, not 10.0)."""
-    if isinstance(v, float) and v.is_integer():
-        return str(int(v))
-    return str(v)
 
 
 def compile_violations(

@@ -8,8 +8,9 @@ per document; ``typeValidator`` on each declared key) over JSON text:
 
 - one ``parse_json`` per row (variant), then per declared key a
   ``try_variant_get``/``to_json`` extraction that PRESERVES JSON token types
-  (strings stay quoted) so the modifier-table rule compiler's value checks
-  (type, min/max, regex, allowedValues, minCount/maxCount) apply verbatim
+  (strings stay quoted), checked by the shared rule table
+  (``compiler/rules.py``) over its JSON-token view: type, min/max, regex,
+  allowedValues, minCount/maxCount, oneOf
 - required: key absent or JSON null (doc mode, requiredValidator.ts:28,34)
 - KEY_NOT_IN_SCHEMA: ``json_object_keys`` at the root and inside each
   declared (non-blackbox) object subtree, minus declared/blackbox names
@@ -18,11 +19,12 @@ per document; ``typeValidator`` on each declared key) over JSON text:
 Everything is one Catalyst projection per row — no shuffle, no Python; at
 10^12 docs this fuses with the scan like the fixed-column path.
 
-Custom validators run in JSON mode too: Python field/item validators are
+Custom validators run through the JSON-token chain shared with modifier
+rows (``compiler/validators.py``): Python field/item validators are
 Arrow-batched pandas UDFs over decoded JSON tokens (cross-field fns get a
 FieldContext whose row is the parsed document), and ``@spark_rule``
-expression validators get a typed ``try_variant_get`` extraction for
-single-scalar-type keys.  Malformed documents yield exactly one
+validators get the token typed by the key's alternatives (a VARIANT for
+object- and mixed-type keys).  Malformed documents yield exactly one
 ``malformedJson`` violation per row (``try_parse_json``).
 """
 
@@ -30,141 +32,29 @@ from __future__ import annotations
 
 from typing import Iterable
 
-import pandas as pd
+from pyspark.sql import Column, DataFrame, functions as F
 
-from pyspark.sql import Column, DataFrame, functions as F, types as T
-
-from .errors import ErrorTypes, VIOLATION_SCHEMA
-from .modifiers import (
-    _ModifierCompiler,
-    _display,
-    _eval_optional,
-    _is_json_null,
-)
-from .compiler.compile import (
-    RuleContext,
+from .compiler.compile import is_spark_rule
+from .compiler.rules import (
+    TokenView,
+    is_json_null,
+    null_violation,
+    check,
+    first,
+    is_any,
+    is_object_key,
+    is_optional,
+    value_error,
     violation,
-    _null_violation,
-    _wants_context,
 )
+from .compiler.validators import (
+    decode_token,
+    item_merge_udf,
+    token_custom_rules,
+    token_customs,
+)
+from .errors import ErrorTypes, VIOLATION_SCHEMA
 from .schema.schema import SimpleSchema
-from .schema.types import (
-    AnyType,
-    Boolean,
-    DateType,
-    Integer,
-    Number,
-    ObjectType,
-    String,
-)
-
-#: scalar TypeToken → Spark extraction type for typed @spark_rule inputs
-_SPARK_RULE_TYPES = {
-    String: "string",
-    Integer: "bigint",
-    Number: "double",
-    Boolean: "boolean",
-    DateType: "timestamp",
-}
-
-
-def _json_decode(tok):
-    if tok is None:
-        return None
-    import json
-
-    try:
-        return json.loads(tok)
-    except ValueError:
-        return None
-
-
-def _field_validator_udf(fn, key: str, wants_ctx: bool):
-    """Arrow-batched wrapper running a Python custom validator on decoded
-    JSON tokens; two-argument validators get a FieldContext whose row is the
-    parsed document (field()/sibling_field() resolve real JSON values)."""
-    from .validation import FieldContext
-
-    if wants_ctx:
-
-        def _apply(tokens: pd.Series, docs: pd.Series) -> pd.Series:
-            out = []
-            for tok, doc in zip(tokens, docs):
-                v = _json_decode(tok)
-                row = _json_decode(doc)
-                row = row if isinstance(row, dict) else {}
-                out.append(fn(v, FieldContext(key, v, row)))
-            return pd.Series(out, dtype=object)
-
-        return F.pandas_udf(_apply, T.StringType())
-
-    def _apply(tokens: pd.Series) -> pd.Series:
-        return pd.Series([fn(_json_decode(t)) for t in tokens], dtype=object)
-
-    return F.pandas_udf(_apply, T.StringType())
-
-
-def _display_token(tok):
-    """Python analog of modifiers._display: strings unquoted, else trimmed."""
-    if tok is None:
-        return None
-    s = tok.strip()
-    if s.startswith('"'):
-        v = _json_decode(tok)
-        return v if isinstance(v, str) else s
-    return s
-
-
-def _item_merge_udf(fns, array_key: str):
-    """Per-element merge of expression violations with Python item
-    validators: the expression result (built-in + @spark_rule, already
-    named ``<key>.<i>``) wins; otherwise the first Python validator to
-    return an error type produces the element's violation.  One UDF per
-    array key regardless of validator count — Python UDF results cannot be
-    referenced inside higher-order-function lambdas, so the whole merge
-    runs Arrow-batched here and returns the compacted violation array."""
-    from .errors import VIOLATION_FIELDS
-    from .validation import FieldContext
-
-    item_key = f"{array_key}.$"
-    wants = [_wants_context(fn) for fn in fns]
-    field_names = [nm for nm, _ in VIOLATION_FIELDS]
-
-    def run(expr_viols, tokens, doc):
-        if tokens is None:
-            return None
-        row = _json_decode(doc)
-        row = row if isinstance(row, dict) else {}
-        out = []
-        for i, tok in enumerate(tokens):
-            ev = None
-            if expr_viols is not None and i < len(expr_viols):
-                ev = expr_viols[i]
-                if ev is not None and ev.get("type") is None:
-                    ev = None
-            if ev is not None:
-                out.append(ev)
-                continue
-            v = _json_decode(tok)
-            for fn, w in zip(fns, wants):
-                et = fn(v, FieldContext(item_key, v, row)) if w else fn(v)
-                if et is not None:
-                    viol = dict.fromkeys(field_names)
-                    viol["name"] = f"{array_key}.{i}"
-                    viol["type"] = et
-                    viol["value"] = _display_token(tok)
-                    out.append(viol)
-                    break
-        return out
-
-    def _apply(
-        expr: pd.Series, arrs: pd.Series, docs: pd.Series
-    ) -> pd.Series:
-        return pd.Series(
-            [run(e, a, d) for e, a, d in zip(expr, arrs, docs)], dtype=object
-        )
-
-    return F.pandas_udf(_apply, T.ArrayType(VIOLATION_SCHEMA))
 
 __all__ = ["json_violations_column", "validate_json_column"]
 
@@ -173,191 +63,96 @@ def _variant_path(key: str) -> str:
     return "$" + "".join(f"['{seg}']" for seg in key.split("."))
 
 
+def _doc_row(doc) -> dict:
+    """Context row of a two-argument validator: the parsed document."""
+    row = decode_token(doc)
+    return row if isinstance(row, dict) else {}
+
+
 def json_violations_column(
     schema: SimpleSchema, json_col: Column
 ) -> Column:
     """``array<violation>`` for one JSON-document column."""
-    comp = _ModifierCompiler(schema)
+    merged = schema.merged_schema()
     # try_parse_json: heterogeneous crawl payloads WILL contain malformed
     # rows; a null variant yields one malformedJson violation (below)
     # instead of failing the whole job
     var = F.try_parse_json(json_col)
     blackbox = set(schema.blackbox_keys())
-
-    optional_map = {k: _eval_optional(d) for k, d in comp.merged.items()}
+    context = (json_col, _doc_row)
+    empty = F.array().cast(f"array<{VIOLATION_SCHEMA.simpleString()}>")
 
     def is_blackboxed(key: str) -> bool:
         return any(key == b or key.startswith(b + ".") for b in blackbox)
 
     arrays: list[Column] = []
     object_keys: list[str] = []
-    for k in comp.merged:
-        if ".$" in k or k.endswith(".$") or is_blackboxed(k):
+    for k in merged:
+        if ".$" in k or is_blackboxed(k):
             continue
-        alts = comp._alternatives(k)
-        if any(a.get("type") is AnyType for a in alts):
+        alts = schema.resolved_alternatives(k)
+        if is_any(alts):
             continue
         extracted = F.to_json(F.try_variant_get(var, _variant_path(k), "variant"))
+        view = TokenView(extracted)
         name = F.lit(k)
         chain: list[Column] = []
-        if not optional_map.get(k, False):
+        if not is_optional(alts):
             chain.append(
-                F.when(
-                    extracted.isNull() | _is_json_null(extracted),
+                check(
+                    extracted.isNull() | is_json_null(extracted),
                     violation(name, ErrorTypes.REQUIRED),
-                ).otherwise(_null_violation())
-            )
-        err = comp.value_error(k, extracted, name, F.lit("$set"))
-        if err is not None:
-            chain.append(
-                F.when(
-                    extracted.isNotNull() & ~_is_json_null(extracted), err
-                ).otherwise(_null_violation())
-            )
-        # ordered validator tail — custom, then schema-level + global fns
-        # (validateField.ts:192-226); custom validators run even when the
-        # key is absent (value None), like the fixed-column compiler.
-        # `custom` lives per type-alternative; dedupe by identity.
-        customs: list = []
-        for a in alts:
-            fn_a = a.get("custom")
-            if fn_a is not None and all(fn_a is not c for c in customs):
-                customs.append(fn_a)
-        customs += schema.all_validators()
-        for fn in customs:
-            if getattr(fn, "_is_spark_rule", False):
-                scalar = {
-                    _SPARK_RULE_TYPES.get(a.get("type"))
-                    for a in alts
-                }
-                if len(scalar) == 1 and None not in scalar:
-                    typed = F.try_variant_get(
-                        var, _variant_path(k), scalar.pop()
-                    )
-                else:
-                    # object- / oneOf-typed key: hand the rule the VARIANT
-                    # value — the rule extracts what it needs with
-                    # try_variant_get(value, '$.path', type)
-                    typed = F.try_variant_get(var, _variant_path(k), "variant")
-                err_type = fn(typed, RuleContext(key=k, name=name, definition=alts[0]))
-            else:
-                err_type = _field_validator_udf(fn, k, _wants_context(fn))(
-                    *([extracted, json_col] if _wants_context(fn) else [extracted])
                 )
-            chain.append(
-                F.when(
-                    err_type.isNotNull(),
-                    violation(name, err_type, value=_display(extracted)),
-                ).otherwise(_null_violation())
             )
+        err = value_error(view, name, alts)
+        if err is not None:
+            chain.append(check(extracted.isNotNull() & ~is_json_null(extracted), err))
+        # custom validators run even when the key is absent (value None),
+        # like the fixed-column compiler
+        chain += token_custom_rules(
+            view, name, k, alts, token_customs(schema, alts), context=context
+        )
         if chain:
-            arrays.append(
-                F.array(chain[0] if len(chain) == 1 else F.coalesce(*chain))
-            )
+            arrays.append(F.array(first(chain)))
         # per-ELEMENT item checks for declared arrays: array<variant>
         # extraction keeps each element's JSON token; violations get
         # concrete-index names (validateField.ts:293-306); custom item
         # validators (Python + @spark_rule) coalesce with the built-in
         # rules so each concrete element key keeps one error
         item_key = f"{k}.$"
-        if item_key in comp.merged and not is_blackboxed(item_key):
-            has_builtin = (
-                comp.value_error(
-                    k, F.lit('"probe"'), F.lit("probe"), F.lit("$set"),
-                    as_item=True,
-                )
-                is not None
-            )
-            item_customs: list = []
-            for a in comp._alternatives(item_key):
-                fn_a = a.get("custom")
-                if fn_a is not None and all(fn_a is not c for c in item_customs):
-                    item_customs.append(fn_a)
-            item_customs += schema.all_validators()
-            python_fns = [
-                fn for fn in item_customs
-                if not getattr(fn, "_is_spark_rule", False)
-            ]
-            rule_fns = [
-                fn for fn in item_customs if getattr(fn, "_is_spark_rule", False)
-            ]
-            if has_builtin or item_customs:
+        if item_key in merged and not is_blackboxed(item_key):
+            item_alts = schema.resolved_alternatives(item_key)
+            item_fns = token_customs(schema, item_alts)
+            if not is_any(item_alts) or item_fns:
+                spark_fns = [fn for fn in item_fns if is_spark_rule(fn)]
+                py_fns = [fn for fn in item_fns if not is_spark_rule(fn)]
                 elems = F.try_variant_get(var, _variant_path(k), "array<variant>")
 
                 # expression-form rules (built-in + @spark_rule) evaluate
                 # inside ONE transform lambda, one coalesced error per element
-                rule_elem_cols: list[Column] = []
-                for fn in rule_fns:
-                    item_alts = comp._alternatives(item_key)
-                    scalar = {
-                        _SPARK_RULE_TYPES.get(a.get("type")) for a in item_alts
-                    }
-                    if len(scalar) == 1 and None not in scalar:
-                        elem_t = scalar.pop()
-                    else:
-                        # object-/oneOf-typed items: rule receives each
-                        # element as a VARIANT value
-                        elem_t = "variant"
-                    typed_elems = F.try_variant_get(
-                        var, _variant_path(k), f"array<{elem_t}>"
-                    )
-                    ctx = RuleContext(
-                        key=item_key,
-                        name=F.lit(item_key),
-                        definition=item_alts[0],
-                    )
-                    rule_elem_cols.append(
-                        F.transform(typed_elems, lambda e: fn(e, ctx))
-                    )
-
-                def elem_err(e, i):
+                def elem_err(e: Column, i: Column) -> Column:
                     elem_name = F.concat(F.lit(k + "."), i.cast("string"))
-                    parts = []
-                    if has_builtin:
-                        parts.append(
-                            comp.value_error(
-                                k, F.to_json(e), elem_name, F.lit("$set"),
-                                as_item=True,
-                            )
-                        )
-                    for cc in rule_elem_cols:
-                        et = F.get(cc, i)
-                        parts.append(
-                            F.when(
-                                et.isNotNull(),
-                                violation(
-                                    elem_name, et, value=_display(F.to_json(e))
-                                ),
-                            ).otherwise(_null_violation())
-                        )
-                    if not parts:
-                        return _null_violation()
-                    return parts[0] if len(parts) == 1 else F.coalesce(*parts)
+                    ev = TokenView(F.to_json(e))
+                    err = first(
+                        [value_error(ev, elem_name, item_alts)]
+                        + token_custom_rules(ev, elem_name, item_key, item_alts, spark_fns)
+                    )
+                    return null_violation() if err is None else err
 
                 expr_arr = F.transform(elems, elem_err)
-                if python_fns:
+                if py_fns:
                     # Python item validators cannot be referenced inside a
                     # higher-order-function lambda (Spark analyzer:
                     # LAMBDA_FUNCTION_WITH_PYTHON_UDF), so the per-element
-                    # merge happens in ONE Arrow-batched UDF over the whole
-                    # array: expression violations win, else the first
-                    # Python validator error becomes the element's violation
-                    tokens_arr = F.transform(elems, lambda e: F.to_json(e))
-                    merged = _item_merge_udf(python_fns, k)(
-                        expr_arr, tokens_arr, json_col
+                    # merge happens in ONE Arrow-batched UDF over the array
+                    tokens = F.transform(elems, lambda e: F.to_json(e))
+                    per_elem = item_merge_udf(py_fns, item_key, _doc_row, indexed=True)(
+                        expr_arr, tokens, F.lit(k), json_col
                     )
-                    per_elem = merged
                 else:
                     per_elem = F.filter(expr_arr, lambda x: x.isNotNull())
-                arrays.append(
-                    F.when(elems.isNotNull(), per_elem).otherwise(
-                        F.array().cast(f"array<{VIOLATION_SCHEMA.simpleString()}>")
-                    )
-                )
-        if any(
-            isinstance(a.get("type"), SimpleSchema) or a.get("type") is ObjectType
-            for a in alts
-        ) and not any(a.get("blackbox") is True for a in alts):
+                arrays.append(F.when(elems.isNotNull(), per_elem).otherwise(empty))
+        if is_object_key(alts):
             object_keys.append(k)
 
     # ---- KEY_NOT_IN_SCHEMA: root + every declared object subtree ----------
@@ -365,7 +160,7 @@ def json_violations_column(
         declared = sorted(
             {
                 k[len(prefix):].split(".")[0]
-                for k in comp.merged
+                for k in merged
                 if (k.startswith(prefix) if prefix else True) and ".$" not in k
             }
             | {
@@ -392,11 +187,7 @@ def json_violations_column(
     arrays.append(unknown_in(json_col, ""))
     for k in object_keys:
         sub = F.to_json(F.try_variant_get(var, _variant_path(k), "variant"))
-        arrays.append(
-            F.when(sub.isNotNull(), unknown_in(sub, k + ".")).otherwise(
-                F.array().cast(f"array<{VIOLATION_SCHEMA.simpleString()}>")
-            )
-        )
+        arrays.append(F.when(sub.isNotNull(), unknown_in(sub, k + ".")).otherwise(empty))
 
     combined = F.concat(*arrays) if len(arrays) > 1 else arrays[0]
     # malformed document: one malformedJson violation, nothing else (the

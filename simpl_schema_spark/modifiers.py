@@ -2,13 +2,10 @@
 
 The reference's distinguishing feature (README:13,173-193): a modifier
 document is validated so the stored document AFTER applying it would be
-valid.  Dispatch table: ``/root/reference/src/doValidation.ts:40-86``;
-required decision table: ``src/validation/requiredValidator.ts:13-61``;
-``$inc`` bounds exemption: ``src/validation/typeValidator/checkNumberValue.ts:20,36``;
-``$push``/``$addToSet`` item validation incl. ``$each``:
-``doValidation.ts:52-58``; ``$currentDate`` forms:
-``typeValidator/index.ts:40-44,57-59``; removal ops skipped:
-``doValidation.ts:9-12``.
+valid.  Dispatch table: ``src/doValidation.ts:40-86``; required decision
+table: ``src/validation/requiredValidator.ts:13-61``; ``$push``/``$addToSet``
+item validation incl. ``$each``: ``doValidation.ts:52-58``; removal ops
+skipped: ``doValidation.ts:9-12``.
 
 Relational encoding (FIXTURES.md F6): one row per (document, operator, key)::
 
@@ -17,38 +14,68 @@ Relational encoding (FIXTURES.md F6): one row per (document, operator, key)::
 ``value`` is JSON; dates use extended-JSON ``{"$date": "ISO-8601"}``.
 
 Execution shape: ONE projection over the long table (all per-row rules are a
-CASE WHEN forest over the generic key, exactly like the document validator)
-plus ONE small aggregation per upsert-required injection (collect the set of
-"keys with values" per document and anti-join the compile-time required-key
-list — the relational form of getKeysWithValueInObj,
-``src/utility/index.ts:46-64``).
+CASE WHEN forest over the generic key) plus ONE small aggregation per
+upsert-required injection (collect the set of "keys with values" per
+document and anti-join the compile-time required-key list — the relational
+form of getKeysWithValueInObj, ``src/utility/index.ts:46-64``).
+
+The value rules of each key are the shared rule table
+(``compiler/rules.py``) over a JSON-token view that carries the row's
+operator: bounds are skipped under ``$inc`` and ``$currentDate`` checks
+``now``.  Custom validators run through the JSON-token chain of
+``compiler/validators.py``, shared with JSON documents; two-argument
+Python validators resolve ``field()``/``sibling_field()`` against the
+document's other operator entries (reference getFieldInfo over the
+mongoObject).
 """
 
 from __future__ import annotations
 
 import json
 from functools import reduce
-from typing import Any, Optional
+from typing import Any
 
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
-from .compiler.compile import violation, _null_violation
-from .compiler.regex import js_regex_repr, to_java_regex
+from .compiler.compile import is_spark_rule, wants_context
+from .compiler.rules import (
+    TokenView,
+    is_ext_date,
+    is_json_array,
+    is_json_bool,
+    is_json_null,
+    is_json_number,
+    is_json_object,
+    is_json_string,
+    json_num,
+    json_str,
+    null_violation,
+    first,
+    generic_key,
+    is_object_key,
+    is_optional,
+    value_error,
+    violation,
+)
+from .compiler.validators import (
+    decode_token,
+    item_merge_udf,
+    token_custom_rules,
+    token_customs,
+)
 from .errors import ErrorTypes, VIOLATION_SCHEMA
 from .schema.schema import SimpleSchema
 from .schema.types import (
     AnyType,
     ArrayType,
-    Binary,
     Boolean,
     DateType,
     Integer,
     Number,
     ObjectType,
     String,
-    TypeToken,
 )
 
 __all__ = ["validate_modifier_table", "UnsupportedModifierError"]
@@ -66,41 +93,6 @@ class UnsupportedModifierError(Exception):
     """$pushAll (doValidation.ts:10) and non-$ keys (ts:44-46)."""
 
 
-def _generic_key(key_path: Column) -> Column:
-    """a.0.b → a.$.b (mongo-object makeKeyGeneric parity)."""
-    return F.regexp_replace(key_path, r"(?<=^|\.)\d+(?=\.|$)", "\\$")
-
-
-# ---------------------------------------------------------------- JSON typing
-
-def _is_json_string(v: Column) -> Column:
-    return v.rlike('^\\s*"')
-
-
-def _is_json_null(v: Column) -> Column:
-    return v.rlike("^\\s*null\\s*$")
-
-
-def _is_json_bool(v: Column) -> Column:
-    return v.rlike("^\\s*(true|false)\\s*$")
-
-
-def _is_json_number(v: Column) -> Column:
-    return v.rlike(r"^\s*-?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?\s*$")
-
-
-def _is_json_array(v: Column) -> Column:
-    return v.rlike(r"^\s*\[")
-
-
-def _is_json_object(v: Column) -> Column:
-    return v.rlike(r"^\s*\{")
-
-
-def _is_ext_date(v: Column) -> Column:
-    return v.rlike(r'^\s*\{\s*"\$date"')
-
-
 def _token_matches_alternatives(alts: list[dict], token: Column) -> Column:
     """True when the JSON token's type class matches ANY alternative of a
     oneOf group — autoConvert must then leave it alone (the reference gates
@@ -110,29 +102,21 @@ def _token_matches_alternatives(alts: list[dict], token: Column) -> Column:
     for a in alts:
         t = a.get("type")
         if t is String:
-            conds.append(_is_json_string(token))
+            conds.append(is_json_string(token))
         elif t is Integer:
-            num = _json_num(token)
-            conds.append(_is_json_number(token) & (num == F.floor(num)))
+            num = json_num(token)
+            conds.append(is_json_number(token) & (num == F.floor(num)))
         elif t is Number:
-            conds.append(_is_json_number(token))
+            conds.append(is_json_number(token))
         elif t is Boolean:
-            conds.append(_is_json_bool(token))
+            conds.append(is_json_bool(token))
         elif t is DateType:
-            conds.append(_is_ext_date(token))
+            conds.append(is_ext_date(token))
         elif t is ArrayType:
-            conds.append(_is_json_array(token))
+            conds.append(is_json_array(token))
         else:  # Object / nested SimpleSchema / custom classes
-            conds.append(_is_json_object(token) & ~_is_ext_date(token))
+            conds.append(is_json_object(token) & ~is_ext_date(token))
     return reduce(lambda x, y: x | y, conds) if conds else F.lit(True)
-
-
-def _json_str(v: Column) -> Column:
-    return F.from_json(F.concat(F.lit('{"v":'), v, F.lit("}")), "v string").getField("v")
-
-
-def _json_num(v: Column) -> Column:
-    return F.from_json(F.concat(F.lit('{"v":'), v, F.lit("}")), "v double").getField("v")
 
 
 def _json_quote(s: Column) -> Column:
@@ -143,266 +127,7 @@ def _json_quote(s: Column) -> Column:
     return F.substring(encoded, 2, F.length(encoded) - 2)
 
 
-def _json_date(v: Column) -> Column:
-    iso = F.from_json(v, "`$date` string").getField("$date")
-    return F.coalesce(
-        iso.try_cast("timestamp"),
-        F.try_to_timestamp(iso, F.lit("yyyy-MM-dd'T'HH:mm:ss.SSSXXX")),
-        F.try_to_timestamp(iso, F.lit("yyyy-MM-dd'T'HH:mm:ssXXX")),
-    )
-
-
-def _display(v: Column) -> Column:
-    """Offending-value payload: unquote JSON strings, else raw JSON."""
-    return F.when(_is_json_string(v), _json_str(v)).otherwise(F.trim(v))
-
-
-class _ModifierCompiler:
-    """Compile per-(key, op-class) value rules into one CASE forest."""
-
-    def __init__(self, schema: SimpleSchema) -> None:
-        self.schema = schema
-        self.merged = schema.merged_schema()
-
-    # ---------------------------------------------------------- per-key rules
-
-    def _alternatives(self, generic: str) -> list[dict]:
-        d = self.merged[generic]
-        outer = {k: v for k, v in d.items() if k != "type"}
-        return [{**outer, **alt} for alt in d["type"].definitions]
-
-    def value_error(
-        self,
-        generic: str,
-        v: Column,
-        name: Column,
-        op: Column,
-        *,
-        as_item: bool = False,
-    ) -> Optional[Column]:
-        """First violation for a JSON value checked against key ``generic``
-        (item definition when as_item)."""
-        key = f"{generic}.$" if as_item and f"{generic}.$" in self.merged else generic
-        if key not in self.merged:
-            return None
-        alts = self._alternatives(key)
-        if any(a.get("type") is AnyType for a in alts):
-            return None
-        errs = [self._alt_error(a, v, name, op) for a in alts]
-        errs = [e for e in errs if e is not None]
-        if not errs:
-            return None
-        if len(errs) == 1:
-            return errs[0]
-        any_ok = reduce(lambda a, b: a | b, [e.isNull() for e in errs])
-        return F.when(any_ok, _null_violation()).otherwise(errs[-1])
-
-    def _alt_error(self, alt: dict, v: Column, name: Column, op: Column) -> Optional[Column]:
-        token = alt.get("type")
-        if isinstance(token, SimpleSchema):
-            token = ObjectType
-        if not isinstance(token, TypeToken):
-            return None
-        chain: list[Column] = []
-
-        type_err = self._type_error(token, alt, v, name, op)
-        if type_err is not None:
-            chain.append(type_err)
-
-        allowed = alt.get("allowedValues")
-        if allowed is not None:
-            vals = sorted(allowed) if isinstance(allowed, set) else list(allowed)
-            typed = _json_str(v) if isinstance(vals[0], str) else _json_num(v)
-            chain.append(
-                F.when(
-                    ~typed.isin(*vals),
-                    violation(name, ErrorTypes.VALUE_NOT_ALLOWED, value=_display(v)),
-                ).otherwise(_null_violation())
-            )
-        if not chain:
-            return None
-        return chain[0] if len(chain) == 1 else F.coalesce(*chain)
-
-    def _type_error(
-        self, token: TypeToken, alt: dict, v: Column, name: Column, op: Column
-    ) -> Optional[Column]:
-        if token is String:
-            s = _json_str(v)
-            conds = [
-                F.when(
-                    ~_is_json_string(v),
-                    violation(name, ErrorTypes.EXPECTED_TYPE, value=_display(v), dataType="String"),
-                ).otherwise(_null_violation())
-            ]
-            if alt.get("max") is not None:
-                conds.append(
-                    F.when(
-                        F.length(s) > alt["max"],
-                        violation(name, ErrorTypes.MAX_STRING, value=s, max=str(alt["max"])),
-                    ).otherwise(_null_violation())
-                )
-            if alt.get("min") is not None:
-                conds.append(
-                    F.when(
-                        F.length(s) < alt["min"],
-                        violation(name, ErrorTypes.MIN_STRING, value=s, min=str(alt["min"])),
-                    ).otherwise(_null_violation())
-                )
-            regex = alt.get("regEx")
-            if regex is not None:
-                pats = regex if isinstance(regex, (list, tuple)) else [regex]
-                for pat in pats:
-                    fail = ~s.rlike(to_java_regex(pat))
-                    if alt.get("skipRegExCheckForEmptyStrings") is True and not isinstance(
-                        regex, (list, tuple)
-                    ):
-                        fail = fail & (s != "")
-                    conds.append(
-                        F.when(
-                            fail,
-                            violation(
-                                name,
-                                ErrorTypes.FAILED_REGULAR_EXPRESSION,
-                                value=s,
-                                regExp=js_regex_repr(pat),
-                            ),
-                        ).otherwise(_null_violation())
-                    )
-            return F.coalesce(*conds)
-
-        if token in (Number, Integer):
-            n = _json_num(v)
-            dt = "Integer" if token is Integer else "Number"
-            conds = [
-                F.when(
-                    ~_is_json_number(v),
-                    violation(name, ErrorTypes.EXPECTED_TYPE, value=_display(v), dataType=dt),
-                ).otherwise(_null_violation())
-            ]
-            not_inc = op != "$inc"  # bounds skipped under $inc
-            if alt.get("max") is not None:
-                excl = alt.get("exclusiveMax") is True
-                cond = (n >= alt["max"]) if excl else (n > alt["max"])
-                conds.append(
-                    F.when(
-                        not_inc & cond,
-                        violation(
-                            name,
-                            ErrorTypes.MAX_NUMBER_EXCLUSIVE if excl else ErrorTypes.MAX_NUMBER,
-                            value=_display(v),
-                            max=str(alt["max"]),
-                        ),
-                    ).otherwise(_null_violation())
-                )
-            if alt.get("min") is not None:
-                excl = alt.get("exclusiveMin") is True
-                cond = (n <= alt["min"]) if excl else (n < alt["min"])
-                conds.append(
-                    F.when(
-                        not_inc & cond,
-                        violation(
-                            name,
-                            ErrorTypes.MIN_NUMBER_EXCLUSIVE if excl else ErrorTypes.MIN_NUMBER,
-                            value=_display(v),
-                            min=str(alt["min"]),
-                        ),
-                    ).otherwise(_null_violation())
-                )
-            if token is Integer:
-                conds.append(
-                    F.when(
-                        n != F.floor(n),
-                        violation(name, ErrorTypes.MUST_BE_INTEGER, value=_display(v)),
-                    ).otherwise(_null_violation())
-                )
-            return F.coalesce(*conds)
-
-        if token is Boolean:
-            return F.when(
-                ~_is_json_bool(v),
-                violation(name, ErrorTypes.EXPECTED_TYPE, value=_display(v), dataType="Boolean"),
-            ).otherwise(_null_violation())
-
-        if token is DateType:
-            # $currentDate accepts true or {"$type":"date"}
-            # (typeValidator/index.ts:40-44); the substituted value is `now`,
-            # checked against min/max (ts:57-59)
-            current_ok = (op == "$currentDate") & (
-                v.rlike("^\\s*true\\s*$")
-                | (F.regexp_replace(v, "\\s", "") == F.lit('{"$type":"date"}'))
-            )
-            ts = F.when(current_ok, F.current_timestamp()).otherwise(_json_date(v))
-            conds = [
-                F.when(
-                    ts.isNull(),
-                    violation(name, ErrorTypes.EXPECTED_TYPE, value=_display(v), dataType="Date"),
-                ).otherwise(_null_violation())
-            ]
-            if alt.get("min") is not None:
-                from .compiler.compile import _date_str
-
-                conds.append(
-                    F.when(
-                        ts < F.lit(alt["min"]),
-                        violation(
-                            name, ErrorTypes.MIN_DATE, value=ts.cast("string"),
-                            min=_date_str(alt["min"]),
-                        ),
-                    ).otherwise(_null_violation())
-                )
-            if alt.get("max") is not None:
-                from .compiler.compile import _date_str
-
-                conds.append(
-                    F.when(
-                        ts > F.lit(alt["max"]),
-                        violation(
-                            name, ErrorTypes.MAX_DATE, value=ts.cast("string"),
-                            max=_date_str(alt["max"]),
-                        ),
-                    ).otherwise(_null_violation())
-                )
-            return F.coalesce(*conds)
-
-        if token is ArrayType:
-            conds = [
-                F.when(
-                    ~_is_json_array(v),
-                    violation(name, ErrorTypes.EXPECTED_TYPE, value=_display(v), dataType="Array"),
-                ).otherwise(_null_violation())
-            ]
-            if alt.get("minCount") is not None:
-                conds.append(
-                    F.when(
-                        F.json_array_length(v) < alt["minCount"],
-                        violation(name, ErrorTypes.MIN_COUNT, value=v, minCount=str(alt["minCount"])),
-                    ).otherwise(_null_violation())
-                )
-            if alt.get("maxCount") is not None:
-                conds.append(
-                    F.when(
-                        F.json_array_length(v) > alt["maxCount"],
-                        violation(name, ErrorTypes.MAX_COUNT, value=v, maxCount=str(alt["maxCount"])),
-                    ).otherwise(_null_violation())
-                )
-            return F.coalesce(*conds)
-
-        if token is ObjectType:
-            return F.when(
-                ~_is_json_object(v) | _is_ext_date(v),
-                violation(name, ErrorTypes.EXPECTED_TYPE, value=_display(v), dataType="Object"),
-            ).otherwise(_null_violation())
-
-        if token is Binary:
-            return F.when(
-                F.lit(True),
-                violation(name, ErrorTypes.EXPECTED_TYPE, value=_display(v), dataType="Uint8Array"),
-            ).otherwise(_null_violation())
-
-        return None
-
-
-def _each_elements_as_json(v: Column, comp: "_ModifierCompiler", item_key: str) -> Column:
+def _each_elements_as_json(v: Column, item_alts: list[dict]) -> Column:
     """Parse ``{"$each": [...]}`` and re-encode each element as a standalone
     JSON string, typed by the item definition's first alternative.
 
@@ -410,8 +135,7 @@ def _each_elements_as_json(v: Column, comp: "_ModifierCompiler", item_key: str) 
     (correct escaping); numerics/booleans stringify directly; dates keep the
     extended-JSON object form.
     """
-    alts = comp._alternatives(item_key)
-    token = alts[0].get("type") if alts else String
+    token = item_alts[0].get("type") if item_alts else String
     if token in (Number, Integer):
         arr = F.from_json(v, "`$each` array<double>").getField("$each")
         return F.transform(arr, lambda e: e.cast("string"))
@@ -432,7 +156,7 @@ def _each_elements_as_json(v: Column, comp: "_ModifierCompiler", item_key: str) 
 
 
 def _expand_object_set_rows(
-    mods: DataFrame, comp: "_ModifierCompiler", schema: SimpleSchema, id_col: str
+    mods: DataFrame, schema: SimpleSchema, id_col: str
 ) -> DataFrame:
     """Recursively expand object-valued ``$set``/``$setOnInsert`` rows into
     child rows so descendant keys flow through the normal per-key rules
@@ -454,17 +178,15 @@ def _expand_object_set_rows(
     object key, no shuffle.  Nested declared objects expand transitively
     (keys processed parents-first).  Returns ``mods`` ∪ expanded rows.
     """
+    merged = schema.merged_schema()
     blackbox = set(schema.blackbox_keys())
-    object_keys: list[str] = []
-    for k, d in comp.merged.items():
-        if ".$" in k or k in blackbox:
-            continue
-        alts = comp._alternatives(k)
-        if any(
-            isinstance(a.get("type"), SimpleSchema) or a.get("type") is ObjectType
-            for a in alts
-        ) and not any(a.get("blackbox") is True for a in alts):
-            object_keys.append(k)
+    object_keys = [
+        k
+        for k in merged
+        if ".$" not in k
+        and k not in blackbox
+        and is_object_key(schema.resolved_alternatives(k))
+    ]
     if not object_keys:
         return mods
 
@@ -473,11 +195,7 @@ def _expand_object_set_rows(
     for k in sorted(object_keys, key=lambda s: s.count(".")):
         prefix = f"{k}."
         declared = sorted(
-            {
-                c[len(prefix):].split(".")[0]
-                for c in comp.merged
-                if c.startswith(prefix)
-            }
+            {c[len(prefix):].split(".")[0] for c in merged if c.startswith(prefix)}
         )
         v = F.col("value")
         # try_parse_json: a truncated '{...' token passes the cheap shape
@@ -485,10 +203,10 @@ def _expand_object_set_rows(
         # expand into child rows (the parent value keeps its own checks)
         var = F.try_parse_json(v)
         rows_k = all_rows.where(
-            (_generic_key(F.col("key_path")) == k)
+            (generic_key(F.col("key_path")) == k)
             & F.col("op").isin(*OPS_SET)
-            & _is_json_object(v)
-            & ~_is_ext_date(v)
+            & is_json_object(v)
+            & ~is_ext_date(v)
             & var.isNotNull()
         )
         children = [
@@ -540,9 +258,7 @@ def _expand_object_set_rows(
     return all_rows
 
 
-def _modifier_rule_forest(
-    schema: SimpleSchema, comp: "_ModifierCompiler"
-) -> dict:
+def _modifier_rule_forest(schema: SimpleSchema) -> dict:
     """Compiled per-row rule forest for a modifier table — PURE unbound
     Columns over the fixed column names (op, key_path, value, __entries),
     independent of any input DataFrame.  Memoized on the schema instance:
@@ -550,7 +266,7 @@ def _modifier_rule_forest(
     bench scale, cProfile: 4.8k socket round trips), which repeated
     validate calls over the same schema should not re-pay.  Columns are
     immutable Catalyst trees, safe to share across queries (the same
-    argument as the compile-time fragment cache in compiler/compile.py).
+    argument as the compile-time fragment cache in compiler/rules.py).
     Invalidation: ``SimpleSchema._rebuild_caches`` drops the memo on any
     definition change, and the key carries the identity of every active
     custom/global validator so a registry change rebuilds."""
@@ -564,7 +280,10 @@ def _modifier_rule_forest(
     op = F.col("op")
     key_path = F.col("key_path")
     v = F.col("value")
-    generic = _generic_key(key_path)
+    generic = generic_key(key_path)
+    view = TokenView(v, op)
+    merged = schema.merged_schema()
+    alts_of = {k: schema.resolved_alternatives(k) for k in merged}
 
     # ---- input validation (compile-level errors surfaced as rows) ----------
     bad_op = F.when(
@@ -573,17 +292,14 @@ def _modifier_rule_forest(
     ).when(
         ~op.startswith("$"),
         violation(key_path, "notAModifierOperator", value=op),
-    ).otherwise(_null_violation())
+    ).otherwise(null_violation())
 
     # ---- KEY_NOT_IN_SCHEMA --------------------------------------------------
     # not emitted for $unset/$rename sources (validateField.ts:265-270) nor
     # `<datekey>.$type` under $currentDate; blackbox descendants allowed
-    allowed_keys = set(comp.merged.keys())
-    blackbox = schema.blackbox_keys()
-    allowed_expr = generic.isin(*allowed_keys) if allowed_keys else F.lit(False)
-    for bb in blackbox:
+    allowed_expr = generic.isin(*merged) if merged else F.lit(False)
+    for bb in schema.blackbox_keys():
         allowed_expr = allowed_expr | generic.startswith(bb + ".")
-    # ancestors of declared keys used as object-valued targets are allowed
     key_unknown = (
         ~allowed_expr
         & ~op.isin("$unset", "$rename")
@@ -591,261 +307,115 @@ def _modifier_rule_forest(
     )
     key_not_in_schema = F.when(
         key_unknown,
-        violation(key_path, ErrorTypes.KEY_NOT_IN_SCHEMA, value=_display(v)),
-    ).otherwise(_null_violation())
+        violation(key_path, ErrorTypes.KEY_NOT_IN_SCHEMA, value=view.display),
+    ).otherwise(null_violation())
 
     # ---- required: explicit null / $unset / $rename -------------------------
-    required_rows = []
-    optional_map = {k: _eval_optional(d) for k, d in comp.merged.items()}
-    non_optional = [k for k, opt in optional_map.items() if not opt]
-    req_cond = None
+    non_optional = [k for k, alts in alts_of.items() if not is_optional(alts)]
+    req_cond = null_violation()
     if non_optional:
-        is_non_opt = generic.isin(*non_optional)
         req_cond = F.when(
-            is_non_opt
+            generic.isin(*non_optional)
             & (
                 op.isin("$unset", "$rename")
-                | (op.isin(*OPS_SET) & _is_json_null(v))
+                | (op.isin(*OPS_SET) & is_json_null(v))
             ),
             violation(key_path, ErrorTypes.REQUIRED),
-        ).otherwise(_null_violation())
+        ).otherwise(null_violation())
 
     # ---- custom validators (validateField.ts:192-226 runs the full chain
-    # in modifier mode too): Python fns ride Arrow UDFs over the JSON value
-    # token; @spark_rule fns get a typed token extraction; two-argument fns
-    # resolve field()/sibling_field() against the document's other operator
-    # entries (reference getFieldInfo over the mongoObject)
-    def _customs_for(key: str) -> list:
-        if key not in comp.merged:
-            return []
-        fns: list = []
-        for a in comp._alternatives(key):
-            fn_a = a.get("custom")
-            if fn_a is not None and all(fn_a is not c for c in fns):
-                fns.append(fn_a)
-        return fns + schema.all_validators()
-
-    from .compiler.compile import RuleContext, _wants_context
-
+    # in modifier mode too)
+    customs_of = {k: token_customs(schema, alts) for k, alts in alts_of.items()}
     any_ctx = any(
-        _wants_context(fn)
-        for key in comp.merged
-        for fn in _customs_for(key)
-        if not getattr(fn, "_is_spark_rule", False)
+        wants_context(fn)
+        for fns in customs_of.values()
+        for fn in fns
+        if not is_spark_rule(fn)
     )
-    has_any_custom = any(_customs_for(key) for key in comp.merged)
-    entries_col = F.col("__entries") if any_ctx else None
+    context = (F.col("__entries"), _decode_entry_row) if any_ctx else None
 
-    def _typed_token(key: str, token: Column) -> Column:
-        kinds = set()
-        for a in comp._alternatives(key):
-            t = a.get("type")
-            if isinstance(t, SimpleSchema):
-                t = ObjectType
-            kinds.add(t)
-        if kinds == {String}:
-            return _json_str(token)
-        if kinds <= {Number, Integer} and kinds:
-            return _json_num(token)
-        if kinds == {Boolean}:
-            return F.from_json(
-                F.concat(F.lit('{"v":'), token, F.lit("}")), "v boolean"
-            ).getField("v")
-        # object- / oneOf-typed keys: hand the rule the token parsed as a
-        # VARIANT value (malformed tokens → NULL via try_parse_json, same
-        # contract as object-valued $set recursion); the rule extracts what
-        # it needs with try_variant_get(value, '$.path', type)
-        return F.try_parse_json(token)
-
-    def _token_udf(fn, key: str, wants_ctx: bool):
-        """Key-masked validator UDF.  Spark extracts pandas UDFs into an
-        ArrowEvalPython node evaluated for EVERY row regardless of the
-        CASE gating around the result, so the mask column must travel
-        into the UDF — otherwise a type-sensitive validator for key X
-        would also receive other keys' decoded values and could raise."""
-        from .validation import FieldContext
-
-        if wants_ctx:
-
-            def _apply(
-                tokens: pd.Series, masks: pd.Series, ents: pd.Series
-            ) -> pd.Series:
-                out = []
-                for tok, m, en in zip(tokens, masks, ents):
-                    if not m:
-                        out.append(None)
-                        continue
-                    val = _decode_token(tok)
-                    out.append(
-                        fn(val, FieldContext(key, val, _decode_entry_row(en)))
-                    )
-                return pd.Series(out, dtype=object)
-
-            return F.pandas_udf(_apply, T.StringType())
-
-        def _apply(tokens: pd.Series, masks: pd.Series) -> pd.Series:
-            return pd.Series(
-                [fn(_decode_token(t)) if m else None
-                 for t, m in zip(tokens, masks)],
-                dtype=object,
-            )
-
-        return F.pandas_udf(_apply, T.StringType())
-
-    def _custom_chain(key: str, name: Column) -> list[Column]:
+    def custom_chain(key: str) -> list[Column]:
         """Ordered custom-violation columns for one key's value token."""
-        chain: list[Column] = []
+        if not customs_of[key]:
+            return []
         # item keys (tags.$) chain onto BOTH concrete-index rows (tags.0 →
         # generic tags.$) and single-value $push rows (generic tags)
+        mask = generic == key
         if key.endswith(".$"):
-            mask = (generic == key) | (generic == key[: -len(".$")])
-        else:
-            mask = generic == key
-        for fn in _customs_for(key):
-            if getattr(fn, "_is_spark_rule", False):
-                typed = _typed_token(key, v)
-                err_type = fn(
-                    typed,
-                    RuleContext(
-                        key=key, name=name, definition=comp._alternatives(key)[0]
-                    ),
-                )
-            else:
-                wants = _wants_context(fn)
-                udf = _token_udf(fn, key, wants)
-                err_type = (
-                    udf(v, mask, entries_col) if wants else udf(v, mask)
-                )
-            chain.append(
-                F.when(
-                    err_type.isNotNull(),
-                    violation(name, err_type, value=_display(v)),
-                ).otherwise(_null_violation())
-            )
-        return chain
+            mask = mask | (generic == key[: -len(".$")])
+        return token_custom_rules(
+            view, key_path, key, alts_of[key], customs_of[key], mask, context
+        )
 
     # ---- per-key value rules -------------------------------------------------
     # value checked for $set/$setOnInsert/$inc/$min/$max/$mul/$currentDate
     # (non-null values); for $push/$addToSet against the ITEM definition
     check_value_ops = list(OPS_SET) + ["$inc", "$currentDate", "$min", "$max", "$mul"]
-    empty_viol_arr = F.lit(None).cast(T.ArrayType(VIOLATION_SCHEMA))
-    value_rule = _null_violation()
-    item_rule = _null_violation()
-    each_err = empty_viol_arr
-    for k in comp.merged:
+    is_each = v.rlike(r'^\s*\{\s*"\$each"')
+    value_rule = null_violation()
+    item_rule = null_violation()
+    each_err = F.lit(None).cast(T.ArrayType(VIOLATION_SCHEMA))
+    for k in merged:
         if k.endswith(".$"):
             continue
-        err = comp.value_error(k, v, key_path, op)
-        customs = _custom_chain(k, key_path) if has_any_custom else []
-        if err is not None or customs:
-            parts = ([err] if err is not None else []) + customs
-            full = parts[0] if len(parts) == 1 else F.coalesce(*parts)
+        full = first([value_error(view, key_path, alts_of[k])] + custom_chain(k))
+        if full is not None:
             value_rule = F.when(generic == k, full).otherwise(value_rule)
         # concrete array index paths (tags.0) validate against the item def
         item_key = f"{k}.$"
-        if item_key in comp.merged:
-            item_customs = (
-                _custom_chain(item_key, key_path) if has_any_custom else []
+        if item_key not in merged:
+            continue
+        item_alts = alts_of[item_key]
+        item_err = value_error(view, key_path, item_alts)
+        full_idx = first([item_err] + custom_chain(item_key))
+        if full_idx is not None:
+            value_rule = F.when(generic == item_key, full_idx).otherwise(value_rule)
+            # single-value $push/$addToSet validates the pushed value
+            # against the same item chain
+            item_rule = F.when(generic == k, full_idx).otherwise(item_rule)
+        item_fns = customs_of[item_key]
+        if item_err is None and not item_fns:
+            continue
+        # $each: every element validated (doValidation.ts:52-58); elements
+        # re-encoded to JSON per the item's expected type.  @spark_rule item
+        # customs run inside the transform; Python item customs merge via
+        # one Arrow UDF over the token array (UDF results can't be
+        # referenced inside HOF lambdas)
+        spark_fns = [fn for fn in item_fns if is_spark_rule(fn)]
+        py_fns = [fn for fn in item_fns if not is_spark_rule(fn)]
+
+        def elem_err(e: Column) -> Column:
+            ev = TokenView(e, op)
+            err = first(
+                [value_error(ev, key_path, item_alts)]
+                + token_custom_rules(ev, key_path, item_key, item_alts, spark_fns)
             )
-            ierr_idx = comp.value_error(k, v, key_path, op, as_item=True)
-            idx_parts = (
-                [ierr_idx] if ierr_idx is not None else []
-            ) + item_customs
-            if idx_parts:
-                full_idx = (
-                    idx_parts[0]
-                    if len(idx_parts) == 1
-                    else F.coalesce(*idx_parts)
-                )
-                value_rule = F.when(generic == item_key, full_idx).otherwise(
-                    value_rule
-                )
-                # single-value $push/$addToSet validates the pushed value
-                # against the same item chain
-                item_rule = F.when(generic == k, full_idx).otherwise(item_rule)
-            ierr = comp.value_error(k, v, key_path, op, as_item=True)
-            item_rule_fns = [
-                fn
-                for fn in (_customs_for(item_key) if has_any_custom else [])
-            ]
-            if ierr is not None or item_rule_fns:
-                # $each: every element validated (doValidation.ts:52-58);
-                # elements re-encoded to JSON per the item's expected type.
-                # @spark_rule item customs run inside the transform; Python
-                # item customs merge via one Arrow UDF over the token array
-                # (UDF results can't be referenced inside HOF lambdas)
-                elems = _each_elements_as_json(v, comp, item_key)
+            return null_violation() if err is None else err
 
-                def elem_expr_err(e):
-                    parts = []
-                    base_err = comp.value_error(
-                        k, e, key_path, op, as_item=True
-                    )
-                    if base_err is not None:
-                        parts.append(base_err)
-                    for fn in item_rule_fns:
-                        if not getattr(fn, "_is_spark_rule", False):
-                            continue
-                        typed = _typed_token(item_key, e)
-                        et = fn(
-                            typed,
-                            RuleContext(
-                                key=item_key,
-                                name=key_path,
-                                definition=comp._alternatives(item_key)[0],
-                            ),
-                        )
-                        parts.append(
-                            F.when(
-                                et.isNotNull(),
-                                violation(key_path, et, value=_display(e)),
-                            ).otherwise(_null_violation())
-                        )
-                    if not parts:
-                        return _null_violation()
-                    return parts[0] if len(parts) == 1 else F.coalesce(*parts)
-
-                expr_arr = F.transform(
-                    F.coalesce(elems, F.array().cast("array<string>")),
-                    elem_expr_err,
-                )
-                py_item_fns = [
-                    fn
-                    for fn in item_rule_fns
-                    if not getattr(fn, "_is_spark_rule", False)
-                ]
-                if py_item_fns:
-                    merge = _each_merge_udf(py_item_fns, item_key)
-                    per_elem = merge(
-                        expr_arr,
-                        F.coalesce(elems, F.array().cast("array<string>")),
-                        key_path,
-                        entries_col
-                        if any_ctx
-                        else F.lit(None).cast(
-                            "array<struct<op:string,key:string,value:string>>"
-                        ),
-                    )
-                else:
-                    per_elem = F.filter(expr_arr, lambda x: x.isNotNull())
-                each_err = F.when(
-                    (generic == k) & v.rlike(r'^\s*\{\s*"\$each"'), per_elem
-                ).otherwise(each_err)
+        elems = F.coalesce(
+            _each_elements_as_json(v, item_alts), F.array().cast("array<string>")
+        )
+        expr_arr = F.transform(elems, elem_err)
+        if py_fns:
+            entries = context[0] if context else F.lit(None).cast(
+                "array<struct<op:string,key:string,value:string>>"
+            )
+            per_elem = item_merge_udf(py_fns, item_key, _decode_entry_row)(
+                expr_arr, elems, key_path, entries
+            )
+        else:
+            per_elem = F.filter(expr_arr, lambda x: x.isNotNull())
+        each_err = F.when((generic == k) & is_each, per_elem).otherwise(each_err)
 
     checked = F.when(
-        op.isin(*check_value_ops) & ~_is_json_null(v),
+        op.isin(*check_value_ops) & ~is_json_null(v),
         value_rule,
     ).when(
-        op.isin(*OPS_PUSH) & ~v.rlike(r'^\s*\{\s*"\$each"'),
+        op.isin(*OPS_PUSH) & ~is_each,
         item_rule,
-    ).otherwise(_null_violation())
+    ).otherwise(null_violation())
 
-    per_row = F.coalesce(
-        bad_op,
-        req_cond if req_cond is not None else _null_violation(),
-        key_not_in_schema,
-        checked,
-    )
+    per_row = F.coalesce(bad_op, req_cond, key_not_in_schema, checked)
     memo[memo_key] = {
         "per_row": per_row,
         "each_err": each_err,
@@ -863,9 +433,8 @@ def validate_modifier_table(
 ) -> DataFrame:
     """Violations table ``(id, name, type, value…)`` for a long-format
     modifier table ``(id, op, key_path, value, upsert)``."""
-    comp = _ModifierCompiler(schema)
-    rules = _modifier_rule_forest(schema, comp)
-    mods = _expand_object_set_rows(mods, comp, schema, id_col)
+    rules = _modifier_rule_forest(schema)
+    mods = _expand_object_set_rows(mods, schema, id_col)
     if rules["any_ctx"]:
         # one co-partitioned shuffle attaching the (schema-bounded) entry
         # list per document; only paid when a cross-field validator exists
@@ -907,12 +476,12 @@ def validate_modifier_table(
         # null already fires required through the per-row rule; injecting too
         # would duplicate it); ancestor-creating credit needs a real value
         present_any = (
-            set_rows.select(F.col(id_col), _generic_key(F.col("key_path")).alias("k"))
+            set_rows.select(F.col(id_col), generic_key(F.col("key_path")).alias("k"))
             .distinct()
         )
         present = (
-            set_rows.where(~_is_json_null(F.col("value")))
-            .select(F.col(id_col), _generic_key(F.col("key_path")).alias("k"))
+            set_rows.where(~is_json_null(F.col("value")))
+            .select(F.col(id_col), generic_key(F.col("key_path")).alias("k"))
             .distinct()
         )
         upsert_docs = set_rows.select(id_col).distinct()
@@ -1014,10 +583,10 @@ def clean_modifier_table(
     remove_nulls_from_arrays = opts["remove_nulls_from_arrays"]
     get_auto_values = opts["get_auto_values"]
 
-    comp = _ModifierCompiler(schema)
+    merged = schema.merged_schema()
     op = F.col("op")
     key_path = F.col("key_path")
-    generic = _generic_key(key_path)
+    generic = generic_key(key_path)
     v = F.col("value")
 
     # reference operatorsToIgnoreValue = ['$unset', '$currentDate']
@@ -1031,8 +600,7 @@ def clean_modifier_table(
 
     # ---- filter unknown keys (keep $unset/$rename) --------------------------
     if filter:
-        allowed_keys = set(comp.merged.keys())
-        allowed = generic.isin(*allowed_keys) if allowed_keys else F.lit(False)
+        allowed = generic.isin(*merged) if merged else F.lit(False)
         for bb in schema.blackbox_keys():
             allowed = allowed | generic.startswith(bb + ".")
         # item paths (tags.0) and $each forms target the array key itself
@@ -1041,7 +609,7 @@ def clean_modifier_table(
     # ---- per-key value cleaning ---------------------------------------------
     def clean_token(k: str, token: Column) -> Column:
         """autoConvert + trim for one JSON token checked against key ``k``."""
-        alts = comp._alternatives(k) if k in comp.merged else []
+        alts = schema.resolved_alternatives(k)
         if not alts or any(
             a.get("blackbox") is True or a.get("type") is AnyType for a in alts
         ):
@@ -1054,24 +622,24 @@ def clean_modifier_table(
                 # ext-date → quoted ISO payload (reference Date.toString —
                 # ISO-8601 is this engine's canonical date rendering)
                 expr = F.when(
-                    _is_json_number(expr) | _is_json_bool(expr),
+                    is_json_number(expr) | is_json_bool(expr),
                     F.concat(F.lit('"'), F.trim(expr), F.lit('"')),
                 ).when(
-                    _is_ext_date(expr),
+                    is_ext_date(expr),
                     _json_quote(F.from_json(expr, "`$date` string").getField("$date")),
                 ).otherwise(expr)
             elif first in (NumTok, Integer):
-                parsed = _json_str(expr)
+                parsed = json_str(expr)
                 num = parsed.try_cast("double")
                 expr = F.when(
-                    _is_json_string(expr) & (F.length(parsed) > 0) & num.isNotNull(),
+                    is_json_string(expr) & (F.length(parsed) > 0) & num.isNotNull(),
                     F.when(num == F.floor(num), num.cast("long").cast("string"))
                     .otherwise(num.cast("string")),
                 ).otherwise(expr)
             elif first is BoolTok:
-                lowered = F.lower(_json_str(expr))
+                lowered = F.lower(json_str(expr))
                 expr = F.when(
-                    _is_json_string(expr) & lowered.isin("true", "false"), lowered
+                    is_json_string(expr) & lowered.isin("true", "false"), lowered
                 ).otherwise(expr)
             if len(alts) > 1:
                 # oneOf: convert only when the token matches NO alternative
@@ -1085,8 +653,8 @@ def clean_modifier_table(
             # decode → trim → RE-ENCODE with proper JSON escaping (a naive
             # quote wrap corrupts values containing '"' or '\')
             expr = F.when(
-                _is_json_string(expr),
-                _json_quote(js_trim(_json_str(expr))),
+                is_json_string(expr),
+                _json_quote(js_trim(json_str(expr))),
             ).otherwise(expr)
         return expr
 
@@ -1098,7 +666,7 @@ def clean_modifier_table(
         transforms).  Returns the original token for non-object input."""
         prefix = f"{k}."
         child_names = sorted(
-            {c[len(prefix):].split(".")[0] for c in comp.merged if c.startswith(prefix)}
+            {c[len(prefix):].split(".")[0] for c in merged if c.startswith(prefix)}
         )
         # try_parse_json: malformed '{...' input is returned untouched (the
         # var.isNotNull() guard below) instead of crashing the projection
@@ -1109,14 +677,9 @@ def clean_modifier_table(
             extracted = F.to_json(
                 F.try_variant_get(var, f"$['{n}']", "variant")
             )
-            child_alts = comp._alternatives(child_key) if child_key in comp.merged else []
-            is_obj_child = any(
-                isinstance(a.get("type"), SimpleSchema) or a.get("type") is ObjectType
-                for a in child_alts
-            ) and not any(a.get("blackbox") is True for a in child_alts)
             cleaned_child = (
                 clean_object_value(child_key, extracted)
-                if is_obj_child
+                if is_object_key(schema.resolved_alternatives(child_key))
                 else clean_token(child_key, extracted)
             )
             frag = F.concat(F.lit(f'"{n}": '), cleaned_child)
@@ -1132,7 +695,7 @@ def clean_modifier_table(
             F.lit("}"),
         )
         return F.when(
-            _is_json_object(token) & ~_is_ext_date(token) & var.isNotNull(),
+            is_json_object(token) & ~is_ext_date(token) & var.isNotNull(),
             rebuilt,
         ).otherwise(token)
 
@@ -1193,10 +756,10 @@ def clean_modifier_table(
 
     cleaned = v
     object_keys = []
-    for k in comp.merged:
+    for k in merged:
         if k.endswith(".$"):
             continue
-        alts = comp._alternatives(k)
+        alts = schema.resolved_alternatives(k)
         if any(a.get("blackbox") is True or a.get("type") is AnyType for a in alts):
             continue
         if any(
@@ -1206,8 +769,8 @@ def clean_modifier_table(
             object_keys.append(k)
             continue
         item_key = f"{k}.$"
-        if item_key in comp.merged:
-            item_alts = comp._alternatives(item_key)
+        if item_key in merged:
+            item_alts = schema.resolved_alternatives(item_key)
             if any(
                 a.get("blackbox") is True or a.get("type") is AnyType
                 for a in item_alts
@@ -1245,8 +808,8 @@ def clean_modifier_table(
                 per_op = per_op.when(
                     op.isin(*OPS_SET)
                     & ~is_arr_tok
-                    & ~_is_json_null(v)
-                    & (~is_obj_tok | _is_ext_date(v)),
+                    & ~is_json_null(v)
+                    & (~is_obj_tok | is_ext_date(v)),
                     F.concat(F.lit("["), v, F.lit("]")),
                 )
             cleaned = F.when(generic == k, per_op.otherwise(v)).otherwise(cleaned)
@@ -1327,7 +890,7 @@ class _ModifierAutoValueContext:
         ent = self._ents.get(path)
         if ent is None or ent[0] not in _VALUE_OPS:
             return None
-        return _decode_token(ent[1])
+        return decode_token(ent[1])
 
     def sibling_field(self, name: str):
         parent, _, _ = self.key.rpartition(".")
@@ -1345,22 +908,6 @@ _VALUE_OPS = frozenset(
 )
 
 
-def _decode_token(tok):
-    if tok is None:
-        return None
-    try:
-        return json.loads(tok)
-    except ValueError:
-        return None
-
-
-def _eval_optional(d: dict) -> bool:
-    """Callable ``optional`` definitions evaluate like the fixed-column
-    compiler (compiler/compile.py:401-403): ``bool(optional())``."""
-    opt = d.get("optional", False)
-    return bool(opt()) if callable(opt) else bool(opt)
-
-
 def _decode_entry_row(entries) -> dict:
     """Decode a document's operator entries into a {key: value} dict for
     cross-field FieldContext lookups (value-carrying ops only, first
@@ -1371,63 +918,8 @@ def _decode_entry_row(entries) -> dict:
         return row
     for e in entries:
         if e["op"] in _VALUE_OPS and e["key"] not in row:
-            row[e["key"]] = _decode_token(e["value"])
+            row[e["key"]] = decode_token(e["value"])
     return row
-
-
-def _each_merge_udf(fns, item_key: str):
-    """$each + Python item validators: per-element merge of the expression
-    violations (built-in + @spark_rule, already computed JVM-side) with the
-    Python validators' verdicts — one Arrow UDF per array key, because UDF
-    results cannot be referenced inside higher-order-function lambdas."""
-    from .compiler.compile import _wants_context
-    from .errors import VIOLATION_FIELDS
-    from .validation import FieldContext
-
-    wants = [_wants_context(fn) for fn in fns]
-    field_names = [nm for nm, _ in VIOLATION_FIELDS]
-
-    def run(expr_viols, tokens, name, entries):
-        if tokens is None:
-            return []
-        row = _decode_entry_row(entries)
-        out = []
-        for i, tok in enumerate(tokens):
-            ev = None
-            if expr_viols is not None and i < len(expr_viols):
-                ev = expr_viols[i]
-                if ev is not None and ev.get("type") is None:
-                    ev = None
-            if ev is not None:
-                out.append(ev)
-                continue
-            val = _decode_token(tok)
-            for fn, w in zip(fns, wants):
-                et = fn(val, FieldContext(item_key, val, row)) if w else fn(val)
-                if et is not None:
-                    viol = dict.fromkeys(field_names)
-                    viol["name"] = name
-                    viol["type"] = et
-                    # mirror jsondoc._display_token: unquote quoted tokens
-                    # that decode to a string; a malformed quoted token
-                    # (decodes to None) falls back to the trimmed token
-                    # rather than the literal "None"
-                    if (tok or "").lstrip().startswith('"'):
-                        viol["value"] = val if isinstance(val, str) else tok.strip()
-                    else:
-                        viol["value"] = tok.strip() if tok else tok
-                    out.append(viol)
-                    break
-        return out
-
-    def _apply(expr: pd.Series, arrs: pd.Series, names: pd.Series,
-               ents: pd.Series) -> pd.Series:
-        return pd.Series(
-            [run(e, a, n, en) for e, a, n, en in zip(expr, arrs, names, ents)],
-            dtype=object,
-        )
-
-    return F.pandas_udf(_apply, T.ArrayType(VIOLATION_SCHEMA))
 
 
 class _Skip:
@@ -1503,7 +995,7 @@ def _apply_modifier_auto_values(
     def run_scalar(k, fn, ents, upsert):
         op0, tok = ents.get(k, (None, None))
         is_set = op0 in _VALUE_OPS
-        val = _decode_token(tok) if is_set else None
+        val = decode_token(tok) if is_set else None
         ctx = _ModifierAutoValueContext(
             k, val, is_set, ents, bool(upsert), op0 or "$set"
         )
@@ -1589,7 +1081,7 @@ def _apply_modifier_auto_values(
                 continue
             matched = True
             remaining = segs[len(kseg):]
-            decoded = _decode_token(tok)
+            decoded = decode_token(tok)
             if op0 in ("$push", "$addToSet"):
                 # the entry value is ONE element (or $each items): the
                 # leading `$` of the remaining generic path is implicit
@@ -1709,7 +1201,7 @@ def _apply_modifier_auto_values(
                 return
             if r == "prefix":
                 remaining = segs[len(ks):]
-                decoded = _decode_token(tok)
+                decoded = decode_token(tok)
                 if op0 in ("$push", "$addToSet"):
                     if remaining[0] != "$":
                         continue

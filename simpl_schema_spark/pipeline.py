@@ -18,7 +18,8 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from .cleaning import clean_with_info
-from .compiler.compile import RuleCompiler, _stringify, _token_name, violation
+from .compiler.compile import RuleCompiler
+from .compiler.rules import stringify, token_name, violation
 from .errors import ErrorTypes, VIOLATION_SCHEMA
 from .schema.schema import SimpleSchema
 from .validation import _apply_pandas_rules
@@ -62,7 +63,7 @@ def clean_and_validate(
     for key, orig_dtype in cleaner.converted.items():
         orig = F.col(orig_names[key])
         alts = schema.resolved_alternatives(key)
-        data_type = _token_name(alts[-1].get("type")) if alts else "String"
+        data_type = token_name(alts[-1].get("type")) if alts else "String"
         conv_failed = orig.isNotNull() & F.col(key).isNull()
         def _not_this_key(v: Column, k: str = key) -> Column:
             return v.getField("name") != F.lit(k)
@@ -73,7 +74,7 @@ def clean_and_validate(
                 violation(
                     F.lit(key),
                     ErrorTypes.EXPECTED_TYPE,
-                    value=_stringify(orig, orig_dtype),
+                    value=stringify(orig, orig_dtype),
                     dataType=data_type,
                 )
             ),

@@ -241,9 +241,19 @@ class SimpleSchema:
     def resolved_alternatives(self, key: str) -> list[dict[str, Any]]:
         """Per-alternative effective definitions: outer props merged under
         each alternative's own props (validateField.ts:181-190 merge order:
-        alternative wins)."""
+        alternative wins).  Keys contributed by a subschema-typed ancestor
+        (``merged_schema``) resolve through that subschema."""
         resolved = self.get_definition(key)
         if resolved is None:
+            generic = make_key_generic(key)
+            for ancestor in reversed(key_ancestors(generic)):
+                anc_def = self._schema.get(ancestor)
+                for alt in anc_def["type"].definitions if anc_def else ():
+                    sub = alt.get("type")
+                    if isinstance(sub, SimpleSchema):
+                        alts = sub.resolved_alternatives(generic[len(ancestor) + 1:])
+                        if alts:
+                            return alts
             return []
         outer = {k: v for k, v in resolved.items() if k != "type"}
         return [{**outer, **alt} for alt in resolved["type"]]

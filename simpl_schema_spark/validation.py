@@ -17,6 +17,7 @@ Outputs:
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Any, Callable, Iterable, Optional
 
 import pandas as pd
@@ -24,6 +25,13 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from .compiler.compile import RuleCompiler
+from .compiler.rules import generic_key
+from .compiler.validators import (
+    FieldContext,
+    json_typed_value,
+    typed_value,
+    value_udf,
+)
 from .errors import VIOLATION_SCHEMA
 from .schema.schema import SimpleSchema
 
@@ -33,41 +41,6 @@ __all__ = [
     "ValidationResult",
     "validate",
 ]
-
-
-class FieldContext:
-    """Per-row cross-field context for Python custom validators.
-
-    Mirrors the reference's ValidatorContext (src/types.ts:230-240):
-    ``value``, ``key``, ``field(path)``, ``sibling_field(name)``, ``is_set``.
-    ``row`` is a plain dict of the shipped context columns (nested structs
-    arrive as dicts via Arrow).
-    """
-
-    __slots__ = ("key", "value", "row")
-
-    def __init__(self, key: str, value: Any, row: dict):
-        self.key = key
-        self.value = value
-        self.row = row
-
-    @property
-    def is_set(self) -> bool:
-        return self.value is not None
-
-    def field(self, path: str) -> Any:
-        if path in self.row:  # declared dotted context_fields ship flat
-            return self.row[path]
-        cur: Any = self.row
-        for seg in path.split("."):
-            if cur is None:
-                return None
-            cur = cur.get(seg) if isinstance(cur, dict) else getattr(cur, seg, None)
-        return cur
-
-    def sibling_field(self, name: str) -> Any:
-        parent, _, _ = self.key.rpartition(".")
-        return self.field(f"{parent}.{name}" if parent else name)
 
 
 def _apply_pandas_rules(df: DataFrame, rules) -> DataFrame:
@@ -86,82 +59,6 @@ def _apply_pandas_rules(df: DataFrame, rules) -> DataFrame:
         needs_arrow_guard,
         resolve_dtype,
     )
-
-    def make_udf(fn, decode_value=False):
-        # every variant takes a JVM-computed is-null flag: Arrow renders a
-        # NULL in an integral column as float NaN, so `v is None` alone
-        # under-reports unset values (same guard as
-        # cleaning._apply_python_auto_value)
-        if getattr(fn, "vectorized", False):
-            if decode_value:
-                # deep nested value arrived as a to_json string — decode
-                # the Series BEFORE the vectorized fn sees it, same as the
-                # per-element branch below
-                import json as _json
-
-                def _apply(s: pd.Series, nulls: pd.Series) -> pd.Series:
-                    return fn(
-                        s.map(
-                            lambda v: _json.loads(v)
-                            if isinstance(v, str)
-                            else v
-                        )
-                    )
-
-            else:
-
-                def _apply(s: pd.Series, nulls: pd.Series) -> pd.Series:
-                    s = s.astype(object)
-                    s[nulls.values.astype(bool)] = None
-                    return fn(s)
-
-        elif decode_value:
-            # deep nested value arrived as a to_json string (see
-            # arrowsafe.ctx_safe_struct) — decode before the user fn
-            import json as _json
-
-            def _apply(s: pd.Series, nulls: pd.Series) -> pd.Series:
-                return pd.Series(
-                    [
-                        fn(None)
-                        if is_null
-                        else fn(_json.loads(v) if isinstance(v, str) else v)
-                        for v, is_null in zip(s, nulls)
-                    ],
-                    dtype=object,
-                )
-
-        else:
-
-            def _apply(s: pd.Series, nulls: pd.Series) -> pd.Series:
-                return pd.Series(
-                    [fn(None if is_null else v) for v, is_null in zip(s, nulls)],
-                    dtype=object,
-                )
-
-        return F.pandas_udf(_apply, T.StringType())
-
-    def make_ctx_udf(fn, key, jsonified=(), decode_value=False):
-        import json as _json
-
-        jsonified = list(jsonified)
-
-        def _apply(
-            values: pd.Series, nulls: pd.Series, ctx_rows: pd.DataFrame
-        ) -> pd.Series:
-            rows = ctx_rows.to_dict("records")
-            out = []
-            for v, is_null, row in zip(values, nulls, rows):
-                if is_null:
-                    v = None  # NaN-for-NULL Arrow guard, see make_udf
-                elif decode_value and isinstance(v, str):
-                    v = _json.loads(v)
-                out.append(
-                    fn(v, FieldContext(key, v, decode_ctx_row(row, jsonified)))
-                )
-            return pd.Series(out, dtype=object)
-
-        return F.pandas_udf(_apply, T.StringType())
 
     def _extract(el, subpath):
         if not subpath:
@@ -276,38 +173,24 @@ def _apply_pandas_rules(df: DataFrame, rules) -> DataFrame:
             )
             df = df.withColumn(rule.column_name, udf(*inputs))
             continue
+        decode = typed_value
         if rule.input_cols:
-            raw_col = F.col(rule.input_cols[0])
-            null_col = raw_col.isNull()
-            value_col = raw_col
-            decode_value = needs_arrow_guard(
-                resolve_dtype(df.schema, rule.input_cols[0])
-            )
-            if decode_value:
+            value_col = F.col(rule.input_cols[0])
+            null_col = value_col.isNull()
+            if needs_arrow_guard(resolve_dtype(df.schema, rule.input_cols[0])):
                 # deep nested VALUE columns take the JSON detour too
                 value_col = F.to_json(value_col)
+                decode = json_typed_value
         else:
             value_col = F.lit(None).cast("string")  # key absent
             null_col = F.lit(True)
-            decode_value = False
+        ctx_inputs, context = [], None
         if rule.context_cols:
-            ctx_struct, jsonified = ctx_safe_struct(
-                df.schema, rule.context_cols
-            )
-            df = df.withColumn(
-                rule.column_name,
-                make_ctx_udf(
-                    rule.fn, rule.key, jsonified=jsonified,
-                    decode_value=decode_value,
-                )(value_col, null_col, ctx_struct),
-            )
-        else:
-            df = df.withColumn(
-                rule.column_name,
-                make_udf(rule.fn, decode_value=decode_value)(
-                    value_col, null_col
-                ),
-            )
+            ctx_struct, jsonified = ctx_safe_struct(df.schema, rule.context_cols)
+            ctx_inputs = [ctx_struct]
+            context = partial(decode_ctx_row, jsonified=jsonified)
+        udf = value_udf(rule.fn, rule.key, decode, context)
+        df = df.withColumn(rule.column_name, udf(value_col, null_col, *ctx_inputs))
     return df
 
 
@@ -503,9 +386,7 @@ class ValidationContext:
             generics = [make_key_generic(k) for k in keys]
 
             def in_revalidated(v):
-                name_generic = F.regexp_replace(
-                    v.getField("name"), r"(?<=^|\.)\d+(?=\.|$)", "\\$"
-                )
+                name_generic = generic_key(v.getField("name"))
                 cond = F.lit(False)
                 for g in generics:
                     cond = cond | (name_generic == g) | name_generic.startswith(g + ".")

@@ -44,3 +44,57 @@ class TestFunctionProps:
         ss = SimpleSchema({"k": {"type": int, "min": min_fn, "optional": True}})
         ss.resolved_alternatives("k")
         assert seen["key"] == "k"
+
+
+class TestFunctionPropsAcrossModes:
+    """Function-valued props resolve the same way in every validation mode:
+    ``max`` gives a ``maxString`` with the resolved bound, and a function
+    ``optional`` is called with its context."""
+
+    @staticmethod
+    def _props():
+        return {
+            "k": {"type": str, "max": lambda ctx: 3},
+            "o": {"type": str, "optional": lambda ctx: True},
+        }
+
+    def test_typed_subschema_keys(self, spark):
+        from simpl_schema_spark.validation import violations_table
+
+        ss = SimpleSchema({"doc": {"type": SimpleSchema(self._props())}})
+        df = spark.createDataFrame(
+            [(0, ("abcd", None))], "id bigint, doc struct<k:string,o:string>"
+        )
+        got = [
+            (r.name, r.type, r.max)
+            for r in violations_table(
+                df, ss, id_cols=["id"], extra_key_policy="ignore"
+            ).collect()
+        ]
+        assert got == [("doc.k", "maxString", "3")]
+
+    def test_json_documents(self, spark):
+        from simpl_schema_spark.jsondoc import validate_json_column
+
+        df = spark.createDataFrame(
+            [(0, '{"k": "abcd"}')], "doc_id bigint, json_blob string"
+        )
+        got = [
+            (r.name, r.type, r.max)
+            for r in validate_json_column(df, SimpleSchema(self._props())).collect()
+        ]
+        assert got == [("k", "maxString", "3")]
+
+    def test_modifier_rows(self, spark):
+        from simpl_schema_spark.modifiers import validate_modifier_table
+
+        df = spark.createDataFrame(
+            [(0, "$set", "k", '"abcd"', False), (1, "$unset", "o", '""', False)],
+            "doc_id bigint, op string, key_path string, value string, "
+            "upsert boolean",
+        )
+        got = [
+            (r.doc_id, r.name, r.type, r.max)
+            for r in validate_modifier_table(df, SimpleSchema(self._props())).collect()
+        ]
+        assert got == [(0, "k", "maxString", "3")]

@@ -446,7 +446,7 @@ class TestArrowNanNullGuard:
     """Arrow renders NULL in an integral column as float NaN inside pandas
     UDFs — autoValue fns and Python rules must see None, and genuine NaN in
     double columns must NOT be masked (cleaning.py `_apply_python_auto_value`
-    null-flag; validation.py make_udf/make_ctx_udf null-flag)."""
+    null-flag; compiler/validators.py `typed_value` null-flag)."""
 
     def test_auto_value_sees_none_for_null_bigint(self, spark):
         from simpl_schema_spark.cleaning import clean
