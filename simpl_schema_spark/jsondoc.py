@@ -6,9 +6,11 @@ heterogeneous crawl payloads.  This module reproduces the reference's
 present-key iteration (``validateField.ts:262-279``: unknown keys flagged
 per document; ``typeValidator`` on each declared key) over JSON text:
 
-- one ``parse_json`` per row (variant), then per declared key a
-  ``try_variant_get``/``to_json`` extraction that PRESERVES JSON token types
-  (strings stay quoted), checked by the shared rule table
+- each document parsed once (``try_parse_json`` into a variant column of
+  a decode projection, :class:`DocReads`), then per declared key one
+  ``try_variant_get``/``to_json`` extraction into a column of the same
+  projection, which PRESERVES JSON token types (strings stay quoted); the
+  forest reads those columns, checked by the shared rule table
   (``compiler/rules.py``) over its JSON-token view: type, min/max, regex,
   allowedValues, minCount/maxCount, oneOf
 - required: key absent or JSON null (doc mode, requiredValidator.ts:28,34)
@@ -16,8 +18,10 @@ per document; ``typeValidator`` on each declared key) over JSON text:
   declared (non-blackbox) object subtree, minus declared/blackbox names
 - blackbox / Any subtrees skipped (validateField.ts:112-113,174-175)
 
-Everything is one Catalyst projection per row — no shuffle, no Python; at
-10^12 docs this fuses with the scan like the fixed-column path.
+The plan is the decode projection (codegen, fused with the scan) under one
+``inline`` of the forest, which Spark runs as an interpreted ``Generate``
+— no shuffle, no Python; at 10^12 docs it scales like the fixed-column
+path.
 
 Custom validators run through the JSON-token chain shared with modifier
 rows (``compiler/validators.py``): Python field/item validators are
@@ -69,15 +73,63 @@ def _doc_row(doc) -> dict:
     return row if isinstance(row, dict) else {}
 
 
+#: name of the parsed document in the decode projection
+_PARSED = "__jv_doc"
+
+
+class DocReads:
+    """What the forest reads of a document: the parsed variant, each
+    declared key's JSON token and each declared array's elements.
+
+    Inline (``named=False``) every read is an expression over the JSON
+    column, for a caller that puts the forest in its own projection;
+    Catalyst then repeats each read at every reference.  Named, every read
+    is a column of the decode projection under the forest: ``parsed``
+    (the variant) first, then ``columns`` (the extractions), so each
+    document is parsed once and each key extracted once."""
+
+    def __init__(self, json_col: Column, *, named: bool) -> None:
+        # try_parse_json: heterogeneous crawl payloads WILL contain malformed
+        # rows; a null variant yields one malformedJson violation instead of
+        # failing the whole job
+        var = F.try_parse_json(json_col)
+        self.named = named
+        self.parsed = var.alias(_PARSED)
+        self.var = F.col(_PARSED) if named else var
+        self.columns: list[Column] = []
+        self._reads: dict[tuple[str, str], Column] = {}
+
+    def _read(self, key: str, ddl: str) -> Column:
+        if (key, ddl) not in self._reads:
+            expr = F.try_variant_get(self.var, _variant_path(key), ddl)
+            if ddl == "variant":
+                expr = F.to_json(expr)
+            if self.named:
+                name = f"__jv_{len(self.columns)}"
+                self.columns.append(expr.alias(name))
+                expr = F.col(name)
+            self._reads[(key, ddl)] = expr
+        return self._reads[(key, ddl)]
+
+    def token(self, key: str) -> Column:
+        """The key's value as a JSON token (NULL when absent)."""
+        return self._read(key, "variant")
+
+    def elements(self, key: str) -> Column:
+        """The key's array elements as variants (NULL when not an array)."""
+        return self._read(key, "array<variant>")
+
+
 def json_violations_column(
-    schema: SimpleSchema, json_col: Column
+    schema: SimpleSchema, json_col: Column, *, reads: DocReads | None = None
 ) -> Column:
-    """``array<violation>`` for one JSON-document column."""
+    """``array<violation>`` for one JSON-document column.
+
+    ``reads`` says where the forest reads the parsed document and its
+    tokens; by default they are expressions over ``json_col``."""
     merged = schema.merged_schema()
-    # try_parse_json: heterogeneous crawl payloads WILL contain malformed
-    # rows; a null variant yields one malformedJson violation (below)
-    # instead of failing the whole job
-    var = F.try_parse_json(json_col)
+    reads = reads or DocReads(json_col, named=False)
+    var = reads.var
     blackbox = set(schema.blackbox_keys())
     context = (json_col, _doc_row)
     empty = F.array().cast(f"array<{VIOLATION_SCHEMA.simpleString()}>")
@@ -93,7 +145,7 @@ def json_violations_column(
         alts = schema.resolved_alternatives(k)
         if is_any(alts):
             continue
-        extracted = F.to_json(F.try_variant_get(var, _variant_path(k), "variant"))
+        extracted = reads.token(k)
         view = TokenView(extracted)
         name = F.lit(k)
         chain: list[Column] = []
@@ -126,7 +178,7 @@ def json_violations_column(
             if not is_any(item_alts) or item_fns:
                 spark_fns = [fn for fn in item_fns if is_spark_rule(fn)]
                 py_fns = [fn for fn in item_fns if not is_spark_rule(fn)]
-                elems = F.try_variant_get(var, _variant_path(k), "array<variant>")
+                elems = reads.elements(k)
 
                 # expression-form rules (built-in + @spark_rule) evaluate
                 # inside ONE transform lambda, one coalesced error per element
@@ -186,7 +238,7 @@ def json_violations_column(
 
     arrays.append(unknown_in(json_col, ""))
     for k in object_keys:
-        sub = F.to_json(F.try_variant_get(var, _variant_path(k), "variant"))
+        sub = reads.token(k)
         arrays.append(F.when(sub.isNotNull(), unknown_in(sub, k + ".")).otherwise(empty))
 
     combined = F.concat(*arrays) if len(arrays) > 1 else arrays[0]
@@ -206,11 +258,13 @@ def validate_json_column(
 ) -> DataFrame:
     """Exploded violations table for a JSON string column.
 
-    The violation forest is pure unbound Columns over the named column —
-    memoized on the schema instance like the modifier/document forests
-    (building it is py4j-round-trip-bound; invalidated on definition
-    change via ``SimpleSchema._rebuild_caches``, keyed on the active
-    validator identities)."""
+    Shape: a decode projection parses each document once and extracts each
+    declared key once; the violation forest above it reads those columns.
+    Both are pure unbound Columns over the named column — memoized together
+    on the schema instance like the modifier/document forests (building
+    them is py4j-round-trip-bound; invalidated on definition change via
+    ``SimpleSchema._rebuild_caches``, keyed on the active validator
+    identities)."""
     id_cols = list(id_cols)
     memo_key = (
         "json_violations",
@@ -219,10 +273,13 @@ def validate_json_column(
     )
     memo = schema.__dict__.setdefault("_compiled_memo", {})
     if memo_key not in memo:
-        memo[memo_key] = json_violations_column(schema, F.col(json_col))
+        reads = DocReads(F.col(json_col), named=True)
+        forest = json_violations_column(schema, F.col(json_col), reads=reads)
+        memo[memo_key] = (reads.parsed, reads.columns, forest)
+    parsed, decoded, forest = memo[memo_key]
+    keep = list(dict.fromkeys([*id_cols, json_col]))
     return (
-        df.select(
-            *id_cols,
-            F.explode(memo[memo_key]).alias("violation"),
-        ).select(*id_cols, "violation.*")
+        df.select(*keep, parsed)
+        .select(*keep, _PARSED, *decoded)
+        .select(*id_cols, F.inline(forest))
     )

@@ -13,11 +13,21 @@ Relational encoding (FIXTURES.md F6): one row per (document, operator, key)::
 
 ``value`` is JSON; dates use extended-JSON ``{"$date": "ISO-8601"}``.
 
-Execution shape: ONE projection over the long table (all per-row rules are a
-CASE WHEN forest over the generic key) plus ONE small aggregation per
-upsert-required injection (collect the set of "keys with values" per
-document and anti-join the compile-time required-key list — the relational
-form of getKeysWithValueInObj, ``src/utility/index.ts:46-64``).
+Execution shape: ``validate_modifier_table`` is ONE projection over the long
+table (all per-row rules are a CASE WHEN forest over the generic key) plus,
+when the schema has required keys, ONE ``groupBy(doc)`` over the upsert
+``$set``/``$setOnInsert`` rows: it collects the keys present (even as null)
+and the keys with a value, and ``array_except`` of the compile-time
+required-key list against present ∪ ancestors(valued) is exploded into
+``required`` rows — the relational form of getKeysWithValueInObj,
+``src/utility/index.ts:46-64``.  Object-valued ``$set`` expansion is a
+union of projections over the same input; the only other shuffle is the
+join that attaches a document's entries, paid only when a cross-field
+validator exists.
+``clean_modifier_table`` is one projection plus, when autoValues or
+defaultValues exist, one ``groupBy(doc)`` that runs the Arrow UDF once per
+document and resolves kept and added rows with array functions; nothing is
+persisted.
 
 The value rules of each key are the shared rule table
 (``compiler/rules.py``) over a JSON-token view that carries the row's
@@ -468,47 +478,37 @@ def validate_modifier_table(
     # for upsert $set/$setOnInsert docs: every non-optional key neither set
     # non-null, nor ancestor-created ("a.b" with value ⇒ "a" satisfied),
     # fires required (requiredValidator.ts:41-60 + doValidation.ts:64-70)
-    if non_optional:
-        set_rows = mods.where(
-            F.col("upsert") & F.col("op").isin(*OPS_SET)
+    required = [k for k in non_optional if "$" not in k]
+    if required:
+        # one aggregate per upsert document: keys explicitly set — even to
+        # null — are never INJECTED (an explicit null already fires required
+        # through the per-row rule; injecting too would duplicate it), and
+        # ancestor-creating credit needs a real value (a.b.c with a value
+        # satisfies a and a.b)
+        key = generic_key(F.col("key_path"))
+        docs = mods.where(F.col("upsert") & F.col("op").isin(*OPS_SET)).groupBy(
+            id_col
+        ).agg(
+            F.collect_set(key).alias("present"),
+            F.collect_set(F.when(~is_json_null(F.col("value")), key)).alias("valued"),
         )
-        # keys explicitly set — even to null — are never INJECTED (an explicit
-        # null already fires required through the per-row rule; injecting too
-        # would duplicate it); ancestor-creating credit needs a real value
-        present_any = (
-            set_rows.select(F.col(id_col), generic_key(F.col("key_path")).alias("k"))
-            .distinct()
+
+        def with_ancestors(path: Column) -> Column:
+            segs = F.split(path, "\\.")
+            return F.transform(
+                F.sequence(F.lit(1), F.size(segs)),
+                lambda n: F.array_join(F.slice(segs, 1, n), "."),
+            )
+
+        satisfied = F.array_union(
+            F.col("present"), F.flatten(F.transform(F.col("valued"), with_ancestors))
         )
-        present = (
-            set_rows.where(~is_json_null(F.col("value")))
-            .select(F.col(id_col), generic_key(F.col("key_path")).alias("k"))
-            .distinct()
-        )
-        upsert_docs = set_rows.select(id_col).distinct()
-        keys_df = upsert_docs.sparkSession.createDataFrame(
-            [(k,) for k in non_optional if "$" not in k], "k string"
-        )
-        needed = upsert_docs.crossJoin(F.broadcast(keys_df))
-        satisfied = present.select(
-            id_col, F.explode(
-                F.array_union(
-                    F.array(F.col("k")),
-                    # ancestor-creating: a.b.c with value satisfies a and a.b
-                    F.slice(
-                        F.transform(
-                            F.sequence(F.lit(1), F.size(F.split(F.col("k"), "\\."))),
-                            lambda n: F.array_join(F.slice(F.split(F.col("k"), "\\."), 1, n), "."),
-                        ),
-                        1,
-                        F.greatest(F.size(F.split(F.col("k"), "\\.")) - 1, F.lit(0)),
-                    ),
-                )
-            ).alias("k")
-        ).distinct().unionByName(present_any).distinct()
-        missing = needed.join(satisfied, on=[id_col, "k"], how="left_anti")
-        upsert_viols = missing.select(
+        missing = F.array_except(F.array(*[F.lit(k) for k in required]), satisfied)
+        upsert_viols = docs.select(
+            F.col(id_col), F.explode(missing).alias("name")
+        ).select(
             F.col(id_col),
-            F.col("k").alias("name"),
+            F.col("name"),
             F.lit(ErrorTypes.REQUIRED).alias("type"),
             F.lit(None).cast("string").alias("value"),
             *[F.lit(None).cast("string").alias(c) for c in
@@ -956,8 +956,10 @@ def _apply_modifier_auto_values(
     fns need a Column context and are document-mode only).
 
     Shape: ONE groupBy(doc) collecting the (bounded, schema-sized) operator
-    entries + ONE Arrow-batched UDF evaluating every autoValue fn per doc +
-    one co-partitioned anti-join to drop replaced entries."""
+    entries + ONE Arrow-batched UDF evaluating every autoValue fn per doc;
+    in the projection above it the doc's entries whose key the UDF dropped
+    are filtered out, the rows it added are appended, and the result is
+    exploded — no join, no persist, ``out`` evaluated once."""
     av_fns = [
         ("fn", k, fn, ".$" in k)
         for k, fn in schema.auto_value_functions()
@@ -1287,35 +1289,47 @@ def _apply_modifier_auto_values(
 
     udf = F.pandas_udf(_apply, act_t)
 
+    # each entry carries its row's own upsert flag, so kept rows come back
+    # unchanged; the document's flag (any row upsert) goes to the UDF and to
+    # the rows it adds
     docs = out.groupBy(id_col).agg(
         F.collect_list(
             F.struct(
-                F.col("op"), F.col("key_path").alias("key"), F.col("value")
+                F.col("op"),
+                F.col("key_path").alias("key"),
+                F.col("value"),
+                F.col("upsert"),
             )
         ).alias("entries"),
         F.max(F.col("upsert").cast("int")).cast("boolean").alias("upsert"),
     )
-    acts = (
-        docs.select(
-            F.col(id_col),
-            F.col("upsert"),
-            F.explode(udf(F.col("entries"), F.col("upsert"))).alias("a"),
-        )
-        .select(id_col, "upsert", "a.*")
-        # lazy persist: drops and new_rows are subtrees of the caller's
-        # single action — the first stage populates the cache
-        .persist()
+    # the UDF result is a column of its own: HOF lambdas below may not
+    # reference a Python UDF
+    acts = docs.select(
+        id_col, "entries", "upsert", udf(F.col("entries"), F.col("upsert")).alias("acts")
     )
-    drops = acts.where(F.col("drop")).select(id_col, F.col("key").alias("key_path"))
-    kept = out.join(drops, [id_col, "key_path"], "left_anti")
-    new_rows = acts.where(F.col("op").isNotNull()).select(
-        F.col(id_col),
-        F.col("op"),
-        F.col("key").alias("key_path"),
-        F.col("value"),
-        F.col("upsert"),
+    dropped = F.transform(
+        F.filter(F.col("acts"), lambda a: a["drop"]), lambda a: a["key"]
     )
-    return kept.unionByName(new_rows.select(*out.columns))
+    # every entry of a dropped key goes (a NULL key never matches)
+    kept = F.filter(
+        F.col("entries"),
+        lambda e: ~F.coalesce(F.array_contains(dropped, e["key"]), F.lit(False)),
+    )
+    added = F.transform(
+        F.filter(F.col("acts"), lambda a: a["op"].isNotNull()),
+        lambda a: F.struct(
+            a["op"].alias("op"),
+            a["key"].alias("key"),
+            a["value"].alias("value"),
+            F.col("upsert").alias("upsert"),
+        ),
+    )
+    return (
+        acts.select(id_col, F.inline(F.concat(kept, added)))
+        .withColumnRenamed("key", "key_path")
+        .select(*out.columns)
+    )
 
 
 def _default_as_json(value: Any) -> str:
