@@ -25,19 +25,26 @@ Columnar adaptations (documented deviations, all asserted in tests):
 - ``defaultValue``/autoValue "isSet" can't distinguish explicit null from
   missing (JSON null vs absent); null counts as unset.
 
-JS parity details:
+JS parity details, the same for typed columns and for modifier-row JSON
+tokens (``modifiers.clean_modifier_table``): one pipeline (:class:`_Cleaner`)
+and one conversion table (:data:`CONVERSIONS`) over the two views of
+``compiler/rules.py``:
 
 - trim uses the JS WhiteSpace ∪ LineTerminator set (TAB VT FF SP NBSP ZWNBSP
   Zs LF CR LS PS), NOT Spark's ASCII-space ``F.trim`` — byte-identical text
   parity requires this (BASELINE.json per-row invariant).
-- number→string renders like JS ``toString`` ('1', not '1.0').
-- string→number uses ``Number(value)`` semantics for nonempty strings.
+- number→string renders like JS ``toString`` ('1', not '1.0'); date→string
+  like ``toISOString`` (``2024-01-02T03:04:05.000Z``).
+- string→number uses ``Number(value)`` semantics for nonempty strings
+  (whitespace-only → 0; NaN is not converted).
 - string 'true'/'false' (case-insensitive) → boolean; number → ``value != 0``.
+- ISO string or epoch-ms number → date; a scalar for an Array key → ``[v]``.
 """
 
 from __future__ import annotations
 
-from typing import Any, Callable, Optional
+from functools import reduce
+from typing import Any, Callable, Union
 
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
@@ -45,7 +52,6 @@ from .schema.schema import SimpleSchema
 from .schema.types import (
     AnyType,
     ArrayType,
-    Binary,
     Boolean,
     DateType,
     Integer,
@@ -54,7 +60,22 @@ from .schema.types import (
     String,
     TypeToken,
 )
-from .compiler.rules import type_matches, FRACTIONAL_TYPES, NUMERIC_TYPES
+from .compiler.rules import (
+    ARRAY,
+    BOOLEAN,
+    DATE,
+    DTYPE_OF,
+    FRACTIONAL_TYPES,
+    KIND_OF,
+    NUMBER,
+    STRING,
+    Case,
+    ColumnView,
+    TokenView,
+    iso_string,
+    js_number_to_string,
+    parse_date_string,
+)
 
 __all__ = ["clean", "spark_auto_value", "js_trim", "JS_WS_CLASS", "js_number_to_string"]
 
@@ -72,18 +93,6 @@ def js_trim(col: Column) -> Column:
     two; at 100 TB the trim is in the per-row hot loop.
     """
     return F.regexp_replace(col, f"^{JS_WS_CLASS}+|{JS_WS_CLASS}+$", "")
-
-
-def js_number_to_string(col: Column, dtype: T.DataType) -> Column:
-    """JS Number#toString: whole doubles render without '.0'."""
-    if isinstance(dtype, FRACTIONAL_TYPES):
-        return F.when(
-            (~F.isnan(col))
-            & (col == F.floor(col))
-            & (F.abs(col) < F.lit(1e16)),
-            col.cast("decimal(20,0)").cast("string"),
-        ).otherwise(col.cast("string"))
-    return col.cast("string")
 
 
 def spark_auto_value(fn: Callable) -> Callable:
@@ -194,26 +203,14 @@ def clean_with_info(
         get_auto_values=get_auto_values,
         remove_nulls_from_arrays=remove_nulls_from_arrays,
     )
-    filter = opts["filter"]  # noqa: A001
-    auto_convert = opts["auto_convert"]
-    remove_empty_strings = opts["remove_empty_strings"]
-    trim_strings = opts["trim_strings"]
-    get_auto_values = opts["get_auto_values"]
-    remove_nulls_from_arrays = opts["remove_nulls_from_arrays"]
-    cleaner = _Cleaner(
-        schema,
-        filter=filter,
-        auto_convert=auto_convert,
-        remove_empty_strings=remove_empty_strings,
-        trim_strings=trim_strings,
-        remove_nulls_from_arrays=remove_nulls_from_arrays,
-    )
+    get_auto_values = opts.pop("get_auto_values")
+    cleaner = _Cleaner(schema, **opts)
     out_cols: list[Column] = []
     for f in df.schema.fields:
         generic = f.name
-        if filter and not schema.allows_key(generic):
+        if opts["filter"] and not schema.allows_key(generic):
             continue  # filter: drop unknown columns (clean.ts:80-94)
-        expr = cleaner.clean_value(generic, F.col(f.name), f.dataType)
+        expr = cleaner.clean_value(generic, ColumnView(F.col(f.name), f.dataType))
         out_cols.append(expr.alias(f.name))
     if keep_originals_of_converted:
         for key in cleaner.converted:
@@ -225,7 +222,53 @@ def clean_with_info(
     return result, cleaner
 
 
+def _number_from_string(s: Column, dtype: T.DataType) -> Column:
+    """Number(value) of a nonempty string; whitespace-only gives 0 and NaN
+    no conversion (NULL)."""
+    n = s.try_cast("double")
+    zero = F.when(js_trim(s) == "", F.lit(0.0))
+    return F.when(F.length(s) > 0, F.coalesce(F.when(~F.isnan(n), n), zero))
+
+
+#: convertToProperType.ts:11-65, for both views: target type → source kind
+#: → ``(value, dtype) -> converted`` (of the target's kind; NULL where it
+#: fails).  Arrays, objects and null never convert; a scalar for an Array
+#: key is wrapped ``[v]`` as it was (the view's ``wrap``).  Dates render as
+#: ISO-8601 strings (Date#toISOString).
+CONVERSIONS: dict[TypeToken, dict[str, Callable[[Column, T.DataType], Column]]] = {
+    String: {
+        NUMBER: js_number_to_string,
+        BOOLEAN: lambda b, t: b.cast("string"),
+        DATE: iso_string,
+    },
+    Number: {STRING: _number_from_string},
+    Integer: {STRING: _number_from_string},
+    Boolean: {
+        STRING: lambda s, t: F.when(F.lower(s) == "true", F.lit(True)).when(
+            F.lower(s) == "false", F.lit(False)
+        ),
+        # NaN never converts
+        NUMBER: lambda n, t: F.when(~F.isnan(n), n != 0) if isinstance(t, FRACTIONAL_TYPES) else n != 0,
+    },
+    DateType: {
+        STRING: lambda s, t: parse_date_string(s),
+        # epoch milliseconds (convertToProperType.ts:46)
+        NUMBER: lambda n, t: F.timestamp_millis(n.cast("long")),
+    },
+}
+
+View = Union[ColumnView, TokenView]
+
+
 class _Cleaner:
+    """clean.ts's per-value pipeline, written once over a view
+    (``compiler/rules.py``): a typed column or a JSON token.  Per value:
+    blackbox/Any pass through; objects rebuild their children
+    (undeclared ones dropped under ``filter``); arrays clean each item;
+    scalars run autoConvert (toward the first type, only when no
+    alternative matches), then trim (unless ``trim: false``), then the
+    empty-string removal."""
+
     def __init__(self, schema: SimpleSchema, **opts: bool) -> None:
         self.schema = schema
         self.merged = schema.merged_schema()
@@ -233,151 +276,86 @@ class _Cleaner:
         #: top-level keys whose type was auto-converted: generic -> orig dtype
         self.converted: dict[str, T.DataType] = {}
 
-    def _alternatives(self, generic: str) -> list[dict]:
-        d = self.merged.get(generic)
-        if d is None:
-            return []
-        outer = {k: v for k, v in d.items() if k != "type"}
-        return [{**outer, **alt} for alt in d["type"].definitions]
-
-    def clean_value(self, generic: str, value: Column, dtype: T.DataType) -> Column:
-        alts = self._alternatives(generic)
-        if not alts:
-            return value
+    def alternatives(self, generic: str) -> list[dict]:
+        """The key's alternatives; none when it is undeclared, blackbox or
+        Any (clean.ts never cleans inside those)."""
+        alts = self.schema.resolved_alternatives(generic)
         if any(a.get("blackbox") is True or a.get("type") is AnyType for a in alts):
-            return value  # blackbox subtrees are never cleaned (clean.ts guard)
+            return []
+        return alts
 
-        first_type = alts[0].get("type")
-        types = [a.get("type") for a in alts]
-
-        # -------- containers ------------------------------------------------
-        if isinstance(dtype, T.StructType) and (
-            first_type is ObjectType or isinstance(first_type, SimpleSchema)
+    def clean_value(self, generic: str, v: View) -> Column:
+        alts = self.alternatives(generic)
+        if not alts:
+            return v.value
+        first = alts[0].get("type")
+        branches = []
+        if v.rebuilds_objects and (first is ObjectType or isinstance(first, SimpleSchema)):
+            branches.append((v.is_object, lambda: self._clean_object(generic, v)))
+        item = f"{generic}.$"
+        if any(a.get("type") is ArrayType for a in alts) and (
+            self.alternatives(item) or self.opts["remove_nulls_from_arrays"]
         ):
-            fields = []
-            for sub in dtype.fields:
-                child = f"{generic}.{sub.name}"
-                if self.opts["filter"] and not self.schema.allows_key(child):
-                    continue
-                fields.append(
-                    self.clean_value(
-                        child, value.getField(sub.name), sub.dataType
-                    ).alias(sub.name)
-                )
-            if not fields:
-                return value  # nothing allowed; caller drops at top level only
-            rebuilt = F.struct(*fields)
-            return F.when(value.isNotNull(), rebuilt)
+            branches.append((v.is_array, lambda: v.rebuild_array(
+                lambda e: self.clean_value(item, e), self.opts["remove_nulls_from_arrays"]
+            )))
+        return v.choose(branches, lambda: self._clean_scalar(generic, v, alts))
 
-        if isinstance(dtype, T.ArrayType) and ArrayType in types:
-            item_generic = f"{generic}.$"
-            cleaned = F.transform(
-                value,
-                lambda x: self.clean_value(item_generic, x, dtype.elementType),
-            )
-            if self.opts["remove_nulls_from_arrays"]:
-                cleaned = F.filter(cleaned, lambda x: x.isNotNull())
-            return F.when(value.isNotNull(), cleaned)
+    def _clean_object(self, generic: str, v: View) -> Column:
+        prefix = f"{generic}."
+        declared = sorted({k[len(prefix):].split(".")[0] for k in self.merged if k.startswith(prefix)})
+        children = []
+        for name in v.field_names(declared):
+            child = prefix + name
+            if self.opts["filter"] and not self.schema.allows_key(child):
+                continue
+            children.append((name, self.clean_value(child, v.field(name))))
+        return v.rebuild_object(children)
 
-        # -------- autoConvert: scalar → Array wrap (convertToProperType.ts:61)
-        if (
-            self.opts["auto_convert"]
-            and ArrayType in types
-            and not isinstance(dtype, (T.ArrayType, T.StructType, T.MapType))
-        ):
-            item_generic = f"{generic}.$"
-            item = self.clean_value(item_generic, value, dtype)
-            return F.when(value.isNotNull(), F.array(item))
+    def _clean_scalar(self, generic: str, v: View, alts: list[dict]) -> Column:
+        cases = v.scalars
+        target = alts[0].get("type")
+        if self.opts["auto_convert"] and (target in CONVERSIONS or target is ArrayType):
+            # oneOf: convert only when the value matches NO alternative
+            # (clean.ts:101 gates on !isValueTypeValid over all of them)
+            conforms = _conforms_any(v, alts) if len(alts) > 1 else False
+            if conforms is not True:
+                cases = [n for c in cases for n in self._convert(generic, v, c, target, conforms)]
+        # strings as given (converted ones are never padded nor empty)
+        trim = self.opts["trim_strings"] and not any(a.get("trim") is False for a in alts)
+        return v.emit([
+            self._clean_string(v, c, trim) if c.kind == STRING and not c.changed else c
+            for c in cases
+        ])
 
-        # -------- scalars ----------------------------------------------------
-        out = value
-        out_dtype = dtype
-        if self.opts["auto_convert"]:
-            type_ok = any(
-                isinstance(t, TypeToken) and type_matches(t, dtype)
-                for t in types
-                if t is not None and not isinstance(t, SimpleSchema)
-            )
-            if not type_ok and isinstance(first_type, TypeToken):
-                converted = _convert(out, dtype, first_type)
-                if converted is not None:
-                    out, out_dtype = converted
-                    if "." not in generic:
-                        self.converted[generic] = dtype
+    def _convert(self, generic: str, v: View, c: Case, target: Any, conforms: Any) -> list[Case]:
+        convert = v.wrap if target is ArrayType else CONVERSIONS[target].get(c.kind)
+        if convert is None:
+            return [c]
+        if "." not in generic and target is not ArrayType:
+            self.converted[generic] = v.dtype
+        kind = KIND_OF.get(target, ARRAY)
+        return v.converted(c, Case(c.cond, kind, convert(c.col, c.dtype), DTYPE_OF.get(kind), True), conforms)
 
-        if isinstance(out_dtype, T.StringType):
-            trim_disabled = any(a.get("trim") is False for a in alts)
-            if self.opts["trim_strings"] and not trim_disabled:
-                out = F.when(value.isNotNull(), js_trim(out))
-            if self.opts["remove_empty_strings"]:
-                out = F.nullif(out, F.lit(""))
-        return out
+    def _clean_string(self, v: View, c: Case, trim: bool) -> Case:
+        if trim:
+            c = c._replace(col=F.when(v.value.isNotNull(), js_trim(c.col)), changed=True)
+        if self.opts["remove_empty_strings"]:
+            c = c._replace(col=F.nullif(c.col, F.lit("")), changed=True)
+        return c
 
 
-def _convert(
-    value: Column, dtype: T.DataType, target: TypeToken
-) -> Optional[tuple[Column, T.DataType]]:
-    """convertToProperType.ts:11-65 — compile-time typed conversions.
-
-    Returns (expr, new_dtype) or None when no conversion applies.  Arrays,
-    structs, maps and null inputs never convert (ts:13-20).
-    """
-    if isinstance(dtype, (T.ArrayType, T.StructType, T.MapType, T.NullType)):
-        return None
-
-    if target is String:
-        if isinstance(dtype, T.StringType):
-            return None
-        if isinstance(dtype, T.BinaryType):
-            return None  # typed arrays are opaque
-        return js_number_to_string(value, dtype), T.StringType()
-
-    if target in (Number, Integer):
-        if isinstance(dtype, T.StringType):
-            # Number(value) for nonempty strings; JS quirk: whitespace-only
-            # nonempty strings coerce to 0.  Unparseable → NULL here, with the
-            # original-value expectedType reported by the composed pipeline.
-            converted = F.when(
-                F.length(value) > 0,
-                F.coalesce(
-                    value.try_cast("double"),
-                    F.when(js_trim(value) == "", F.lit(0.0)),
-                ),
-            )
-            return converted, T.DoubleType()
-        return None
-
-    if target is DateType:
-        if isinstance(dtype, T.StringType):
-            ts = F.coalesce(
-                value.try_cast("timestamp"),
-                F.try_to_timestamp(value, F.lit("yyyy-MM-dd'T'HH:mm:ss.SSSXXX")),
-                F.try_to_timestamp(value, F.lit("yyyy-MM-dd'T'HH:mm:ssXXX")),
-            )
-            return ts, T.TimestampType()
-        if isinstance(dtype, NUMERIC_TYPES):
-            # epoch milliseconds (convertToProperType.ts:46)
-            return F.timestamp_millis(value.cast("long")), T.TimestampType()
-        return None
-
-    if target is Boolean:
-        if isinstance(dtype, T.StringType):
-            lowered = F.lower(value)
-            converted = (
-                F.when(lowered == "true", F.lit(True))
-                .when(lowered == "false", F.lit(False))
-            )
-            return converted, T.BooleanType()
-        if isinstance(dtype, NUMERIC_TYPES):
-            if isinstance(dtype, FRACTIONAL_TYPES):
-                return (
-                    F.when(~F.isnan(value), value != 0),
-                    T.BooleanType(),
-                )
-            return value != 0, T.BooleanType()
-        return None
-
-    return None
+def _conforms_any(v: View, alts: list[dict]) -> "Column | bool":
+    """Does the value match any alternative's type (isValueTypeValid)?"""
+    oks = []
+    for a in alts:
+        t = a.get("type")
+        ok = v.conforms(t if isinstance(t, TypeToken) else ObjectType)
+        if ok is True:
+            return True
+        if ok is not False:
+            oks.append(ok)
+    return reduce(lambda x, y: x | y, oks) if oks else False
 
 
 class PythonAutoValueContext:

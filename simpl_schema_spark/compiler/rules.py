@@ -23,13 +23,19 @@ min/max with a YYYY-MM-DD payload (checkDateValue.ts:5-32); array
 minCount/maxCount, one error on the array key (checkArrayValue.ts:4-22);
 then allowedValues.  oneOf: the first matching alternative wins and the
 LAST alternative's error is reported (validateField.ts:171-256).
+
+The views also carry what cleaning (``cleaning._Cleaner``) needs to know
+of a mode: how to read a value of each JSON kind (:meth:`scalars`), how to
+write a converted value back (a typed column with a new dtype, or a
+re-encoded JSON token with dates as ``{"$date": "<ISO>"}``) and how to
+rebuild a container (a struct or array column, or a JSON object or array).
 """
 
 from __future__ import annotations
 
 import datetime
 from functools import cached_property, lru_cache, partial, reduce
-from typing import Any, Callable, Optional, Union
+from typing import Any, Callable, NamedTuple, Optional, Union
 
 from pyspark.sql import Column, functions as F, types as T
 
@@ -186,6 +192,32 @@ def _num_str(v: Any) -> str:
     return str(v)
 
 
+def js_number_to_string(col: Column, dtype: T.DataType) -> Column:
+    """JS Number#toString: whole doubles render without '.0'."""
+    if isinstance(dtype, FRACTIONAL_TYPES):
+        whole = (~F.isnan(col)) & (col == F.floor(col)) & (F.abs(col) < F.lit(1e16))
+        return F.when(whole, col.cast("decimal(20,0)").cast("string")).otherwise(col.cast("string"))
+    return col.cast("string")
+
+
+def iso_string(col: Column, dtype: T.DataType) -> Column:
+    """Date#toISOString (``2024-01-02T03:04:05.000Z``) in UTC, whatever
+    the session time zone; dates and zone-less timestamps read as UTC."""
+    wall = col.cast("timestamp_ntz")
+    if not isinstance(dtype, (T.DateType, T.TimestampNTZType)):
+        wall = F.convert_timezone(F.current_timezone(), F.lit("UTC"), wall)
+    return F.date_format(wall, "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'")
+
+
+def parse_date_string(s: Column) -> Column:
+    """Date.parse of an ISO-8601 string (NULL when unparseable)."""
+    return F.coalesce(
+        s.try_cast("timestamp"),
+        F.try_to_timestamp(s, F.lit("yyyy-MM-dd'T'HH:mm:ss.SSSXXX")),
+        F.try_to_timestamp(s, F.lit("yyyy-MM-dd'T'HH:mm:ssXXX")),
+    )
+
+
 def stringify(value: Column, dtype: T.DataType) -> Column:
     if isinstance(dtype, T.StringType):
         return value
@@ -236,41 +268,62 @@ def _json_scalar(v: Column, ddl: str) -> Column:
     return F.from_json(F.concat(F.lit('{"v":'), v, F.lit("}")), f"v {ddl}").getField("v")
 
 
-def json_str(v: Column) -> Column:
-    return _json_scalar(v, "string")
+
+# ---------------------------------------------------------- cleaning cases
+
+#: the kinds of value cleaning converts between (ARRAY: a wrapped scalar)
+STRING, NUMBER, BOOLEAN, DATE, ARRAY = "string", "number", "boolean", "date", "array"
 
 
-def json_num(v: Column) -> Column:
-    return _json_scalar(v, "double")
+class Case(NamedTuple):
+    """Where ``cond`` holds the value is ``col``, of ``kind`` and Spark
+    ``dtype``; ``changed`` once cleaning has rewritten it."""
+
+    cond: Union[bool, Column]
+    kind: str
+    col: Column
+    dtype: Optional[T.DataType]
+    changed: bool = False
 
 
-def _json_date(v: Column) -> Column:
-    iso = F.from_json(v, "`$date` string").getField("$date")
-    return F.coalesce(
-        iso.try_cast("timestamp"),
-        F.try_to_timestamp(iso, F.lit("yyyy-MM-dd'T'HH:mm:ss.SSSXXX")),
-        F.try_to_timestamp(iso, F.lit("yyyy-MM-dd'T'HH:mm:ssXXX")),
-    )
+#: the kind of value each scalar type holds, and the Spark type it is read as
+KIND_OF = {String: STRING, Number: NUMBER, Integer: NUMBER, Boolean: BOOLEAN, DateType: DATE}
+DTYPE_OF = {STRING: T.StringType(), NUMBER: T.DoubleType(), BOOLEAN: T.BooleanType(), DATE: T.TimestampType()}
 
 
-def _display(v: Column) -> Column:
-    """Offending-value payload: unquote JSON strings, else raw JSON."""
-    return F.when(is_json_string(v), json_str(v)).otherwise(F.trim(v))
+def case_when(pairs: list[tuple[Column, Column]], default: Column) -> Column:
+    if not pairs:
+        return default
+    return reduce(lambda out, p: out.when(*p), pairs[1:], F.when(*pairs[0])).otherwise(default)
+
+
+#: a cleaned value back to its JSON token
+_ENCODE = {
+    STRING: lambda c: F.to_json(c.col.cast("variant")),
+    NUMBER: lambda c: js_number_to_string(c.col, c.dtype),
+    BOOLEAN: lambda c: c.col.cast("string"),
+    DATE: lambda c: F.concat(F.lit('{"$date": "'), iso_string(c.col, c.dtype), F.lit('"}')),
+    ARRAY: lambda c: c.col,  # built as a token
+}
 
 
 # --------------------------------------------------------------------- views
 
 
 class ColumnView:
-    """A typed value: Column + Spark dtype."""
+    """A typed value: Column + Spark dtype.  Its kind is known at compile
+    time, so every cleaning decision is made while building the plan."""
 
     bounds_gate: Optional[Column] = None  # number bounds always apply
+    rebuilds_objects = True
 
     def __init__(self, value: Column, dtype: T.DataType) -> None:
         self.value = value
         self.dtype = dtype
         self.fractional = isinstance(dtype, FRACTIONAL_TYPES)
         self.special_floats = self.fractional  # NaN, ±Infinity
+        self.is_object = isinstance(dtype, T.StructType)
+        self.is_array = isinstance(dtype, T.ArrayType)
 
     as_str = as_num = as_date = property(lambda self: self.value)
 
@@ -293,37 +346,113 @@ class ColumnView:
             return None
         return not type_matches(token, self.dtype)
 
+    # ---- cleaning
+    def conforms(self, token: TypeToken) -> bool:
+        return type_matches(token, self.dtype)
+
+    @cached_property
+    def scalars(self) -> list[Case]:
+        kinds = [k for t, k in KIND_OF.items() if type_matches(t, self.dtype)]
+        return [Case(True, kinds[0], self.value, self.dtype)] if kinds else []
+
+    def converted(self, case: Case, new: Case, conforms: Any) -> list[Case]:
+        """The column takes the new dtype; a failed conversion is NULL."""
+        return [new]
+
+    def wrap(self, *_: Any) -> Column:
+        """``[v]``: the value as it was (convertToProperType.ts:61)."""
+        return F.when(self.value.isNotNull(), F.array(self.value))
+
+    def emit(self, cases: list[Case]) -> Column:
+        return cases[0].col if cases else self.value
+
+    def field_names(self, declared: list[str]) -> list[str]:
+        return [f.name for f in self.dtype.fields]
+
+    def field(self, name: str) -> "ColumnView":
+        return ColumnView(self.value.getField(name), self.dtype[name].dataType)
+
+    def rebuild_object(self, children: list) -> Column:
+        if not children:
+            return self.value
+        return F.when(self.value.isNotNull(), F.struct(*[c.alias(n) for n, c in children]))
+
+    def rebuild_array(self, clean: Callable, remove_nulls: bool) -> Column:
+        out = F.transform(self.value, lambda x: clean(ColumnView(x, self.dtype.elementType)))
+        if remove_nulls:
+            out = F.filter(out, lambda x: x.isNotNull())
+        return F.when(self.value.isNotNull(), out)
+
+    def choose(self, branches: list, default: Callable[[], Column]) -> Column:
+        return next((build for cond, build in branches if cond), default)()
+
 
 class TokenView:
-    """A JSON token; ``op`` is the modifier-operator Column in modifier mode."""
+    """A JSON token; ``op`` is the modifier-operator Column in modifier mode.
+
+    ``var`` is the token parsed to a VARIANT: given, every read extracts
+    from it, so a token parsed once is never re-parsed (JSON text reads
+    otherwise).  Its kind is decided per row, so cleaning decisions become
+    CASE branches over the JSON kinds."""
 
     fractional = True
     special_floats = False
+    dtype = T.StringType()
 
-    def __init__(self, token: Column, op: Optional[Column] = None) -> None:
-        self.token = token
-        self.json = token
+    def __init__(self, token: Column, op: Optional[Column] = None,
+                 var: Optional[Column] = None, *, rebuilds_objects: bool = True) -> None:
+        self.token = self.json = self.value = token
         self.op = op
+        self.var = var
+        self.rebuilds_objects = rebuilds_objects
+
+    @classmethod
+    def of_variant(cls, var: Column, op: Optional[Column] = None, **kw: bool) -> "TokenView":
+        return cls(F.to_json(var), op, var, **kw)
+
+    def named_reads(self, prefix: str) -> list[Column]:
+        """Move the scalar reads into columns named ``<prefix><read>`` of a
+        projection under the one that uses this view; returns them."""
+        cols = []
+        for read in ("as_str", "as_num", "as_bool", "as_date"):
+            cols.append(getattr(self, read).alias(prefix + read))
+            self.__dict__[read] = F.col(prefix + read)
+        return cols
+
+    def _get(self, ddl: str, path: str = "$") -> Column:
+        return F.try_variant_get(self.var, path, ddl)
+
+    def _read(self, ddl: str) -> Column:
+        return _json_scalar(self.token, ddl) if self.var is None else self._get(ddl)
 
     @cached_property
     def as_str(self) -> Column:
-        return json_str(self.token)
+        return self._read("string")
 
     @cached_property
     def as_num(self) -> Column:
-        return json_num(self.token)
+        return self._read("double")
+
+    @cached_property
+    def as_bool(self) -> Column:
+        return self._read("boolean")
 
     @cached_property
     def as_date(self) -> Column:
+        if self.var is None:
+            iso = F.from_json(self.token, "`$date` string").getField("$date")
+        else:
+            iso = self._get("string", "$['$date']")
+        parsed = parse_date_string(iso)
         if self.op is None:
-            return _json_date(self.token)
+            return parsed
         # $currentDate accepts true or {"$type":"date"}; the value checked
         # against min/max is `now`
         current = (self.op == "$currentDate") & (
             self.token.rlike("^\\s*true\\s*$")
             | (F.regexp_replace(self.token, "\\s", "") == F.lit('{"$type":"date"}'))
         )
-        return F.when(current, F.current_timestamp()).otherwise(_json_date(self.token))
+        return F.when(current, F.current_timestamp()).otherwise(parsed)
 
     @cached_property
     def count(self) -> Column:
@@ -331,7 +460,8 @@ class TokenView:
 
     @cached_property
     def display(self) -> Column:
-        return _display(self.token)
+        """Offending-value payload: unquote JSON strings, else raw JSON."""
+        return F.when(is_json_string(self.token), self.as_str).otherwise(F.trim(self.token))
 
     @cached_property
     def bounds_gate(self) -> Optional[Column]:
@@ -363,10 +493,83 @@ class TokenView:
         if kinds and kinds <= {Number, Integer}:
             return self.as_num
         if kinds == {Boolean}:
-            return _json_scalar(self.token, "boolean")
+            return self.as_bool
         if kinds == {DateType}:
             return self.as_date
         return F.try_parse_json(self.token)
+
+    # ---- cleaning: built once per view, shared by every key it is cleaned for
+    is_array = cached_property(lambda self: is_json_array(self.token))
+    is_object = cached_property(
+        lambda self: is_json_object(self.token) & ~is_ext_date(self.token) & self.var.isNotNull()
+    )
+
+    def conforms(self, token: TypeToken) -> Union[Column, bool]:
+        """isValueTypeValid: an Integer takes only integral numbers."""
+        bad = self.mismatch(token)
+        if bad is True:
+            return False
+        if token is Integer:
+            return ~bad & (self.as_num == F.floor(self.as_num))
+        return ~bad
+
+    @cached_property
+    def scalars(self) -> list[Case]:
+        t = self.token
+        return [
+            Case(is_json_string(t), STRING, self.as_str, DTYPE_OF[STRING]),
+            Case(is_json_number(t), NUMBER, self.as_num, DTYPE_OF[NUMBER]),
+            Case(is_json_bool(t), BOOLEAN, self.as_bool, DTYPE_OF[BOOLEAN]),
+            Case(is_ext_date(t), DATE, self.as_date, DTYPE_OF[DATE]),
+        ]
+
+    def converted(self, case: Case, new: Case, conforms: Any) -> list[Case]:
+        """A failed conversion leaves the token as it was."""
+        cond = case.cond & new.col.isNotNull()
+        if conforms is not False:
+            cond = cond & ~conforms
+        return [new._replace(cond=cond), case]
+
+    def wrap(self, *_: Any) -> Column:
+        return F.concat(F.lit("["), self.token, F.lit("]"))
+
+    def emit(self, cases: list[Case]) -> Column:
+        return case_when([(c.cond, _ENCODE[c.kind](c)) for c in cases if c.changed], self.token)
+
+    def field_names(self, declared: list[str]) -> list[str]:
+        return declared  # literal variant paths: undeclared names are dropped
+
+    def field(self, name: str) -> "TokenView":
+        return TokenView.of_variant(self._get("variant", f"$['{name}']"))
+
+    def rebuild_object(self, children: list) -> Column:
+        """Children absent or removed (NULL) are left out."""
+        if not children:
+            return self.token
+        frags = F.array(*[F.concat(F.lit(f'"{n}": '), c) for n, c in children])
+        return F.concat(F.lit("{"), F.concat_ws(", ", F.array_compact(frags)), F.lit("}"))
+
+    def rebuild_array(self, clean: Callable, remove_nulls: bool) -> Column:
+        """``[...]`` of the cleaned elements; objects in arrays are kept as
+        written, and so are empty strings."""
+        elems = self.elements("$")
+        out = F.transform(
+            elems,
+            lambda e: F.coalesce(
+                clean(TokenView.of_variant(e, rebuilds_objects=False)), F.lit('""')
+            ),
+        )
+        if remove_nulls:
+            out = F.filter(out, lambda e: e != F.lit("null"))
+        rebuilt = F.concat(F.lit("["), F.concat_ws(", ", out), F.lit("]"))
+        return F.when(elems.isNotNull(), rebuilt).otherwise(self.token)
+
+    def elements(self, path: str) -> Column:
+        """The array at ``path`` as variant elements (NULL if not an array)."""
+        return self._get("array<variant>", path)
+
+    def choose(self, branches: list, default: Callable[[], Column]) -> Column:
+        return case_when([(cond, build()) for cond, build in branches], default())
 
 
 View = Union[ColumnView, TokenView]

@@ -24,10 +24,12 @@ required-key list against present ∪ ancestors(valued) is exploded into
 union of projections over the same input; the only other shuffle is the
 join that attaches a document's entries, paid only when a cross-field
 validator exists.
-``clean_modifier_table`` is one projection plus, when autoValues or
-defaultValues exist, one ``groupBy(doc)`` that runs the Arrow UDF once per
-document and resolves kept and added rows with array functions; nothing is
-persisted.
+``clean_modifier_table`` parses each value once (``try_parse_json`` into a
+variant column of a decode projection) under one cleaning projection, plus,
+when autoValues or defaultValues exist, one ``groupBy(doc)`` that runs the
+Arrow UDF once per document and resolves kept and added rows with array
+functions; nothing is persisted.  Its per-value cleaning is the typed
+columns' (``cleaning._Cleaner``) over the JSON-token view.
 
 The value rules of each key are the shared rule table
 (``compiler/rules.py``) over a JSON-token view that carries the row's
@@ -42,25 +44,20 @@ mongoObject).
 from __future__ import annotations
 
 import json
-from functools import reduce
 from typing import Any
 
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
+from .cleaning import PythonAutoValueContext, _Cleaner, resolve_clean_options
 from .compiler.compile import is_spark_rule, wants_context
 from .compiler.rules import (
     TokenView,
     is_ext_date,
     is_json_array,
-    is_json_bool,
     is_json_null,
-    is_json_number,
     is_json_object,
-    is_json_string,
-    json_num,
-    json_str,
     null_violation,
     first,
     generic_key,
@@ -77,92 +74,16 @@ from .compiler.validators import (
 )
 from .errors import ErrorTypes, VIOLATION_SCHEMA
 from .schema.schema import SimpleSchema
-from .schema.types import (
-    AnyType,
-    ArrayType,
-    Boolean,
-    DateType,
-    Integer,
-    Number,
-    ObjectType,
-    String,
-)
+from .schema.types import ArrayType
 
 __all__ = ["validate_modifier_table", "UnsupportedModifierError"]
 
-#: value never checked / cleaned for these (doValidation.ts:9-12)
-OPS_SKIPPED = ("$pull", "$pullAll", "$pop", "$slice")
 OPS_SET = ("$set", "$setOnInsert")
 OPS_PUSH = ("$push", "$addToSet")
-KNOWN_OPS = OPS_SKIPPED + OPS_SET + OPS_PUSH + (
-    "$unset", "$rename", "$inc", "$currentDate", "$min", "$max", "$mul",
-)
 
 
 class UnsupportedModifierError(Exception):
     """$pushAll (doValidation.ts:10) and non-$ keys (ts:44-46)."""
-
-
-def _token_matches_alternatives(alts: list[dict], token: Column) -> Column:
-    """True when the JSON token's type class matches ANY alternative of a
-    oneOf group — autoConvert must then leave it alone (the reference gates
-    conversion on !isValueTypeValid over all definitions, clean.ts:101).
-    Integer alternatives match only integral numbers (Number.isInteger)."""
-    conds = []
-    for a in alts:
-        t = a.get("type")
-        if t is String:
-            conds.append(is_json_string(token))
-        elif t is Integer:
-            num = json_num(token)
-            conds.append(is_json_number(token) & (num == F.floor(num)))
-        elif t is Number:
-            conds.append(is_json_number(token))
-        elif t is Boolean:
-            conds.append(is_json_bool(token))
-        elif t is DateType:
-            conds.append(is_ext_date(token))
-        elif t is ArrayType:
-            conds.append(is_json_array(token))
-        else:  # Object / nested SimpleSchema / custom classes
-            conds.append(is_json_object(token) & ~is_ext_date(token))
-    return reduce(lambda x, y: x | y, conds) if conds else F.lit(True)
-
-
-def _json_quote(s: Column) -> Column:
-    """Encode a decoded string back to a JSON string token with proper
-    escaping (quotes, backslashes, control chars): to_json(array(s)) minus
-    the surrounding brackets."""
-    encoded = F.to_json(F.array(s))
-    return F.substring(encoded, 2, F.length(encoded) - 2)
-
-
-def _each_elements_as_json(v: Column, item_alts: list[dict]) -> Column:
-    """Parse ``{"$each": [...]}`` and re-encode each element as a standalone
-    JSON string, typed by the item definition's first alternative.
-
-    String elements round-trip via ``to_json(array(e))`` minus the brackets
-    (correct escaping); numerics/booleans stringify directly; dates keep the
-    extended-JSON object form.
-    """
-    token = item_alts[0].get("type") if item_alts else String
-    if token in (Number, Integer):
-        arr = F.from_json(v, "`$each` array<double>").getField("$each")
-        return F.transform(arr, lambda e: e.cast("string"))
-    if token is Boolean:
-        arr = F.from_json(v, "`$each` array<boolean>").getField("$each")
-        return F.transform(arr, lambda e: e.cast("string"))
-    if token is DateType:
-        arr = F.from_json(v, "`$each` array<struct<`$date`:string>>").getField("$each")
-        return F.transform(arr, lambda e: F.to_json(e))
-    # default: strings (and anything else) — JSON-escape via to_json(array(e))
-    arr = F.from_json(v, "`$each` array<string>").getField("$each")
-    return F.transform(
-        arr,
-        lambda e: F.substring(
-            F.to_json(F.array(e)), 2, F.length(F.to_json(F.array(e))) - 2
-        ),
-    )
 
 
 def _expand_object_set_rows(
@@ -386,8 +307,8 @@ def _modifier_rule_forest(schema: SimpleSchema) -> dict:
         item_fns = customs_of[item_key]
         if item_err is None and not item_fns:
             continue
-        # $each: every element validated (doValidation.ts:52-58); elements
-        # re-encoded to JSON per the item's expected type.  @spark_rule item
+        # $each: every element validated (doValidation.ts:52-58), each read
+        # as its own JSON token from one variant parse.  @spark_rule item
         # customs run inside the transform; Python item customs merge via
         # one Arrow UDF over the token array (UDF results can't be
         # referenced inside HOF lambdas)
@@ -395,23 +316,22 @@ def _modifier_rule_forest(schema: SimpleSchema) -> dict:
         py_fns = [fn for fn in item_fns if not is_spark_rule(fn)]
 
         def elem_err(e: Column) -> Column:
-            ev = TokenView(e, op)
+            ev = TokenView.of_variant(e, op)
             err = first(
                 [value_error(ev, key_path, item_alts)]
                 + token_custom_rules(ev, key_path, item_key, item_alts, spark_fns)
             )
             return null_violation() if err is None else err
 
-        elems = F.coalesce(
-            _each_elements_as_json(v, item_alts), F.array().cast("array<string>")
-        )
+        # each element as its exact JSON token, whatever its type
+        elems = TokenView(v, var=F.try_parse_json(v)).elements("$['$each']")
         expr_arr = F.transform(elems, elem_err)
         if py_fns:
             entries = context[0] if context else F.lit(None).cast(
                 "array<struct<op:string,key:string,value:string>>"
             )
             per_elem = item_merge_udf(py_fns, item_key, _decode_entry_row)(
-                expr_arr, elems, key_path, entries
+                expr_arr, F.transform(elems, lambda e: F.to_json(e)), key_path, entries
             )
         else:
             per_elem = F.filter(expr_arr, lambda x: x.isNotNull())
@@ -519,6 +439,10 @@ def validate_modifier_table(
     return base
 
 
+#: the row's value parsed once, in the projection under the cleaning one
+_PARSED = "__cm_value"
+
+
 def clean_modifier_table(
     mods: DataFrame,
     schema: SimpleSchema,
@@ -540,22 +464,25 @@ def clean_modifier_table(
       (operatorsToIgnoreValue, clean.ts:11,69)
     - filter: rows whose generic key the schema doesn't allow are DROPPED
       (clean.ts:80-94); $unset/$rename rows are kept regardless
-    - autoConvert: JSON scalars coerced toward the key's first type when no
-      alternative matches (string→number, number/bool→string,
-      'true'/'false'→bool; convertToProperType.ts:11-65).  For array keys
-      with a declared item def, values under $push/$addToSet (direct and
-      ``$each``), $pull, $pop, $pullAll, and array-valued $set are cleaned
-      toward the ITEM def (mongo-object maps those nodes to ``key.$`` —
-      goldens clean.tests.ts:380-630,706-820), $pull query objects pass
-      through, and a scalar $set on an array key is wrapped ``[v]``
-      (convertToProperType.ts:61)
+    - autoConvert: each value goes through ``cleaning._Cleaner``, the same
+      pipeline and conversion table as typed columns: toward the key's first
+      type when no alternative matches (isValueTypeValid: an Integer takes
+      only integral numbers) — string→number (whitespace-only → 0, NaN
+      left), number/boolean/date→string (dates as ISO-8601),
+      'true'/'false' and number→boolean, ISO string and epoch-ms
+      number→date (written ``{"$date": "<ISO>"}``), scalar→``[v]`` for an
+      array key under ``$set`` (convertToProperType.ts:11-65).  For array
+      keys, values under $push/$addToSet (direct and ``$each``), $pull,
+      $pop, $pullAll and array-valued $set are cleaned toward the ITEM def
+      (mongo-object maps those nodes to ``key.$`` — goldens
+      clean.tests.ts:380-630,706-820); $pull query objects pass through
     - trimStrings: JS-whitespace trim inside JSON string values unless the
       key has ``trim: False`` (item values use the item def's flag)
     - removeNullsFromArrays: null elements dropped from cleaned arrays
       (clean.ts:81-83, default off, matching the reference)
-    - removeEmptyStrings: ``$set`` of ``""`` becomes ``$unset``
-      (clean.ts:126-142); other operators keep empty strings, as the
-      reference only applies this inside docs and ``$set``
+    - removeEmptyStrings: ``$set`` of ``""`` becomes ``$unset`` and an
+      empty child of a ``$set`` object is dropped (clean.ts:126-142); other
+      operators and arrays keep empty strings
     - getAutoValues: for upsert documents, every defaultValue key not
       referenced by any operator gains a ``$setOnInsert`` row
       (getDefaultAutoValueFunction, SimpleSchema.ts:1148-1167; tested by
@@ -564,9 +491,6 @@ def clean_modifier_table(
     "Empty operator removal" (clean.ts:175-187) is inherent to the long
     format: removing the last row of an operator removes the operator.
     """
-    from .schema.types import Boolean as BoolTok, Number as NumTok
-    from .cleaning import resolve_clean_options
-
     opts = resolve_clean_options(
         schema,
         filter=filter,
@@ -576,12 +500,8 @@ def clean_modifier_table(
         remove_nulls_from_arrays=remove_nulls_from_arrays,
         get_auto_values=get_auto_values,
     )
-    filter = opts["filter"]  # noqa: A001
-    auto_convert = opts["auto_convert"]
-    trim_strings = opts["trim_strings"]
-    remove_empty_strings = opts["remove_empty_strings"]
-    remove_nulls_from_arrays = opts["remove_nulls_from_arrays"]
-    get_auto_values = opts["get_auto_values"]
+    get_auto_values = opts.pop("get_auto_values")
+    remove_nulls = opts["remove_nulls_from_arrays"]
 
     merged = schema.merged_schema()
     op = F.col("op")
@@ -599,237 +519,62 @@ def clean_modifier_table(
     ignore_value_ops = op.isin("$unset", "$rename", "$currentDate", "$slice")
 
     # ---- filter unknown keys (keep $unset/$rename) --------------------------
-    if filter:
+    if opts["filter"]:
         allowed = generic.isin(*merged) if merged else F.lit(False)
         for bb in schema.blackbox_keys():
             allowed = allowed | generic.startswith(bb + ".")
         # item paths (tags.0) and $each forms target the array key itself
         mods = mods.where(allowed | op.isin("$unset", "$rename"))
 
-    # ---- per-key value cleaning ---------------------------------------------
-    def clean_token(k: str, token: Column) -> Column:
-        """autoConvert + trim for one JSON token checked against key ``k``."""
-        alts = schema.resolved_alternatives(k)
-        if not alts or any(
-            a.get("blackbox") is True or a.get("type") is AnyType for a in alts
-        ):
-            return token
-        first = alts[0].get("type")
-        expr = token
-        if auto_convert:
-            if first is String:
-                # number/bool JSON → quoted string (toString parity);
-                # ext-date → quoted ISO payload (reference Date.toString —
-                # ISO-8601 is this engine's canonical date rendering)
-                expr = F.when(
-                    is_json_number(expr) | is_json_bool(expr),
-                    F.concat(F.lit('"'), F.trim(expr), F.lit('"')),
-                ).when(
-                    is_ext_date(expr),
-                    _json_quote(F.from_json(expr, "`$date` string").getField("$date")),
-                ).otherwise(expr)
-            elif first in (NumTok, Integer):
-                parsed = json_str(expr)
-                num = parsed.try_cast("double")
-                expr = F.when(
-                    is_json_string(expr) & (F.length(parsed) > 0) & num.isNotNull(),
-                    F.when(num == F.floor(num), num.cast("long").cast("string"))
-                    .otherwise(num.cast("string")),
-                ).otherwise(expr)
-            elif first is BoolTok:
-                lowered = F.lower(json_str(expr))
-                expr = F.when(
-                    is_json_string(expr) & lowered.isin("true", "false"), lowered
-                ).otherwise(expr)
-            if len(alts) > 1:
-                # oneOf: convert only when the token matches NO alternative
-                # (clean.ts:101 gates on !isValueTypeValid over ALL defs)
-                expr = F.when(
-                    _token_matches_alternatives(alts, token), token
-                ).otherwise(expr)
-        if trim_strings and not any(a.get("trim") is False for a in alts):
-            from .cleaning import js_trim
-
-            # decode → trim → RE-ENCODE with proper JSON escaping (a naive
-            # quote wrap corrupts values containing '"' or '\')
-            expr = F.when(
-                is_json_string(expr),
-                _json_quote(js_trim(json_str(expr))),
-            ).otherwise(expr)
-        return expr
-
-    def clean_object_value(k: str, token: Column) -> Column:
-        """Rebuild an object-valued $set token with each DECLARED child
-        cleaned (recursively for nested declared objects), empty-string
-        children removed, and — matching the reference's `filter` —
-        unknown children dropped (clean.ts:80-94 runs before the value
-        transforms).  Returns the original token for non-object input."""
-        prefix = f"{k}."
-        child_names = sorted(
-            {c[len(prefix):].split(".")[0] for c in merged if c.startswith(prefix)}
-        )
-        # try_parse_json: malformed '{...' input is returned untouched (the
-        # var.isNotNull() guard below) instead of crashing the projection
-        var = F.try_parse_json(token)
-        fragments = []
-        for n in child_names:
-            child_key = f"{k}.{n}"
-            extracted = F.to_json(
-                F.try_variant_get(var, f"$['{n}']", "variant")
-            )
-            cleaned_child = (
-                clean_object_value(child_key, extracted)
-                if is_object_key(schema.resolved_alternatives(child_key))
-                else clean_token(child_key, extracted)
-            )
-            frag = F.concat(F.lit(f'"{n}": '), cleaned_child)
-            cond = extracted.isNotNull()
-            if remove_empty_strings:
-                cond = cond & (cleaned_child != F.lit('""'))
-            fragments.append(F.when(cond, frag))
-        if not fragments:
-            return token
-        rebuilt = F.concat(
-            F.lit("{"),
-            F.concat_ws(", ", F.array_compact(F.array(*fragments))),
-            F.lit("}"),
-        )
-        return F.when(
-            is_json_object(token) & ~is_ext_date(token) & var.isNotNull(),
-            rebuilt,
-        ).otherwise(token)
-
-    # ---- array-item value cleaning helpers ----------------------------------
-    # element tokens come out of a variant parse (exact JSON round-trip,
-    # heterogeneous element types preserved); cleaning runs per element
-    # inside the transform lambda as pure Catalyst expressions
-    def _cleaned_elements(item_key: str, elems: Column) -> Column:
-        out_elems = F.transform(
-            elems,
-            lambda e: F.coalesce(clean_token(item_key, e), F.lit("null")),
-        )
-        if remove_nulls_from_arrays:
-            out_elems = F.filter(out_elems, lambda e: e != F.lit("null"))
-        return out_elems
-
-    def _clean_array_value(item_key: str, token: Column) -> Column:
-        elems = F.transform(
-            F.try_variant_get(F.try_parse_json(token), "$", "array<variant>"),
-            lambda e: F.to_json(e),
-        )
-        rebuilt = F.concat(
-            F.lit("["),
-            F.concat_ws(", ", _cleaned_elements(item_key, elems)),
-            F.lit("]"),
-        )
-        return F.when(elems.isNotNull(), rebuilt).otherwise(token)
-
-    def _clean_each_value(item_key: str, token: Column) -> Column:
-        var = F.try_parse_json(token)
-        elems = F.transform(
-            F.try_variant_get(var, "$['$each']", "array<variant>"),
-            lambda e: F.to_json(e),
-        )
-        frags = [
-            F.concat(
-                F.lit('"$each": ['),
-                F.concat_ws(", ", _cleaned_elements(item_key, elems)),
-                F.lit("]"),
-            )
-        ]
-        # $push sub-operators riding alongside $each survive the rebuild
-        for sub in ("$slice", "$position", "$sort"):
-            sv = F.to_json(F.try_variant_get(var, f"$['{sub}']", "variant"))
-            frags.append(
-                F.when(sv.isNotNull(), F.concat(F.lit(f'"{sub}": '), sv))
-            )
-        rebuilt = F.concat(
-            F.lit("{"),
-            F.concat_ws(", ", F.array_compact(F.array(*frags))),
-            F.lit("}"),
-        )
-        return F.when(elems.isNotNull(), rebuilt).otherwise(token)
-
-    is_arr_tok = v.rlike(r"^\s*\[")
-    is_obj_tok = v.rlike(r"^\s*\{")
-    is_each_tok = v.rlike(r'^\s*\{\s*"\$each"')
-
+    # ---- per-key value cleaning: the shared pipeline over the row's token,
+    # parsed once into a variant column below this projection.  Object
+    # values are rebuilt only under `filter` (undeclared children can't be
+    # read with literal variant paths; the reference drops them anyway).
+    cleaner = _Cleaner(schema, **opts)
+    view = TokenView(v, var=F.col(_PARSED), rebuilds_objects=opts["filter"])
+    reads = view.named_reads("__cm_")
+    is_arr, is_obj = is_json_array(v), is_json_object(v)
+    is_each = v.rlike(r'^\s*\{\s*"\$each"')
     cleaned = v
-    object_keys = []
     for k in merged:
         if k.endswith(".$"):
             continue
-        alts = schema.resolved_alternatives(k)
-        if any(a.get("blackbox") is True or a.get("type") is AnyType for a in alts):
-            continue
-        if any(
-            isinstance(a.get("type"), SimpleSchema) or a.get("type") is ObjectType
-            for a in alts
-        ):
-            object_keys.append(k)
-            continue
-        item_key = f"{k}.$"
-        if item_key in merged:
-            item_alts = schema.resolved_alternatives(item_key)
-            if any(
-                a.get("blackbox") is True or a.get("type") is AnyType
-                for a in item_alts
-            ):
-                continue
-            scalar_item = clean_token(item_key, v)
-            per_op = (
-                F.when(
-                    op.isin(*OPS_PUSH) & is_each_tok,
-                    _clean_each_value(item_key, v),
-                )
-                .when(
-                    op.isin(*OPS_PUSH) & ~is_obj_tok & ~is_arr_tok, scalar_item
-                )
-                # $pull/$pop scalars clean toward the item def; $pull match
-                # queries and plain-object items pass through untouched
-                # (convertToProperType.ts:13-20 early-returns objects)
-                .when(
-                    op.isin("$pull", "$pop") & ~is_obj_tok & ~is_arr_tok,
-                    scalar_item,
-                )
-                .when(
-                    (op == F.lit("$pullAll")) & is_arr_tok,
-                    _clean_array_value(item_key, v),
-                )
-                .when(
-                    op.isin(*OPS_SET) & is_arr_tok,
-                    _clean_array_value(item_key, v),
-                )
+        whole = cleaner.clean_value(k, view)
+        if any(a.get("type") is ArrayType for a in cleaner.alternatives(k)):
+            # values under $push/$addToSet (direct and $each), $pull and $pop
+            # clean toward the ITEM def; $pull queries and other objects
+            # pass through; $set and $pullAll arrays clean per item, and a
+            # scalar $set is wrapped
+            item_key = f"{k}.$"
+            item = cleaner.clean_value(item_key, view)
+            each = view.field("$each").rebuild_array(
+                lambda e: cleaner.clean_value(item_key, e), remove_nulls
             )
-            if auto_convert:
-                # scalar $set on an array key wraps the RAW token — the
-                # reference wraps during autoConvert and never revisits the
-                # new element node (convertToProperType.ts:61)
-                per_op = per_op.when(
-                    op.isin(*OPS_SET)
-                    & ~is_arr_tok
-                    & ~is_json_null(v)
-                    & (~is_obj_tok | is_ext_date(v)),
-                    F.concat(F.lit("["), v, F.lit("]")),
-                )
-            cleaned = F.when(generic == k, per_op.otherwise(v)).otherwise(cleaned)
-            continue
-        cleaned = F.when(generic == k, clean_token(k, v)).otherwise(cleaned)
-    # object-valued $set: clean inside the value (declared children only —
-    # dynamic names can't be extracted with literal variant paths, and with
-    # filter=True the reference drops them anyway)
-    if filter:
-        for k in object_keys:
-            cleaned = F.when(
-                (generic == k) & op.isin(*OPS_SET),
-                clean_object_value(k, v),
-            ).otherwise(cleaned)
+            # $push sub-operators beside $each survive the rebuild
+            each = view.rebuild_object([("$each", each)] + [
+                (sub, view.field(sub).token) for sub in ("$slice", "$position", "$sort")
+            ])
+            whole = (
+                F.when(op.isin(*OPS_PUSH) & is_each & view.var.isNotNull(), each)
+                .when(op.isin(*OPS_PUSH, "$pull", "$pop") & ~is_obj & ~is_arr, item)
+                .when(op.isin(*OPS_SET) | ((op == "$pullAll") & is_arr), whole)
+                .otherwise(v)
+            )
+        if whole is not v:
+            cleaned = F.when(generic == k, whole).otherwise(cleaned)
 
-    out = mods.withColumn(
-        "value", F.when(ignore_value_ops, v).otherwise(cleaned)
+    # a removed empty string (NULL) stays '""' here; `$set` turns it into
+    # `$unset` below
+    value = F.when(ignore_value_ops, v).otherwise(
+        F.coalesce(cleaned, F.when(v.isNotNull(), F.lit('""')))
+    ).alias("value")
+    out = (
+        mods.select("*", F.try_parse_json(v).alias(_PARSED))
+        .select("*", *reads)
+        .select(*[value if c == "value" else c for c in mods.columns])
     )
 
-    if remove_empty_strings:
+    if opts["remove_empty_strings"]:
         is_empty_str = F.regexp_replace(F.col("value"), "\\s", "") == F.lit('""')
         # $set '' → $unset (clean.ts:126-142); the reference applies
         # removeEmptyStrings only inside docs and $set, so empty strings
@@ -860,12 +605,8 @@ class _ModifierAutoValueContext:
     document's other operator entries, and ``unset()``."""
 
     # shared sentinel (class → pickles by reference, identity-stable on
-    # executors); bound lazily to avoid a module-level cleaning import
-    @property
-    def UNCHANGED(self):
-        from .cleaning import PythonAutoValueContext
-
-        return PythonAutoValueContext.UNCHANGED
+    # executors)
+    UNCHANGED = PythonAutoValueContext.UNCHANGED
 
     __slots__ = ("key", "value", "operator", "is_upsert", "_ents", "_unset",
                  "_is_set")
@@ -979,8 +720,6 @@ def _apply_modifier_auto_values(
     if not av_fns:
         return out
     av_fns.sort(key=lambda kv: kv[1].count("."))
-    from .cleaning import PythonAutoValueContext
-
     unchanged = PythonAutoValueContext.UNCHANGED
 
     act_t = T.ArrayType(

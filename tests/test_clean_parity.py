@@ -21,6 +21,9 @@ Class ↔ reference mapping:
   TestParityDefaultValueModifier — clean/defaultValue.tests.ts:229-845
 """
 
+import datetime
+import json
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -533,9 +536,66 @@ class TestParityOneOf:
         ]
 
 
+#: the value came out of clean as it went in
+UNCHANGED = object()
+
+
+def decode(token):
+    """A cleaned JSON token as a Python value (extended-JSON dates as naive
+    UTC datetimes, like the typed timestamps of the UTC test session)."""
+    v = json.loads(token)
+    if isinstance(v, dict) and set(v) == {"$date"}:
+        return datetime.datetime.fromisoformat(v["$date"].replace("Z", "+00:00")).replace(tzinfo=None)
+    return v
+
+
 class TestParityConvertToProperType:
     """clean/convertToProperType.tests.ts — boolean coercions over typed
-    columns (the doc-mode analog of the unit tests)."""
+    columns (the doc-mode analog of the unit tests), and every conversion
+    run both as a typed column and as a ``$set`` row: the two modes share
+    one conversion table and must agree."""
+
+    # (definition, typed column DDL, typed value, JSON token, expected);
+    # UNCHANGED: the typed column is NULL (it cannot hold the value; the
+    # composed pipeline reports the original) and the token is kept
+    BOTH_MODES = [
+        (str, "double", 1.0, "1.0", "1"),
+        (float, "string", "  ", '"  "', 0),
+        (bool, "int", 0, "0", False),
+        (bool, "int", 2, "2", True),
+        (SimpleSchema.Date, "string", "2024-01-02T03:04:05Z", '"2024-01-02T03:04:05Z"',
+         datetime.datetime(2024, 1, 2, 3, 4, 5)),
+        (SimpleSchema.Date, "bigint", 86400000, "86400000", datetime.datetime(1970, 1, 2)),
+        (bool, "string", "nope", '"nope"', UNCHANGED),
+        (bool, "double", float("nan"), "NaN", UNCHANGED),
+        # matches the second alternative: left alone
+        (SimpleSchema.oneOf(str, float), "bigint", 5, "5", 5),
+    ]
+
+    @pytest.mark.parametrize("type_, ddl, value, token, want", BOTH_MODES)
+    def test_typed_and_token_modes_convert_alike(self, spark, type_, ddl, value, token, want):
+        ss = SimpleSchema({"k": {"type": type_, "optional": True}})
+        df = spark.createDataFrame([(value,)], f"k {ddl}")
+        typed = clean(df, ss, get_auto_values=False).collect()[0][0]
+        [(_, op, _, out)] = mclean(spark, [(1, "$set", "k", token, False)], ss)
+        assert op == "$set"
+        if want is UNCHANGED:
+            assert typed is None
+            assert out == token
+        else:
+            # a bool equals 0/1 in Python: compare the bool-ness too
+            for got in (typed, decode(out)):
+                assert (isinstance(got, bool), got) == (isinstance(want, bool), want)
+
+    def test_integer_alternative_takes_only_integral_numbers(self, spark):
+        # token mode only: a double column matches Integer at compile time,
+        # but isValueTypeValid rejects 2.5 for Integer, so it converts
+        # toward the first type
+        ss = SimpleSchema({"k": {"type": SimpleSchema.oneOf(str, SimpleSchema.Integer)}})
+        assert mclean(spark, [(1, "$set", "k", "2.5", False), (2, "$set", "k", "3", False)], ss) == [
+            (1, "$set", "k", '"2.5"'),
+            (2, "$set", "k", "3"),
+        ]
 
     def test_boolean_coercions(self, spark):
         ss = SimpleSchema({"b": {"type": bool, "optional": True}})

@@ -153,6 +153,47 @@ class TestPush:
         got = run(spark, rows)
         assert got == [(1, "tags", "maxString")]
 
+    def _each_and_single(self, spark, ss, key, elements):
+        """Violations of one ``$each`` push, and of each element pushed
+        alone — the two must agree element by element."""
+        def rows(values):
+            df = spark.createDataFrame(
+                [(i, "$push", key, v, False) for i, v in enumerate(values)], MOD_DDL
+            )
+            return validate_modifier_table(df, ss).collect()
+
+        each = '{"$each": [' + ", ".join(elements) + "]}"
+        got = sorted((r.name, r.type, r.value) for r in rows([each]))
+        single = sorted((r.name, r.type, r.value) for r in rows(elements))
+        return got, single
+
+    def test_each_elements_of_another_type_than_a_string_item(self, spark):
+        ss = SimpleSchema(
+            {
+                "tags": {"type": SimpleSchema.Array, "optional": True},
+                "tags.$": {"type": str, "max": 3},
+            }
+        )
+        got, single = self._each_and_single(spark, ss, "tags", ["1", '"toolong"'])
+        assert got == [("tags", "expectedType", "1"), ("tags", "maxString", "toolong")]
+        assert got == single
+
+    def test_each_elements_of_another_type_than_an_integer_item(self, spark):
+        ss = SimpleSchema(
+            {
+                "nums": {"type": SimpleSchema.Array, "optional": True},
+                "nums.$": {"type": SimpleSchema.Integer, "max": 5},
+            }
+        )
+        got, single = self._each_and_single(spark, ss, "nums", ['"7"', "2.5", "9", "true"])
+        assert got == [
+            ("nums", "expectedType", "7"),
+            ("nums", "expectedType", "true"),
+            ("nums", "maxNumber", "9"),
+            ("nums", "noDecimal", "2.5"),
+        ]
+        assert got == single
+
     def test_pull_pop_skipped(self, spark):
         assert run(spark, [
             (1, "$pull", "tags", '"whatever-even-invalid"', False),

@@ -218,6 +218,37 @@ class TestPlanShape:
         assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
         assert len(jsc.sc().getRDDStorageInfo()) == 0
 
+    def test_clean_modifier_table_parses_each_value_once(self, spark):
+        ss = SimpleSchema(
+            {
+                "t": str,
+                "n": {"type": int, "optional": True},
+                "tags": {"type": SimpleSchema.Array, "optional": True},
+                "tags.$": str,
+                "meta": {"type": dict, "optional": True},
+                "meta.k": {"type": str, "optional": True},
+                "meta.sub": {"type": dict, "optional": True},
+                "meta.sub.x": {"type": int, "optional": True},
+            }
+        )
+        rows = [
+            (1, "$set", "t", '" a "', False),
+            (1, "$set", "n", '"4"', False),
+            (1, "$push", "tags", '{"$each": [" b ", 2]}', False),
+            (1, "$addToSet", "tags", "3", False),
+            (1, "$set", "meta", '{"k": " c ", "sub": {"x": "5"}, "z": 1}', False),
+        ]
+        df = clean_modifier_table(_mods(spark, rows), ss, get_auto_values=False)
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("parseJson") <= 1
+        assert sorted((r.op, r.key_path, r.value) for r in df.collect()) == [
+            ("$addToSet", "tags", '"3"'),
+            ("$push", "tags", '{"$each": ["b", "2"]}'),
+            ("$set", "meta", '{"k": "c", "sub": {"x": 5}}'),
+            ("$set", "n", "4"),
+            ("$set", "t", '"a"'),
+        ]
+
     def _json_schema(self):
         return SimpleSchema(
             {
