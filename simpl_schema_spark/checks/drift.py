@@ -1,23 +1,25 @@
 """Distribution-drift checks vs a baseline profile (north rule: "KS /
 chi-squared distribution-drift checks against a baseline profile table").
 
-Both checks reduce the big table to a tiny aggregate (category counts /
-quantile sketch) FIRST, then compute the statistic on the tiny side — the
-100 TB table is touched by exactly one aggregation each.
+Every check reduces the big table to a tiny aggregate (category counts,
+per-value counts or a quantile sketch) FIRST, then computes the statistic
+on the tiny side — the table is touched by exactly one aggregation each,
+and no check persists anything.
 
-- categorical: Pearson chi-squared over per-category proportions, computed
-  relationally from two count tables joined on category.
-- numeric: two-sample Kolmogorov–Smirnov statistic approximated from
-  ``approx_percentile`` sketches (D = max ECDF gap over the merged quantile
-  grid). Exact KS needs a full sort; the sketch version is the standard
-  scale-out approximation.
+- categorical: Pearson chi-squared (and PSI) over per-category
+  proportions, computed relationally from two count tables joined on
+  category.
+- numeric, approximate: two-sample Kolmogorov–Smirnov statistic from
+  ``approx_percentile`` sketches (D = max ECDF gap over the merged
+  quantile grid) — the standard scale-out approximation.
+- numeric, exact: :func:`numeric_drift_ks_exact` counts each distinct
+  value on both sides in one union + ``groupBy`` and takes the ECDF gap in
+  one range-partitioned pass over that value grid.
 """
 
 from __future__ import annotations
 
-from typing import Optional
-
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 __all__ = [
     "categorical_counts",
@@ -265,6 +267,11 @@ def numeric_drift_ks(
     )
 
 
+#: KS gaps in exact integer arithmetic: a product of two counts of this
+#: type fits decimal(38,0)
+_COUNT = "decimal(20,0)"
+
+
 def numeric_drift_ks_exact(
     current: DataFrame,
     baseline: DataFrame,
@@ -272,54 +279,79 @@ def numeric_drift_ks_exact(
 ) -> DataFrame:
     """EXACT two-sample KS statistic, fully relational (no sketches).
 
-    D = max over distinct values x of |ECDF_cur(x) − ECDF_base(x)|, computed
-    from per-value counts + a DISTRIBUTED prefix sum over the merged value
-    grid: range-partition the grid by x, cumsum locally within each sorted
-    range, then add per-partition offsets (a tiny ordered window over
-    #partitions rows, broadcast back).  No single-task global window — the
-    grid cumsum parallelizes like a sort, so the exact variant holds up to
-    grids that fit the cluster, not one executor.
+    D = max over distinct values x of |ECDF_cur(x) − ECDF_base(x)|, in one
+    range-partitioned pass over the value grid that persists nothing:
+
+    1. one union of both sides, each tagged by a count column, and one
+       ``groupBy(x)``: per-value counts of both sides, no join;
+    2. ``repartitionByRange`` of that grid, so each partition holds a
+       contiguous range of values, after the ranges of lower partitions;
+    3. per partition, running sums ordered by x give the local gap
+       ``g = L_cur·n_base − L_base·n_cur`` (totals ``n_*`` are one
+       broadcast row); the partition keeps its totals and max/min of ``g``;
+    4. a fold over the #partitions rows adds each partition's offset
+       ``k = O_cur·n_base − O_base·n_cur`` (O = totals of lower
+       partitions): ``D = max(gmax + k, −(gmin + k)) / (n_cur·n_base)``.
+
+    The gaps are exact integers, so D does not depend on where the range
+    partitioner cut the grid, and no step is a single-task window over the
+    grid.  NULLs are dropped; an empty or all-NULL side raises
+    ``DIVIDE_BY_ZERO`` (ANSI mode), and two empty sides give NULL.
 
     Returns one row ``(ks_statistic double)`` — deterministic, so it is
     oracle-checkable against an exact SQL implementation.
     """
-    from ..packing import prefix_sums
-
-    def counts(df: DataFrame, label: str) -> DataFrame:
-        return (
-            df.where(F.col(col).isNotNull())
-            .groupBy(F.col(col).cast("double").alias("x"))
-            .agg(F.count(F.lit(1)).alias(f"c_{label}"))
+    x = F.col(col).cast("double").alias("x")
+    grid = (
+        current.select(x, F.lit(1).alias("c_cur"), F.lit(0).alias("c_base"))
+        .unionByName(
+            baseline.select(x, F.lit(0).alias("c_cur"), F.lit(1).alias("c_base"))
         )
+        .where(F.col("x").isNotNull())
+        .groupBy("x")
+        .agg(F.sum("c_cur").alias("c_cur"), F.sum("c_base").alias("c_base"))
+    )
+    totals = grid.agg(
+        F.sum("c_cur").cast(_COUNT).alias("n_cur"),
+        F.sum("c_base").cast(_COUNT).alias("n_base"),
+    )
+    n_cur, n_base = F.col("n_cur"), F.col("n_base")
 
-    cur = counts(current, "cur")
-    base = counts(baseline, "base")
-    merged = cur.join(base, on="x", how="full_outer").select(
-        "x",
-        F.coalesce("c_cur", F.lit(0)).alias("c_cur"),
-        F.coalesce("c_base", F.lit(0)).alias("c_base"),
+    def gap(cum_cur: Column, cum_base: Column) -> Column:
+        # n_cur·n_base·(ECDF_cur − ECDF_base), exact
+        return cum_cur.cast(_COUNT) * n_base - cum_base.cast(_COUNT) * n_cur
+
+    n_parts = current.sparkSession.sparkContext.defaultParallelism
+    w_local = (
+        Window.partitionBy("pid").orderBy("x")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    # INCLUSIVE distributed prefix sums over the merged value grid — THE
-    # shared idiom (packing.prefix_sums): range shuffle, per-partition
-    # cumsum, broadcast offsets; no global single-task window
-    pre = prefix_sums(
-        merged, "x", ["c_cur", "c_base"], ["cum_cur", "cum_base"],
-        inclusive=True,
-    )
-    totals = pre.agg(
-        F.sum("c_cur").alias("n_cur"), F.sum("c_base").alias("n_base")
-    )
-    out = (
-        pre.crossJoin(F.broadcast(totals))
+    local = (
+        grid.repartitionByRange(n_parts, "x")
+        .withColumn("pid", F.spark_partition_id())
+        .crossJoin(F.broadcast(totals))
         .select(
-            F.abs(
-                F.col("cum_cur") / F.col("n_cur")
-                - F.col("cum_base") / F.col("n_base")
-            ).alias("gap")
+            "pid", "c_cur", "c_base", "n_cur", "n_base",
+            gap(
+                F.sum("c_cur").over(w_local), F.sum("c_base").over(w_local)
+            ).alias("g"),
         )
-        .agg(F.max("gap").alias("ks_statistic"))
     )
-    # materialize the 1-row statistic, then drop the grid cache
-    from ..cache import lazy_result
-
-    return lazy_result(out, pre)
+    parts = local.groupBy("pid", "n_cur", "n_base").agg(
+        F.sum("c_cur").alias("t_cur"),
+        F.sum("c_base").alias("t_base"),
+        F.max("g").alias("gmax"),
+        F.min("g").alias("gmin"),
+    )
+    w_prev = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
+    k = gap(
+        F.coalesce(F.sum("t_cur").over(w_prev), F.lit(0)),
+        F.coalesce(F.sum("t_base").over(w_prev), F.lit(0)),
+    )
+    return (
+        parts.select(
+            F.greatest(F.col("gmax") + k, -(F.col("gmin") + k)).alias("g"),
+            (n_cur.cast("double") * n_base.cast("double")).alias("scale"),
+        )
+        .agg((F.max("g").cast("double") / F.first("scale")).alias("ks_statistic"))
+    )

@@ -30,9 +30,10 @@ tokens (``modifiers.clean_modifier_table``): one pipeline (:class:`_Cleaner`)
 and one conversion table (:data:`CONVERSIONS`) over the two views of
 ``compiler/rules.py``:
 
-- trim uses the JS WhiteSpace ∪ LineTerminator set (TAB VT FF SP NBSP ZWNBSP
-  Zs LF CR LS PS), NOT Spark's ASCII-space ``F.trim`` — byte-identical text
-  parity requires this (BASELINE.json per-row invariant).
+- trim strips the JS WhiteSpace ∪ LineTerminator set (TAB VT FF SP NBSP
+  ZWNBSP Zs LF CR LS PS), NOT only the ASCII space of Spark's default
+  ``F.trim`` — byte-identical text parity requires this (BASELINE.json
+  per-row invariant).
 - number→string renders like JS ``toString`` ('1', not '1.0'); date→string
   like ``toISOString`` (``2024-01-02T03:04:05.000Z``).
 - string→number uses ``Number(value)`` semantics for nonempty strings
@@ -77,22 +78,24 @@ from .compiler.rules import (
     parse_date_string,
 )
 
-__all__ = ["clean", "spark_auto_value", "js_trim", "JS_WS_CLASS", "js_number_to_string"]
+__all__ = ["clean", "spark_auto_value", "js_trim", "JS_WS", "js_number_to_string"]
 
-#: JS WhiteSpace ∪ LineTerminator (ECMA-262 11.2/11.3): TAB VT FF SP NBSP
-#: ZWNBSP + Unicode Zs + LF CR LS PS.  Java \s covers TAB LF VT FF CR SP.
-JS_WS_CLASS = (
-    "[\\s\\u00A0\\u1680\\u2000-\\u200A\\u2028\\u2029\\u202F\\u205F\\u3000\\uFEFF]"
-)
+#: JS WhiteSpace ∪ LineTerminator (ECMA-262 11.2/11.3): TAB LF VT FF CR SP,
+#: NBSP, the Unicode Zs spaces, LS PS and ZWNBSP — the set that
+#: ``String.prototype.trim`` strips.  Every character is in the BMP.
+JS_WS = "".join(map(chr, [
+    *range(0x09, 0x0E), 0x20, 0xA0, 0x1680, *range(0x2000, 0x200B),
+    0x2028, 0x2029, 0x202F, 0x205F, 0x3000, 0xFEFF,
+]))
 
 
 def js_trim(col: Column) -> Column:
-    """String.prototype.trim parity (strips the JS whitespace set).
-
-    Single-pass anchored alternation — one regex traversal per string, not
-    two; at 100 TB the trim is in the per-row hot loop.
-    """
-    return F.regexp_replace(col, f"^{JS_WS_CLASS}+|{JS_WS_CLASS}+$", "")
+    """String.prototype.trim parity: strips the :data:`JS_WS` characters
+    from both ends with Spark's character-set trim, which reads only the
+    two ends of the string (a regex would be tried at every character).
+    Spark trims whole code points, so characters outside the set —
+    U+0085, U+180E, U+200B — are kept, as in JS."""
+    return F.trim(col, F.lit(JS_WS))
 
 
 def spark_auto_value(fn: Callable) -> Callable:

@@ -264,12 +264,12 @@ def validate_json_column(
     on the schema instance like the modifier/document forests (building
     them is py4j-round-trip-bound; invalidated on definition change via
     ``SimpleSchema._rebuild_caches``, keyed on the active validator
-    identities)."""
+    functions, held by reference)."""
     id_cols = list(id_cols)
     memo_key = (
         "json_violations",
         json_col,
-        tuple(id(fn) for fn in schema.all_validators()),
+        tuple(schema.all_validators()),
     )
     memo = schema.__dict__.setdefault("_compiled_memo", {})
     if memo_key not in memo:

@@ -13,8 +13,9 @@ Relational encoding (FIXTURES.md F6): one row per (document, operator, key)::
 
 ``value`` is JSON; dates use extended-JSON ``{"$date": "ISO-8601"}``.
 
-Execution shape: ``validate_modifier_table`` is ONE projection over the long
-table (all per-row rules are a CASE WHEN forest over the generic key) plus,
+Execution shape: ``validate_modifier_table`` is ONE generator over the long
+table (all per-row rules are a CASE WHEN forest over the generic key,
+evaluated once per row inside the ``inline``) plus,
 when the schema has required keys, ONE ``groupBy(doc)`` over the upsert
 ``$set``/``$setOnInsert`` rows: it collects the keys present (even as null)
 and the keys with a value, and ``array_except`` of the compile-time
@@ -199,11 +200,12 @@ def _modifier_rule_forest(schema: SimpleSchema) -> dict:
     immutable Catalyst trees, safe to share across queries (the same
     argument as the compile-time fragment cache in compiler/rules.py).
     Invalidation: ``SimpleSchema._rebuild_caches`` drops the memo on any
-    definition change, and the key carries the identity of every active
-    custom/global validator so a registry change rebuilds."""
+    definition change, and the key holds every active custom/global
+    validator function (by reference, not by id, so a new function cannot
+    reuse a cached id) so a registry change rebuilds."""
     memo_key = (
         "modifier_forest",
-        tuple(id(fn) for fn in schema.all_validators()),
+        tuple(schema.all_validators()),
     )
     memo = schema.__dict__.setdefault("_compiled_memo", {})
     if memo_key in memo:
@@ -380,18 +382,21 @@ def validate_modifier_table(
     non_optional = rules["non_optional"]
 
     empty_arr = F.array().cast(T.ArrayType(VIOLATION_SCHEMA))
+    # the forest feeds the generator directly: exploding a projected
+    # `violations` column lets Catalyst push an inferred size(violations) > 0
+    # filter below the projection, copying the whole forest into it
     base = mods.select(
         F.col(id_col),
-        F.array_compact(
-            F.concat(
-                F.array(per_row),
-                F.coalesce(
-                    F.when(op.isin(*OPS_PUSH), each_err), empty_arr
-                ),
+        F.inline(
+            F.array_compact(
+                F.concat(
+                    F.array(per_row),
+                    F.coalesce(
+                        F.when(op.isin(*OPS_PUSH), each_err), empty_arr
+                    ),
+                )
             )
-        ).alias("violations"),
-    ).select(F.col(id_col), F.explode("violations").alias("violation")).select(
-        id_col, "violation.*"
+        ),
     )
 
     # ---- upsert required-injection -------------------------------------------

@@ -11,11 +11,10 @@ dies at scale.
 :func:`prefix_sums` implements the distributed form — range-partition by
 the order key, cumsum locally within each sorted range, then add
 per-partition offsets (a tiny ordered window over #partitions rows,
-broadcast back) — and is the ONE copy of the idiom: ``checks/drift.
-numeric_drift_ks_exact`` (inclusive, two columns) and ``ranking.
-exact_rank_counts`` call it too.  The prefix sum parallelizes like a
-sort, so the layout holds at corpus scales that fit the cluster, not one
-executor.
+broadcast back) — and is the ONE copy of the idiom for callers that
+need every row's running total: ``ranking.exact_rank_counts`` calls it
+too.  The prefix sum parallelizes like a sort, so the layout holds at
+corpus scales that fit the cluster, not one executor.
 
 :func:`sequence_chunks` maps each document to its place in the stream:
 global token offset, first/last chunk index, and how many chunks it
@@ -44,13 +43,12 @@ def prefix_sums(
     ``order_col`` order (exclusive by default; ``inclusive=True`` counts
     the current row — the ECDF convention).
 
-    THE distributed prefix-sum idiom (used by :func:`sequence_chunks`,
-    :func:`..ranking.exact_rank_counts`, and ``checks/drift.
-    numeric_drift_ks_exact``): range shuffle on ``order_col`` →
-    per-partition local cumsum (window PARTITIONED by partition id —
-    bounded) → exclusive per-partition offsets (one tiny ordered window
-    over #partitions rows) broadcast back.  No global-order single-task
-    window anywhere.
+    THE distributed prefix-sum idiom (used by :func:`sequence_chunks`
+    and :func:`..ranking.exact_rank_counts`): range shuffle on
+    ``order_col`` → per-partition local cumsum (window PARTITIONED by
+    partition id — bounded) → exclusive per-partition offsets (one tiny
+    ordered window over #partitions rows) broadcast back.  No global-order
+    single-task window anywhere.
 
     ``order_col`` values must be unique and non-null (they define the
     stream order); NULL values count as 0.

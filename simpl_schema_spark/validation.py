@@ -209,9 +209,11 @@ def with_violations(
     The compiled forest is MEMOIZED on the schema instance: it is pure
     unbound Columns over the input's field names, so it depends only on
     (schema content, input StructType, keys/ignore/policy, the active
-    validator identities) — none of which involve the data.  Building it
-    issues thousands of py4j round trips per call otherwise (the same
-    finding as modifiers._modifier_rule_forest).  Invalidation:
+    validator functions) — none of which involve the data.  The key holds
+    the validator functions themselves, not their ids: an entry keeps its
+    functions alive, so a new function can never reuse a cached id.
+    Building it issues thousands of py4j round trips per call otherwise
+    (the same finding as modifiers._modifier_rule_forest).  Invalidation:
     ``SimpleSchema._rebuild_caches`` drops the memo on definition change;
     registry changes alter the key."""
     memo_key = (
@@ -220,7 +222,7 @@ def with_violations(
         tuple(keys) if keys is not None else None,
         tuple(ignore) if ignore is not None else None,
         extra_key_policy,
-        tuple(id(fn) for fn in schema.all_validators()),
+        tuple(schema.all_validators()),
     )
     memo = schema.__dict__.setdefault("_compiled_memo", {})
     if memo_key not in memo:

@@ -281,3 +281,140 @@ class TestNumericPSI:
 
         with _pytest.raises(ValueError):
             numeric_drift_psi(df, df, "x", bin_edges=[3.0, 1.0])
+
+
+def _exact_ks(cur, base):
+    """Two-sample KS statistic in exact rational arithmetic, NULLs dropped."""
+    from collections import Counter
+    from fractions import Fraction
+
+    cur = [v for v in cur if v is not None]
+    base = [v for v in base if v is not None]
+    cc, cb = Counter(cur), Counter(base)
+    lc = lb = 0
+    best = Fraction(0)
+    for x in sorted(set(cc) | set(cb)):
+        lc, lb = lc + cc[x], lb + cb[x]
+        best = max(best, abs(Fraction(lc, len(cur)) - Fraction(lb, len(base))))
+    return float(best)
+
+
+def _clear_storage(spark):
+    from simpl_schema_spark import cache
+
+    spark.catalog.clearCache()
+    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        rdd.unpersist()
+    cache.release_tracked()
+
+
+def _assert_nothing_persisted(spark):
+    from simpl_schema_spark import cache
+
+    jsc = spark.sparkContext._jsc
+    assert len(jsc.getPersistentRDDs()) == 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert cache._TRACKED == []
+
+
+class TestNumericDriftKsExact:
+    """``numeric_drift_ks_exact`` against an exact two-sample KS in Python."""
+
+    def _ks(self, spark, cur, base):
+        from simpl_schema_spark.checks import numeric_drift_ks_exact
+
+        c = spark.createDataFrame([(v,) for v in cur], "v bigint")
+        b = spark.createDataFrame([(v,) for v in base], "v bigint")
+        return numeric_drift_ks_exact(c, b, "v")
+
+    @pytest.mark.parametrize(
+        "cur, base",
+        [
+            ([1, 1, 2, 2, 2, 3], [1, 2, 2, 3, 3, 3, 3]),  # ties
+            ([1, 2, 3, 10, 11], [2, 3, 4, 5]),  # values on one side only
+            ([1, None, 2, None, 5], [None, 2, 3, 5, 5]),  # NULLs
+            (list(range(100)), [v + 30 for v in range(100)]),  # shifted
+            ([7] * 5, [7] * 9),  # identical single value
+        ],
+        ids=["ties", "one_sided_values", "nulls", "shifted", "identical"],
+    )
+    def test_matches_exact_python(self, spark, cur, base):
+        got = self._ks(spark, cur, base).first().ks_statistic
+        assert got == pytest.approx(_exact_ks(cur, base), abs=1e-15)
+
+    def test_wide_grid_across_range_partitions(self, spark):
+        import random
+
+        rng = random.Random(5)
+        cur = [rng.randint(0, 2000) for _ in range(6000)]
+        base = [rng.randint(150, 2150) for _ in range(4000)]
+        df = self._ks(spark, cur, base)
+        assert df.first().ks_statistic == pytest.approx(_exact_ks(cur, base), abs=1e-15)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "rangepartitioning(x" in plan
+        # the same bits on a rerun, wherever the range partitioner cuts
+        assert df.first().ks_statistic == self._ks(spark, cur, base).first().ks_statistic
+
+    def test_persists_and_tracks_nothing(self, spark):
+        _clear_storage(spark)
+        df = self._ks(spark, [1, 2, 3, 3], [2, 3, 4])
+        assert df.first().ks_statistic == pytest.approx(_exact_ks([1, 2, 3, 3], [2, 3, 4]))
+        _assert_nothing_persisted(spark)
+
+    def test_warm_call_runs_at_most_eight_jobs(self, spark):
+        sc = spark.sparkContext
+        self._ks(spark, [1, 2, 3], [2, 3, 4]).first()
+        _clear_storage(spark)
+        sc.setJobGroup("ks-exact-warm", "numeric_drift_ks_exact")
+        try:
+            self._ks(spark, [1, 2, 3], [2, 3, 4]).first()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert 0 < len(sc.statusTracker().getJobIdsForGroup("ks-exact-warm")) <= 8
+
+    def test_empty_or_all_null_side_raises(self, spark):
+        # a side with no values has n = 0, and ANSI division raises
+        for cur, base in (([], [1, 2]), ([1, 2], []), ([None, None], [1, 2])):
+            with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+                self._ks(spark, cur, base).first()
+
+    def test_two_empty_sides_give_null(self, spark):
+        assert self._ks(spark, [], [None]).first().ks_statistic is None
+
+
+class TestChecksPersistNothing:
+    def test_nightly_job_leaves_no_cache(self, spark):
+        """The nightly job's sequence — clean + validate with observed
+        stats, uniqueness, referential and both drift checks — leaves no
+        persisted RDD, cached relation or tracked DataFrame behind."""
+        from simpl_schema_spark.checks import numeric_drift_ks_exact
+        from simpl_schema_spark.pipeline import clean_and_validate
+        from simpl_schema_spark.schema import SimpleSchema
+
+        _clear_storage(spark)
+        pages = spark.createDataFrame(
+            [
+                (f"http://h{i % 7}.example/{i % 40}", [" en ", "de", "xx", None][i % 4],
+                 " t " * (i % 13))
+                for i in range(120)
+            ],
+            "url string, lang string, text string",
+        )
+        hosts = spark.createDataFrame([(f"h{i}.example",) for i in range(5)], "host string")
+        schema = SimpleSchema({
+            "url": {"type": str, "max": 30},
+            "text": {"type": str, "optional": True},
+            "lang": {"type": str, "optional": True, "allowedValues": ["en", "de"]},
+        })
+        out, obs = observe_validation_stats(clean_and_validate(pages, schema))
+        out.where(F.size("violations") > 0).write.format("noop").mode("overwrite").save()
+        assert obs.get["n_rows"] == 120
+        duplicate_keys(pages, ["url"]).count()
+        refs = pages.select(F.regexp_extract("url", "//([^/]+)/", 1).alias("host"))
+        referential_violations(refs, hosts, "host").count()
+        cur = pages.where(F.col("lang").isNotNull())
+        categorical_drift(cur, categorical_counts(cur, "lang"), "lang").first()
+        lengths = pages.select(F.length("text").alias("n"))
+        numeric_drift_ks_exact(lengths, lengths.where("n > 3"), "n").first()
+        _assert_nothing_persisted(spark)

@@ -3,13 +3,15 @@ getTest(given, expected) pattern (/root/reference/test/clean.tests.ts:209+,
 test/clean/defaultValue.tests.ts) adapted to columnar form."""
 
 import datetime
+import json
 
 import pytest
 
 from pyspark.sql import functions as F
 
 from simpl_schema_spark.schema import SimpleSchema
-from simpl_schema_spark.cleaning import clean, js_trim, spark_auto_value
+from simpl_schema_spark.cleaning import JS_WS, clean, js_trim, spark_auto_value
+from simpl_schema_spark.modifiers import clean_modifier_table
 from simpl_schema_spark.pipeline import clean_and_validate
 
 UTC = datetime.timezone.utc
@@ -138,6 +140,64 @@ class TestTrimAndEmptyStrings:
         df = spark.createDataFrame([{"a": [" x ", ""]}], "a array<string>")
         out = _one(clean(df, ss, remove_nulls_from_arrays=True))
         assert out["a"] == ["x"]
+
+
+class TestJsTrimSet:
+    """``js_trim`` strips exactly the JS WhiteSpace ∪ LineTerminator set
+    from both ends, like ``String.prototype.trim``: every case is checked
+    against Python ``s.strip(JS_WS)``, as a typed column and as a ``$set``
+    token."""
+
+    KEPT = "\u0085\u180e\u200b"  # Unicode spaces JS does not trim
+
+    def _cases(self):
+        cases = [c + c + "a" + c + "b" + c for c in JS_WS]  # interior kept
+        cases += [k + "x" + k for k in self.KEPT]
+        cases += [
+            JS_WS + "\U0001F600 x \U0001F600" + JS_WS,  # surrogate pairs
+            "\ufeff\U0001F600",
+            "",
+            JS_WS,
+            " \u0085 ",
+        ]
+        return cases
+
+    def test_set_is_the_js_set(self):
+        assert sorted(map(ord, JS_WS)) == [
+            *range(0x09, 0x0E), 0x20, 0xA0, 0x1680, *range(0x2000, 0x200B),
+            0x2028, 0x2029, 0x202F, 0x205F, 0x3000, 0xFEFF,
+        ]
+
+    def test_js_trim_matches_python_strip(self, spark):
+        cases = self._cases()
+        df = spark.createDataFrame(list(enumerate(cases)), "i int, s string")
+        got = {r.i: r.t for r in df.select("i", js_trim(F.col("s")).alias("t")).collect()}
+        assert got == {i: s.strip(JS_WS) for i, s in enumerate(cases)}
+
+    def test_typed_column(self, spark):
+        cases = self._cases()
+        ss = SimpleSchema({"i": int, "s": {"type": str, "optional": True}})
+        df = spark.createDataFrame(list(enumerate(cases)), "i bigint, s string")
+        got = {r.i: r.s for r in clean(df, ss).collect()}
+        # removeEmptyStrings: a string that trims to "" becomes NULL
+        assert got == {i: s.strip(JS_WS) or None for i, s in enumerate(cases)}
+
+    def test_set_token(self, spark):
+        cases = self._cases()
+        ss = SimpleSchema({"s": {"type": str, "optional": True}})
+        rows = [(i, "$set", "s", json.dumps(s), False) for i, s in enumerate(cases)]
+        df = spark.createDataFrame(
+            rows, "doc_id bigint, op string, key_path string, value string, upsert boolean"
+        )
+        got = {
+            r.doc_id: (r.op, json.loads(r.value))
+            for r in clean_modifier_table(df, ss).collect()
+        }
+        # removeEmptyStrings: a string that trims to "" moves to $unset
+        assert got == {
+            i: ("$set", s.strip(JS_WS)) if s.strip(JS_WS) else ("$unset", "")
+            for i, s in enumerate(cases)
+        }
 
 
 class TestFilter:

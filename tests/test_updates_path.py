@@ -8,6 +8,8 @@ input is scanned and shuffled, how many times each JSON document is parsed,
 and that no call leaves a persisted relation behind.
 """
 
+import re
+
 from pyspark.sql import functions as F
 
 from simpl_schema_spark.jsondoc import json_violations_column, validate_json_column
@@ -198,6 +200,16 @@ class TestPlanShape:
         assert "BroadcastNestedLoopJoin" not in plan
         assert "Join" not in plan
         assert plan.count("Exchange hashpartitioning") <= 1
+
+    def test_validate_modifier_table_evaluates_the_forest_once(self, spark):
+        # the forest feeds the generator directly; exploding a projected
+        # violations column let Catalyst copy the forest into an inferred
+        # size(violations) > 0 filter, in every union branch
+        rows = self._rows(1) + [(2, "$push", "t", '{"$each": ["a"]}', False)]
+        df = validate_modifier_table(_mods(spark, rows), self._mod_schema())
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "Filter (size(" not in plan
+        assert len(re.findall(r"CASE WHEN \(op#\d+ = \$pushAll\)", plan)) == 1
 
     def test_clean_modifier_table_runs_the_udf_once_without_a_cache(self, spark):
         df = clean_modifier_table(_mods(spark, self._rows(1)), self._mod_schema())

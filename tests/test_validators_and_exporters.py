@@ -135,3 +135,63 @@ class TestSparkStructExport:
         df = spark.createDataFrame([("a", 1)], st)
         vs = run_validation(spark, ss, st, [{"s": "a", "n": 1}])[0]
         assert vs == []
+
+
+class TestValidatorMemoKeys:
+    """The compiled forests are memoized per schema instance and keyed on
+    the active validator functions.  Replacing a global validator must
+    rebuild them even when the new function lands at the address (the
+    ``id``) of the one it replaces."""
+
+    @staticmethod
+    def _rule(tag):
+        @spark_rule
+        def rule(value, ctx):
+            return F.when(value.cast("string") == "banana", F.lit(tag))
+
+        return rule
+
+    def _swap_and_check(self, run):
+        import gc
+
+        saved = list(SimpleSchema._global_validators)
+        try:
+            for tag in ("first", "second", "third"):
+                # drop the old function before making the new one, so the
+                # new one may take its memory and id
+                SimpleSchema._global_validators[:] = saved
+                gc.collect()
+                SimpleSchema._global_validators.append(self._rule(tag))
+                assert run() == [tag]
+        finally:
+            SimpleSchema._global_validators[:] = saved
+
+    def test_typed_table(self, spark):
+        from simpl_schema_spark.validation import with_violations
+
+        ss = SimpleSchema({"a": {"type": str, "optional": True}})
+        df = spark.createDataFrame([("banana",)], "a string")
+        self._swap_and_check(
+            lambda: [v.type for r in with_violations(df, ss).collect() for v in r.violations]
+        )
+
+    def test_modifier_rows(self, spark):
+        from simpl_schema_spark.modifiers import validate_modifier_table
+
+        ss = SimpleSchema({"a": {"type": str, "optional": True}})
+        df = spark.createDataFrame(
+            [(1, "$set", "a", '"banana"', False)],
+            "doc_id bigint, op string, key_path string, value string, upsert boolean",
+        )
+        self._swap_and_check(
+            lambda: [r.type for r in validate_modifier_table(df, ss).collect()]
+        )
+
+    def test_json_documents(self, spark):
+        from simpl_schema_spark.jsondoc import validate_json_column
+
+        ss = SimpleSchema({"a": {"type": str, "optional": True}})
+        df = spark.createDataFrame([(1, '{"a": "banana"}')], "doc_id bigint, json_blob string")
+        self._swap_and_check(
+            lambda: [r.type for r in validate_json_column(df, ss).collect()]
+        )
