@@ -29,27 +29,19 @@ _TEXT_MIN = 100                                      # short docs → minString
 _NCHARS_MAX = 400                                    # long docs → maxNumber
 
 
-_SCHEMA_SINGLETONS: dict = {}
-
-
 def _doc_schema():
-    """The documents schema, built ONCE per process: schemas are immutable
-    config here, and a stable instance lets the engine's per-schema
-    compiled-Column memos (modifiers._modifier_rule_forest) hit across
-    repeated query invocations instead of re-paying plan construction."""
+    """The documents schema; the compile cache keys on its content."""
     from simpl_schema_spark.schema import SimpleSchema
 
-    if "docs" not in _SCHEMA_SINGLETONS:
-        _SCHEMA_SINGLETONS["docs"] = SimpleSchema(
-            {
-                "doc_id": {"type": int, "min": 0},
-                "text": {"type": str, "min": _TEXT_MIN},
-                "lang": {"type": str, "allowedValues": _ALLOWED_LANGS},
-                "source": {"type": str, "regEx": re.compile(_SOURCE_RE)},
-                "n_chars": {"type": int, "min": 0, "max": _NCHARS_MAX},
-            }
-        )
-    return _SCHEMA_SINGLETONS["docs"]
+    return SimpleSchema(
+        {
+            "doc_id": {"type": int, "min": 0},
+            "text": {"type": str, "min": _TEXT_MIN},
+            "lang": {"type": str, "allowedValues": _ALLOWED_LANGS},
+            "source": {"type": str, "regEx": re.compile(_SOURCE_RE)},
+            "n_chars": {"type": int, "min": 0, "max": _NCHARS_MAX},
+        }
+    )
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -268,15 +260,13 @@ def q_clean_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("text"),
         F.when(F.col("doc_id") % 13 == 0, F.lit("")).otherwise(F.col("lang")).alias("lang"),
     )
-    if "clean_docs" not in _SCHEMA_SINGLETONS:
-        _SCHEMA_SINGLETONS["clean_docs"] = SimpleSchema(
-            {
-                "doc_id": {"type": int, "optional": True},
-                "text": {"type": str, "optional": True},
-                "lang": {"type": str, "optional": True},
-            }
-        )
-    ss = _SCHEMA_SINGLETONS["clean_docs"]
+    ss = SimpleSchema(
+        {
+            "doc_id": {"type": int, "optional": True},
+            "text": {"type": str, "optional": True},
+            "lang": {"type": str, "optional": True},
+        }
+    )
     return clean(d, ss).select("doc_id", "text", "lang")
 
 
@@ -408,15 +398,13 @@ def q_validate_object_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     from simpl_schema_spark.modifiers import validate_modifier_table
     from simpl_schema_spark.schema import SimpleSchema
 
-    if "object_set" not in _SCHEMA_SINGLETONS:
-        _SCHEMA_SINGLETONS["object_set"] = SimpleSchema(
-            {
-                "meta": {"type": dict},
-                "meta.lang": {"type": str, "allowedValues": _ALLOWED_LANGS},
-                "meta.n": {"type": int, "min": 0, "max": _NCHARS_MAX},
-            }
-        )
-    ss = _SCHEMA_SINGLETONS["object_set"]
+    ss = SimpleSchema(
+        {
+            "meta": {"type": dict},
+            "meta.lang": {"type": str, "allowedValues": _ALLOWED_LANGS},
+            "meta.n": {"type": int, "min": 0, "max": _NCHARS_MAX},
+        }
+    )
     d = _docs(spark, sf_dir)
     # deterministic variety: doc_id%7==0 adds an undeclared child;
     # doc_id%11==0 omits the required 'lang' child
@@ -447,16 +435,14 @@ def q_validate_json_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from simpl_schema_spark.jsondoc import validate_json_column
     from simpl_schema_spark.schema import SimpleSchema
 
-    if "json_docs" not in _SCHEMA_SINGLETONS:
-        _SCHEMA_SINGLETONS["json_docs"] = SimpleSchema(
-            {
-                "lang": {"type": str, "allowedValues": _ALLOWED_LANGS},
-                "n": {"type": int, "min": 0, "max": _NCHARS_MAX},
-                "tags": {"type": SimpleSchema.Array, "optional": True},
-                "tags.$": {"type": str, "max": 4},
-            }
-        )
-    ss = _SCHEMA_SINGLETONS["json_docs"]
+    ss = SimpleSchema(
+        {
+            "lang": {"type": str, "allowedValues": _ALLOWED_LANGS},
+            "n": {"type": int, "min": 0, "max": _NCHARS_MAX},
+            "tags": {"type": SimpleSchema.Array, "optional": True},
+            "tags.$": {"type": str, "max": 4},
+        }
+    )
     d = _docs(spark, sf_dir)
     # deterministic heterogeneity: %7 adds an unknown key, %11 omits required
     # lang, %13 makes n a wrong-typed string, %5 adds a tags array whose

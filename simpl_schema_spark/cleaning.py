@@ -49,6 +49,7 @@ from typing import Any, Callable, Union
 
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
+from .compiler.memo import compiled
 from .schema.schema import SimpleSchema
 from .schema.types import (
     AnyType,
@@ -168,7 +169,7 @@ def clean(
     ``None`` kwargs fall back to the schema's constructor ``clean_options``
     (merged across extend — SimpleSchema.ts:155-160,705), then the
     reference defaults."""
-    out, _ = clean_with_info(
+    return clean_with_info(
         df,
         schema,
         filter=filter,
@@ -177,8 +178,7 @@ def clean(
         trim_strings=trim_strings,
         get_auto_values=get_auto_values,
         remove_nulls_from_arrays=remove_nulls_from_arrays,
-    )
-    return out
+    )[0]
 
 
 def clean_with_info(
@@ -196,7 +196,9 @@ def clean_with_info(
     """clean() + the compiler info (converted keys) for the composed
     clean-then-validate pipeline.  With ``keep_originals_of_converted`` the
     output also carries ``__orig_<key>`` copies of auto-converted columns so
-    the validator can report original offending values."""
+    the validator can report original offending values.  The projection
+    comes from the compile cache (``compiler/memo.py``); autoValues run per
+    call."""
     opts = resolve_clean_options(
         schema,
         filter=filter,
@@ -207,19 +209,24 @@ def clean_with_info(
         remove_nulls_from_arrays=remove_nulls_from_arrays,
     )
     get_auto_values = opts.pop("get_auto_values")
-    cleaner = _Cleaner(schema, **opts)
-    out_cols: list[Column] = []
-    for f in df.schema.fields:
-        generic = f.name
-        if opts["filter"] and not schema.allows_key(generic):
-            continue  # filter: drop unknown columns (clean.ts:80-94)
-        expr = cleaner.clean_value(generic, ColumnView(F.col(f.name), f.dataType))
-        out_cols.append(expr.alias(f.name))
-    if keep_originals_of_converted:
-        for key in cleaner.converted:
-            out_cols.append(F.col(key).alias(f"__orig_{key}"))
-    result = df.select(*out_cols)
 
+    def build() -> "tuple[list[Column], _Cleaner]":
+        cleaner = _Cleaner(schema, **opts)
+        out_cols = [
+            cleaner.clean_value(f.name, ColumnView(F.col(f.name), f.dataType)).alias(f.name)
+            for f in df.schema.fields
+            # filter: drop unknown columns (clean.ts:80-94)
+            if not opts["filter"] or schema.allows_key(f.name)
+        ]
+        if keep_originals_of_converted:
+            out_cols += [F.col(k).alias(f"__orig_{k}") for k in cleaner.converted]
+        return out_cols, cleaner
+
+    out_cols, cleaner = compiled(
+        schema, "clean", df.schema.simpleString(),
+        (opts, keep_originals_of_converted), build,
+    )
+    result = df.select(*out_cols)
     if get_auto_values:
         result = _apply_auto_values(result, schema)
     return result, cleaner

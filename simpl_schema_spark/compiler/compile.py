@@ -165,7 +165,7 @@ class RuleCompiler:
         self._pandas_counter = 0
         # (generic, fn) → column name: the custom tail is compiled both for
         # the value-present and value-null branches; register one UDF only
-        self._pandas_cache: dict[tuple[str, int], str] = {}
+        self._pandas_cache: dict[tuple[str, Callable], str] = {}
         # stack of (item_generic, index Column) while compiling inside
         # array-item lambdas — lets Python custom validators on item keys
         # resolve to elementwise pandas rules
@@ -468,7 +468,7 @@ class RuleCompiler:
         lambdas pick entries by index: no explode, no shuffle, violations
         keep concrete-index names.
         """
-        cache_key = (generic, id(custom))
+        cache_key = (generic, custom)
         if cache_key in self._pandas_cache:
             return self._pandas_cache[cache_key]
         self._pandas_counter += 1

@@ -39,6 +39,7 @@ from typing import Iterable
 from pyspark.sql import Column, DataFrame, functions as F
 
 from .compiler.compile import is_spark_rule
+from .compiler.memo import compiled
 from .compiler.rules import (
     TokenView,
     is_json_null,
@@ -260,26 +261,22 @@ def validate_json_column(
 
     Shape: a decode projection parses each document once and extracts each
     declared key once; the violation forest above it reads those columns.
-    Both are pure unbound Columns over the named column — memoized together
-    on the schema instance like the modifier/document forests (building
-    them is py4j-round-trip-bound; invalidated on definition change via
-    ``SimpleSchema._rebuild_caches``, keyed on the active validator
-    functions, held by reference)."""
+    Both are pure unbound Columns over the named column, taken from the
+    compile cache (``compiler/memo.py``)."""
     id_cols = list(id_cols)
-    memo_key = (
-        "json_violations",
-        json_col,
-        tuple(schema.all_validators()),
+    parsed, decoded, forest = compiled(
+        schema, "json_violations", json_col, (), lambda: _json_forest(schema, json_col)
     )
-    memo = schema.__dict__.setdefault("_compiled_memo", {})
-    if memo_key not in memo:
-        reads = DocReads(F.col(json_col), named=True)
-        forest = json_violations_column(schema, F.col(json_col), reads=reads)
-        memo[memo_key] = (reads.parsed, reads.columns, forest)
-    parsed, decoded, forest = memo[memo_key]
     keep = list(dict.fromkeys([*id_cols, json_col]))
     return (
         df.select(*keep, parsed)
         .select(*keep, _PARSED, *decoded)
         .select(*id_cols, F.inline(forest))
     )
+
+
+def _json_forest(schema: SimpleSchema, json_col: str) -> tuple:
+    """The decode projection's columns and the forest over them."""
+    reads = DocReads(F.col(json_col), named=True)
+    forest = json_violations_column(schema, F.col(json_col), reads=reads)
+    return reads.parsed, reads.columns, forest

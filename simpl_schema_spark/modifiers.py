@@ -30,7 +30,9 @@ variant column of a decode projection) under one cleaning projection, plus,
 when autoValues or defaultValues exist, one ``groupBy(doc)`` that runs the
 Arrow UDF once per document and resolves kept and added rows with array
 functions; nothing is persisted.  Its per-value cleaning is the typed
-columns' (``cleaning._Cleaner``) over the JSON-token view.
+columns' (``cleaning._Cleaner``) over the JSON-token view.  Both functions
+take every Column from the compile cache (``compiler/memo.py``); only the
+DataFrame operations run per call.
 
 The value rules of each key are the shared rule table
 (``compiler/rules.py``) over a JSON-token view that carries the row's
@@ -53,6 +55,7 @@ from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from .cleaning import PythonAutoValueContext, _Cleaner, resolve_clean_options
 from .compiler.compile import is_spark_rule, wants_context
+from .compiler.memo import compiled
 from .compiler.rules import (
     TokenView,
     is_ext_date,
@@ -87,11 +90,9 @@ class UnsupportedModifierError(Exception):
     """$pushAll (doValidation.ts:10) and non-$ keys (ts:44-46)."""
 
 
-def _expand_object_set_rows(
-    mods: DataFrame, schema: SimpleSchema, id_col: str
-) -> DataFrame:
-    """Recursively expand object-valued ``$set``/``$setOnInsert`` rows into
-    child rows so descendant keys flow through the normal per-key rules
+def _object_set_expansions(schema: SimpleSchema) -> list[tuple[Column, Column]]:
+    """How object-valued ``$set``/``$setOnInsert`` rows expand into child
+    rows, so descendant keys flow through the normal per-key rules
     (reference doValidation.ts:64-70 → validateField object recursion).
 
     For each declared non-blackbox Object key ``k``, rows
@@ -107,8 +108,9 @@ def _expand_object_set_rows(
     Child JSON is extracted with variant functions (``try_variant_get`` +
     ``to_json``), which preserve JSON token types exactly (strings stay
     quoted, numbers bare) — pure JVM expressions, one projection per declared
-    object key, no shuffle.  Nested declared objects expand transitively
-    (keys processed parents-first).  Returns ``mods`` ∪ expanded rows.
+    object key, no shuffle.  Returns, per key and parents first (so nested
+    declared objects expand transitively), the condition selecting its rows
+    and the generator of their ``(key_path, value)`` children.
     """
     merged = schema.merged_schema()
     blackbox = set(schema.blackbox_keys())
@@ -119,11 +121,8 @@ def _expand_object_set_rows(
         and k not in blackbox
         and is_object_key(schema.resolved_alternatives(k))
     ]
-    if not object_keys:
-        return mods
-
     struct_t = "key_path string, value string"
-    all_rows = mods
+    out = []
     for k in sorted(object_keys, key=lambda s: s.count(".")):
         prefix = f"{k}."
         declared = sorted(
@@ -134,7 +133,7 @@ def _expand_object_set_rows(
         # check but must not kill the job — unparseable tokens simply don't
         # expand into child rows (the parent value keeps its own checks)
         var = F.try_parse_json(v)
-        rows_k = all_rows.where(
+        cond = (
             (generic_key(F.col("key_path")) == k)
             & F.col("op").isin(*OPS_SET)
             & is_json_object(v)
@@ -171,45 +170,18 @@ def _expand_object_set_rows(
             if children
             else F.array().cast(f"array<struct<{struct_t}>>")
         )
-        expanded = (
-            rows_k.select(
-                F.col(id_col),
-                F.col("op"),
-                F.explode(F.concat(declared_arr_col, unknown)).alias("c"),
-                F.col("upsert"),
-            )
-            .select(
-                id_col,
-                "op",
-                F.col("c.key_path").alias("key_path"),
-                F.col("c.value").alias("value"),
-                "upsert",
-            )
-        )
-        all_rows = all_rows.unionByName(expanded.select(*all_rows.columns))
-    return all_rows
+        out.append((cond, F.inline(F.concat(declared_arr_col, unknown))))
+    return out
 
 
 def _modifier_rule_forest(schema: SimpleSchema) -> dict:
-    """Compiled per-row rule forest for a modifier table — PURE unbound
-    Columns over the fixed column names (op, key_path, value, __entries),
-    independent of any input DataFrame.  Memoized on the schema instance:
-    building the forest issues thousands of py4j round trips (~0.9 s at
-    bench scale, cProfile: 4.8k socket round trips), which repeated
-    validate calls over the same schema should not re-pay.  Columns are
-    immutable Catalyst trees, safe to share across queries (the same
-    argument as the compile-time fragment cache in compiler/rules.py).
-    Invalidation: ``SimpleSchema._rebuild_caches`` drops the memo on any
-    definition change, and the key holds every active custom/global
-    validator function (by reference, not by id, so a new function cannot
-    reuse a cached id) so a registry change rebuilds."""
-    memo_key = (
-        "modifier_forest",
-        tuple(schema.all_validators()),
-    )
-    memo = schema.__dict__.setdefault("_compiled_memo", {})
-    if memo_key in memo:
-        return memo[memo_key]
+    """The Columns of ``validate_modifier_table`` — PURE unbound Columns
+    over the fixed column names (op, key_path, value, upsert, __entries),
+    independent of any input DataFrame: the object-``$set`` expansions, the
+    per-row rule forest as a violations generator and the upsert
+    required-key injection.  Building them issues thousands of py4j round
+    trips, so ``validate_modifier_table`` calls this only on a miss of the
+    compile cache (``compiler/memo.py``)."""
     op = F.col("op")
     key_path = F.col("key_path")
     v = F.col("value")
@@ -348,55 +320,17 @@ def _modifier_rule_forest(schema: SimpleSchema) -> dict:
     ).otherwise(null_violation())
 
     per_row = F.coalesce(bad_op, req_cond, key_not_in_schema, checked)
-    memo[memo_key] = {
-        "per_row": per_row,
-        "each_err": each_err,
-        "non_optional": non_optional,
-        "any_ctx": any_ctx,
-    }
-    return memo[memo_key]
-
-
-def validate_modifier_table(
-    mods: DataFrame,
-    schema: SimpleSchema,
-    *,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Violations table ``(id, name, type, value…)`` for a long-format
-    modifier table ``(id, op, key_path, value, upsert)``."""
-    rules = _modifier_rule_forest(schema)
-    mods = _expand_object_set_rows(mods, schema, id_col)
-    if rules["any_ctx"]:
-        # one co-partitioned shuffle attaching the (schema-bounded) entry
-        # list per document; only paid when a cross-field validator exists
-        ents_df = mods.groupBy(id_col).agg(
-            F.collect_list(
-                F.struct(F.col("op"), F.col("key_path").alias("key"), F.col("value"))
-            ).alias("__entries")
-        )
-        mods = mods.join(ents_df, id_col)
-    op = F.col("op")
-    per_row = rules["per_row"]
-    each_err = rules["each_err"]
-    non_optional = rules["non_optional"]
-
     empty_arr = F.array().cast(T.ArrayType(VIOLATION_SCHEMA))
     # the forest feeds the generator directly: exploding a projected
     # `violations` column lets Catalyst push an inferred size(violations) > 0
     # filter below the projection, copying the whole forest into it
-    base = mods.select(
-        F.col(id_col),
-        F.inline(
-            F.array_compact(
-                F.concat(
-                    F.array(per_row),
-                    F.coalesce(
-                        F.when(op.isin(*OPS_PUSH), each_err), empty_arr
-                    ),
-                )
+    violations = F.inline(
+        F.array_compact(
+            F.concat(
+                F.array(per_row),
+                F.coalesce(F.when(op.isin(*OPS_PUSH), each_err), empty_arr),
             )
-        ),
+        )
     )
 
     # ---- upsert required-injection -------------------------------------------
@@ -404,6 +338,7 @@ def validate_modifier_table(
     # non-null, nor ancestor-created ("a.b" with value ⇒ "a" satisfied),
     # fires required (requiredValidator.ts:41-60 + doValidation.ts:64-70)
     required = [k for k in non_optional if "$" not in k]
+    upsert = None
     if required:
         # one aggregate per upsert document: keys explicitly set — even to
         # null — are never INJECTED (an explicit null already fires required
@@ -411,12 +346,10 @@ def validate_modifier_table(
         # ancestor-creating credit needs a real value (a.b.c with a value
         # satisfies a and a.b)
         key = generic_key(F.col("key_path"))
-        docs = mods.where(F.col("upsert") & F.col("op").isin(*OPS_SET)).groupBy(
-            id_col
-        ).agg(
+        aggs = [
             F.collect_set(key).alias("present"),
             F.collect_set(F.when(~is_json_null(F.col("value")), key)).alias("valued"),
-        )
+        ]
 
         def with_ancestors(path: Column) -> Column:
             segs = F.split(path, "\\.")
@@ -429,18 +362,49 @@ def validate_modifier_table(
             F.col("present"), F.flatten(F.transform(F.col("valued"), with_ancestors))
         )
         missing = F.array_except(F.array(*[F.lit(k) for k in required]), satisfied)
-        upsert_viols = docs.select(
-            F.col(id_col), F.explode(missing).alias("name")
-        ).select(
-            F.col(id_col),
-            F.col("name"),
+        rows = [
+            F.explode(missing).alias("name"),
             F.lit(ErrorTypes.REQUIRED).alias("type"),
-            F.lit(None).cast("string").alias("value"),
             *[F.lit(None).cast("string").alias(c) for c in
-              ("dataType", "min", "max", "regExp", "minCount", "maxCount")],
-        )
-        base = base.unionByName(upsert_viols)
+              ("value", "dataType", "min", "max", "regExp", "minCount", "maxCount")],
+        ]
+        upsert = (F.col("upsert") & op.isin(*OPS_SET), aggs, rows)
+    return {
+        "expansions": _object_set_expansions(schema),
+        "any_ctx": any_ctx,
+        "violations": violations,
+        "upsert": upsert,
+    }
 
+
+def validate_modifier_table(
+    mods: DataFrame,
+    schema: SimpleSchema,
+    *,
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """Violations table ``(id, name, type, value…)`` for a long-format
+    modifier table ``(id, op, key_path, value, upsert)``.  Its Columns come
+    from the compile cache (``compiler/memo.py``); the object-``$set``
+    expansion and the upsert ``groupBy`` run per call."""
+    c = compiled(schema, "modifier_forest", None, (), lambda: _modifier_rule_forest(schema))
+    for cond, children in c["expansions"]:
+        expanded = mods.where(cond).select(id_col, "op", children, "upsert")
+        mods = mods.unionByName(expanded.select(*mods.columns))
+    if c["any_ctx"]:
+        # one co-partitioned shuffle attaching the (schema-bounded) entry
+        # list per document; only paid when a cross-field validator exists
+        ents_df = mods.groupBy(id_col).agg(
+            F.collect_list(
+                F.struct(F.col("op"), F.col("key_path").alias("key"), F.col("value"))
+            ).alias("__entries")
+        )
+        mods = mods.join(ents_df, id_col)
+    base = mods.select(F.col(id_col), c["violations"])
+    if c["upsert"] is not None:
+        cond, aggs, rows = c["upsert"]
+        docs = mods.where(cond).groupBy(id_col).agg(*aggs)
+        base = base.unionByName(docs.select(F.col(id_col), *rows))
     return base
 
 
@@ -495,6 +459,9 @@ def clean_modifier_table(
 
     "Empty operator removal" (clean.ts:175-187) is inherent to the long
     format: removing the last row of an operator removes the operator.
+
+    The cleaning Columns come from the compile cache (``compiler/memo.py``);
+    the autoValue ``groupBy`` runs per call.
     """
     opts = resolve_clean_options(
         schema,
@@ -505,9 +472,36 @@ def clean_modifier_table(
         remove_nulls_from_arrays=remove_nulls_from_arrays,
         get_auto_values=get_auto_values,
     )
-    get_auto_values = opts.pop("get_auto_values")
-    remove_nulls = opts["remove_nulls_from_arrays"]
+    keep, reads, value, new_op, auto = compiled(
+        schema, "modifier_clean", None, opts, lambda: _modifier_cleaning(schema, opts)
+    )
+    if keep is not None:
+        mods = mods.where(keep)
+    out = (
+        mods.select("*", F.try_parse_json(F.col("value")).alias(_PARSED))
+        .select("*", *reads)
+        .select(*[value if c == "value" else c for c in mods.columns])
+    )
+    if new_op is not None:
+        out = out.withColumn("op", new_op)
+    if auto is not None:
+        aggs, acts, rows = auto
+        out = (
+            out.groupBy(id_col).agg(*aggs)
+            .select(id_col, "entries", "upsert", acts)
+            .select(id_col, rows)
+            .withColumnRenamed("key", "key_path")
+            .select(*out.columns)
+        )
+    return out
 
+
+def _modifier_cleaning(schema: SimpleSchema, opts: dict[str, bool]) -> tuple:
+    """The unbound Columns of ``clean_modifier_table``: the row filter (or
+    None), the decode reads under the cleaning projection, the cleaned
+    ``value``, the rewritten ``op`` (or None) and the autoValue step (or
+    None)."""
+    remove_nulls = opts["remove_nulls_from_arrays"]
     merged = schema.merged_schema()
     op = F.col("op")
     key_path = F.col("key_path")
@@ -524,12 +518,13 @@ def clean_modifier_table(
     ignore_value_ops = op.isin("$unset", "$rename", "$currentDate", "$slice")
 
     # ---- filter unknown keys (keep $unset/$rename) --------------------------
+    keep = None
     if opts["filter"]:
         allowed = generic.isin(*merged) if merged else F.lit(False)
         for bb in schema.blackbox_keys():
             allowed = allowed | generic.startswith(bb + ".")
         # item paths (tags.0) and $each forms target the array key itself
-        mods = mods.where(allowed | op.isin("$unset", "$rename"))
+        keep = allowed | op.isin("$unset", "$rename")
 
     # ---- per-key value cleaning: the shared pipeline over the row's token,
     # parsed once into a variant column below this projection.  Object
@@ -573,31 +568,21 @@ def clean_modifier_table(
     value = F.when(ignore_value_ops, v).otherwise(
         F.coalesce(cleaned, F.when(v.isNotNull(), F.lit('""')))
     ).alias("value")
-    out = (
-        mods.select("*", F.try_parse_json(v).alias(_PARSED))
-        .select("*", *reads)
-        .select(*[value if c == "value" else c for c in mods.columns])
-    )
 
+    new_op = None
     if opts["remove_empty_strings"]:
         is_empty_str = F.regexp_replace(F.col("value"), "\\s", "") == F.lit('""')
         # $set '' → $unset (clean.ts:126-142); the reference applies
         # removeEmptyStrings only inside docs and $set, so empty strings
         # under every other operator are kept as-is
-        out = out.withColumn(
-            "op",
-            F.when((F.col("op") == "$set") & is_empty_str, F.lit("$unset")).otherwise(
-                F.col("op")
-            ),
-        )
+        new_op = F.when((op == "$set") & is_empty_str, F.lit("$unset")).otherwise(op)
 
-    if get_auto_values:
-        # defaultValue keys now run inside _apply_modifier_auto_values
-        # through the same position machinery as opaque autoValue fns —
-        # upsert $setOnInsert, injection into $set objects / pushed items,
-        # and parent-creating dotted paths (defaultValue.tests.ts:229-514)
-        out = _apply_modifier_auto_values(out, schema, id_col)
-    return out
+    # defaultValue keys run inside _modifier_auto_values through the same
+    # position machinery as opaque autoValue fns — upsert $setOnInsert,
+    # injection into $set objects / pushed items, and parent-creating
+    # dotted paths (defaultValue.tests.ts:229-514)
+    auto = _modifier_auto_values(schema) if opts["get_auto_values"] else None
+    return keep, reads, value, new_op, auto
 
 
 class _ModifierAutoValueContext:
@@ -678,10 +663,11 @@ class _Remove:
     field / null the element / drop the entry."""
 
 
-def _apply_modifier_auto_values(
-    out: DataFrame, schema: SimpleSchema, id_col: str
-) -> DataFrame:
-    """Run opaque Python autoValue fns against a modifier table, including
+def _modifier_auto_values(schema: SimpleSchema) -> "tuple | None":
+    """How ``clean_modifier_table`` runs autoValue and defaultValue keys
+    (None when the schema has none).
+
+    Opaque Python autoValue fns run against a modifier table, including
     PSEUDO-MODIFIER returns (reference AutoValueRunner.ts:112-142): a fn may
     return ``{"$inc": 1}`` / ``{"$push": ...}`` and the returned operator
     replaces the key's current entry; a plain return sets the value under
@@ -702,10 +688,12 @@ def _apply_modifier_auto_values(
     fns need a Column context and are document-mode only).
 
     Shape: ONE groupBy(doc) collecting the (bounded, schema-sized) operator
-    entries + ONE Arrow-batched UDF evaluating every autoValue fn per doc;
-    in the projection above it the doc's entries whose key the UDF dropped
-    are filtered out, the rows it added are appended, and the result is
-    exploded — no join, no persist, ``out`` evaluated once."""
+    entries (the returned aggregates) + ONE Arrow-batched UDF evaluating
+    every autoValue fn per doc (the returned ``acts`` column); in the
+    projection above it (the returned generator) the doc's entries whose
+    key the UDF dropped are filtered out, the rows it added are appended,
+    and the result is exploded — no join, no persist, the table evaluated
+    once."""
     av_fns = [
         ("fn", k, fn, ".$" in k)
         for k, fn in schema.auto_value_functions()
@@ -723,7 +711,7 @@ def _apply_modifier_auto_values(
         if getattr(fn, "is_default", False)
     ]
     if not av_fns:
-        return out
+        return None
     av_fns.sort(key=lambda kv: kv[1].count("."))
     unchanged = PythonAutoValueContext.UNCHANGED
 
@@ -738,6 +726,14 @@ def _apply_modifier_auto_values(
         )
     )
 
+    def entry(res, op0):
+        """(op, JSON) of an autoValue result: a pseudo-modifier return
+        ({"$inc": 1}) names its op, a plain one keeps ``op0``.  Datetimes
+        take the extended-JSON path: the reference's createdAt pattern
+        returns {"$setOnInsert": new Date()} (AutoValueRunner.ts:112-142)."""
+        ops = [p for p in res if str(p).startswith("$")] if isinstance(res, dict) else []
+        return (ops[0], _encode_json_value(res[ops[0]])) if ops else (op0, _encode_json_value(res))
+
     def run_scalar(k, fn, ents, upsert):
         op0, tok = ents.get(k, (None, None))
         is_set = op0 in _VALUE_OPS
@@ -747,18 +743,7 @@ def _apply_modifier_auto_values(
         )
         res = fn(ctx)
         if res is not unchanged:
-            if isinstance(res, dict) and any(
-                str(p).startswith("$") for p in res
-            ):
-                new_op = next(p for p in res if str(p).startswith("$"))
-                # _default_as_json, not json.dumps: the reference's
-                # canonical createdAt pattern returns
-                # {"$setOnInsert": new Date()} (AutoValueRunner.ts:112-142)
-                # and datetimes must take the extended-JSON path
-                ents[k] = (new_op, _default_as_json(res[new_op]))
-            else:
-                new_op = op0 if op0 in _VALUE_OPS else "$set"
-                ents[k] = (new_op, _default_as_json(res))
+            ents[k] = entry(res, op0 if op0 in _VALUE_OPS else "$set")
         elif ctx._unset:
             ents.pop(k, None)
 
@@ -820,10 +805,7 @@ def _apply_modifier_auto_values(
             kseg = k.split(".")
             if len(kseg) > len(segs):
                 continue
-            if not all(
-                gs == ks or (gs == "$" and (ks == "$" or ks.isdigit()))
-                for gs, ks in zip(segs, kseg)
-            ):
+            if not all(map(_seg_match, segs, kseg)):
                 continue
             matched = True
             remaining = segs[len(kseg):]
@@ -878,13 +860,7 @@ def _apply_modifier_auto_values(
             # (AutoValueRunner.ts:137-146); upserts skip it.
             res = run_fn(None, "$set", False)
             if res is not _Skip and res is not _Remove:
-                if isinstance(res, dict) and any(
-                    str(p).startswith("$") for p in res
-                ):
-                    new_op = next(p for p in res if str(p).startswith("$"))
-                    ents[g] = (new_op, _default_as_json(res[new_op]))
-                else:
-                    ents[g] = ("$set", _default_as_json(res))
+                ents[g] = entry(res, "$set")
 
     def _seg_match(gs, ks):
         return gs == ks or (gs == "$" and (ks == "$" or ks.isdigit()))
@@ -985,7 +961,7 @@ def _apply_modifier_auto_values(
         if len(segs) == 1:
             # top-level would-be $set[g]: parent (root) unset → upsert only
             if upsert:
-                ents[g] = ("$setOnInsert", _default_as_json(dv))
+                ents[g] = ("$setOnInsert", _encode_json_value(dv))
             return
         if segs[-2] == "$":
             return  # parentPath ends '.$' → no creating-position synthesis
@@ -1000,7 +976,7 @@ def _apply_modifier_auto_values(
                 # {$setOnInsert: default} on upsert, dotted path notation
                 concrete = ".".join(ks[: len(parent_segs)] + [leaf])
                 if upsert and concrete not in ents:
-                    ents[concrete] = ("$setOnInsert", _default_as_json(dv))
+                    ents[concrete] = ("$setOnInsert", _encode_json_value(dv))
                 return
 
     def run(entries, upsert):
@@ -1036,7 +1012,7 @@ def _apply_modifier_auto_values(
     # each entry carries its row's own upsert flag, so kept rows come back
     # unchanged; the document's flag (any row upsert) goes to the UDF and to
     # the rows it adds
-    docs = out.groupBy(id_col).agg(
+    aggs = [
         F.collect_list(
             F.struct(
                 F.col("op"),
@@ -1046,12 +1022,10 @@ def _apply_modifier_auto_values(
             )
         ).alias("entries"),
         F.max(F.col("upsert").cast("int")).cast("boolean").alias("upsert"),
-    )
+    ]
     # the UDF result is a column of its own: HOF lambdas below may not
     # reference a Python UDF
-    acts = docs.select(
-        id_col, "entries", "upsert", udf(F.col("entries"), F.col("upsert")).alias("acts")
-    )
+    acts = udf(F.col("entries"), F.col("upsert")).alias("acts")
     dropped = F.transform(
         F.filter(F.col("acts"), lambda a: a["drop"]), lambda a: a["key"]
     )
@@ -1069,18 +1043,7 @@ def _apply_modifier_auto_values(
             F.col("upsert").alias("upsert"),
         ),
     )
-    return (
-        acts.select(id_col, F.inline(F.concat(kept, added)))
-        .withColumnRenamed("key", "key_path")
-        .select(*out.columns)
-    )
-
-
-def _default_as_json(value: Any) -> str:
-    """Encode a driver-side defaultValue as the table's JSON value form —
-    same encoder as :func:`_encode_json_value` (one extended-JSON policy
-    for both the $setOnInsert-default and positional-rebuild families)."""
-    return _encode_json_value(value)
+    return aggs, acts, F.inline(F.concat(kept, added))
 
 
 def _encode_json_value(value: Any) -> str:

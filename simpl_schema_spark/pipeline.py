@@ -18,11 +18,12 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from .cleaning import clean_with_info
-from .compiler.compile import RuleCompiler
+from .compiler.compile import compile_violations
+from .compiler.memo import compiled
 from .compiler.rules import stringify, token_name, violation
-from .errors import ErrorTypes, VIOLATION_SCHEMA
+from .errors import ErrorTypes
 from .schema.schema import SimpleSchema
-from .validation import _apply_pandas_rules
+from .validation import _attach_violations
 
 __all__ = ["clean_and_validate"]
 
@@ -38,51 +39,46 @@ def clean_and_validate(
     **clean_opts: Any,
 ) -> DataFrame:
     """Clean ``df`` per the schema, validate the cleaned result, and return
-    cleaned columns + a ``violations`` column. Single pass, no shuffle."""
+    cleaned columns + a ``violations`` column (doc validators included, run
+    on the cleaned document). Single pass, no shuffle.
+
+    The cleaning projection and the patched forest both come from the
+    compile cache (``compiler/memo.py``)."""
     cleaned, cleaner = clean_with_info(
         df, schema, keep_originals_of_converted=True, **clean_opts
     )
-    orig_names = {k: f"__orig_{k}" for k in cleaner.converted}
+    converted = tuple((k, t.simpleString()) for k, t in cleaner.converted.items())
+    origs = [f"__orig_{k}" for k in cleaner.converted]
 
-    rule_schema = T.StructType(
-        [f for f in cleaned.schema.fields if f.name not in set(orig_names.values())]
-    )
-    compiler = RuleCompiler(
-        schema,
-        rule_schema,
-        keys=keys,
-        ignore=ignore,
-        extra_key_policy=extra_key_policy,
-    )
-    viols = compiler.violations_column()
-
-    work = cleaned
-    if compiler.pandas_rules:
-        work = _apply_pandas_rules(work, compiler.pandas_rules)
-
-    for key, orig_dtype in cleaner.converted.items():
-        orig = F.col(orig_names[key])
-        alts = schema.resolved_alternatives(key)
-        data_type = token_name(alts[-1].get("type")) if alts else "String"
-        conv_failed = orig.isNotNull() & F.col(key).isNull()
-        def _not_this_key(v: Column, k: str = key) -> Column:
-            return v.getField("name") != F.lit(k)
-
-        patched = F.concat(
-            F.filter(viols, lambda v: _not_this_key(v)),
-            F.array(
-                violation(
-                    F.lit(key),
-                    ErrorTypes.EXPECTED_TYPE,
-                    value=stringify(orig, orig_dtype),
-                    dataType=data_type,
-                )
-            ),
+    def build() -> tuple[Column, list]:
+        rule_schema = T.StructType([f for f in cleaned.schema.fields if f.name not in origs])
+        viols, pandas_rules = compile_violations(
+            schema, rule_schema, keys=keys, ignore=ignore, extra_key_policy=extra_key_policy
         )
-        viols = F.when(conv_failed, patched).otherwise(viols)
+        for key, orig_dtype in cleaner.converted.items():
+            orig = F.col(f"__orig_{key}")
+            alts = schema.resolved_alternatives(key)
+            data_type = token_name(alts[-1].get("type")) if alts else "String"
+            conv_failed = orig.isNotNull() & F.col(key).isNull()
+            # F.filter calls the lambda at once, so it reads this key
+            patched = F.concat(
+                F.filter(viols, lambda v: v.getField("name") != F.lit(key)),
+                F.array(
+                    violation(
+                        F.lit(key),
+                        ErrorTypes.EXPECTED_TYPE,
+                        value=stringify(orig, orig_dtype),
+                        dataType=data_type,
+                    )
+                ),
+            )
+            viols = F.when(conv_failed, patched).otherwise(viols)
+        return viols, pandas_rules
 
-    out = work.withColumn(violations_col, viols)
-    drop = list(orig_names.values()) + [r.column_name for r in compiler.pandas_rules]
-    if drop:
-        out = out.drop(*drop)
-    return out
+    col, pandas_rules = compiled(
+        schema, "clean_and_validate", cleaned.schema.simpleString(),
+        (keys, ignore, extra_key_policy, converted), build,
+    )
+    return _attach_violations(
+        cleaned, schema, col, pandas_rules, violations_col, drop=origs
+    )

@@ -162,15 +162,7 @@ class SimpleSchema:
         self._rebuild_caches()
 
     def _rebuild_caches(self) -> None:
-        # compiled Column forests memoized on this instance (e.g. the
-        # modifier-rule forest) are schema-content-derived — drop them
-        # whenever the definition changes
-        self.__dict__.pop("_compiled_memo", None)
         self._schema_keys = list(self._schema.keys())
-        self._first_level_keys = sorted(
-            {k.split(".")[0] for k in self._schema_keys},
-            key=lambda k: [sk.split(".")[0] for sk in self._schema_keys].index(k),
-        )
         self._blackbox_keys: set[str] = set()
         for key, definition in self._schema.items():
             for alt in definition["type"].definitions:

@@ -18,13 +18,15 @@ Outputs:
 from __future__ import annotations
 
 from functools import partial
+from itertools import repeat
 from typing import Any, Callable, Iterable, Optional
 
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
-from .compiler.compile import RuleCompiler
+from .compiler.compile import compile_violations
+from .compiler.memo import compiled
 from .compiler.rules import generic_key
 from .compiler.validators import (
     FieldContext,
@@ -104,44 +106,23 @@ def _apply_pandas_rules(df: DataFrame, rules) -> DataFrame:
                 )
             return out
 
-        def _apply_plain(arrays: pd.Series) -> pd.Series:
-            return pd.Series([run_arr(a, {}, 0) for a in arrays], dtype=object)
-
-        jsonified = list(jsonified)
-
-        def _apply_ctx(arrays: pd.Series, ctx_rows: pd.DataFrame) -> pd.Series:
-            rows = ctx_rows.to_dict("records")
-            return pd.Series(
-                [run_arr(a, decode_ctx_row(r, jsonified), 0)
-                 for a, r in zip(arrays, rows)],
-                dtype=object,
+        def _apply(*cols: pd.Series) -> pd.Series:
+            # ([dummy flags,] arrays[, context rows])
+            dummies = cols[0] if guarded else repeat(False)
+            rows = (
+                (decode_ctx_row(r, jsonified) for r in cols[-1].to_dict("records"))
+                if wants_ctx else repeat({})
             )
-
-        def _apply_plain_g(dummies: pd.Series, arrays: pd.Series) -> pd.Series:
             return pd.Series(
-                [None if d else run_arr(a, {}, 0)
-                 for d, a in zip(dummies, arrays)],
-                dtype=object,
-            )
-
-        def _apply_ctx_g(
-            dummies: pd.Series, arrays: pd.Series, ctx_rows: pd.DataFrame
-        ) -> pd.Series:
-            rows = ctx_rows.to_dict("records")
-            return pd.Series(
-                [None if d else run_arr(a, decode_ctx_row(r, jsonified), 0)
-                 for d, a, r in zip(dummies, arrays, rows)],
+                [None if d else run_arr(a, row, 0)
+                 for d, a, row in zip(dummies, cols[int(guarded)], rows)],
                 dtype=object,
             )
 
         out_t = T.ArrayType(T.StringType())
         for _ in between:
             out_t = T.ArrayType(out_t)
-        if guarded:
-            return F.pandas_udf(_apply_ctx_g if wants_ctx else _apply_plain_g, out_t)
-        if wants_ctx:
-            return F.pandas_udf(_apply_ctx, out_t)
-        return F.pandas_udf(_apply_plain, out_t)
+        return F.pandas_udf(_apply, out_t)
 
     for rule in rules:
         if rule.elementwise:
@@ -206,47 +187,43 @@ def with_violations(
     """Return ``df`` plus an ``array<violation>`` column — the single-pass
     rule forest. No shuffle; fuses with the scan.
 
-    The compiled forest is MEMOIZED on the schema instance: it is pure
-    unbound Columns over the input's field names, so it depends only on
-    (schema content, input StructType, keys/ignore/policy, the active
-    validator functions) — none of which involve the data.  The key holds
-    the validator functions themselves, not their ids: an entry keeps its
-    functions alive, so a new function can never reuse a cached id.
-    Building it issues thousands of py4j round trips per call otherwise
-    (the same finding as modifiers._modifier_rule_forest).  Invalidation:
-    ``SimpleSchema._rebuild_caches`` drops the memo on definition change;
-    registry changes alter the key."""
-    memo_key = (
-        "violations_forest",
-        df.schema.simpleString(),
-        tuple(keys) if keys is not None else None,
-        tuple(ignore) if ignore is not None else None,
-        extra_key_policy,
-        tuple(schema.all_validators()),
+    The forest comes from the compile cache (``compiler/memo.py``), keyed
+    on the schema's content, the input StructType and keys/ignore/policy."""
+    col, pandas_rules = compiled(
+        schema, "violations", df.schema.simpleString(), (keys, ignore, extra_key_policy),
+        lambda: compile_violations(
+            schema, df.schema, keys=keys, ignore=ignore, extra_key_policy=extra_key_policy
+        ),
     )
-    memo = schema.__dict__.setdefault("_compiled_memo", {})
-    if memo_key not in memo:
-        compiler = RuleCompiler(
-            schema,
-            df.schema,
-            keys=keys,
-            ignore=ignore,
-            extra_key_policy=extra_key_policy,
-        )
-        memo[memo_key] = (compiler.violations_column(), compiler.pandas_rules)
-    col, pandas_rules = memo[memo_key]
+    return _attach_violations(df, schema, col, pandas_rules, violations_col)
+
+
+def _attach_violations(
+    df: DataFrame,
+    schema: SimpleSchema,
+    col: Column,
+    pandas_rules: list,
+    violations_col: str,
+    drop: Iterable[str] = (),
+) -> DataFrame:
+    """``df`` plus the violations column: the Python-validator columns the
+    forest reads are added and dropped again, as are the ``drop`` helper
+    columns, and the doc validators' violations follow the field ones."""
+    drop = list(drop)
+    data_cols = [c for c in df.columns if c not in drop]
     if pandas_rules:
         df = _apply_pandas_rules(df, pandas_rules)
+        drop += [r.column_name for r in pandas_rules]
     out = df.withColumn(violations_col, col)
-    if pandas_rules:
-        out = out.drop(*[r.column_name for r in pandas_rules])
+    if drop:
+        out = out.drop(*drop)
 
     # V10 doc validators: whole-document functions returning violation lists
     # (reference validateDocument.ts:18-58) — one Arrow-batched pandas UDF
     # over a struct of all columns, results concatenated after field errors
     doc_validators = schema.all_doc_validators()
     if doc_validators:
-        out = _apply_doc_validators(out, df.columns, doc_validators, violations_col)
+        out = _apply_doc_validators(out, data_cols, doc_validators, violations_col)
     return out
 
 

@@ -297,3 +297,18 @@ class TestCleanAndValidate:
         df = spark.createDataFrame([{"n": None}], "n string")
         vs = clean_and_validate(df, ss).collect()[0].violations
         assert [(v["name"], v["type"]) for v in vs] == [("n", "required")]
+
+    def test_doc_validators_run_on_the_cleaned_document(self, spark):
+        # validator({clean: true}) runs doc validators after the field
+        # rules, on the cleaned document
+        def same(doc):
+            if doc.get("a") != doc.get("b"):
+                return [{"name": "b", "type": "mismatch"}]
+            return []
+
+        ss = SimpleSchema({"a": str, "b": str})
+        ss.add_doc_validator(same)
+        df = spark.createDataFrame([(1, " x ", "x"), (2, "x", "y")], "i int, a string, b string")
+        out = clean_and_validate(df, ss, extra_key_policy="ignore", filter=False)
+        got = {r.i: [(v.name, v.type) for v in r.violations] for r in out.collect()}
+        assert got == {1: [], 2: [("b", "mismatch")]}
