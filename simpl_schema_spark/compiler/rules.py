@@ -9,8 +9,10 @@ through a view:
 - :class:`ColumnView` — a typed value (Column + Spark dtype).  Type
   conformance is decided at compile time from the dtype; NaN and ±Infinity
   exist only here.
-- :class:`TokenView` — a JSON token (string Column).  Type conformance is
-  decided per row.  The modifier-only differences are explicit: under
+- :class:`TokenView` — a JSON value, read from its parsed VARIANT.  Type
+  conformance is decided per row from one kind code, and the typed reads
+  are gated by it; the value's text, where a caller has it, feeds only
+  payloads.  The modifier-only differences are explicit: under
   ``$inc`` the number bounds are skipped (checkNumberValue.ts:20,36), and
   ``$currentDate`` substitutes ``now`` for the date
   (typeValidator/index.ts:40-44,57-59).
@@ -228,7 +230,7 @@ def stringify(value: Column, dtype: T.DataType) -> Column:
     return value.cast("string")
 
 
-# --------------------------------------------------------------- JSON tokens
+# ------------------------------------------------------------- modifier keys
 
 
 def generic_key(key_path: Column) -> Column:
@@ -236,43 +238,12 @@ def generic_key(key_path: Column) -> Column:
     return F.regexp_replace(key_path, r"(?<=^|\.)\d+(?=\.|$)", "\\$")
 
 
-def is_json_string(v: Column) -> Column:
-    return v.rlike('^\\s*"')
-
-
-def is_json_null(v: Column) -> Column:
-    return v.rlike("^\\s*null\\s*$")
-
-
-def is_json_bool(v: Column) -> Column:
-    return v.rlike("^\\s*(true|false)\\s*$")
-
-
-def is_json_number(v: Column) -> Column:
-    return v.rlike(r"^\s*-?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?\s*$")
-
-
-def is_json_array(v: Column) -> Column:
-    return v.rlike(r"^\s*\[")
-
-
-def is_json_object(v: Column) -> Column:
-    return v.rlike(r"^\s*\{")
-
-
-def is_ext_date(v: Column) -> Column:
-    return v.rlike(r'^\s*\{\s*"\$date"')
-
-
-def _json_scalar(v: Column, ddl: str) -> Column:
-    return F.from_json(F.concat(F.lit('{"v":'), v, F.lit("}")), f"v {ddl}").getField("v")
-
-
-
 # ---------------------------------------------------------- cleaning cases
 
 #: the kinds of value cleaning converts between (ARRAY: a wrapped scalar)
 STRING, NUMBER, BOOLEAN, DATE, ARRAY = "string", "number", "boolean", "date", "array"
+#: the other kinds of a JSON value (a value that does not parse has none)
+OBJECT, NULL = "object", "null"
 
 
 class Case(NamedTuple):
@@ -289,6 +260,18 @@ class Case(NamedTuple):
 #: the kind of value each scalar type holds, and the Spark type it is read as
 KIND_OF = {String: STRING, Number: NUMBER, Integer: NUMBER, Boolean: BOOLEAN, DateType: DATE}
 DTYPE_OF = {STRING: T.StringType(), NUMBER: T.DoubleType(), BOOLEAN: T.BooleanType(), DATE: T.TimestampType()}
+#: the kind a JSON value must have to conform to each type (dates apart)
+TOKEN_KIND_OF = {**KIND_OF, ArrayType: ARRAY, ObjectType: OBJECT}
+#: ``schema_of_variant``'s type name, up to ``<`` or ``(``, → kind
+_VARIANT_KINDS = {
+    "STRING": STRING, "BIGINT": NUMBER, "DECIMAL": NUMBER, "DOUBLE": NUMBER,
+    "BOOLEAN": BOOLEAN, "ARRAY": ARRAY, "OBJECT": OBJECT, "VOID": NULL,
+}
+
+
+@lru_cache(maxsize=None)
+def _variant_kinds() -> Column:
+    return F.create_map(*[F.lit(x) for kv in _VARIANT_KINDS.items() for x in kv])
 
 
 def case_when(pairs: list[tuple[Column, Column]], default: Column) -> Column:
@@ -388,104 +371,120 @@ class ColumnView:
 
 
 class TokenView:
-    """A JSON token; ``op`` is the modifier-operator Column in modifier mode.
+    """A JSON value, read from its parsed VARIANT ``var`` (NULL when the
+    value is absent or does not parse); ``op`` is the modifier-operator
+    Column in modifier mode.
 
-    ``var`` is the token parsed to a VARIANT: given, every read extracts
-    from it, so a token parsed once is never re-parsed (JSON text reads
-    otherwise).  Its kind is decided per row, so cleaning decisions become
-    CASE branches over the JSON kinds."""
+    Every kind test reads one kind code (:attr:`kind`), and every typed read
+    is a ``try_variant_get`` gated by it, since ``try_variant_get`` casts
+    across kinds (``"12"`` reads as 12.0).  ``text`` is the value as written,
+    where the caller has it; it feeds only payloads (:attr:`display`,
+    Python-validator inputs) and values cleaning leaves as they are.  The
+    kind is decided per row, so cleaning decisions become CASE branches over
+    the kinds."""
 
     fractional = True
     special_floats = False
     dtype = T.StringType()
 
-    def __init__(self, token: Column, op: Optional[Column] = None,
-                 var: Optional[Column] = None, *, rebuilds_objects: bool = True) -> None:
-        self.token = self.json = self.value = token
-        self.op = op
+    def __init__(self, var: Column, op: Optional[Column] = None, text: Optional[Column] = None,
+                 *, rebuilds_objects: bool = True) -> None:
         self.var = var
+        self.op = op
+        self.text = text
         self.rebuilds_objects = rebuilds_objects
 
-    @classmethod
-    def of_variant(cls, var: Column, op: Optional[Column] = None, **kw: bool) -> "TokenView":
-        return cls(F.to_json(var), op, var, **kw)
-
-    def named_reads(self, prefix: str) -> list[Column]:
-        """Move the scalar reads into columns named ``<prefix><read>`` of a
-        projection under the one that uses this view; returns them."""
-        cols = []
-        for read in ("as_str", "as_num", "as_bool", "as_date"):
-            cols.append(getattr(self, read).alias(prefix + read))
-            self.__dict__[read] = F.col(prefix + read)
-        return cols
+    def named_reads(self, prefix: str) -> list[list[Column]]:
+        """Move the kind code, then the scalar reads gated by it, into
+        columns named ``<prefix><read>`` of two projections under the one
+        that uses this view; returns the two projections' columns.  Dates
+        stay inline: only date keys read them."""
+        levels = []
+        for reads in (("kind",), ("as_str", "as_num", "as_bool")):
+            levels.append([getattr(self, read).alias(prefix + read) for read in reads])
+            for read in reads:
+                self.__dict__[read] = F.col(prefix + read)
+        return levels
 
     def _get(self, ddl: str, path: str = "$") -> Column:
         return F.try_variant_get(self.var, path, ddl)
 
-    def _read(self, ddl: str) -> Column:
-        return _json_scalar(self.token, ddl) if self.var is None else self._get(ddl)
+    def has(self, member: str) -> Column:
+        """Is the value an object with this member?"""
+        return self._get("variant", f"$['{member}']").isNotNull()
+
+    @cached_property
+    def kind(self) -> Column:
+        """One of the kind names above; an object with a ``$date`` member
+        is a date (extended JSON), and a value that does not parse has no
+        kind (NULL)."""
+        name = F.substring_index(F.substring_index(F.schema_of_variant(self.var), "<", 1), "(", 1)
+        return F.when(self.has("$date"), F.lit(DATE)).otherwise(F.try_element_at(_variant_kinds(), name))
+
+    def is_kind(self, kind: str) -> Column:
+        return self.kind.eqNullSafe(F.lit(kind))
+
+    def _read(self, kind: str, ddl: str) -> Column:
+        return F.when(self.kind == F.lit(kind), self._get(ddl))
+
+    @cached_property
+    def json(self) -> Column:
+        """The value's JSON text: as written where the caller has it."""
+        return F.to_json(self.var) if self.text is None else self.text
+
+    value = property(lambda self: self.json)
 
     @cached_property
     def as_str(self) -> Column:
-        return self._read("string")
+        return self._read(STRING, "string")
 
     @cached_property
     def as_num(self) -> Column:
-        return self._read("double")
+        return self._read(NUMBER, "double")
 
     @cached_property
     def as_bool(self) -> Column:
-        return self._read("boolean")
+        return self._read(BOOLEAN, "boolean")
 
     @cached_property
     def as_date(self) -> Column:
-        if self.var is None:
-            iso = F.from_json(self.token, "`$date` string").getField("$date")
-        else:
-            iso = self._get("string", "$['$date']")
-        parsed = parse_date_string(iso)
+        parsed = parse_date_string(self._get("string", "$['$date']"))
         if self.op is None:
             return parsed
-        # $currentDate accepts true or {"$type":"date"}; the value checked
+        # $currentDate accepts true or {"$type": "date"}; the value checked
         # against min/max is `now`
         current = (self.op == "$currentDate") & (
-            self.token.rlike("^\\s*true\\s*$")
-            | (F.regexp_replace(self.token, "\\s", "") == F.lit('{"$type":"date"}'))
+            self.as_bool | (self._get("string", "$['$type']") == F.lit("date"))
         )
         return F.when(current, F.current_timestamp()).otherwise(parsed)
 
     @cached_property
+    def is_null(self) -> Column:
+        return self.is_kind(NULL)
+
+    @cached_property
     def count(self) -> Column:
-        return F.json_array_length(self.token)
+        return F.size(self.elements("$"))
 
     @cached_property
     def display(self) -> Column:
-        """Offending-value payload: unquote JSON strings, else raw JSON."""
-        return F.when(is_json_string(self.token), self.as_str).otherwise(F.trim(self.token))
+        """Offending-value payload: JSON strings unquoted, else the JSON
+        text trimmed."""
+        return F.when(self.kind == F.lit(STRING), self.as_str).otherwise(F.trim(self.json))
 
     @cached_property
     def bounds_gate(self) -> Optional[Column]:
         return None if self.op is None else self.op != "$inc"
 
     def mismatch(self, token: TypeToken) -> Union[Column, bool]:
-        v = self.token
-        if token is String:
-            return ~is_json_string(v)
-        if token in (Number, Integer):
-            return ~is_json_number(v)
-        if token is Boolean:
-            return ~is_json_bool(v)
         if token is DateType:
             return self.as_date.isNull()
-        if token is ArrayType:
-            return ~is_json_array(v)
-        if token is ObjectType:
-            return ~is_json_object(v) | is_ext_date(v)
-        return True  # Binary has no JSON form
+        kind = TOKEN_KIND_OF.get(token)
+        return True if kind is None else ~self.is_kind(kind)  # Binary has no JSON form
 
     def typed(self, alts: list[dict]) -> Column:
         """The token as handed to ``@spark_rule`` validators: typed when
-        every alternative has one scalar type, else a VARIANT (malformed
+        every alternative has one scalar type, else the VARIANT (malformed
         tokens → NULL) that the rule reads with ``try_variant_get``."""
         kinds = {a.get("type") for a in alts}
         if kinds == {String}:
@@ -496,13 +495,11 @@ class TokenView:
             return self.as_bool
         if kinds == {DateType}:
             return self.as_date
-        return F.try_parse_json(self.token)
+        return self.var
 
     # ---- cleaning: built once per view, shared by every key it is cleaned for
-    is_array = cached_property(lambda self: is_json_array(self.token))
-    is_object = cached_property(
-        lambda self: is_json_object(self.token) & ~is_ext_date(self.token) & self.var.isNotNull()
-    )
+    is_array = cached_property(lambda self: self.is_kind(ARRAY))
+    is_object = cached_property(lambda self: self.is_kind(OBJECT))
 
     def conforms(self, token: TypeToken) -> Union[Column, bool]:
         """isValueTypeValid: an Integer takes only integral numbers."""
@@ -515,13 +512,8 @@ class TokenView:
 
     @cached_property
     def scalars(self) -> list[Case]:
-        t = self.token
-        return [
-            Case(is_json_string(t), STRING, self.as_str, DTYPE_OF[STRING]),
-            Case(is_json_number(t), NUMBER, self.as_num, DTYPE_OF[NUMBER]),
-            Case(is_json_bool(t), BOOLEAN, self.as_bool, DTYPE_OF[BOOLEAN]),
-            Case(is_ext_date(t), DATE, self.as_date, DTYPE_OF[DATE]),
-        ]
+        reads = {STRING: self.as_str, NUMBER: self.as_num, BOOLEAN: self.as_bool, DATE: self.as_date}
+        return [Case(self.is_kind(k), k, col, DTYPE_OF[k]) for k, col in reads.items()]
 
     def converted(self, case: Case, new: Case, conforms: Any) -> list[Case]:
         """A failed conversion leaves the token as it was."""
@@ -531,21 +523,21 @@ class TokenView:
         return [new._replace(cond=cond), case]
 
     def wrap(self, *_: Any) -> Column:
-        return F.concat(F.lit("["), self.token, F.lit("]"))
+        return F.concat(F.lit("["), self.json, F.lit("]"))
 
     def emit(self, cases: list[Case]) -> Column:
-        return case_when([(c.cond, _ENCODE[c.kind](c)) for c in cases if c.changed], self.token)
+        return case_when([(c.cond, _ENCODE[c.kind](c)) for c in cases if c.changed], self.json)
 
     def field_names(self, declared: list[str]) -> list[str]:
         return declared  # literal variant paths: undeclared names are dropped
 
     def field(self, name: str) -> "TokenView":
-        return TokenView.of_variant(self._get("variant", f"$['{name}']"))
+        return TokenView(self._get("variant", f"$['{name}']"))
 
     def rebuild_object(self, children: list) -> Column:
         """Children absent or removed (NULL) are left out."""
         if not children:
-            return self.token
+            return self.json
         frags = F.array(*[F.concat(F.lit(f'"{n}": '), c) for n, c in children])
         return F.concat(F.lit("{"), F.concat_ws(", ", F.array_compact(frags)), F.lit("}"))
 
@@ -555,14 +547,12 @@ class TokenView:
         elems = self.elements("$")
         out = F.transform(
             elems,
-            lambda e: F.coalesce(
-                clean(TokenView.of_variant(e, rebuilds_objects=False)), F.lit('""')
-            ),
+            lambda e: F.coalesce(clean(TokenView(e, rebuilds_objects=False)), F.lit('""')),
         )
         if remove_nulls:
             out = F.filter(out, lambda e: e != F.lit("null"))
         rebuilt = F.concat(F.lit("["), F.concat_ws(", ", out), F.lit("]"))
-        return F.when(elems.isNotNull(), rebuilt).otherwise(self.token)
+        return F.when(elems.isNotNull(), rebuilt).otherwise(self.json)
 
     def elements(self, path: str) -> Column:
         """The array at ``path`` as variant elements (NULL if not an array)."""

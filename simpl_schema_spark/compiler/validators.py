@@ -231,7 +231,7 @@ def token_custom_rules(
         else:
             ctx = context if wants_context(fn) else None
             udf = value_udf(fn, key, token_value, ctx[1] if ctx else None)
-            args = [view.token, F.lit(True) if mask is None else mask]
+            args = [view.json, F.lit(True) if mask is None else mask]
             err_type = udf(*args, *([ctx[0]] if ctx else []))
         out.append(check(err_type.isNotNull(), violation(name, err_type, value=view.display)))
     return out

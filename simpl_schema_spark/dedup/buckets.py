@@ -74,7 +74,8 @@ def bounded_pair_join(
     and the two join sides are the identical subtree, so they share one
     exchange (ReusedExchange).  Requires ``id_col`` values to be
     distinct within a bucket (all callers explode one row per (bucket,
-    doc)).
+    doc)).  Rows with a NULL in any key column are dropped: the inner
+    joins on the keys never match NULL, so such rows pair with nothing.
     """
     sizes = exploded.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("__n"))
     keep = sizes.where(

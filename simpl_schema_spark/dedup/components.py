@@ -87,9 +87,10 @@ def connected_components(
     else:
         # variable-width ids (strings): one tiny bounded aggregate
         # estimates the per-row footprint BEFORE anything row-shaped is
-        # pulled to the driver
+        # pulled to the driver; widths in bytes, not characters (non-ASCII
+        # URLs take 2-4 bytes a character)
         est = sym.limit(cap + 1).agg(
-            F.avg(F.length(F.col("u")) + F.length(F.col("v"))).alias("w")
+            F.avg(F.octet_length(F.col("u")) + F.octet_length(F.col("v"))).alias("w")
         ).first()
         # python strings carry ~49 bytes of object overhead each
         row_bytes = float(est["w"] or 0) + 2 * 49 + _ROW_OVERHEAD

@@ -8,20 +8,21 @@ per document; ``typeValidator`` on each declared key) over JSON text:
 
 - each document parsed once (``try_parse_json`` into a variant column of
   a decode projection, :class:`DocReads`), then per declared key one
-  ``try_variant_get``/``to_json`` extraction into a column of the same
-  projection, which PRESERVES JSON token types (strings stay quoted); the
-  forest reads those columns, checked by the shared rule table
-  (``compiler/rules.py``) over its JSON-token view: type, min/max, regex,
-  allowedValues, minCount/maxCount, oneOf
+  ``try_variant_get`` extraction of its variant, its kind code and its
+  typed reads, in projections above; the forest reads those columns,
+  checked by the shared rule table (``compiler/rules.py``) over its
+  JSON-token view: type, min/max, regex, allowedValues,
+  minCount/maxCount, oneOf
 - required: key absent or JSON null (doc mode, requiredValidator.ts:28,34)
-- KEY_NOT_IN_SCHEMA: ``json_object_keys`` at the root and inside each
-  declared (non-blackbox) object subtree, minus declared/blackbox names
+- KEY_NOT_IN_SCHEMA: ``json_object_keys`` at the root and the variant's
+  keys inside each declared (non-blackbox) object subtree, minus
+  declared/blackbox names
 - blackbox / Any subtrees skipped (validateField.ts:112-113,174-175)
 
-The plan is the decode projection (codegen, fused with the scan) under one
-``inline`` of the forest, which Spark runs as an interpreted ``Generate``
-— no shuffle, no Python; at 10^12 docs it scales like the fixed-column
-path.
+The plan is the decode projections (codegen, fused with the scan) under
+one ``inline`` of the forest, which Spark runs as an interpreted
+``Generate`` — no shuffle, no Python; at 10^12 docs it scales like the
+fixed-column path.
 
 Custom validators run through the JSON-token chain shared with modifier
 rows (``compiler/validators.py``): Python field/item validators are
@@ -42,7 +43,6 @@ from .compiler.compile import is_spark_rule
 from .compiler.memo import compiled
 from .compiler.rules import (
     TokenView,
-    is_json_null,
     null_violation,
     check,
     first,
@@ -80,14 +80,16 @@ _PARSED = "__jv_doc"
 
 class DocReads:
     """What the forest reads of a document: the parsed variant, each
-    declared key's JSON token and each declared array's elements.
+    declared key's value (a :class:`TokenView`) and each declared array's
+    elements.
 
     Inline (``named=False``) every read is an expression over the JSON
     column, for a caller that puts the forest in its own projection;
     Catalyst then repeats each read at every reference.  Named, every read
-    is a column of the decode projection under the forest: ``parsed``
-    (the variant) first, then ``columns`` (the extractions), so each
-    document is parsed once and each key extracted once."""
+    is a column of the decode projections under the forest: ``parsed``
+    (the variant) first, then the ``levels`` in order (the extractions,
+    the values' kind codes, the typed reads), so each document is parsed
+    once and each key extracted and classified once."""
 
     def __init__(self, json_col: Column, *, named: bool) -> None:
         # try_parse_json: heterogeneous crawl payloads WILL contain malformed
@@ -97,24 +99,30 @@ class DocReads:
         self.named = named
         self.parsed = var.alias(_PARSED)
         self.var = F.col(_PARSED) if named else var
-        self.columns: list[Column] = []
+        self.levels: list[list[Column]] = [[], [], []]
         self._reads: dict[tuple[str, str], Column] = {}
+        self._views: dict[str, TokenView] = {}
 
     def _read(self, key: str, ddl: str) -> Column:
         if (key, ddl) not in self._reads:
             expr = F.try_variant_get(self.var, _variant_path(key), ddl)
-            if ddl == "variant":
-                expr = F.to_json(expr)
             if self.named:
-                name = f"__jv_{len(self.columns)}"
-                self.columns.append(expr.alias(name))
+                name = f"__jv_{len(self.levels[0])}"
+                self.levels[0].append(expr.alias(name))
                 expr = F.col(name)
             self._reads[(key, ddl)] = expr
         return self._reads[(key, ddl)]
 
-    def token(self, key: str) -> Column:
-        """The key's value as a JSON token (NULL when absent)."""
-        return self._read(key, "variant")
+    def view(self, key: str) -> TokenView:
+        """The key's value (its variant NULL when absent)."""
+        if key not in self._views:
+            view = TokenView(self._read(key, "variant"))
+            if self.named:
+                kinds, reads = view.named_reads(f"__jk{len(self._views)}_")
+                self.levels[1] += kinds
+                self.levels[2] += reads
+            self._views[key] = view
+        return self._views[key]
 
     def elements(self, key: str) -> Column:
         """The key's array elements as variants (NULL when not an array)."""
@@ -146,20 +154,16 @@ def json_violations_column(
         alts = schema.resolved_alternatives(k)
         if is_any(alts):
             continue
-        extracted = reads.token(k)
-        view = TokenView(extracted)
+        view = reads.view(k)
         name = F.lit(k)
         chain: list[Column] = []
         if not is_optional(alts):
             chain.append(
-                check(
-                    extracted.isNull() | is_json_null(extracted),
-                    violation(name, ErrorTypes.REQUIRED),
-                )
+                check(view.var.isNull() | view.is_null, violation(name, ErrorTypes.REQUIRED))
             )
         err = value_error(view, name, alts)
         if err is not None:
-            chain.append(check(extracted.isNotNull() & ~is_json_null(extracted), err))
+            chain.append(check(view.var.isNotNull() & ~view.is_null, err))
         # custom validators run even when the key is absent (value None),
         # like the fixed-column compiler
         chain += token_custom_rules(
@@ -185,7 +189,7 @@ def json_violations_column(
                 # inside ONE transform lambda, one coalesced error per element
                 def elem_err(e: Column, i: Column) -> Column:
                     elem_name = F.concat(F.lit(k + "."), i.cast("string"))
-                    ev = TokenView(F.to_json(e))
+                    ev = TokenView(e)
                     err = first(
                         [value_error(ev, elem_name, item_alts)]
                         + token_custom_rules(ev, elem_name, item_key, item_alts, spark_fns)
@@ -209,7 +213,7 @@ def json_violations_column(
             object_keys.append(k)
 
     # ---- KEY_NOT_IN_SCHEMA: root + every declared object subtree ----------
-    def unknown_in(obj_json: Column, prefix: str) -> Column:
+    def unknown_in(names: Column, prefix: str) -> Column:
         declared = sorted(
             {
                 k[len(prefix):].split(".")[0]
@@ -222,14 +226,10 @@ def json_violations_column(
                 if (b.startswith(prefix) if prefix else True)
             }
         )
-        declared_arr = (
-            F.array(*[F.lit(n) for n in declared])
-            if declared
-            else F.array().cast("array<string>")
-        )
+        declared_arr = F.array(*map(F.lit, declared)).cast("array<string>")
         return F.transform(
             F.coalesce(
-                F.array_except(F.json_object_keys(obj_json), declared_arr),
+                F.array_except(names, declared_arr),
                 F.array().cast("array<string>"),
             ),
             lambda nm: violation(
@@ -237,10 +237,11 @@ def json_violations_column(
             ),
         )
 
-    arrays.append(unknown_in(json_col, ""))
+    arrays.append(unknown_in(F.json_object_keys(json_col), ""))
     for k in object_keys:
-        sub = reads.token(k)
-        arrays.append(F.when(sub.isNotNull(), unknown_in(sub, k + ".")).otherwise(empty))
+        sub = reads.view(k).var
+        names = F.map_keys(F.try_variant_get(sub, "$", "map<string,variant>"))
+        arrays.append(F.when(sub.isNotNull(), unknown_in(names, k + ".")).otherwise(empty))
 
     combined = F.concat(*arrays) if len(arrays) > 1 else arrays[0]
     # malformed document: one malformedJson violation, nothing else (the
@@ -259,24 +260,22 @@ def validate_json_column(
 ) -> DataFrame:
     """Exploded violations table for a JSON string column.
 
-    Shape: a decode projection parses each document once and extracts each
-    declared key once; the violation forest above it reads those columns.
-    Both are pure unbound Columns over the named column, taken from the
-    compile cache (``compiler/memo.py``)."""
+    Shape: decode projections parse each document once, then extract,
+    classify and read each declared key once; the violation forest above
+    them reads those columns.  All are pure unbound Columns over the named
+    column, taken from the compile cache (``compiler/memo.py``)."""
     id_cols = list(id_cols)
-    parsed, decoded, forest = compiled(
+    parsed, levels, forest = compiled(
         schema, "json_violations", json_col, (), lambda: _json_forest(schema, json_col)
     )
-    keep = list(dict.fromkeys([*id_cols, json_col]))
-    return (
-        df.select(*keep, parsed)
-        .select(*keep, _PARSED, *decoded)
-        .select(*id_cols, F.inline(forest))
-    )
+    df = df.select(*dict.fromkeys([*id_cols, json_col]), parsed)
+    for cols in levels:
+        df = df.select("*", *cols)
+    return df.select(*id_cols, F.inline(forest))
 
 
 def _json_forest(schema: SimpleSchema, json_col: str) -> tuple:
-    """The decode projection's columns and the forest over them."""
+    """The decode projections' columns and the forest over them."""
     reads = DocReads(F.col(json_col), named=True)
     forest = json_violations_column(schema, F.col(json_col), reads=reads)
-    return reads.parsed, reads.columns, forest
+    return reads.parsed, reads.levels, forest

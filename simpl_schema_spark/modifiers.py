@@ -13,9 +13,13 @@ Relational encoding (FIXTURES.md F6): one row per (document, operator, key)::
 
 ``value`` is JSON; dates use extended-JSON ``{"$date": "ISO-8601"}``.
 
-Execution shape: ``validate_modifier_table`` is ONE generator over the long
-table (all per-row rules are a CASE WHEN forest over the generic key,
-evaluated once per row inside the ``inline``) plus,
+Both functions read each value through the same decode projections: the
+value parsed once (``try_parse_json`` into a variant column), its kind
+code, and the typed reads gated by it.
+
+Execution shape: ``validate_modifier_table`` is ONE generator over the
+decoded table (all per-row rules are a CASE WHEN forest over the generic
+key, evaluated once per row inside the ``inline``) plus,
 when the schema has required keys, ONE ``groupBy(doc)`` over the upsert
 ``$set``/``$setOnInsert`` rows: it collects the keys present (even as null)
 and the keys with a value, and ``array_except`` of the compile-time
@@ -25,8 +29,8 @@ required-key list against present ∪ ancestors(valued) is exploded into
 union of projections over the same input; the only other shuffle is the
 join that attaches a document's entries, paid only when a cross-field
 validator exists.
-``clean_modifier_table`` parses each value once (``try_parse_json`` into a
-variant column of a decode projection) under one cleaning projection, plus,
+``clean_modifier_table`` is one cleaning projection over the decoded
+table, plus,
 when autoValues or defaultValues exist, one ``groupBy(doc)`` that runs the
 Arrow UDF once per document and resolves kept and added rows with array
 functions; nothing is persisted.  Its per-value cleaning is the typed
@@ -57,11 +61,8 @@ from .cleaning import PythonAutoValueContext, _Cleaner, resolve_clean_options
 from .compiler.compile import is_spark_rule, wants_context
 from .compiler.memo import compiled
 from .compiler.rules import (
+    OBJECT,
     TokenView,
-    is_ext_date,
-    is_json_array,
-    is_json_null,
-    is_json_object,
     null_violation,
     first,
     generic_key,
@@ -90,6 +91,21 @@ class UnsupportedModifierError(Exception):
     """$pushAll (doValidation.ts:10) and non-$ keys (ts:44-46)."""
 
 
+#: the row's value parsed once, and its kind code, in the decode projections
+_PARSED, _KIND = "__cm_value", "__cm_kind"
+
+
+def _value_view(op: Column | None, **kw: bool) -> tuple[TokenView, list[list[Column]]]:
+    """The row's value as a token view, and the columns of the three decode
+    projections under the one that uses it: the value parsed once (a
+    malformed value parses to NULL and has no kind), its kind code, and
+    the typed reads.  Validation and cleaning share them; ``op`` is the
+    operator column where ``$currentDate`` reads as `now`."""
+    view = TokenView(F.col(_PARSED), op, F.col("value"), **kw)
+    kinds, reads = view.named_reads("__cm_")
+    return view, [[F.try_parse_json(F.col("value")).alias(_PARSED)], kinds, reads]
+
+
 def _object_set_expansions(schema: SimpleSchema) -> list[tuple[Column, Column]]:
     """How object-valued ``$set``/``$setOnInsert`` rows expand into child
     rows, so descendant keys flow through the normal per-key rules
@@ -105,12 +121,13 @@ def _object_set_expansions(schema: SimpleSchema) -> list[tuple[Column, Column]]:
     - one row per PRESENT-but-undeclared child, which the existing
       KEY_NOT_IN_SCHEMA rule flags
 
-    Child JSON is extracted with variant functions (``try_variant_get`` +
-    ``to_json``), which preserve JSON token types exactly (strings stay
-    quoted, numbers bare) — pure JVM expressions, one projection per declared
-    object key, no shuffle.  Returns, per key and parents first (so nested
-    declared objects expand transitively), the condition selecting its rows
-    and the generator of their ``(key_path, value)`` children.
+    The rows come decoded (:func:`_value_view`), and each child is read
+    from the parent's variant (``try_variant_get``) with its JSON text and
+    kind code beside it, so child rows enter the forest decoded too — pure
+    JVM expressions, one projection per declared object key, no shuffle, no
+    second parse.  Returns, per key and parents first (so nested declared
+    objects expand transitively), the condition selecting its rows and the
+    generator of their ``(key_path, value, variant, kind)`` children.
     """
     merged = schema.merged_schema()
     blackbox = set(schema.blackbox_keys())
@@ -121,72 +138,59 @@ def _object_set_expansions(schema: SimpleSchema) -> list[tuple[Column, Column]]:
         and k not in blackbox
         and is_object_key(schema.resolved_alternatives(k))
     ]
-    struct_t = "key_path string, value string"
+    parent = TokenView(F.col(_PARSED))
+    names = F.map_keys(F.try_variant_get(parent.var, "$", "map<string,variant>"))
+    # an absent child is JSON null, so required fires for it
+    null = TokenView(F.parse_json(F.lit("null")))
+
+    def child(key_path: Column, view: TokenView) -> Column:
+        return F.struct(
+            key_path.alias("key_path"), view.json.alias("value"),
+            view.var.alias(_PARSED), view.kind.alias(_KIND),
+        )
+
     out = []
     for k in sorted(object_keys, key=lambda s: s.count(".")):
         prefix = f"{k}."
         declared = sorted(
             {c[len(prefix):].split(".")[0] for c in merged if c.startswith(prefix)}
         )
-        v = F.col("value")
-        # try_parse_json: a truncated '{...' token passes the cheap shape
-        # check but must not kill the job — unparseable tokens simply don't
-        # expand into child rows (the parent value keeps its own checks)
-        var = F.try_parse_json(v)
-        cond = (
-            (generic_key(F.col("key_path")) == k)
-            & F.col("op").isin(*OPS_SET)
-            & is_json_object(v)
-            & ~is_ext_date(v)
-            & var.isNotNull()
-        )
         children = [
-            F.struct(
-                F.concat(F.col("key_path"), F.lit("." + n)).alias("key_path"),
-                F.coalesce(
-                    F.to_json(F.try_variant_get(var, f"$['{n}']", "variant")),
-                    F.lit("null"),
-                ).alias("value"),
+            child(
+                F.concat(F.col("key_path"), F.lit("." + n)),
+                TokenView(F.coalesce(parent.field(n).var, null.var)),
             )
             for n in declared
         ]
-        declared_arr = (
-            F.array(*[F.lit(n) for n in declared])
-            if declared
-            else F.array().cast("array<string>")
-        )
+        declared_arr = F.array(*map(F.lit, declared)).cast("array<string>")
         unknown = F.transform(
-            F.coalesce(
-                F.array_except(F.json_object_keys(v), declared_arr),
-                F.array().cast("array<string>"),
-            ),
-            lambda nm: F.struct(
-                F.concat(F.col("key_path"), F.lit("."), nm).alias("key_path"),
-                F.lit("null").alias("value"),
-            ),
+            F.array_except(names, declared_arr),
+            lambda nm: child(F.concat(F.col("key_path"), F.lit("."), nm), null),
         )
-        declared_arr_col = (
-            F.array(*children)
-            if children
-            else F.array().cast(f"array<struct<{struct_t}>>")
-        )
-        out.append((cond, F.inline(F.concat(declared_arr_col, unknown))))
+        rows = F.concat(F.array(*children), unknown) if children else unknown
+        # the kind test sits in the generator, not in the row filter:
+        # Catalyst would push a filter below the decode projections and
+        # parse the value twice.  A malformed '{...' value has no kind, so
+        # it does not expand (it keeps its own checks)
+        out.append((
+            (generic_key(F.col("key_path")) == k) & F.col("op").isin(*OPS_SET),
+            F.inline(F.when(F.col(_KIND) == F.lit(OBJECT), rows)),
+        ))
     return out
 
 
 def _modifier_rule_forest(schema: SimpleSchema) -> dict:
     """The Columns of ``validate_modifier_table`` — PURE unbound Columns
     over the fixed column names (op, key_path, value, upsert, __entries),
-    independent of any input DataFrame: the object-``$set`` expansions, the
-    per-row rule forest as a violations generator and the upsert
-    required-key injection.  Building them issues thousands of py4j round
-    trips, so ``validate_modifier_table`` calls this only on a miss of the
-    compile cache (``compiler/memo.py``)."""
+    independent of any input DataFrame: the decode projections, the
+    object-``$set`` expansions, the per-row rule forest as a violations
+    generator and the upsert required-key injection.  Building them issues
+    thousands of py4j round trips, so ``validate_modifier_table`` calls
+    this only on a miss of the compile cache (``compiler/memo.py``)."""
     op = F.col("op")
     key_path = F.col("key_path")
-    v = F.col("value")
     generic = generic_key(key_path)
-    view = TokenView(v, op)
+    view, decode = _value_view(op)
     merged = schema.merged_schema()
     alts_of = {k: schema.resolved_alternatives(k) for k in merged}
 
@@ -223,7 +227,7 @@ def _modifier_rule_forest(schema: SimpleSchema) -> dict:
             generic.isin(*non_optional)
             & (
                 op.isin("$unset", "$rename")
-                | (op.isin(*OPS_SET) & is_json_null(v))
+                | (op.isin(*OPS_SET) & view.is_null)
             ),
             violation(key_path, ErrorTypes.REQUIRED),
         ).otherwise(null_violation())
@@ -256,7 +260,7 @@ def _modifier_rule_forest(schema: SimpleSchema) -> dict:
     # value checked for $set/$setOnInsert/$inc/$min/$max/$mul/$currentDate
     # (non-null values); for $push/$addToSet against the ITEM definition
     check_value_ops = list(OPS_SET) + ["$inc", "$currentDate", "$min", "$max", "$mul"]
-    is_each = v.rlike(r'^\s*\{\s*"\$each"')
+    is_each = view.has("$each")
     value_rule = null_violation()
     item_rule = null_violation()
     each_err = F.lit(None).cast(T.ArrayType(VIOLATION_SCHEMA))
@@ -282,7 +286,7 @@ def _modifier_rule_forest(schema: SimpleSchema) -> dict:
         if item_err is None and not item_fns:
             continue
         # $each: every element validated (doValidation.ts:52-58), each read
-        # as its own JSON token from one variant parse.  @spark_rule item
+        # from the row's parsed variant.  @spark_rule item
         # customs run inside the transform; Python item customs merge via
         # one Arrow UDF over the token array (UDF results can't be
         # referenced inside HOF lambdas)
@@ -290,15 +294,14 @@ def _modifier_rule_forest(schema: SimpleSchema) -> dict:
         py_fns = [fn for fn in item_fns if not is_spark_rule(fn)]
 
         def elem_err(e: Column) -> Column:
-            ev = TokenView.of_variant(e, op)
+            ev = TokenView(e, op)
             err = first(
                 [value_error(ev, key_path, item_alts)]
                 + token_custom_rules(ev, key_path, item_key, item_alts, spark_fns)
             )
             return null_violation() if err is None else err
 
-        # each element as its exact JSON token, whatever its type
-        elems = TokenView(v, var=F.try_parse_json(v)).elements("$['$each']")
+        elems = view.elements("$['$each']")
         expr_arr = F.transform(elems, elem_err)
         if py_fns:
             entries = context[0] if context else F.lit(None).cast(
@@ -312,7 +315,7 @@ def _modifier_rule_forest(schema: SimpleSchema) -> dict:
         each_err = F.when((generic == k) & is_each, per_elem).otherwise(each_err)
 
     checked = F.when(
-        op.isin(*check_value_ops) & ~is_json_null(v),
+        op.isin(*check_value_ops) & ~view.is_null,
         value_rule,
     ).when(
         op.isin(*OPS_PUSH) & ~is_each,
@@ -348,7 +351,7 @@ def _modifier_rule_forest(schema: SimpleSchema) -> dict:
         key = generic_key(F.col("key_path"))
         aggs = [
             F.collect_set(key).alias("present"),
-            F.collect_set(F.when(~is_json_null(F.col("value")), key)).alias("valued"),
+            F.collect_set(F.when(~view.is_null, key)).alias("valued"),
         ]
 
         def with_ancestors(path: Column) -> Column:
@@ -370,6 +373,7 @@ def _modifier_rule_forest(schema: SimpleSchema) -> dict:
         ]
         upsert = (F.col("upsert") & op.isin(*OPS_SET), aggs, rows)
     return {
+        "decode": decode,
         "expansions": _object_set_expansions(schema),
         "any_ctx": any_ctx,
         "violations": violations,
@@ -386,8 +390,11 @@ def validate_modifier_table(
     """Violations table ``(id, name, type, value…)`` for a long-format
     modifier table ``(id, op, key_path, value, upsert)``.  Its Columns come
     from the compile cache (``compiler/memo.py``); the object-``$set``
-    expansion and the upsert ``groupBy`` run per call."""
+    expansion and the upsert ``groupBy`` run per call, between and over
+    the decode projections."""
     c = compiled(schema, "modifier_forest", None, (), lambda: _modifier_rule_forest(schema))
+    parsed, kinds, reads = c["decode"]
+    mods = mods.select("*", *parsed).select("*", *kinds)
     for cond, children in c["expansions"]:
         expanded = mods.where(cond).select(id_col, "op", children, "upsert")
         mods = mods.unionByName(expanded.select(*mods.columns))
@@ -400,16 +407,13 @@ def validate_modifier_table(
             ).alias("__entries")
         )
         mods = mods.join(ents_df, id_col)
+    mods = mods.select("*", *reads)
     base = mods.select(F.col(id_col), c["violations"])
     if c["upsert"] is not None:
         cond, aggs, rows = c["upsert"]
         docs = mods.where(cond).groupBy(id_col).agg(*aggs)
         base = base.unionByName(docs.select(F.col(id_col), *rows))
     return base
-
-
-#: the row's value parsed once, in the projection under the cleaning one
-_PARSED = "__cm_value"
 
 
 def clean_modifier_table(
@@ -472,16 +476,15 @@ def clean_modifier_table(
         remove_nulls_from_arrays=remove_nulls_from_arrays,
         get_auto_values=get_auto_values,
     )
-    keep, reads, value, new_op, auto = compiled(
+    keep, decode, value, new_op, auto = compiled(
         schema, "modifier_clean", None, opts, lambda: _modifier_cleaning(schema, opts)
     )
     if keep is not None:
         mods = mods.where(keep)
-    out = (
-        mods.select("*", F.try_parse_json(F.col("value")).alias(_PARSED))
-        .select("*", *reads)
-        .select(*[value if c == "value" else c for c in mods.columns])
-    )
+    out = mods
+    for cols in decode:
+        out = out.select("*", *cols)
+    out = out.select(*[value if c == "value" else c for c in mods.columns])
     if new_op is not None:
         out = out.withColumn("op", new_op)
     if auto is not None:
@@ -498,7 +501,7 @@ def clean_modifier_table(
 
 def _modifier_cleaning(schema: SimpleSchema, opts: dict[str, bool]) -> tuple:
     """The unbound Columns of ``clean_modifier_table``: the row filter (or
-    None), the decode reads under the cleaning projection, the cleaned
+    None), the decode projections under the cleaning one, the cleaned
     ``value``, the rewritten ``op`` (or None) and the autoValue step (or
     None)."""
     remove_nulls = opts["remove_nulls_from_arrays"]
@@ -526,15 +529,16 @@ def _modifier_cleaning(schema: SimpleSchema, opts: dict[str, bool]) -> tuple:
         # item paths (tags.0) and $each forms target the array key itself
         keep = allowed | op.isin("$unset", "$rename")
 
-    # ---- per-key value cleaning: the shared pipeline over the row's token,
-    # parsed once into a variant column below this projection.  Object
-    # values are rebuilt only under `filter` (undeclared children can't be
-    # read with literal variant paths; the reference drops them anyway).
+    # ---- per-key value cleaning: the shared pipeline over the row's value,
+    # decoded in the projections below this one.  Object values are rebuilt
+    # only under `filter` (undeclared children can't be read with literal
+    # variant paths; the reference drops them anyway).
+    # $currentDate values are never cleaned, so the view reads no `now`;
+    # with it, the generated projection computed the date conversions on
+    # every row, which doubled its cost
     cleaner = _Cleaner(schema, **opts)
-    view = TokenView(v, var=F.col(_PARSED), rebuilds_objects=opts["filter"])
-    reads = view.named_reads("__cm_")
-    is_arr, is_obj = is_json_array(v), is_json_object(v)
-    is_each = v.rlike(r'^\s*\{\s*"\$each"')
+    view, decode = _value_view(None, rebuilds_objects=opts["filter"])
+    is_each = view.has("$each")
     cleaned = v
     for k in merged:
         if k.endswith(".$"):
@@ -552,12 +556,12 @@ def _modifier_cleaning(schema: SimpleSchema, opts: dict[str, bool]) -> tuple:
             )
             # $push sub-operators beside $each survive the rebuild
             each = view.rebuild_object([("$each", each)] + [
-                (sub, view.field(sub).token) for sub in ("$slice", "$position", "$sort")
+                (sub, view.field(sub).json) for sub in ("$slice", "$position", "$sort")
             ])
             whole = (
-                F.when(op.isin(*OPS_PUSH) & is_each & view.var.isNotNull(), each)
-                .when(op.isin(*OPS_PUSH, "$pull", "$pop") & ~is_obj & ~is_arr, item)
-                .when(op.isin(*OPS_SET) | ((op == "$pullAll") & is_arr), whole)
+                F.when(op.isin(*OPS_PUSH) & is_each, each)
+                .when(op.isin(*OPS_PUSH, "$pull", "$pop") & ~view.is_object & ~view.is_array, item)
+                .when(op.isin(*OPS_SET) | ((op == "$pullAll") & view.is_array), whole)
                 .otherwise(v)
             )
         if whole is not v:
@@ -582,7 +586,7 @@ def _modifier_cleaning(schema: SimpleSchema, opts: dict[str, bool]) -> tuple:
     # injection into $set objects / pushed items, and parent-creating
     # dotted paths (defaultValue.tests.ts:229-514)
     auto = _modifier_auto_values(schema) if opts["get_auto_values"] else None
-    return keep, reads, value, new_op, auto
+    return keep, decode, value, new_op, auto
 
 
 class _ModifierAutoValueContext:

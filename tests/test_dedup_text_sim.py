@@ -576,6 +576,26 @@ class TestConnectedComponents:
         }
         assert got == {"a.com": "a.com", "b.com": "a.com", "c.com": "a.com"}
 
+    def test_byte_budget_counts_bytes_of_string_ids(self, spark):
+        """Non-ASCII URL ids take 3 bytes a character here: a budget the
+        edges fit by character count but not by bytes must take the
+        distributed path (its labels come back persisted)."""
+        from simpl_schema_spark.dedup import connected_components
+
+        ids = [f"https://{'記事' * 20}.jp/{i}" for i in range(4)]
+        edges = spark.createDataFrame(
+            list(zip(ids, ids[1:])), "id_a string, id_b string"
+        )
+        # 6 symmetrized rows of two 53-character, 133-byte ids, plus the
+        # estimate's fixed 218 bytes a row: 1,944 bytes by characters,
+        # 2,904 by bytes
+        got = connected_components(edges, driver_byte_budget=2_000)
+        try:
+            assert got.is_cached
+            assert {r.id: r.component for r in got.collect()} == {i: ids[0] for i in ids}
+        finally:
+            got.unpersist()
+
 
 class TestIVFIndexIO:
     def test_write_read_prune_and_equivalence(self, spark, tmp_path):

@@ -10,8 +10,10 @@ and that no call leaves a persisted relation behind.
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
+from simpl_schema_spark import modifiers
 from simpl_schema_spark.jsondoc import json_violations_column, validate_json_column
 from simpl_schema_spark.modifiers import clean_modifier_table, validate_modifier_table
 from simpl_schema_spark.schema import SimpleSchema
@@ -290,6 +292,77 @@ class TestPlanShape:
         df = validate_json_column(self._docs(spark), self._json_schema())
         got = [(r.name, r.type) for r in df.where("doc_id = 2").collect()]
         assert got == [("$", "malformedJson")]
+
+    @staticmethod
+    def _perfbench_schemas():
+        """The schemas of the perfbench ``updates`` workload
+        (``perfbench/workloads.py``)."""
+        updates = SimpleSchema(
+            {
+                "title": {"type": str, "max": 80},
+                "status": {"type": str, "allowedValues": ["draft", "live", "archived"]},
+                "views": {"type": SimpleSchema.Integer, "min": 0},
+                "score": {"type": float, "min": 0, "max": 1},
+                "summary": {"type": str, "optional": True},
+                "tags": {"type": SimpleSchema.Array, "optional": True, "maxCount": 5},
+                "tags.$": {"type": str, "max": 12},
+                "meta": {"type": dict, "optional": True},
+                "meta.lang": {"type": str, "optional": True},
+                "meta.rank": {"type": SimpleSchema.Integer, "optional": True, "min": 0, "max": 100},
+                "created": {"type": SimpleSchema.Date, "optional": True},
+                "source": {"type": str, "optional": True, "defaultValue": "crawl"},
+            }
+        )
+        docs = SimpleSchema(
+            {
+                "name": {"type": str, "min": 2},
+                "age": {"type": SimpleSchema.Integer, "min": 0, "max": 130, "optional": True},
+                "lang": {"type": str, "optional": True, "allowedValues": ["en", "de", "fr"]},
+                "meta": {"type": dict, "optional": True},
+                "meta.k": {"type": str, "optional": True},
+                "bag": {"type": dict, "optional": True, "blackbox": True},
+                "tags": {"type": SimpleSchema.Array, "optional": True, "maxCount": 3},
+                "tags.$": str,
+            }
+        )
+        return updates, docs
+
+    @staticmethod
+    def _nodes(plan) -> list:
+        out = [plan]
+        for i in range(plan.children().size()):
+            out += TestPlanShape._nodes(plan.children().apply(i))
+        return out
+
+    @pytest.mark.parametrize(
+        "call", ["validate_modifier_table", "clean_modifier_table", "validate_json_column"]
+    )
+    def test_json_values_are_parsed_once_and_read_as_variants(self, spark, call):
+        # every read of a JSON value goes through its parsed variant: no
+        # from_json decode, no regex kind test, and each parse is a column
+        # of a decode projection over the input, once per scan
+        updates, docs = self._perfbench_schemas()
+        if call == "validate_json_column":
+            df = validate_json_column(self._docs(spark), docs)
+        else:
+            df = getattr(modifiers, call)(_mods(spark, self._rows(1)), updates)
+        nodes = self._nodes(df._jdf.queryExecution().optimizedPlan())
+        scans = sum(n.children().size() == 0 for n in nodes)
+        parses = 0
+        for node in nodes:
+            text = node.simpleString(10_000)
+            assert "from_json" not in text and "RLIKE" not in text, text
+            n = text.count("parseJson(")
+            if n:
+                assert node.nodeName() == "Project", text
+                decode = re.findall(
+                    r"static_invoke\(VariantExpressionEvalUtils\.parseJson\(\w+#\d+, "
+                    r"\w+, \w+\)\) AS __\w+#\d+",
+                    text,
+                )
+                assert len(decode) == n, text
+                parses += n
+        assert 1 <= parses <= scans
 
     def test_inline_forest_matches_validate_json_column(self, spark):
         ss = self._json_schema()

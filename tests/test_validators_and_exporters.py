@@ -138,10 +138,11 @@ class TestSparkStructExport:
 
 
 class TestValidatorMemoKeys:
-    """The compiled forests are memoized per schema instance and keyed on
-    the active validator functions.  Replacing a global validator must
-    rebuild them even when the new function lands at the address (the
-    ``id``) of the one it replaces."""
+    """The compiled forests are held by the content-keyed compile cache
+    (``compiler/memo.py``), whose key includes the active validator
+    functions.  Replacing a global validator must rebuild them even when
+    the new function lands at the address (the ``id``) of the one it
+    replaces."""
 
     @staticmethod
     def _rule(tag):
