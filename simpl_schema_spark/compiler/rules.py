@@ -261,7 +261,7 @@ class Case(NamedTuple):
 KIND_OF = {String: STRING, Number: NUMBER, Integer: NUMBER, Boolean: BOOLEAN, DateType: DATE}
 DTYPE_OF = {STRING: T.StringType(), NUMBER: T.DoubleType(), BOOLEAN: T.BooleanType(), DATE: T.TimestampType()}
 #: the kind a JSON value must have to conform to each type (dates apart)
-TOKEN_KIND_OF = {**KIND_OF, ArrayType: ARRAY, ObjectType: OBJECT}
+_TOKEN_KIND_OF = {**KIND_OF, ArrayType: ARRAY, ObjectType: OBJECT}
 #: ``schema_of_variant``'s type name, up to ``<`` or ``(``, → kind
 _VARIANT_KINDS = {
     "STRING": STRING, "BIGINT": NUMBER, "DECIMAL": NUMBER, "DOUBLE": NUMBER,
@@ -479,7 +479,7 @@ class TokenView:
     def mismatch(self, token: TypeToken) -> Union[Column, bool]:
         if token is DateType:
             return self.as_date.isNull()
-        kind = TOKEN_KIND_OF.get(token)
+        kind = _TOKEN_KIND_OF.get(token)
         return True if kind is None else ~self.is_kind(kind)  # Binary has no JSON form
 
     def typed(self, alts: list[dict]) -> Column:

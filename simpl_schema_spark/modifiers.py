@@ -286,10 +286,10 @@ def _modifier_rule_forest(schema: SimpleSchema) -> dict:
         if item_err is None and not item_fns:
             continue
         # $each: every element validated (doValidation.ts:52-58), each read
-        # from the row's parsed variant.  @spark_rule item
-        # customs run inside the transform; Python item customs merge via
-        # one Arrow UDF over the token array (UDF results can't be
-        # referenced inside HOF lambdas)
+        # from the row's parsed variant.  @spark_rule item customs run
+        # inside the transform; Python item customs merge via one Arrow UDF
+        # over the token array (UDF results can't be referenced inside HOF
+        # lambdas)
         spark_fns = [fn for fn in item_fns if is_spark_rule(fn)]
         py_fns = [fn for fn in item_fns if not is_spark_rule(fn)]
 

@@ -8,9 +8,9 @@ kinds (``"12"`` reads as 12.0, ``true`` as 1.0); the kind code keeps those
 casts out of the type rules.
 
 A modifier value that does not parse as JSON has no kind: it conforms to no
-type, so it reports ``expectedType`` with its text as the value.  (A JSON
-document that does not parse reports one ``malformedJson`` row instead; see
-``test_updates_path``.)
+type, so it reports ``expectedType`` with its text as the value, and
+cleaning leaves it as written.  (A JSON document that does not parse
+reports one ``malformedJson`` row instead; see ``test_updates_path``.)
 """
 
 import json
@@ -146,8 +146,15 @@ def test_modifier_only_tokens(spark, schema):
     assert got == _want(MOD_ONLY)
 
 
-def test_cleaning_reads_a_date_as_a_scalar(spark, schema):
-    # a pushed extended-JSON date is a scalar, converted toward the item type
-    rows = [(0, "$push", "a", f'{{"$date": "{DATE}"}}', False)]
-    out = clean_modifier_table(spark.createDataFrame(rows, MOD_DDL), schema).collect()
-    assert [r.value for r in out] == [f'"{DATE}"']
+def test_modifier_cleaning(spark, schema):
+    rows = [
+        # a pushed extended-JSON date is a scalar, converted toward the item type
+        (0, "$push", "a", f'{{"$date": "{DATE}"}}', False),
+        # a malformed value has no kind: cleaning leaves it as written
+        (1, "$set", "s", '"abc', False),
+    ]
+    out = clean_modifier_table(spark.createDataFrame(rows, MOD_DDL), schema)
+    assert [(r.op, r.value) for r in out.orderBy("doc_id").collect()] == [
+        ("$push", f'"{DATE}"'),
+        ("$set", '"abc'),
+    ]

@@ -13,7 +13,6 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from simpl_schema_spark import modifiers
 from simpl_schema_spark.jsondoc import json_violations_column, validate_json_column
 from simpl_schema_spark.modifiers import clean_modifier_table, validate_modifier_table
 from simpl_schema_spark.schema import SimpleSchema
@@ -335,17 +334,19 @@ class TestPlanShape:
         return out
 
     @pytest.mark.parametrize(
-        "call", ["validate_modifier_table", "clean_modifier_table", "validate_json_column"]
+        "call",
+        [validate_modifier_table, clean_modifier_table, validate_json_column],
+        ids=lambda fn: fn.__name__,
     )
     def test_json_values_are_parsed_once_and_read_as_variants(self, spark, call):
         # every read of a JSON value goes through its parsed variant: no
         # from_json decode, no regex kind test, and each parse is a column
-        # of a decode projection over the input, once per scan
+        # of a decode projection over the input, at most once per scan
         updates, docs = self._perfbench_schemas()
-        if call == "validate_json_column":
-            df = validate_json_column(self._docs(spark), docs)
+        if call is validate_json_column:
+            df = call(self._docs(spark), docs)
         else:
-            df = getattr(modifiers, call)(_mods(spark, self._rows(1)), updates)
+            df = call(_mods(spark, self._rows(1)), updates)
         nodes = self._nodes(df._jdf.queryExecution().optimizedPlan())
         scans = sum(n.children().size() == 0 for n in nodes)
         parses = 0
