@@ -1,4 +1,4 @@
-"""Workaround for a PySpark 4.1 JVM→Arrow serialization crash.
+"""Arrow-safe shipping of typed columns to the engine's Python callbacks.
 
 Shipping a column whose type nests THREE or more list levels (e.g.
 ``array<struct<array<struct<array<string>>>>>``) to a pandas UDF SEGFAULTS
@@ -9,28 +9,23 @@ on.  (Reproduced with an identity ``pandas_udf``; pure
 ``pyarrow.Array.to_pandas`` on the same logical values is fine, so the
 malformed buffers come from Spark's ArrowWriter.)  Inner-level nulls and
 empties are unaffected, and a one-element ``[null]`` top-level array
-round-trips correctly.
+round-trips correctly.  Wrapping such a column in one MORE struct level
+(a context struct) crashes the converter even for fully-populated data.
 
-The workaround: for list-depth ≥ 3 inputs, substitute ``[null]`` for
-null/empty top-level arrays before the UDF boundary, ship a companion
-BOOLEAN dummy-flag column, and have the UDF return None for flagged rows
-WITHOUT iterating the dummy (so null-unsafe user fns are never invoked
-on it); the caller gates the UDF's result back to the original
-null/empty value.
+:func:`arrow_inputs` ships every typed value and context the engine hands
+to Python, around both crashes: deep values and deep context columns take
+a ``to_json`` detour, and a whole deep array ships ``[null]`` for its
+null or empty rows, flagged so that no callback ever sees the dummy.
 """
 
 from __future__ import annotations
 
+import json
+from typing import Any, Callable, Optional
+
 from pyspark.sql import Column, functions as F, types as T
 
-__all__ = [
-    "list_depth",
-    "needs_arrow_guard",
-    "arrow_safe_array",
-    "resolve_dtype",
-    "ctx_safe_struct",
-    "decode_ctx_row",
-]
+__all__ = ["list_depth", "needs_arrow_guard", "resolve_dtype", "arrow_inputs"]
 
 
 def list_depth(dtype: T.DataType) -> int:
@@ -56,48 +51,65 @@ def resolve_dtype(schema: T.StructType, path: str) -> T.DataType:
     return cur
 
 
-def ctx_safe_struct(schema: T.StructType, cols: list) -> tuple:
-    """``(struct Column, jsonified names)`` for a cross-field context.
+def arrow_inputs(
+    schema: T.StructType,
+    path: Optional[str],
+    context: Any = None,
+    *,
+    whole_array: bool = False,
+) -> tuple[list[Column], Callable[..., tuple[Any, dict]]]:
+    """The input columns of a Python callback over a DataFrame of
+    ``schema``, and ``unpack(*inputs) -> (value, row)`` that restores one
+    row of them on the Python side.
 
-    Context structs re-ship whole columns, and wrapping a ≥3-list-level
-    column in one MORE struct level crashes the Arrow converter even for
-    fully-populated data — so deeply nested context columns travel as
-    ``to_json`` strings instead, and :func:`decode_ctx_row` restores them
-    to plain dicts/lists on the Python side (the same shapes Arrow's own
-    struct decoding produces; datetimes inside such columns arrive as ISO
-    strings — documented tradeoff of the JSON detour).
+    - The value at the dotted column ``path`` (a NULL when None: the column
+      is absent) and a JVM-computed NULL flag, since Arrow renders a NULL
+      in an integral column as NaN; flagged rows unpack as None.  A
+      ``whole_array`` (the outer array of an array-item key) is also
+      flagged when empty, and when deep ships ``[null]`` in those rows:
+      callers gate the result on the real array.
+    - With a ``context`` callback, a struct of the columns it may read:
+      its declared ``context_fields``, else every column not starting with
+      ``__`` (the engine's helper columns); ``True`` ships every such
+      column.  ``row`` is their dict (``{}`` without a context).
     """
-    out, jsonified = [], []
-    for c in cols:
-        col = F.col(c)
-        if needs_arrow_guard(resolve_dtype(schema, c)):
-            out.append(F.to_json(col).alias(c))
-            jsonified.append(c)
+    detour = False
+    if path is None:
+        cols = [F.lit(None).cast("string"), F.lit(True)]
+    else:
+        col, dtype = F.col(path), resolve_dtype(schema, path)
+        deep = needs_arrow_guard(dtype)
+        if whole_array:
+            # ANSI size(NULL) is NULL: the coalesce flags null arrays too
+            dummy = F.array(F.lit(None).cast(dtype.elementType))
+            cols = [
+                F.when(F.size(col) > 0, col).otherwise(dummy) if deep else col,
+                F.coalesce(F.size(col) <= 0, F.lit(True)),
+            ]
         else:
-            out.append(col.alias(c))
-    return F.struct(*out), jsonified
+            detour = deep
+            cols = [F.to_json(col) if deep else col, col.isNull()]
+    jsonified = []
+    if context is not None:
+        declared = getattr(context, "context_fields", None)
+        names = list(declared) if declared else [c for c in schema.fieldNames() if not c.startswith("__")]
+        fields = []
+        for c in names:
+            if needs_arrow_guard(resolve_dtype(schema, c)):
+                fields.append(F.to_json(F.col(c)).alias(c))
+                jsonified.append(c)
+            else:
+                fields.append(F.col(c).alias(c))
+        cols.append(F.struct(*fields))
 
+    def unpack(value, flag, ctx=None):
+        # JSON-detoured context columns come back as dicts and lists, the
+        # shapes Arrow gives structs (datetimes inside them as ISO strings)
+        row = ctx or {}
+        if jsonified:
+            row = {**row, **{c: json.loads(row[c]) for c in jsonified if isinstance(row.get(c), str)}}
+        if flag:
+            return None, row
+        return (json.loads(value) if detour else value), row
 
-def decode_ctx_row(row: dict, jsonified: list) -> dict:
-    """Restore JSON-detoured context values to dicts/lists (see
-    :func:`ctx_safe_struct`); NULL columns stay None."""
-    if not jsonified:
-        return row
-    import json
-
-    out = dict(row)
-    for k in jsonified:
-        v = out.get(k)
-        if isinstance(v, str):
-            out[k] = json.loads(v)
-    return out
-
-
-def arrow_safe_array(arr: Column, arr_type: T.ArrayType) -> Column:
-    """``arr`` with null/empty top-level values replaced by ``[null]`` —
-    safe to ship through the Arrow UDF boundary at any nesting depth.
-    Callers must gate the UDF result on the ORIGINAL column's null/empty
-    state (``F.when(F.size(arr) > 0, result)…``)."""
-    dummy = F.array(F.lit(None).cast(arr_type.elementType))
-    # ANSI size(NULL) is NULL → the > 0 test is falsy for null arrays too
-    return F.when(F.size(arr) > 0, arr).otherwise(dummy)
+    return cols, unpack

@@ -44,12 +44,14 @@ and one conversion table (:data:`CONVERSIONS`) over the two views of
 
 from __future__ import annotations
 
-from functools import reduce
+from functools import partial, reduce
 from typing import Any, Callable, Union
 
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
+from .arrowsafe import arrow_inputs, resolve_dtype
 from .compiler.memo import compiled
+from .compiler.validators import FieldContext, arrow_udf, walk_items
 from .schema.schema import SimpleSchema
 from .schema.types import (
     AnyType,
@@ -368,118 +370,24 @@ def _conforms_any(v: View, alts: list[dict]) -> "Column | bool":
     return reduce(lambda x, y: x | y, oks) if oks else False
 
 
-class PythonAutoValueContext:
-    """Per-row context for opaque Python autoValue functions (the pandas-UDF
-    fallback) — mirrors the reference's AutoValueRunner context
-    (src/clean/AutoValueRunner.ts:42-147): ``value``, ``is_set``,
-    ``field(path)``, ``sibling_field(name)``, ``unset()``.
-
-    Return ``ctx.UNCHANGED`` to leave the value as is (the analog of the
-    reference's ``return undefined``; Python's bare ``return`` yields None,
-    so the sentinel must be explicit); return any other value — INCLUDING
-    ``None``, which sets SQL NULL like the reference's ``return null``
-    (AutoValueRunner.ts:146) — to set it; call ``ctx.unset()`` to remove
-    the value (also NULL in columnar form).
-    """
-
-    class UNCHANGED:
-        """Sentinel: a CLASS (not an instance) so pickling the autoValue
-        closure to executors preserves identity — classes unpickle by
-        module reference, so ``res is ctx.UNCHANGED`` holds on workers."""
-
-    __slots__ = ("key", "value", "row", "_unset")
-
-    #: doc-mode analog of the reference's ``this.operator`` (null outside
-    #: modifiers, AutoValueRunner.ts:74) — the modifier-mode context
-    #: carries the real operator
-    operator: "str | None" = None
-
-    def __init__(self, key: str, value: Any, row: dict):
-        self.key = key
-        self.value = value
-        self.row = row
-        self._unset = False
-
-    @property
-    def is_set(self) -> bool:
-        return self.value is not None
-
-    def unset(self) -> None:
-        self._unset = True
-
-    def parent_field(self) -> Any:
-        """Value of the containing object (this.parentField()); None at
-        top level, where the reference reports an unset field."""
-        parent, _, _ = self.key.rpartition(".")
-        return self.field(parent) if parent else None
-
-    def field(self, path: str) -> Any:
-        if path in self.row:
-            return self.row[path]
-        cur: Any = self.row
-        for seg in path.split("."):
-            if cur is None:
-                return None
-            cur = cur.get(seg) if isinstance(cur, dict) else getattr(cur, seg, None)
-        return cur
-
-    def sibling_field(self, name: str) -> Any:
-        parent, _, _ = self.key.rpartition(".")
-        return self.field(f"{parent}.{name}" if parent else name)
-
-
 def _apply_python_auto_value(df: DataFrame, key: str, fn: Callable) -> DataFrame:
-    """Opaque Python autoValue via ONE Arrow-batched pandas UDF (slow path;
-    prefer @spark_auto_value expressions).  The UDF returns the column's
-    existing Spark type.  Deeply nested context/value columns take the
-    arrowsafe JSON detour (see arrowsafe.ctx_safe_struct)."""
-    import json as _json
+    """Opaque Python autoValue (slow path; prefer @spark_auto_value
+    expressions): ONE Arrow UDF returning the column's own Spark type runs
+    ``fn`` on a :class:`~.compiler.validators.FieldContext` per row (the
+    reference's AutoValueRunner context, src/clean/AutoValueRunner.ts:42-147;
+    ``operator`` is None outside modifiers).  ``ctx.UNCHANGED`` leaves the
+    value, any other return (None too) sets it, ``ctx.unset()`` removes it
+    (NULL in columnar form)."""
+    cols, unpack = arrow_inputs(df.schema, key, fn)
 
-    import pandas as pd
+    def run(*inputs):
+        v, row = unpack(*inputs)
+        ctx = FieldContext(key, v, row)
+        res = fn(ctx)
+        return None if ctx.unset_called else v if res is ctx.UNCHANGED else res
 
-    from .arrowsafe import ctx_safe_struct, decode_ctx_row, needs_arrow_guard
-
-    dtype = df.schema
-    for seg in key.split("."):
-        dtype = dtype[seg].dataType if isinstance(dtype, T.StructType) else dtype
-    declared = getattr(fn, "context_fields", None)
-    ctx_cols = list(declared) if declared else list(df.columns)
-    ctx_cols = [c for c in ctx_cols if not c.startswith("__")]
-    decode_value = needs_arrow_guard(dtype)
-
-    ctx_struct, jsonified = ctx_safe_struct(df.schema, ctx_cols)
-
-    def _apply(values, nulls, ctx_rows):
-        out = []
-        for v, is_null, row in zip(values, nulls, ctx_rows.to_dict("records")):
-            if is_null:
-                # Arrow renders a NULL in an integral column as float NaN —
-                # the JVM-side flag is the truth for is_set
-                v = None
-            elif decode_value and isinstance(v, str):
-                v = _json.loads(v)
-            ctx = PythonAutoValueContext(
-                key, v, decode_ctx_row(row, jsonified)
-            )
-            res = fn(ctx)
-            if ctx._unset:
-                # this.unset() → value removed (NULL in columnar form)
-                out.append(None)
-            elif res is PythonAutoValueContext.UNCHANGED:
-                # reference `return undefined` = no change; Python has no
-                # undefined, so the sentinel is explicit — a bare `return`
-                # (None) SETS null, matching the reference's `return null`
-                out.append(v)
-            else:
-                out.append(res)
-        return pd.Series(out, dtype=object)
-
-    udf = F.pandas_udf(_apply, dtype)
-    if decode_value:
-        return _set_path(
-            df, key, lambda c: udf(F.to_json(c), c.isNull(), ctx_struct)
-        )
-    return _set_path(df, key, lambda c: udf(c, c.isNull(), ctx_struct))
+    udf = arrow_udf(partial(map, run), resolve_dtype(df.schema, key))
+    return _set_path(df, key, lambda c: udf(*cols))
 
 
 def _array_levels(key: str) -> tuple[str, list[str]]:
@@ -539,117 +447,53 @@ def _apply_python_array_auto_value(
     df: DataFrame, key: str, fn: Callable
 ) -> DataFrame:
     """Opaque Python autoValue on array-item keys (nested to arbitrary
-    depth): ONE Arrow-batched UDF takes the whole OUTER array column and
-    returns the rebuilt array — per-leaf Python execution, zero
-    explode/shuffle, same shape as the array-item validator path."""
-    head, mids = _array_levels(key)
-    top = head.split(".")[0]
-    if top not in df.columns:
+    depth): ONE Arrow UDF takes the whole OUTER array column and returns
+    the rebuilt array — per-leaf Python execution, zero explode/shuffle,
+    the same shape as the array-item validator path, and the same
+    context and returns as :func:`_apply_python_auto_value`."""
+    head, levels = _array_levels(key)
+    if head.split(".")[0] not in df.columns:
         return df
-    import pandas as pd
+    cols, unpack = arrow_inputs(df.schema, head, fn, whole_array=True)
 
-    arr_type = df.schema
-    for seg in head.split("."):
-        arr_type = arr_type[seg].dataType if isinstance(arr_type, T.StructType) else arr_type
-    declared = getattr(fn, "context_fields", None)
-    ctx_cols = list(declared) if declared else list(df.columns)
-    ctx_cols = [c for c in ctx_cols if not c.startswith("__")]
+    def run(*inputs):
+        arr, row = unpack(*inputs)
 
-    def get_sub(el, path):
-        if not path:
-            return el
-        cur = el
-        for seg in path.split("."):
-            if cur is None:
+        def leaf(el, path):
+            # NULL element with a field path: nothing to write into — leave
+            # it null, matching the expression path (withField on a null
+            # struct)
+            if el is None and path:
                 return None
-            cur = cur.get(seg) if isinstance(cur, dict) else getattr(cur, seg, None)
-        return cur
+            ctx = FieldContext(key, FieldContext.get(el, path), row)
+            res = fn(ctx)
+            if ctx.unset_called:
+                res = None
+            elif res is ctx.UNCHANGED:
+                return el
+            return _set_sub(el, path, res)
 
-    def set_sub(el, path, val):
-        if not path:
-            return val
-        d = dict(el) if isinstance(el, dict) else el.asDict(recursive=True)
-        segs = path.split(".")
-        cur = d
-        for seg in segs[:-1]:
-            nxt = cur.get(seg)
-            nxt = dict(nxt) if isinstance(nxt, dict) else {}
-            cur[seg] = nxt
-            cur = nxt
-        cur[segs[-1]] = val
-        return d
+        return walk_items(arr, levels, leaf, _set_sub)
 
-    from .arrowsafe import arrow_safe_array, ctx_safe_struct, decode_ctx_row, needs_arrow_guard
+    udf = arrow_udf(partial(map, run), resolve_dtype(df.schema, head))
+    # null and empty arrays stay as they are (the UDF gets them flagged)
+    return _set_path(df, head, lambda arr: F.when(F.size(arr) > 0, udf(*cols)).otherwise(arr))
 
-    ctx_struct, jsonified = ctx_safe_struct(df.schema, ctx_cols)
 
-    def run_leaf(el, leaf, row):
-        # NULL element with a field path: nothing to write into — leave it
-        # null, matching the expression path (withField on a null struct)
-        if el is None and leaf:
-            return None
-        v = get_sub(el, leaf)
-        ctx = PythonAutoValueContext(key, v, row)
-        res = fn(ctx)
-        if ctx._unset:
-            return set_sub(el, leaf, None)
-        if res is PythonAutoValueContext.UNCHANGED:
-            return el
-        return set_sub(el, leaf, res)
-
-    def run_arr(arr, row, level):
-        # mids[level]: leaf path at the innermost level, else the path from
-        # this level's element to the next array
-        if arr is None:
-            return None
-        if level == len(mids) - 1:
-            return [run_leaf(el, mids[level], row) for el in arr]
-        out = []
-        for el in arr:
-            inner = get_sub(el, mids[level])
-            if inner is None:
-                out.append(el)
-                continue
-            out.append(set_sub(el, mids[level], run_arr(inner, row, level + 1)))
-        return out
-
-    if needs_arrow_guard(arr_type):
-        # see arrowsafe: null/empty top-level arrays of deeply nested
-        # types segfault the Arrow input conversion — ship [null] plus a
-        # dummy flag (the fn must never see the dummy element) and gate
-        # the result back to the original null/empty value
-        def _apply_g(dummies, arrs, ctx_rows):
-            rows = ctx_rows.to_dict("records")
-            return pd.Series(
-                [None if d else run_arr(a, decode_ctx_row(r, jsonified), 0)
-                 for d, a, r in zip(dummies, arrs, rows)],
-                dtype=object,
-            )
-
-        udf_g = F.pandas_udf(_apply_g, arr_type)
-        return _set_path(
-            df,
-            head,
-            lambda arr: F.when(
-                F.size(arr) > 0,
-                udf_g(
-                    F.coalesce(F.size(arr) <= 0, F.lit(True)),
-                    arrow_safe_array(arr, arr_type),
-                    ctx_struct,
-                ),
-            ).otherwise(arr),
-        )
-
-    def _apply(arrs, ctx_rows):
-        rows = ctx_rows.to_dict("records")
-        return pd.Series(
-            [run_arr(a, decode_ctx_row(r, jsonified), 0)
-             for a, r in zip(arrs, rows)],
-            dtype=object,
-        )
-
-    udf = F.pandas_udf(_apply, arr_type)
-    return _set_path(df, head, lambda arr: udf(arr, ctx_struct))
+def _set_sub(el: Any, path: str, val: Any) -> Any:
+    """``el`` (a dict or Row) with ``val`` at the dotted ``path``."""
+    if not path:
+        return val
+    d = dict(el) if isinstance(el, dict) else el.asDict(recursive=True)
+    segs = path.split(".")
+    cur = d
+    for seg in segs[:-1]:
+        nxt = cur.get(seg)
+        nxt = dict(nxt) if isinstance(nxt, dict) else {}
+        cur[seg] = nxt
+        cur = nxt
+    cur[segs[-1]] = val
+    return d
 
 
 def _apply_auto_values(df: DataFrame, schema: SimpleSchema) -> DataFrame:
@@ -658,8 +502,8 @@ def _apply_auto_values(df: DataFrame, schema: SimpleSchema) -> DataFrame:
 
     Dispatch per fn: @spark_auto_value → Column expression (fast path,
     fused into the projection); array-position keys → F.transform
-    write-back; anything else → Arrow-batched pandas UDF with a per-row
-    context (field/sibling_field/unset)."""
+    write-back; anything else → one Arrow UDF with a per-row
+    ``FieldContext`` (field/sibling_field/parent_field/unset)."""
     avs = schema.auto_value_functions()
     avs.sort(key=lambda kv: kv[0].count("."))
     for key, fn in avs:

@@ -39,7 +39,7 @@ Semantics parity map (reference = longshotlabs/simpl-schema):
 from __future__ import annotations
 
 import inspect
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Any, Callable, Optional
 
 from pyspark.sql import Column, functions as F, types as T
@@ -118,29 +118,20 @@ class RuleContext:
 
 @dataclass
 class _PandasRule:
-    """A deferred Arrow-vectorized custom validator (row-level keys only).
+    """A deferred Arrow-vectorized Python validator: its UDF column is
+    added before the violations projection (``validation``).
 
-    ``input_cols`` holds the (dotted) path of the validated leaf value;
-    ``context_cols`` — non-empty for two-argument validators — lists the
-    additional top-level columns shipped to Python as a struct so the fn's
-    context can resolve ``field()``/``sibling_field()`` lookups.
-    """
+    ``path`` is the (dotted) column of the validated value, None when the
+    column is absent.  An ``elementwise`` rule (an array-item key) takes
+    the WHOLE outer array of its key instead and returns an error type per
+    item, nested one list level per array level of the key: no explode,
+    no shuffle."""
 
     key: str
-    column_name: str              # output column holding error-type string
-    fn: Callable                  # pd.Series -> pd.Series[str|None]
-    input_cols: list[str] = field(default_factory=list)
-    context_cols: list[str] = field(default_factory=list)
-    spark_type: T.DataType = field(default_factory=T.StringType)
-    # array-item rules: the UDF takes the WHOLE array column and returns
-    # array<string> (error type per element) — no explode, no shuffle
+    column_name: str              # output column holding the error type
+    fn: Callable
+    path: Optional[str] = None
     elementwise: bool = False
-    item_subpath: str = ""        # path inside each element ('' = the element)
-    # nested array-item rules (a.$.b.$.c, arbitrarily deep): path from each
-    # array level's element to the NEXT level's array; the UDF returns
-    # arrays nested one level per entry+1 (array<string>, array<array<
-    # string>>, …) and the nested lambdas pick entries by index per level
-    between_subpaths: list[str] = field(default_factory=list)
 
 
 class RuleCompiler:
@@ -166,10 +157,9 @@ class RuleCompiler:
         # (generic, fn) → column name: the custom tail is compiled both for
         # the value-present and value-null branches; register one UDF only
         self._pandas_cache: dict[tuple[str, Callable], str] = {}
-        # stack of (item_generic, index Column) while compiling inside
-        # array-item lambdas — lets Python custom validators on item keys
-        # resolve to elementwise pandas rules
-        self._lambda_frames: list[tuple[str, Column]] = []
+        # index Columns of the array-item lambdas being compiled: Python
+        # validators on item keys pick their error type by index
+        self._lambda_indexes: list[Column] = []
 
     # -------------------------------------------------------------- public
 
@@ -344,7 +334,7 @@ class RuleCompiler:
 
         def per_item(x: Column, i: Column) -> Column:
             item_name = F.concat(arr_name, F.lit("."), i.cast("string"))
-            self._lambda_frames.append((item_generic, i))
+            self._lambda_indexes.append(i)
             try:
                 item_arrays = self._compile_key(
                     item_generic,
@@ -355,7 +345,7 @@ class RuleCompiler:
                     in_lambda=True,
                 )
             finally:
-                self._lambda_frames.pop()
+                self._lambda_indexes.pop()
             if not item_arrays:
                 return F.array().cast(T.ArrayType(VIOLATION_SCHEMA))
             return F.array_compact(F.flatten(F.array(*item_arrays)))
@@ -417,18 +407,6 @@ class RuleCompiler:
 
         return rules.first(chain)
 
-    def _context_cols_for(self, custom: Callable) -> list[str]:
-        """Columns shipped as the cross-field context struct for a
-        two-argument Python validator; empty for value-only fns."""
-        if not wants_context(custom):
-            return []
-        declared = getattr(custom, "context_fields", None)
-        if declared:
-            return list(declared)
-        # fn may read any field: ship all top-level data columns.
-        # Declare fn.context_fields = [...] to keep the batch narrow.
-        return [f.name for f in self.df_schema.fields]
-
     def _custom_error(
         self,
         generic: str,
@@ -442,9 +420,8 @@ class RuleCompiler:
             err_type = custom(view.value, RuleContext(key=generic, name=name, definition=alt))
         else:
             err_type = F.col(self._pandas_rule(generic, view.dtype, custom, in_lambda))
-            if in_lambda:
-                for _, frame_idx in self._lambda_frames:
-                    err_type = F.get(err_type, frame_idx)
+            for i in self._lambda_indexes:
+                err_type = F.get(err_type, i)
         return check(err_type.isNotNull(), violation(name, err_type, value=view.display))
 
     def _pandas_rule(
@@ -458,7 +435,8 @@ class RuleCompiler:
         projection.  Row-level keys ship the LEAF value (F.col resolves
         dotted struct paths); two-argument validators also get a per-row
         context with field()/sibling_field() resolved from a shipped struct
-        of context columns (reference ValidatorContext, src/types.ts:230-240).
+        of context columns (reference ValidatorContext, src/types.ts:230-240;
+        ``arrowsafe.arrow_inputs`` chooses the columns).
 
         Array-item keys (validateField.ts:293-306) ship the WHOLE outer
         array: the UDF returns an error type per element, nested one array
@@ -476,24 +454,10 @@ class RuleCompiler:
             f"__custom_{self._pandas_counter}_"
             f"{generic.replace('.', '_').replace('$', 'I')}"
         )
-        rule = _PandasRule(
-            key=generic,
-            column_name=col_name,
-            fn=custom,
-            context_cols=self._context_cols_for(custom),
-        )
-        if in_lambda:
-            frames = [g for g, _ in self._lambda_frames]
-            rule.input_cols = [frames[0][: -len(".$")]]
-            rule.elementwise = True
-            rule.item_subpath = generic[len(frames[-1]):].lstrip(".")
-            rule.between_subpaths = [
-                nxt[len(prev): -len(".$")].strip(".")
-                for prev, nxt in zip(frames, frames[1:])
-            ]
-        elif not isinstance(dtype, T.NullType):
+        rule = _PandasRule(key=generic, column_name=col_name, fn=custom, elementwise=in_lambda)
+        if not in_lambda and not isinstance(dtype, T.NullType):
             # absent column (NullType): a null literal is shipped instead
-            rule.input_cols = [generic]
+            rule.path = generic
         self.pandas_rules.append(rule)
         self._pandas_cache[cache_key] = col_name
         return col_name

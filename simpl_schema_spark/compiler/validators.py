@@ -1,26 +1,32 @@
-"""Custom validators: the Python-validator UDFs of every mode, and the
-custom chain of a JSON token shared by modifier rows and JSON documents.
+"""The engine's one Python boundary: every Python validator, document
+validator and opaque autoValue runs in an Arrow UDF built by
+:func:`arrow_udf`, and reads its row through a :class:`FieldContext`.
 
 Custom validators run after the built-in rules of a key, in the reference's
 order: the key's ``custom``, then schema-level, then global validators
 (validateField.ts:192-226, SimpleSchema.ts:825-827,1059-1061).
 ``@spark_rule`` validators compile into the projection; Python ones ride
-Arrow-batched pandas UDFs built here:
+the UDFs built here from per-row functions:
 
-- :func:`value_udf` — one value per row (a typed value or a JSON token).
-  The value decoder and the context-row source are arguments.
-- :func:`item_merge_udf` — per-element merge for JSON arrays (``$each`` and
-  JSON-document arrays): Python UDF results cannot be referenced inside
-  higher-order-function lambdas, so the merge with the expression
-  violations runs in one UDF over the whole array.
+- :func:`value_udf` — one validator on one value per row: a typed value
+  (shipped by ``arrowsafe.arrow_inputs``) or a JSON token.
+- :func:`item_udf` — one validator on every item of a typed array key
+  (``a.$.b.$.c``), its error types nested one list level per array level.
+- :func:`token_item_rules` — the per-element chain of a JSON array
+  (``$each`` and JSON-document arrays): Python UDF results cannot be
+  referenced inside higher-order-function lambdas, so the merge with the
+  expression violations runs in one UDF over the whole array.
 
-(Typed nested arrays keep their own whole-array UDF in ``validation``.)
+Document validators (``validation``), autoValues (``cleaning``) and
+modifier autoValues (``modifiers``) pass their own per-row functions to
+:func:`arrow_udf`.
 """
 
 from __future__ import annotations
 
 import json
-from typing import Any, Callable, Optional
+from functools import partial
+from typing import Any, Callable, Iterable, Optional
 
 import pandas as pd
 
@@ -28,53 +34,98 @@ from pyspark.sql import Column, functions as F, types as T
 
 from ..errors import VIOLATION_FIELDS, VIOLATION_SCHEMA
 from .compile import RuleContext, is_spark_rule, wants_context
-from .rules import TokenView, check, violation
+from .rules import TokenView, check, first, null_violation, value_error, violation
 
-__all__ = ["FieldContext", "value_udf", "item_merge_udf", "token_custom_rules"]
+__all__ = [
+    "FieldContext",
+    "arrow_udf",
+    "value_udf",
+    "item_udf",
+    "walk_items",
+    "token_custom_rules",
+    "token_item_rules",
+]
 
 
 class FieldContext:
-    """Per-row cross-field context for Python custom validators.
+    """Per-row context of a Python validator or autoValue: the reference's
+    ValidatorContext (src/types.ts:230-240) and AutoValueRunner context
+    (src/clean/AutoValueRunner.ts:42-147).
 
-    Mirrors the reference's ValidatorContext (src/types.ts:230-240):
-    ``value``, ``key``, ``field(path)``, ``sibling_field(name)``, ``is_set``.
-    ``row`` is a plain dict of the row's context (nested structs arrive as
-    dicts via Arrow).
+    ``row`` is a plain dict of the document: its columns (nested structs
+    as dicts), a parsed JSON document, or a modifier document's decoded
+    value entries by key.  ``is_set`` is the value being non-NULL unless
+    given (a modifier key ``$set`` to null is set); ``operator`` is the
+    modifier operator (None outside modifiers) and ``is_upsert`` the
+    document's upsert flag.
+
+    An autoValue returns :class:`UNCHANGED` to leave the value as is (the
+    reference's ``return undefined``; Python's bare ``return`` gives None,
+    which SETS null like the reference's ``return null``,
+    AutoValueRunner.ts:146), and calls :meth:`unset` to remove it.
     """
 
-    __slots__ = ("key", "value", "row")
+    class UNCHANGED:
+        """Sentinel: a class, so its identity survives pickling to executors."""
 
-    def __init__(self, key: str, value: Any, row: dict):
+    __slots__ = ("key", "value", "row", "is_set", "operator", "is_upsert", "unset_called")
+
+    def __init__(self, key: str, value: Any, row: dict, *, is_set: Optional[bool] = None,
+                 operator: Optional[str] = None, is_upsert: bool = False) -> None:
         self.key = key
         self.value = value
         self.row = row
+        self.is_set = value is not None if is_set is None else is_set
+        self.operator = operator
+        self.is_upsert = is_upsert
+        self.unset_called = False
 
-    @property
-    def is_set(self) -> bool:
-        return self.value is not None
+    def unset(self) -> None:
+        self.unset_called = True
+
+    @staticmethod
+    def get(obj: Any, path: str) -> Any:
+        """``obj``'s value at the dotted ``path`` ('' is ``obj``) through
+        dicts and Rows; None past a missing step."""
+        for seg in path.split(".") if path else ():
+            if obj is None:
+                return None
+            obj = obj.get(seg) if isinstance(obj, dict) else getattr(obj, seg, None)
+        return obj
 
     def field(self, path: str) -> Any:
+        """Value of any key of the document (this.field())."""
         if path in self.row:  # declared dotted context_fields ship flat
             return self.row[path]
-        cur: Any = self.row
-        for seg in path.split("."):
-            if cur is None:
-                return None
-            cur = cur.get(seg) if isinstance(cur, dict) else getattr(cur, seg, None)
-        return cur
+        return self.get(self.row, path)
 
     def sibling_field(self, name: str) -> Any:
         parent, _, _ = self.key.rpartition(".")
         return self.field(f"{parent}.{name}" if parent else name)
 
+    def parent_field(self) -> Any:
+        """Value of the containing object (this.parentField()); None at
+        top level, where the reference reports an unset field."""
+        parent, _, _ = self.key.rpartition(".")
+        return self.field(parent) if parent else None
 
-# ------------------------------------------------------------ value decoders
-# A decoder maps (raw value, flag) to the validator's input, or SKIP when
-# the validator must not run for the row (its result is then NULL).
+
+def arrow_udf(per_batch: Callable[..., Iterable], return_type: T.DataType):
+    """The engine's one Arrow UDF.  ``per_batch(*columns)`` gets each
+    argument column of a batch as a sequence of plain values (a struct
+    column as dicts) and returns the batch's results in row order; a
+    per-row ``fn`` ships as ``partial(map, fn)``."""
+
+    def _apply(*cols: pd.Series) -> pd.Series:
+        args = [c.to_dict("records") if isinstance(c, pd.DataFrame) else c for c in cols]
+        return pd.Series(list(per_batch(*args)), dtype=object)
+
+    return F.pandas_udf(_apply, return_type)
 
 
 class SKIP:
-    """Sentinel (a class: its identity survives pickling to executors)."""
+    """Sentinel value: the validator does not run for the row (its result
+    is NULL); a class, so its identity survives pickling to executors."""
 
 
 def decode_token(tok: Optional[str]) -> Any:
@@ -98,102 +149,74 @@ def display_token(tok: Optional[str]) -> Optional[str]:
     return s
 
 
-def typed_value(v: Any, is_null: bool) -> Any:
-    """Typed column value; the JVM-computed is-null flag guards against
-    Arrow rendering a NULL in an integral column as NaN."""
-    return None if is_null else v
+def value_udf(fn: Callable, key: str, unpack: Callable[..., tuple[Any, dict]]):
+    """Arrow UDF ``(*inputs) -> error type`` running one Python validator
+    per row; ``unpack(*inputs)`` gives the row's ``(value, context row)``,
+    value :class:`SKIP` where the validator must not run.  A ``vectorized``
+    validator without context gets the batch's values as one Series."""
+    wants = wants_context(fn)
+
+    def run(*inputs):
+        v, row = unpack(*inputs)
+        if v is SKIP:
+            return None
+        return fn(v, FieldContext(key, v, row)) if wants else fn(v)
+
+    def run_batch(*cols):
+        vals = [unpack(*inputs)[0] for inputs in zip(*cols)]
+        kept = [v is not SKIP for v in vals]
+        res = fn(pd.Series([v if k else None for v, k in zip(vals, kept)], dtype=object))
+        return [r if k else None for r, k in zip(res, kept)]
+
+    vectorized = getattr(fn, "vectorized", False) and not wants
+    return arrow_udf(run_batch if vectorized else partial(map, run), T.StringType())
 
 
-def json_typed_value(v: Any, is_null: bool) -> Any:
-    """Typed value that took the to_json detour (deeply nested types)."""
-    return None if is_null else (json.loads(v) if isinstance(v, str) else v)
+def walk_items(arr: Any, levels: list[str], leaf: Callable[[Any, str], Any],
+               rebuild: Optional[Callable[[Any, str, Any], Any]] = None) -> Any:
+    """``leaf(element, path)`` at every innermost element of the nested
+    array ``arr`` (None stays None); ``levels[i]`` is the path from a level
+    ``i`` element to the next array, the last one to the value.  Returns
+    the leaf results nested like the arrays, or with ``rebuild(element,
+    path, inner)`` each outer element rebuilt around its new inner array
+    (an element without one is kept)."""
 
-
-def token_value(tok: Optional[str], keep: bool) -> Any:
-    """JSON token, run only where the row mask holds."""
-    return decode_token(tok) if keep else SKIP
-
-
-def value_udf(
-    fn: Callable,
-    key: str,
-    decode: Callable[[Any, bool], Any],
-    context: Optional[Callable[[Any], dict]] = None,
-):
-    """Arrow UDF ``(values, flags[, contexts]) -> error type`` running one
-    Python validator per row.  ``decode(value, flag)`` gives the validator's
-    input (or :data:`SKIP`); ``context(item)`` turns one context item into
-    the row dict of a two-argument validator's :class:`FieldContext`.  A
-    ``vectorized`` validator without context gets the whole decoded Series."""
-    vectorized = getattr(fn, "vectorized", False) and context is None
-
-    def _apply(values: pd.Series, flags: pd.Series, *ctx: pd.Series) -> pd.Series:
-        vals = [decode(v, f) for v, f in zip(values, flags)]
-        if vectorized:
-            kept = pd.Series([v is not SKIP for v in vals])
-            res = fn(pd.Series([v if k else None for v, k in zip(vals, kept)], dtype=object))
-            return res if kept.all() else res.astype(object).where(kept.values, None)
-        if ctx:
-            items = ctx[0].to_dict("records") if isinstance(ctx[0], pd.DataFrame) else ctx[0]
-            rows = [context(i) for i in items]
-        else:
-            rows = [None] * len(vals)
-        return pd.Series(
-            [
-                None if v is SKIP
-                else fn(v, FieldContext(key, v, row)) if context else fn(v)
-                for v, row in zip(vals, rows)
-            ],
-            dtype=object,
-        )
-
-    return F.pandas_udf(_apply, T.StringType())
-
-
-def item_merge_udf(
-    fns: list[Callable],
-    item_key: str,
-    context: Optional[Callable[[Any], dict]] = None,
-    indexed: bool = False,
-):
-    """Arrow UDF ``(expr_violations, tokens, name, contexts) ->
-    array<violation>``: per element, the expression violation (built-in +
-    ``@spark_rule``, computed JVM-side) wins, else the first Python
-    validator returning an error type.  Elements are named ``name.<i>``
-    when ``indexed``, else ``name``."""
-    wants = [wants_context(fn) for fn in fns]
-    field_names = [nm for nm, _ in VIOLATION_FIELDS]
-
-    def run(expr_viols, tokens, name, ctx):
-        if tokens is None:
-            return []
-        row = context(ctx) if context is not None and any(wants) else {}
+    def walk(arr, level):
+        if arr is None:
+            return None
+        path = levels[level]
+        if level == len(levels) - 1:
+            return [leaf(el, path) for el in arr]
         out = []
-        for i, tok in enumerate(tokens):
-            ev = expr_viols[i] if expr_viols is not None and i < len(expr_viols) else None
-            if ev is not None and ev.get("type") is not None:
-                out.append(ev)
-                continue
-            val = decode_token(tok)
-            for fn, w in zip(fns, wants):
-                et = fn(val, FieldContext(item_key, val, row)) if w else fn(val)
-                if et is not None:
-                    viol = dict.fromkeys(field_names)
-                    viol.update(
-                        name=f"{name}.{i}" if indexed else name,
-                        type=et,
-                        value=display_token(tok),
-                    )
-                    out.append(viol)
-                    break
+        for el in arr:
+            inner = FieldContext.get(el, path)
+            res = None if inner is None else walk(inner, level + 1)
+            out.append(res if rebuild is None else el if inner is None else rebuild(el, path, res))
         return out
 
-    def _apply(expr: pd.Series, arrs: pd.Series, names: pd.Series, ctxs: pd.Series) -> pd.Series:
-        return pd.Series(
-            [run(e, a, n, c) for e, a, n, c in zip(expr, arrs, names, ctxs)], dtype=object
-        )
+    return walk(arr, 0)
 
-    return F.pandas_udf(_apply, T.ArrayType(VIOLATION_SCHEMA))
+
+def item_udf(fn: Callable, key: str, levels: list[str], unpack: Callable[..., tuple[Any, dict]]):
+    """Arrow UDF over the WHOLE outer array of an array-item key: the error
+    type of each item, nested one list level per array level of ``key``,
+    which the compiler's lambdas pick by index.  ``unpack`` gives the
+    row's ``(array, context row)``; a NULL array gives NULL."""
+    wants = wants_context(fn)
+
+    def run(*inputs):
+        arr, row = unpack(*inputs)
+
+        def leaf(el, path):
+            v = FieldContext.get(el, path)
+            return fn(v, FieldContext(key, v, row)) if wants else fn(v)
+
+        return walk_items(arr, levels, leaf)
+
+    out_t: T.DataType = T.StringType()
+    for _ in levels:
+        out_t = T.ArrayType(out_t)
+    return arrow_udf(partial(map, run), out_t)
 
 
 # ------------------------------------------------------- JSON-token chain
@@ -230,8 +253,80 @@ def token_custom_rules(
             err_type = fn(view.typed(alts), RuleContext(key=key, name=name, definition=alts[0]))
         else:
             ctx = context if wants_context(fn) else None
-            udf = value_udf(fn, key, token_value, ctx[1] if ctx else None)
+            decode_row = ctx[1] if ctx else None
+
+            def unpack(tok, keep, ctx_item=None, decode_row=decode_row):
+                row = {} if decode_row is None else decode_row(ctx_item)
+                return (decode_token(tok) if keep else SKIP), row
+
+            udf = value_udf(fn, key, unpack)
             args = [view.json, F.lit(True) if mask is None else mask]
             err_type = udf(*args, *([ctx[0]] if ctx else []))
         out.append(check(err_type.isNotNull(), violation(name, err_type, value=view.display)))
     return out
+
+
+def token_item_rules(
+    elems: Column,
+    name: Column,
+    key: str,
+    alts: list[dict],
+    fns: list[Callable],
+    *,
+    op: Optional[Column] = None,
+    indexed: bool = False,
+    context: Optional[tuple[Column, Callable[[Any], dict]]] = None,
+) -> Column:
+    """Violations of the elements ``elems`` (``array<variant>``) of a JSON
+    array under the item key ``key``, named ``name.<i>`` when ``indexed``,
+    else ``name``.  Per element the built-in rules and ``@spark_rule`` fns
+    give one coalesced error inside one ``transform`` lambda; where they
+    give none, the first Python fn's error, from one Arrow UDF over the
+    whole array.  ``op`` is the modifier operator of the row and
+    ``context`` the (column, row decoder) pair for two-argument fns."""
+    spark_fns = [fn for fn in fns if is_spark_rule(fn)]
+    py_fns = [fn for fn in fns if not is_spark_rule(fn)]
+
+    def elem_err(e: Column, elem_name: Column) -> Column:
+        ev = TokenView(e, op)
+        err = first(
+            [value_error(ev, elem_name, alts)]
+            + token_custom_rules(ev, elem_name, key, alts, spark_fns)
+        )
+        return null_violation() if err is None else err
+
+    if indexed:
+        expr_arr = F.transform(elems, lambda e, i: elem_err(e, F.concat(name, F.lit("."), i.cast("string"))))
+    else:
+        expr_arr = F.transform(elems, lambda e: elem_err(e, name))
+    if not py_fns:
+        return F.filter(expr_arr, lambda x: x.isNotNull())
+
+    wants = [wants_context(fn) for fn in py_fns]
+    decode_row = context[1] if context is not None and any(wants) else None
+    field_names = [nm for nm, _ in VIOLATION_FIELDS]
+
+    def run(expr_viols, tokens, name, ctx=None):
+        if tokens is None:
+            return []
+        row = {} if decode_row is None else decode_row(ctx)
+        out = []
+        for i, tok in enumerate(tokens):
+            ev = expr_viols[i] if expr_viols is not None and i < len(expr_viols) else None
+            if ev is not None and ev.get("type") is not None:
+                out.append(ev)
+                continue
+            val = decode_token(tok)
+            for fn, w in zip(py_fns, wants):
+                et = fn(val, FieldContext(key, val, row)) if w else fn(val)
+                if et is not None:
+                    viol = dict.fromkeys(field_names)
+                    viol.update(name=f"{name}.{i}" if indexed else name, type=et,
+                                value=display_token(tok))
+                    out.append(viol)
+                    break
+        return out
+
+    udf = arrow_udf(partial(map, run), T.ArrayType(VIOLATION_SCHEMA))
+    ctx_col = [context[0]] if decode_row is not None else []
+    return udf(expr_arr, F.transform(elems, lambda e: F.to_json(e)), name, *ctx_col)

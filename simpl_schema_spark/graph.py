@@ -30,6 +30,14 @@ with ``localCheckpoint`` every ``checkpoint_every`` iterations — the two
 classic iterative-Spark failure modes (cache accumulation, unbounded
 plan growth).  Skewed in-degree (everyone links to google.com) is safe:
 the dst-side aggregation is map-side combinable.
+
+Fault tolerance: ``localCheckpoint`` (the edge and vertex tables, and the
+rank table every ``checkpoint_every`` iterations) stores its blocks on
+the executors and cuts the lineage, so nothing can recompute a lost
+block.  On a cluster, losing an executor after a checkpoint, including a
+dynamic-allocation decommission, aborts the job instead of recomputing
+the partitions, as a ``persist`` would.  On one host (local mode) the
+driver is the executor and nothing is lost.
 """
 
 from __future__ import annotations

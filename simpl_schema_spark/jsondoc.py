@@ -39,11 +39,9 @@ from typing import Iterable
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from .compiler.compile import is_spark_rule
 from .compiler.memo import compiled
 from .compiler.rules import (
     TokenView,
-    null_violation,
     check,
     first,
     is_any,
@@ -54,9 +52,9 @@ from .compiler.rules import (
 )
 from .compiler.validators import (
     decode_token,
-    item_merge_udf,
     token_custom_rules,
     token_customs,
+    token_item_rules,
 )
 from .errors import ErrorTypes, VIOLATION_SCHEMA
 from .schema.schema import SimpleSchema
@@ -173,41 +171,16 @@ def json_violations_column(
             arrays.append(F.array(first(chain)))
         # per-ELEMENT item checks for declared arrays: array<variant>
         # extraction keeps each element's JSON token; violations get
-        # concrete-index names (validateField.ts:293-306); custom item
-        # validators (Python + @spark_rule) coalesce with the built-in
-        # rules so each concrete element key keeps one error
+        # concrete-index names (validateField.ts:293-306)
         item_key = f"{k}.$"
         if item_key in merged and not is_blackboxed(item_key):
             item_alts = schema.resolved_alternatives(item_key)
             item_fns = token_customs(schema, item_alts)
             if not is_any(item_alts) or item_fns:
-                spark_fns = [fn for fn in item_fns if is_spark_rule(fn)]
-                py_fns = [fn for fn in item_fns if not is_spark_rule(fn)]
                 elems = reads.elements(k)
-
-                # expression-form rules (built-in + @spark_rule) evaluate
-                # inside ONE transform lambda, one coalesced error per element
-                def elem_err(e: Column, i: Column) -> Column:
-                    elem_name = F.concat(F.lit(k + "."), i.cast("string"))
-                    ev = TokenView(e)
-                    err = first(
-                        [value_error(ev, elem_name, item_alts)]
-                        + token_custom_rules(ev, elem_name, item_key, item_alts, spark_fns)
-                    )
-                    return null_violation() if err is None else err
-
-                expr_arr = F.transform(elems, elem_err)
-                if py_fns:
-                    # Python item validators cannot be referenced inside a
-                    # higher-order-function lambda (Spark analyzer:
-                    # LAMBDA_FUNCTION_WITH_PYTHON_UDF), so the per-element
-                    # merge happens in ONE Arrow-batched UDF over the array
-                    tokens = F.transform(elems, lambda e: F.to_json(e))
-                    per_elem = item_merge_udf(py_fns, item_key, _doc_row, indexed=True)(
-                        expr_arr, tokens, F.lit(k), json_col
-                    )
-                else:
-                    per_elem = F.filter(expr_arr, lambda x: x.isNotNull())
+                per_elem = token_item_rules(
+                    elems, name, item_key, item_alts, item_fns, indexed=True, context=context
+                )
                 arrays.append(F.when(elems.isNotNull(), per_elem).otherwise(empty))
         if is_object_key(alts):
             object_keys.append(k)
@@ -239,9 +212,10 @@ def json_violations_column(
 
     arrays.append(unknown_in(F.json_object_keys(json_col), ""))
     for k in object_keys:
-        sub = reads.view(k).var
-        names = F.map_keys(F.try_variant_get(sub, "$", "map<string,variant>"))
-        arrays.append(F.when(sub.isNotNull(), unknown_in(names, k + ".")).otherwise(empty))
+        # only a JSON object has children: an extended-JSON date is not one
+        view = reads.view(k)
+        names = F.map_keys(F.try_variant_get(view.var, "$", "map<string,variant>"))
+        arrays.append(F.when(view.is_object, unknown_in(names, k + ".")).otherwise(empty))
 
     combined = F.concat(*arrays) if len(arrays) > 1 else arrays[0]
     # malformed document: one malformedJson violation, nothing else (the

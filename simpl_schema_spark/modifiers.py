@@ -42,22 +42,22 @@ The value rules of each key are the shared rule table
 (``compiler/rules.py``) over a JSON-token view that carries the row's
 operator: bounds are skipped under ``$inc`` and ``$currentDate`` checks
 ``now``.  Custom validators run through the JSON-token chain of
-``compiler/validators.py``, shared with JSON documents; two-argument
-Python validators resolve ``field()``/``sibling_field()`` against the
-document's other operator entries (reference getFieldInfo over the
-mongoObject).
+``compiler/validators.py``, shared with JSON documents.  Two-argument
+Python validators and autoValues get the one ``FieldContext``, whose
+``field()``/``sibling_field()``/``parent_field()`` read the document's
+decoded operator entries (reference getFieldInfo over the mongoObject),
+dotted paths walking into object values.
 """
 
 from __future__ import annotations
 
 import json
+from functools import partial
 from typing import Any
-
-import pandas as pd
 
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
-from .cleaning import PythonAutoValueContext, _Cleaner, resolve_clean_options
+from .cleaning import _Cleaner, resolve_clean_options
 from .compiler.compile import is_spark_rule, wants_context
 from .compiler.memo import compiled
 from .compiler.rules import (
@@ -72,10 +72,12 @@ from .compiler.rules import (
     violation,
 )
 from .compiler.validators import (
+    FieldContext,
+    arrow_udf,
     decode_token,
-    item_merge_udf,
     token_custom_rules,
     token_customs,
+    token_item_rules,
 )
 from .errors import ErrorTypes, VIOLATION_SCHEMA
 from .schema.schema import SimpleSchema
@@ -286,32 +288,11 @@ def _modifier_rule_forest(schema: SimpleSchema) -> dict:
         if item_err is None and not item_fns:
             continue
         # $each: every element validated (doValidation.ts:52-58), each read
-        # from the row's parsed variant.  @spark_rule item customs run
-        # inside the transform; Python item customs merge via one Arrow UDF
-        # over the token array (UDF results can't be referenced inside HOF
-        # lambdas)
-        spark_fns = [fn for fn in item_fns if is_spark_rule(fn)]
-        py_fns = [fn for fn in item_fns if not is_spark_rule(fn)]
-
-        def elem_err(e: Column) -> Column:
-            ev = TokenView(e, op)
-            err = first(
-                [value_error(ev, key_path, item_alts)]
-                + token_custom_rules(ev, key_path, item_key, item_alts, spark_fns)
-            )
-            return null_violation() if err is None else err
-
-        elems = view.elements("$['$each']")
-        expr_arr = F.transform(elems, elem_err)
-        if py_fns:
-            entries = context[0] if context else F.lit(None).cast(
-                "array<struct<op:string,key:string,value:string>>"
-            )
-            per_elem = item_merge_udf(py_fns, item_key, _decode_entry_row)(
-                expr_arr, F.transform(elems, lambda e: F.to_json(e)), key_path, entries
-            )
-        else:
-            per_elem = F.filter(expr_arr, lambda x: x.isNotNull())
+        # from the row's parsed variant
+        per_elem = token_item_rules(
+            view.elements("$['$each']"), key_path, item_key, item_alts, item_fns,
+            op=op, context=context,
+        )
         each_err = F.when((generic == k) & is_each, per_elem).otherwise(each_err)
 
     checked = F.when(
@@ -589,53 +570,6 @@ def _modifier_cleaning(schema: SimpleSchema, opts: dict[str, bool]) -> tuple:
     return keep, decode, value, new_op, auto
 
 
-class _ModifierAutoValueContext:
-    """Per-document autoValue context for modifier cleaning — mirrors the
-    reference AutoValueRunner context in modifier mode
-    (src/clean/AutoValueRunner.ts:42-147): ``value``/``is_set`` from the
-    key's operator entry, ``operator`` (the entry's op, ``$set`` for
-    unreferenced keys — reference positions generated for missing keys),
-    ``is_upsert``, ``field()``/``sibling_field()`` resolved from the
-    document's other operator entries, and ``unset()``."""
-
-    # shared sentinel (class → pickles by reference, identity-stable on
-    # executors)
-    UNCHANGED = PythonAutoValueContext.UNCHANGED
-
-    __slots__ = ("key", "value", "operator", "is_upsert", "_ents", "_unset",
-                 "_is_set")
-
-    def __init__(self, key, value, is_set, ents, upsert, operator):
-        self.key = key
-        self.value = value
-        self._is_set = is_set
-        self._ents = ents
-        self.is_upsert = upsert
-        self.operator = operator
-        self._unset = False
-
-    @property
-    def is_set(self) -> bool:
-        return self._is_set
-
-    def unset(self) -> None:
-        self._unset = True
-
-    def field(self, path: str):
-        ent = self._ents.get(path)
-        if ent is None or ent[0] not in _VALUE_OPS:
-            return None
-        return decode_token(ent[1])
-
-    def sibling_field(self, name: str):
-        parent, _, _ = self.key.rpartition(".")
-        return self.field(f"{parent}.{name}" if parent else name)
-
-    def parent_field(self):
-        parent, _, _ = self.key.rpartition(".")
-        return self.field(parent) if parent else None
-
-
 #: operators whose entries carry a usable value for autoValue contexts
 _VALUE_OPS = frozenset(
     ("$set", "$setOnInsert", "$inc", "$push", "$addToSet", "$min", "$max",
@@ -675,9 +609,12 @@ def _modifier_auto_values(schema: SimpleSchema) -> "tuple | None":
     PSEUDO-MODIFIER returns (reference AutoValueRunner.ts:112-142): a fn may
     return ``{"$inc": 1}`` / ``{"$push": ...}`` and the returned operator
     replaces the key's current entry; a plain return sets the value under
-    the key's existing operator (``$set`` when unreferenced).  Contract
-    matches document mode: ``ctx.UNCHANGED`` = leave as is, ``None`` sets
-    JSON null, ``ctx.unset()`` removes the entry.
+    the key's existing operator (``$set`` when unreferenced).  The fn gets
+    the ``FieldContext`` of document mode, plus ``operator``, ``is_upsert``
+    and an ``is_set`` that is true for a key set to JSON null; its row is
+    rebuilt from the document's entries before each run, so a later fn
+    reads an earlier one's result.  ``ctx.UNCHANGED`` = leave as is,
+    ``None`` sets JSON null, ``ctx.unset()`` removes the entry.
 
     AutoValue keys under arrays (``a.$.b``) run POSITIONALLY (reference
     getPositionsForAutoValue.ts:43-148): the fn is applied inside matching
@@ -717,7 +654,7 @@ def _modifier_auto_values(schema: SimpleSchema) -> "tuple | None":
     if not av_fns:
         return None
     av_fns.sort(key=lambda kv: kv[1].count("."))
-    unchanged = PythonAutoValueContext.UNCHANGED
+    unchanged = FieldContext.UNCHANGED
 
     act_t = T.ArrayType(
         T.StructType(
@@ -738,17 +675,21 @@ def _modifier_auto_values(schema: SimpleSchema) -> "tuple | None":
         ops = [p for p in res if str(p).startswith("$")] if isinstance(res, dict) else []
         return (ops[0], _encode_json_value(res[ops[0]])) if ops else (op0, _encode_json_value(res))
 
+    def context(key, value, is_set, ents, upsert, operator):
+        """The fn's context: ``field()`` reads the document's entries as
+        they stand, earlier fns' results included."""
+        row = _decode_entry_row([{"op": o, "key": k, "value": t} for k, (o, t) in ents.items()])
+        return FieldContext(key, value, row, is_set=is_set, operator=operator, is_upsert=bool(upsert))
+
     def run_scalar(k, fn, ents, upsert):
         op0, tok = ents.get(k, (None, None))
         is_set = op0 in _VALUE_OPS
         val = decode_token(tok) if is_set else None
-        ctx = _ModifierAutoValueContext(
-            k, val, is_set, ents, bool(upsert), op0 or "$set"
-        )
+        ctx = context(k, val, is_set, ents, upsert, op0 or "$set")
         res = fn(ctx)
         if res is not unchanged:
             ents[k] = entry(res, op0 if op0 in _VALUE_OPS else "$set")
-        elif ctx._unset:
+        elif ctx.unset_called:
             ents.pop(k, None)
 
     def run_array(g, fn, ents, upsert):
@@ -758,13 +699,11 @@ def _modifier_auto_values(schema: SimpleSchema) -> "tuple | None":
             # is_set reflects POSITION PRESENCE (reference isSet = value
             # !== undefined): a field explicitly set to JSON null is
             # still set — only an absent key reports is_set False
-            ctx = _ModifierAutoValueContext(
-                g, value, present, ents, bool(upsert), op0
-            )
+            ctx = context(g, value, present, ents, upsert, op0)
             res = fn(ctx)
             if res is unchanged:
-                return _Remove if ctx._unset else _Skip
-            if ctx._unset:
+                return _Remove if ctx.unset_called else _Skip
+            if ctx.unset_called:
                 return _Remove
             return res
 
@@ -1006,12 +945,7 @@ def _modifier_auto_values(schema: SimpleSchema) -> "tuple | None":
                 acts.append({"key": k, "drop": True, "op": None, "value": None})
         return acts
 
-    def _apply(entries: pd.Series, upserts: pd.Series) -> pd.Series:
-        return pd.Series(
-            [run(e, u) for e, u in zip(entries, upserts)], dtype=object
-        )
-
-    udf = F.pandas_udf(_apply, act_t)
+    udf = arrow_udf(partial(map, run), act_t)
 
     # each entry carries its row's own upsert flag, so kept rows come back
     # unchanged; the document's flag (any row upsert) goes to the UDF and to

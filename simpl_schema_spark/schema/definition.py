@@ -239,7 +239,7 @@ def default_auto_value_function(default_value: Any) -> Callable:
             return ctx.UNCHANGED
         if ctx.operator == "$push":
             return default_value
-        if ctx.parent_field().is_set:
+        if ctx.parent_field() is not None:
             return default_value
         if ctx.is_upsert:
             return {"$setOnInsert": default_value}

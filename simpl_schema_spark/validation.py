@@ -18,23 +18,17 @@ Outputs:
 from __future__ import annotations
 
 from functools import partial
-from itertools import repeat
 from typing import Any, Callable, Iterable, Optional
-
-import pandas as pd
 
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
-from .compiler.compile import compile_violations
+from .arrowsafe import arrow_inputs
+from .cleaning import _array_levels
+from .compiler.compile import compile_violations, wants_context
 from .compiler.memo import compiled
 from .compiler.rules import generic_key
-from .compiler.validators import (
-    FieldContext,
-    json_typed_value,
-    typed_value,
-    value_udf,
-)
-from .errors import VIOLATION_SCHEMA
+from .compiler.validators import arrow_udf, item_udf, value_udf
+from .errors import VIOLATION_FIELDS, VIOLATION_SCHEMA
 from .schema.schema import SimpleSchema
 
 __all__ = [
@@ -46,132 +40,20 @@ __all__ = [
 
 
 def _apply_pandas_rules(df: DataFrame, rules) -> DataFrame:
-    """Attach Arrow-vectorized custom-validator columns.
-
-    Each rule is a Python callable ``value -> error-type | None`` (or
-    ``(value, ctx) -> error-type | None`` for cross-field rules).  We wrap it
-    in ONE pandas UDF per rule (Arrow batch transfer, no per-row Python in
-    the JVM↔Python bridge; the user fn itself runs per element unless it is
-    marked ``vectorized`` and operates on the whole Series).
-    """
-    from .arrowsafe import (
-        arrow_safe_array,
-        ctx_safe_struct,
-        decode_ctx_row,
-        needs_arrow_guard,
-        resolve_dtype,
-    )
-
-    def _extract(el, subpath):
-        if not subpath:
-            return el
-        cur = el
-        for seg in subpath.split("."):
-            if cur is None:
-                return None
-            cur = cur.get(seg) if isinstance(cur, dict) else getattr(cur, seg, None)
-        return cur
-
-    def make_item_udf(
-        fn, key, subpath, wants_ctx, between=(), guarded=False, jsonified=()
-    ):
-        """Whole-array UDF: error type per element (see _PandasRule.elementwise).
-
-        ``between`` (nested keys, a.$.b.$.c…, arbitrary depth): path from
-        each array level's element to the NEXT level's array; the UDF
-        returns arrays nested ``len(between)+1`` deep — one error type per
-        index tuple — matching the compiler's chained ``F.get`` lookups.
-
-        ``guarded``: the input went through :func:`..arrowsafe.
-        arrow_safe_array` and an extra leading BOOLEAN column marks rows
-        whose real array was null/empty — those rows return None WITHOUT
-        touching the dummy element, so user fns never see it.
-        """
-        between = list(between)
-
-        def run_leaf(el, row):
-            v = _extract(el, subpath)
-            return fn(v, FieldContext(key, v, row)) if wants_ctx else fn(v)
-
-        def run_arr(arr, row, level):
-            if arr is None:
-                return None
-            if level == len(between):
-                return [run_leaf(el, row) for el in arr]
-            out = []
-            for el in arr:
-                inner = _extract(el, between[level]) if between[level] else el
-                out.append(
-                    None if inner is None else run_arr(inner, row, level + 1)
-                )
-            return out
-
-        def _apply(*cols: pd.Series) -> pd.Series:
-            # ([dummy flags,] arrays[, context rows])
-            dummies = cols[0] if guarded else repeat(False)
-            rows = (
-                (decode_ctx_row(r, jsonified) for r in cols[-1].to_dict("records"))
-                if wants_ctx else repeat({})
-            )
-            return pd.Series(
-                [None if d else run_arr(a, row, 0)
-                 for d, a, row in zip(dummies, cols[int(guarded)], rows)],
-                dtype=object,
-            )
-
-        out_t = T.ArrayType(T.StringType())
-        for _ in between:
-            out_t = T.ArrayType(out_t)
-        return F.pandas_udf(_apply, out_t)
-
+    """Attach the Python validators' error-type columns, ONE Arrow UDF per
+    rule (``compiler/validators.py``).  The user fn runs per value (per
+    Series when marked ``vectorized``); an array-item rule runs it per item
+    of the whole outer array."""
     for rule in rules:
+        context = rule.fn if wants_context(rule.fn) else None
         if rule.elementwise:
-            arr_col = F.col(rule.input_cols[0])
-            arr_t = resolve_dtype(df.schema, rule.input_cols[0])
-            guarded = needs_arrow_guard(arr_t)
-            inputs = []
-            if guarded:
-                # see arrowsafe: a null/empty top-level array of a >=3-level
-                # nested type segfaults the Arrow input conversion; ship
-                # [null] plus a dummy flag — the UDF returns None for
-                # flagged rows without ever handing the dummy element to
-                # the user fn, and the result column is only indexed from
-                # lambdas over the REAL array anyway.
-                inputs.append(F.coalesce(F.size(arr_col) <= 0, F.lit(True)))
-                arr_col = arrow_safe_array(arr_col, arr_t)
-            inputs.append(arr_col)
-            wants_ctx = bool(rule.context_cols)
-            jsonified = []
-            if wants_ctx:
-                ctx_struct, jsonified = ctx_safe_struct(
-                    df.schema, rule.context_cols
-                )
-                inputs.append(ctx_struct)
-            udf = make_item_udf(
-                rule.fn, rule.key, rule.item_subpath, wants_ctx,
-                between=rule.between_subpaths, guarded=guarded,
-                jsonified=jsonified,
-            )
-            df = df.withColumn(rule.column_name, udf(*inputs))
-            continue
-        decode = typed_value
-        if rule.input_cols:
-            value_col = F.col(rule.input_cols[0])
-            null_col = value_col.isNull()
-            if needs_arrow_guard(resolve_dtype(df.schema, rule.input_cols[0])):
-                # deep nested VALUE columns take the JSON detour too
-                value_col = F.to_json(value_col)
-                decode = json_typed_value
+            head, levels = _array_levels(rule.key)
+            cols, unpack = arrow_inputs(df.schema, head, context, whole_array=True)
+            udf = item_udf(rule.fn, rule.key, levels, unpack)
         else:
-            value_col = F.lit(None).cast("string")  # key absent
-            null_col = F.lit(True)
-        ctx_inputs, context = [], None
-        if rule.context_cols:
-            ctx_struct, jsonified = ctx_safe_struct(df.schema, rule.context_cols)
-            ctx_inputs = [ctx_struct]
-            context = partial(decode_ctx_row, jsonified=jsonified)
-        udf = value_udf(rule.fn, rule.key, decode, context)
-        df = df.withColumn(rule.column_name, udf(value_col, null_col, *ctx_inputs))
+            cols, unpack = arrow_inputs(df.schema, rule.path, context)
+            udf = value_udf(rule.fn, rule.key, unpack)
+        df = df.withColumn(rule.column_name, udf(*cols))
     return df
 
 
@@ -210,67 +92,36 @@ def _attach_violations(
     forest reads are added and dropped again, as are the ``drop`` helper
     columns, and the doc validators' violations follow the field ones."""
     drop = list(drop)
-    data_cols = [c for c in df.columns if c not in drop]
     if pandas_rules:
         df = _apply_pandas_rules(df, pandas_rules)
         drop += [r.column_name for r in pandas_rules]
     out = df.withColumn(violations_col, col)
     if drop:
         out = out.drop(*drop)
-
-    # V10 doc validators: whole-document functions returning violation lists
-    # (reference validateDocument.ts:18-58) — one Arrow-batched pandas UDF
-    # over a struct of all columns, results concatenated after field errors
+    # V10 doc validators: whole-document functions returning violation
+    # lists (reference validateDocument.ts:18-58), ONE Arrow UDF over the
+    # data columns; their violations follow the field ones
     doc_validators = schema.all_doc_validators()
     if doc_validators:
-        out = _apply_doc_validators(out, data_cols, doc_validators, violations_col)
+        cols, unpack = arrow_inputs(df.schema, None, True)
+        udf = _doc_validators_udf(doc_validators, unpack)
+        out = out.withColumn(violations_col, F.concat(F.col(violations_col), udf(*cols)))
     return out
 
 
-def _apply_doc_validators(
-    df: DataFrame,
-    data_cols: list[str],
-    validators: list[Callable],
-    violations_col: str,
-) -> DataFrame:
-    """One Arrow-batched pandas UDF over a struct of the data columns —
-    only the violation arrays come back through Python (the earlier
-    mapInPandas round-tripped EVERY column both ways); deeply nested
-    columns take the arrowsafe JSON detour like every other context."""
-    from .arrowsafe import ctx_safe_struct, decode_ctx_row
-    from .errors import VIOLATION_FIELDS
+def _doc_validators_udf(validators: list[Callable], unpack: Callable):
+    """Arrow UDF running every doc validator on each row's dict; only the
+    violation arrays come back through Python."""
 
-    ctx_struct, jsonified = ctx_safe_struct(df.schema, data_cols)
+    def run(*inputs):
+        _, row = unpack(*inputs)
+        errs = [e for fn in validators for e in fn(row) or []]
+        return [
+            {f: None if e.get(f) is None else str(e.get(f)) for f, _ in VIOLATION_FIELDS}
+            for e in errs
+        ]
 
-    def _apply(ctx_rows: pd.DataFrame) -> pd.Series:
-        rows = []
-        # to_dict('records') is ~5-10x faster than iterrows for the
-        # per-row Python that arbitrary doc fns force on us
-        for rec in ctx_rows.to_dict("records"):
-            rec = decode_ctx_row(rec, jsonified)
-            errs = []
-            for fn in validators:
-                errs.extend(fn(rec) or [])
-            rows.append(
-                [
-                    {
-                        fname: (
-                            None
-                            if e.get(fname) is None
-                            else str(e.get(fname))
-                        )
-                        for fname, _ in VIOLATION_FIELDS
-                    }
-                    for e in errs
-                ]
-            )
-        return pd.Series(rows, dtype=object)
-
-    udf = F.pandas_udf(_apply, T.ArrayType(VIOLATION_SCHEMA))
-    return df.withColumn(
-        violations_col,
-        F.concat(F.col(violations_col), udf(ctx_struct)),
-    )
+    return arrow_udf(partial(map, run), T.ArrayType(VIOLATION_SCHEMA))
 
 
 def violations_table(

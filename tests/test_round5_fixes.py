@@ -445,8 +445,8 @@ class TestStreamingLateData:
 class TestArrowNanNullGuard:
     """Arrow renders NULL in an integral column as float NaN inside pandas
     UDFs — autoValue fns and Python rules must see None, and genuine NaN in
-    double columns must NOT be masked (cleaning.py `_apply_python_auto_value`
-    null-flag; compiler/validators.py `typed_value` null-flag)."""
+    double columns must NOT be masked (the null flag that
+    `arrowsafe.arrow_inputs` ships beside every typed value)."""
 
     def test_auto_value_sees_none_for_null_bigint(self, spark):
         from simpl_schema_spark.cleaning import clean

@@ -158,3 +158,17 @@ def test_modifier_cleaning(spark, schema):
         ("$push", f'"{DATE}"'),
         ("$set", '"abc'),
     ]
+
+
+def test_date_under_object_key_reports_the_same_violations(spark, schema):
+    # an extended-JSON date is not an object: a document reports no
+    # keyNotInSchema for its `$date` member, like the `$set` row
+    value = f'{{"$date": "{DATE}"}}'
+    mods = spark.createDataFrame([(0, "$set", "o", value, False)], MOD_DDL)
+    docs = spark.createDataFrame([(0, f'{{"o": {value}}}')], "doc_id bigint, json_blob string")
+
+    def violations(df):
+        return sorted((r.name, r.type) for r in df.collect())
+
+    got_mods = violations(validate_modifier_table(mods, schema))
+    assert violations(validate_json_column(docs, schema)) == got_mods == [("o", "expectedType")]
