@@ -370,112 +370,77 @@ def _conforms_any(v: View, alts: list[dict]) -> "Column | bool":
     return reduce(lambda x, y: x | y, oks) if oks else False
 
 
-def _apply_python_auto_value(df: DataFrame, key: str, fn: Callable) -> DataFrame:
-    """Opaque Python autoValue (slow path; prefer @spark_auto_value
-    expressions): ONE Arrow UDF returning the column's own Spark type runs
-    ``fn`` on a :class:`~.compiler.validators.FieldContext` per row (the
-    reference's AutoValueRunner context, src/clean/AutoValueRunner.ts:42-147;
-    ``operator`` is None outside modifiers).  ``ctx.UNCHANGED`` leaves the
-    value, any other return (None too) sets it, ``ctx.unset()`` removes it
-    (NULL in columnar form)."""
-    cols, unpack = arrow_inputs(df.schema, key, fn)
-
-    def run(*inputs):
-        v, row = unpack(*inputs)
-        ctx = FieldContext(key, v, row)
-        res = fn(ctx)
-        return None if ctx.unset_called else v if res is ctx.UNCHANGED else res
-
-    udf = arrow_udf(partial(map, run), resolve_dtype(df.schema, key))
-    return _set_path(df, key, lambda c: udf(*cols))
-
-
 def _array_levels(key: str) -> tuple[str, list[str]]:
     """``a.$.b.$.c`` → ``("a", ["b", "c"])``: the outer array path and the
     per-level subpaths (last entry = leaf path inside the innermost
-    element, '' when the element itself is the value)."""
+    element, '' when the element itself is the value).  A key under no
+    array gives ``(key, [])``."""
     segments = key.split(".$")
     return segments[0], [s.lstrip(".") for s in segments[1:]]
 
 
-def _array_item_auto_value(df: DataFrame, key: str, fn: Callable) -> DataFrame:
-    """Array-position autoValue write-back (getPositionsForAutoValue.ts:43-148)
-    for @spark_auto_value expression fns on ``arr.$`` / ``arr.$.field`` /
-    nested ``arr.$.sub.$.…`` keys at ARBITRARY depth (matching the
-    reference's unbounded recursion): one ``F.transform`` per array level
-    rebuilds each element (structs rebuilt via withField)."""
-    head, mids = _array_levels(key)
-    top = head.split(".")[0]
-    if top not in df.columns:
-        return df
-
-    def leaf_item(x: Column, leaf: str) -> Column:
-        ctx = AutoValueContext(key, x.getField(leaf) if leaf else x, df)
-        new_val = fn(ctx)
-        if new_val is None:
-            return x
-        return x.withField(leaf, new_val) if leaf else new_val
-
-    def build(x: Column, level: int) -> Column:
-        # mids[level] = path within this level's element: the leaf path at
-        # the innermost level, otherwise the path to the next array.
-        # Single-param transform lambdas only (the two-param form binds the
-        # element INDEX as the second argument).
-        sub = mids[level]
-        if level == len(mids) - 1:
-            return leaf_item(x, sub)
-        inner = x.getField(sub) if sub else x
-        # single-param lambda closing over this call frame's `level` — a
-        # default-arg binding would make the lambda two-parameter and Spark
-        # would pass the element INDEX as the second argument
-        rebuilt = F.when(
-            inner.isNotNull(),
-            F.transform(inner, lambda y: build(y, level + 1)),
-        )
-        return x.withField(sub, rebuilt) if sub else rebuilt
-
-    return _set_path(
-        df,
-        head,
-        lambda arr: F.when(
-            arr.isNotNull(), F.transform(arr, lambda x: build(x, 0))
-        ),
-    )
-
-
-def _apply_python_array_auto_value(
-    df: DataFrame, key: str, fn: Callable
-) -> DataFrame:
-    """Opaque Python autoValue on array-item keys (nested to arbitrary
-    depth): ONE Arrow UDF takes the whole OUTER array column and returns
-    the rebuilt array — per-leaf Python execution, zero explode/shuffle,
-    the same shape as the array-item validator path, and the same
-    context and returns as :func:`_apply_python_auto_value`."""
+def _expression_auto_value(df: DataFrame, key: str, fn: Callable) -> DataFrame:
+    """Write-back of a Column-valued autoValue (``@spark_auto_value``, or a
+    defaultValue's coalesce) at every position of ``key``
+    (getPositionsForAutoValue.ts:43-148): the column itself, or under
+    arrays, at ARBITRARY depth, one ``F.transform`` per array level
+    rebuilding each element (structs rebuilt via withField).  A fn
+    returning None leaves the value."""
     head, levels = _array_levels(key)
-    if head.split(".")[0] not in df.columns:
-        return df
-    cols, unpack = arrow_inputs(df.schema, head, fn, whole_array=True)
+
+    def update(v: Column, level: int) -> "Column | None":
+        if level == len(levels):
+            return fn(AutoValueContext(key, v, df))
+        sub = levels[level]
+
+        # a one-parameter function: with two, Spark passes the element
+        # INDEX as the second argument
+        def element(x: Column) -> Column:
+            new = update(x.getField(sub) if sub else x, level + 1)
+            return x if new is None else x.withField(sub, new) if sub else new
+
+        return F.when(v.isNotNull(), F.transform(v, element))
+
+    new = update(_path_col(df, head), 0)
+    return df if new is None else _set_path(df, head, lambda c: new)
+
+
+def _python_auto_value(df: DataFrame, key: str, fn: Callable) -> DataFrame:
+    """Opaque Python autoValue (slow path; prefer @spark_auto_value
+    expressions): ONE Arrow UDF over the key's column, or for a key under
+    arrays (nested to arbitrary depth) over the whole OUTER array, which it
+    rebuilds — zero explode/shuffle.  It returns the column's own Spark
+    type and runs ``fn`` per position on a
+    :class:`~.compiler.validators.FieldContext` (the reference's
+    AutoValueRunner context, src/clean/AutoValueRunner.ts:42-147;
+    ``operator`` is None outside modifiers).  ``ctx.UNCHANGED`` leaves the
+    value, any other return (None too) sets it, ``ctx.unset()`` removes it
+    (NULL in columnar form)."""
+    head, levels = _array_levels(key)
+    cols, unpack = arrow_inputs(df.schema, head, fn, whole_array=bool(levels))
+
+    def at(el: Any, path: str, row: dict) -> Any:
+        # NULL element with a field path: nothing to write into — leave it
+        # null, as the expression writer does (withField on a null struct)
+        if el is None and path:
+            return None
+        ctx = FieldContext(key, FieldContext.get(el, path), row)
+        res = fn(ctx)
+        if ctx.unset_called:
+            res = None
+        elif res is ctx.UNCHANGED:
+            return el
+        return _set_sub(el, path, res)
 
     def run(*inputs):
-        arr, row = unpack(*inputs)
-
-        def leaf(el, path):
-            # NULL element with a field path: nothing to write into — leave
-            # it null, matching the expression path (withField on a null
-            # struct)
-            if el is None and path:
-                return None
-            ctx = FieldContext(key, FieldContext.get(el, path), row)
-            res = fn(ctx)
-            if ctx.unset_called:
-                res = None
-            elif res is ctx.UNCHANGED:
-                return el
-            return _set_sub(el, path, res)
-
-        return walk_items(arr, levels, leaf, _set_sub)
+        v, row = unpack(*inputs)
+        if not levels:
+            return at(v, "", row)
+        return walk_items(v, levels, lambda el, path: at(el, path, row), _set_sub)
 
     udf = arrow_udf(partial(map, run), resolve_dtype(df.schema, head))
+    if not levels:
+        return _set_path(df, head, lambda c: udf(*cols))
     # null and empty arrays stay as they are (the UDF gets them flagged)
     return _set_path(df, head, lambda arr: F.when(F.size(arr) > 0, udf(*cols)).otherwise(arr))
 
@@ -500,41 +465,32 @@ def _apply_auto_values(df: DataFrame, schema: SimpleSchema) -> DataFrame:
     """defaultValue + autoValue functions, parents-first by dot-depth,
     stable within depth (src/clean/setAutoValues.ts:15-36).
 
-    Dispatch per fn: @spark_auto_value → Column expression (fast path,
-    fused into the projection); array-position keys → F.transform
-    write-back; anything else → one Arrow UDF with a per-row
-    ``FieldContext`` (field/sibling_field/parent_field/unset)."""
+    Each fn writes its key's column, or for a key under arrays
+    (``a.$.b``), each item of its outer array: a key under no array is the
+    case with no array level.  @spark_auto_value fns and defaultValues (a
+    coalesce with the default) go through one expression writer, fused
+    into the projection; any other fn through one Arrow UDF writer with a
+    per-row ``FieldContext`` (field/sibling_field/parent_field/unset)."""
     avs = schema.auto_value_functions()
     avs.sort(key=lambda kv: kv[0].count("."))
     for key, fn in avs:
-        if ".$" in key:
-            if getattr(fn, "_is_spark_auto_value", False):
-                df = _array_item_auto_value(df, key, fn)
-            elif getattr(fn, "is_default", False):
-                default = getattr(fn, "default_value", None)
-
-                @spark_auto_value
-                def _fill(ctx, d=default):
-                    return F.coalesce(ctx.value, F.lit(d))
-
-                df = _array_item_auto_value(df, key, _fill)
-            else:
-                df = _apply_python_array_auto_value(df, key, fn)
-            continue
-        top = key.split(".")[0]
-        if top not in df.columns:
+        if key.split(".")[0] not in df.columns:
             continue
         if getattr(fn, "is_default", False):
-            default = getattr(fn, "default_value", None)
-            df = _set_path(df, key, lambda c: F.coalesce(c, F.lit(default)))
-        elif getattr(fn, "_is_spark_auto_value", False):
-            ctx = AutoValueContext(key, _path_col(df, key), df)
-            new_val = fn(ctx)
-            if new_val is not None:
-                df = _set_path(df, key, lambda c, nv=new_val: nv)
+            fn = _coalesce_with(fn.default_value)
+        if getattr(fn, "_is_spark_auto_value", False):
+            df = _expression_auto_value(df, key, fn)
         else:
-            df = _apply_python_auto_value(df, key, fn)
+            df = _python_auto_value(df, key, fn)
     return df
+
+
+def _coalesce_with(default: Any) -> Callable:
+    @spark_auto_value
+    def fill(ctx: AutoValueContext) -> Column:
+        return F.coalesce(ctx.value, F.lit(default))
+
+    return fill
 
 
 def _path_col(df: DataFrame, key: str) -> Column:

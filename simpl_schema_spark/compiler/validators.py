@@ -94,9 +94,15 @@ class FieldContext:
         return obj
 
     def field(self, path: str) -> Any:
-        """Value of any key of the document (this.field())."""
-        if path in self.row:  # declared dotted context_fields ship flat
-            return self.row[path]
+        """Value of any key of the document (this.field()).  A dotted key
+        of the row (a declared context field, a modifier entry) holds the
+        value at its path: the longest one on ``path`` is read into."""
+        head, rest = path, ""
+        while head:
+            if head in self.row:
+                return self.get(self.row[head], rest)
+            head, _, seg = head.rpartition(".")
+            rest = f"{seg}.{rest}" if rest else seg
         return self.get(self.row, path)
 
     def sibling_field(self, name: str) -> Any:
@@ -114,13 +120,20 @@ def arrow_udf(per_batch: Callable[..., Iterable], return_type: T.DataType):
     """The engine's one Arrow UDF.  ``per_batch(*columns)`` gets each
     argument column of a batch as a sequence of plain values (a struct
     column as dicts) and returns the batch's results in row order; a
-    per-row ``fn`` ships as ``partial(map, fn)``."""
+    per-row ``fn`` ships as ``partial(map, fn)``.  A struct result ships
+    in a one-item array: a pandas UDF returns a struct column as a
+    DataFrame, which has no NULL row."""
+    struct = isinstance(return_type, T.StructType)
 
     def _apply(*cols: pd.Series) -> pd.Series:
         args = [c.to_dict("records") if isinstance(c, pd.DataFrame) else c for c in cols]
-        return pd.Series(list(per_batch(*args)), dtype=object)
+        out = per_batch(*args)
+        if struct:
+            out = (None if r is None else [r] for r in out)
+        return pd.Series(list(out), dtype=object)
 
-    return F.pandas_udf(_apply, return_type)
+    udf = F.pandas_udf(_apply, T.ArrayType(return_type) if struct else return_type)
+    return (lambda *cols: udf(*cols)[0]) if struct else udf
 
 
 class SKIP:

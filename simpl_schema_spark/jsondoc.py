@@ -13,7 +13,8 @@ per document; ``typeValidator`` on each declared key) over JSON text:
   checked by the shared rule table (``compiler/rules.py``) over its
   JSON-token view: type, min/max, regex, allowedValues,
   minCount/maxCount, oneOf
-- required: key absent or JSON null (doc mode, requiredValidator.ts:28,34)
+- required: key absent or JSON null (doc mode, requiredValidator.ts:28,34),
+  where every optional ancestor object is there and not null, as in tables
 - KEY_NOT_IN_SCHEMA: ``json_object_keys`` at the root and the variant's
   keys inside each declared (non-blackbox) object subtree, minus
   declared/blackbox names
@@ -156,9 +157,14 @@ def json_violations_column(
         name = F.lit(k)
         chain: list[Column] = []
         if not is_optional(alts):
-            chain.append(
-                check(view.var.isNull() | view.is_null, violation(name, ErrorTypes.REQUIRED))
-            )
+            # as in typed tables: not under a missing or null optional object
+            missing = view.var.isNull() | view.is_null
+            segs = k.split(".")
+            for anc in (".".join(segs[:n]) for n in range(1, len(segs))):
+                if anc in merged and is_optional(schema.resolved_alternatives(anc)):
+                    parent = reads.view(anc)
+                    missing = missing & parent.var.isNotNull() & ~parent.is_null
+            chain.append(check(missing, violation(name, ErrorTypes.REQUIRED)))
         err = value_error(view, name, alts)
         if err is not None:
             chain.append(check(view.var.isNotNull() & ~view.is_null, err))

@@ -31,10 +31,13 @@ join that attaches a document's entries, paid only when a cross-field
 validator exists.
 ``clean_modifier_table`` is one cleaning projection over the decoded
 table, plus,
-when autoValues or defaultValues exist, one ``groupBy(doc)`` that runs the
-Arrow UDF once per document and resolves kept and added rows with array
-functions; nothing is persisted.  Its per-value cleaning is the typed
-columns' (``cleaning._Cleaner``) over the JSON-token view.  Both functions
+when autoValues exist, one ``groupBy(doc)`` that runs the Arrow UDF once
+per document and resolves kept and added rows with array functions;
+nothing is persisted.  In the UDF one position walker (:class:`_Doc`)
+runs every autoValue at the positions of its key; a defaultValue is the
+autoValue its definition synthesizes, and runs like any other.  Its
+per-value cleaning is the typed columns' (``cleaning._Cleaner``) over the
+JSON-token view.  Both functions
 take every Column from the compile cache (``compiler/memo.py``); only the
 DataFrame operations run per call.
 
@@ -51,9 +54,10 @@ dotted paths walking into object values.
 
 from __future__ import annotations
 
+import copy
 import json
 from functools import partial
-from typing import Any
+from typing import Any, Callable, Iterable, Iterator, NamedTuple
 
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
@@ -437,10 +441,13 @@ def clean_modifier_table(
     - removeEmptyStrings: ``$set`` of ``""`` becomes ``$unset`` and an
       empty child of a ``$set`` object is dropped (clean.ts:126-142); other
       operators and arrays keep empty strings
-    - getAutoValues: for upsert documents, every defaultValue key not
-      referenced by any operator gains a ``$setOnInsert`` row
-      (getDefaultAutoValueFunction, SimpleSchema.ts:1148-1167; tested by
-      test/clean/defaultValue.tests.ts upsert cases)
+    - getAutoValues: every autoValue runs at the positions of its key
+      (:func:`_modifier_auto_values`); a defaultValue fills an object being
+      set or pushed, and for upsert documents an unreferenced key gains a
+      ``$setOnInsert`` row (getDefaultAutoValueFunction,
+      SimpleSchema.ts:1148-1167; test/clean/defaultValue.tests.ts).
+      ``@spark_auto_value`` fns are skipped on every key: they compile to
+      Columns over a typed row, which a modifier row is not
 
     "Empty operator removal" (clean.ts:175-187) is inherent to the long
     format: removing the last row of an operator removes the operator.
@@ -562,10 +569,8 @@ def _modifier_cleaning(schema: SimpleSchema, opts: dict[str, bool]) -> tuple:
         # under every other operator are kept as-is
         new_op = F.when((op == "$set") & is_empty_str, F.lit("$unset")).otherwise(op)
 
-    # defaultValue keys run inside _modifier_auto_values through the same
-    # position machinery as opaque autoValue fns — upsert $setOnInsert,
-    # injection into $set objects / pushed items, and parent-creating
-    # dotted paths (defaultValue.tests.ts:229-514)
+    # a defaultValue is the autoValue its definition synthesizes, and runs
+    # like any other (defaultValue.tests.ts:229-514)
     auto = _modifier_auto_values(schema) if opts["get_auto_values"] else None
     return keep, decode, value, new_op, auto
 
@@ -575,6 +580,8 @@ _VALUE_OPS = frozenset(
     ("$set", "$setOnInsert", "$inc", "$push", "$addToSet", "$min", "$max",
      "$mul")
 )
+#: operators whose entry holds a value at its key (``$unset``'s ``""`` too)
+_HOLDS_VALUE = _VALUE_OPS | {"$unset"}
 
 
 def _decode_entry_row(entries) -> dict:
@@ -591,42 +598,207 @@ def _decode_entry_row(entries) -> dict:
     return row
 
 
-class _Skip:
-    """Sentinel: positional autoValue returned UNCHANGED (class, not
-    instance — identity survives pickling to executors)."""
+class _Position(NamedTuple):
+    """One place of an autoValue's key: ``holder[slot]`` inside the value
+    of entry ``entry``, or (``holder`` None) the entry's whole value or a
+    would-be entry.  ``drops``: removing the value deletes it from its list
+    (a ``$each`` item) rather than nulling it in place."""
+
+    key: str
+    op: str
+    value: Any
+    is_set: bool
+    entry: str
+    holder: Any = None
+    slot: Any = None
+    drops: bool = False
 
 
-class _Remove:
-    """Sentinel: positional autoValue called ctx.unset() — remove the
-    field / null the element / drop the entry."""
+class _Dropped:
+    """Sentinel: a ``$each`` item removed while its fn runs."""
+
+
+def _seg_match(generic: str, seg: str) -> bool:
+    return generic == seg or (generic == "$" and (seg == "$" or seg.isdigit()))
+
+
+def _inside(value: Any, path: list[str], key: str, op: str, entry: str,
+            drops: bool = False) -> Iterator[_Position]:
+    """The positions of the generic ``path`` inside a decoded value: every
+    element at a ``$``, and the slot of the last name in every object on
+    the way, set or not; missing containers are not created."""
+    seg, more = path[0], path[1:]
+    if seg == "$":
+        slots: Iterable = range(len(value)) if isinstance(value, list) else ()
+    else:
+        slots = (seg,) if isinstance(value, dict) and (not more or seg in value) else ()
+    for slot in slots:
+        sub = f"{key}.{slot}"
+        if more:
+            yield from _inside(value[slot], more, sub, op, entry)
+        else:
+            there = seg == "$" or slot in value
+            yield _Position(sub, op, value[slot] if there else None, there, entry, value, slot, drops)
+
+
+class _Doc:
+    """One document's operator entries while its autoValues run, as
+    AutoValueRunner.ts:42-147 runs them: ``ents`` maps each key to ``[op,
+    decoded value]`` (the first entry of the key, decoded once), and
+    :meth:`run` runs one fn at every position of its key."""
+
+    def __init__(self, entries, upsert) -> None:
+        self.upsert = bool(upsert)
+        self.orig: dict[str, tuple] = {}
+        self.ents: dict[str, list] = {}
+        for e in entries:
+            if e["key"] not in self.orig:
+                self.orig[e["key"]] = (e["op"], e["value"])
+                self.ents[e["key"]] = [e["op"], decode_token(e["value"])]
+        #: entries whose value was written, encoded again at the end
+        self.dirty: set[str] = set()
+        self.dropped: list[list] = []
+
+    def positions(self, g: str) -> list[_Position]:
+        """Where the fn of the generic key ``g`` runs
+        (getPositionsForAutoValue.ts:43-148).
+
+        Real positions: each entry whose key matches (``$`` matching any
+        index), and inside the value of a ``$set``/``$setOnInsert`` entry
+        or of a pushed item (each ``$each`` item) every place of ``g``, with
+        its slot in each object there.  An entry that creates ``g``
+        (MongoDB makes the object), or that holds its path without such a
+        place, leaves it only these.  Otherwise one would-be position per
+        key: ``$set[g]`` for a top-level key; else ``$set`` of the dotted
+        key of each entry that creates the parent (not under an array
+        item); else, for a document that is no upsert, ``$set[g]`` with its
+        ``$`` left generic."""
+        segs = g.split(".")
+        found: list[_Position] = []
+        creates = touched = False
+        for k, (op, val) in self.ents.items():
+            ks = k.split(".")
+            if not all(map(_seg_match, segs, ks)):
+                continue
+            if len(ks) > len(segs):
+                creates = creates or op in _VALUE_OPS
+                continue
+            touched = True
+            rest = segs[len(ks):]
+            if not rest:
+                there = op in _HOLDS_VALUE
+                found.append(_Position(k, op, val if there else None, there, k))
+            elif op in OPS_SET:
+                found += _inside(val, rest, k, op, k)
+            elif op in OPS_PUSH and rest[0] == "$":
+                each = val.get("$each") if isinstance(val, dict) else None
+                if isinstance(each, list):
+                    found += _inside(each, rest, k, op, k, drops=True)
+                elif rest[1:]:
+                    found += _inside(val, rest[1:], f"{k}.$", op, k)
+                else:
+                    found.append(_Position(f"{k}.$", op, val, True, k))
+        if found or creates or touched:
+            # one position per place: an entry of the key beats its slot in
+            # an object being set
+            entries = {p.key for p in found if p.holder is None}
+            return [p for p in found if p.holder is None or p.key not in entries]
+        parent, _, leaf = g.rpartition(".")
+        would = [] if parent else [g]
+        if parent and not parent.endswith(".$"):
+            psegs = parent.split(".")
+            for k, (op, _) in self.ents.items():
+                ks = k.split(".")
+                if op in _VALUE_OPS and len(ks) > len(psegs) and all(map(_seg_match, psegs, ks)):
+                    would.append(".".join(ks[: len(psegs)] + [leaf]))
+        if not would and not self.upsert:
+            would = [g]
+        return [_Position(k, "$set", None, False, k) for k in dict.fromkeys(would)]
+
+    def run(self, g: str, fn: Callable) -> None:
+        """Run ``fn`` at each position of ``g`` and write its result there:
+        ``ctx.unset()`` removes the value, and any return but ``UNCHANGED``
+        is then set; a pseudo-modifier (``{"$inc": 1}``) replaces the
+        position with an entry of its operator."""
+        for pos in self.positions(g):
+            row = {k: v for k, (op, v) in self.ents.items() if op in _VALUE_OPS}
+            if pos.holder is not None:
+                # parent_field() and sibling_field() read the position's object
+                row[pos.key.rpartition(".")[0]] = pos.holder
+            ctx = FieldContext(pos.key, pos.value, row, is_set=pos.is_set,
+                               operator=pos.op, is_upsert=self.upsert)
+            res = fn(ctx)
+            pseudo = [p for p in res if str(p).startswith("$")] if isinstance(res, dict) else []
+            if ctx.unset_called or pseudo:
+                self.remove(pos)
+            if res is ctx.UNCHANGED:
+                continue
+            if pseudo:
+                self.ents[pos.key] = [pseudo[0], copy.deepcopy(res[pseudo[0]])]
+                self.dirty.add(pos.key)
+            else:
+                self.put(pos, copy.deepcopy(res))
+        for items in self.dropped:
+            items[:] = [it for it in items if it is not _Dropped]
+        self.dropped.clear()
+
+    def remove(self, pos: _Position) -> None:
+        if pos.holder is None:
+            self.ents.pop(pos.entry, None)
+            return
+        if isinstance(pos.holder, dict):
+            pos.holder.pop(pos.slot, None)
+        elif pos.drops:
+            # an unset pushed item is not pushed, as an unset plain $push
+            # entry goes
+            pos.holder[pos.slot] = _Dropped
+            self.dropped.append(pos.holder)
+        else:
+            # an element of an array being set is nulled in place: removing
+            # it would shift its siblings
+            pos.holder[pos.slot] = None
+        self.dirty.add(pos.entry)
+
+    def put(self, pos: _Position, value: Any) -> None:
+        if pos.holder is None:
+            self.ents[pos.entry] = [pos.op if pos.op in _VALUE_OPS else "$set", value]
+        else:
+            pos.holder[pos.slot] = value
+        self.dirty.add(pos.entry)
+
+    def acts(self) -> list[dict]:
+        """Each entry whose ``(op, JSON)`` differs from the original: its
+        key's entries are dropped and, unless it was removed, it is added."""
+        out = []
+        for k, (op, val) in self.ents.items():
+            tok = _encode_json_value(val) if k in self.dirty else self.orig[k][1]
+            if (op, tok) != self.orig.get(k):
+                out.append({"key": k, "drop": k in self.orig, "op": op, "value": tok})
+        out += [{"key": k, "drop": True, "op": None, "value": None}
+                for k in self.orig if k not in self.ents]
+        return out
 
 
 def _modifier_auto_values(schema: SimpleSchema) -> "tuple | None":
-    """How ``clean_modifier_table`` runs autoValue and defaultValue keys
-    (None when the schema has none).
+    """How ``clean_modifier_table`` runs autoValues (None when the schema
+    has none).  A defaultValue is the autoValue its definition synthesizes
+    (getDefaultAutoValueFunction, SimpleSchema.ts:1148-1167) and runs like
+    any other.
 
-    Opaque Python autoValue fns run against a modifier table, including
-    PSEUDO-MODIFIER returns (reference AutoValueRunner.ts:112-142): a fn may
-    return ``{"$inc": 1}`` / ``{"$push": ...}`` and the returned operator
-    replaces the key's current entry; a plain return sets the value under
-    the key's existing operator (``$set`` when unreferenced).  The fn gets
-    the ``FieldContext`` of document mode, plus ``operator``, ``is_upsert``
-    and an ``is_set`` that is true for a key set to JSON null; its row is
-    rebuilt from the document's entries before each run, so a later fn
-    reads an earlier one's result.  ``ctx.UNCHANGED`` = leave as is,
-    ``None`` sets JSON null, ``ctx.unset()`` removes the entry.
-
-    AutoValue keys under arrays (``a.$.b``) run POSITIONALLY (reference
-    getPositionsForAutoValue.ts:43-148): the fn is applied inside matching
-    entries' decoded JSON — per element of a whole-array ``$set``, to the
-    pushed item (or each ``$each`` item) of ``$push``/``$addToSet``, and to
-    positional/indexed keys (``a.$.b``, ``a.0.b``) directly.  When NO
-    entry touches the key's subtree (unrelated update, or a sibling-leaf
-    ``$set`` like ``a.0.x`` for field ``a.$.y``) the fn still runs once
-    against a synthesized would-be ``$set[<generic key>]`` position —
-    skipped for upserts — matching getPositionsForAutoValue.ts:135-147.
-    Only plain Python fns run positionally (@spark_auto_value expression
-    fns need a Column context and are document-mode only).
+    Per document the fns run parents first (setAutoValues.ts:15-36), each
+    at every position of its key (:meth:`_Doc.positions`): a top-level
+    key's entry, a place inside ``$set`` values and pushed items, or a
+    would-be ``$set`` entry.  A fn gets the ``FieldContext`` of document
+    mode, plus ``operator``, ``is_upsert`` and an ``is_set`` that is true
+    wherever the position holds a value, JSON null and ``$unset``'s ``""``
+    included; its row is the document's entries as they stand, so a later
+    fn reads an earlier one's result.  ``ctx.UNCHANGED`` leaves the value,
+    ``ctx.unset()`` removes it, any other return sets it (``None`` as JSON
+    null), a PSEUDO-MODIFIER return (``{"$inc": 1}``, AutoValueRunner.ts:
+    112-142) replaces the position with an entry of its operator, and a
+    plain return at an entry whose operator carries no value makes it
+    ``$set``.  ``@spark_auto_value`` fns are skipped: they compile to
+    Columns over a typed row.
 
     Shape: ONE groupBy(doc) collecting the (bounded, schema-sized) operator
     entries (the returned aggregates) + ONE Arrow-batched UDF evaluating
@@ -635,26 +807,16 @@ def _modifier_auto_values(schema: SimpleSchema) -> "tuple | None":
     key the UDF dropped are filtered out, the rows it added are appended,
     and the result is exploded — no join, no persist, the table evaluated
     once."""
-    av_fns = [
-        ("fn", k, fn, ".$" in k)
-        for k, fn in schema.auto_value_functions()
-        if not getattr(fn, "is_default", False)
-        and ("$" not in k or ".$" in k)
-        and not (".$" in k and getattr(fn, "_is_spark_auto_value", False))
-    ]
-    # defaultValue keys run through the SAME per-doc position machinery as
-    # opaque fns (the reference models defaultValue as an autoValue,
-    # getDefaultAutoValueFunction SimpleSchema.ts:1148-1167); parents-first
-    # ordering lets a parent's emitted {} compose its children's defaults
-    av_fns += [
-        ("default", k, getattr(fn, "default_value", None), False)
-        for k, fn in schema.auto_value_functions()
-        if getattr(fn, "is_default", False)
-    ]
-    if not av_fns:
+    fns = sorted(
+        (
+            (k, fn)
+            for k, fn in schema.auto_value_functions()
+            if ("$" not in k or ".$" in k) and not getattr(fn, "_is_spark_auto_value", False)
+        ),
+        key=lambda kv: kv[0].count("."),
+    )
+    if not fns:
         return None
-    av_fns.sort(key=lambda kv: kv[1].count("."))
-    unchanged = FieldContext.UNCHANGED
 
     act_t = T.ArrayType(
         T.StructType(
@@ -667,283 +829,11 @@ def _modifier_auto_values(schema: SimpleSchema) -> "tuple | None":
         )
     )
 
-    def entry(res, op0):
-        """(op, JSON) of an autoValue result: a pseudo-modifier return
-        ({"$inc": 1}) names its op, a plain one keeps ``op0``.  Datetimes
-        take the extended-JSON path: the reference's createdAt pattern
-        returns {"$setOnInsert": new Date()} (AutoValueRunner.ts:112-142)."""
-        ops = [p for p in res if str(p).startswith("$")] if isinstance(res, dict) else []
-        return (ops[0], _encode_json_value(res[ops[0]])) if ops else (op0, _encode_json_value(res))
-
-    def context(key, value, is_set, ents, upsert, operator):
-        """The fn's context: ``field()`` reads the document's entries as
-        they stand, earlier fns' results included."""
-        row = _decode_entry_row([{"op": o, "key": k, "value": t} for k, (o, t) in ents.items()])
-        return FieldContext(key, value, row, is_set=is_set, operator=operator, is_upsert=bool(upsert))
-
-    def run_scalar(k, fn, ents, upsert):
-        op0, tok = ents.get(k, (None, None))
-        is_set = op0 in _VALUE_OPS
-        val = decode_token(tok) if is_set else None
-        ctx = context(k, val, is_set, ents, upsert, op0 or "$set")
-        res = fn(ctx)
-        if res is not unchanged:
-            ents[k] = entry(res, op0 if op0 in _VALUE_OPS else "$set")
-        elif ctx.unset_called:
-            ents.pop(k, None)
-
-    def run_array(g, fn, ents, upsert):
-        segs = g.split(".")
-
-        def run_fn(value, op0, present):
-            # is_set reflects POSITION PRESENCE (reference isSet = value
-            # !== undefined): a field explicitly set to JSON null is
-            # still set — only an absent key reports is_set False
-            ctx = context(g, value, present, ents, upsert, op0)
-            res = fn(ctx)
-            if res is unchanged:
-                return _Remove if ctx.unset_called else _Skip
-            if ctx.unset_called:
-                return _Remove
-            return res
-
-        def apply_at(value, path, op0, present=True):
-            if not path:
-                return run_fn(value, op0, present)
-            seg = path[0]
-            if seg == "$":
-                if not isinstance(value, list):
-                    return _Skip
-                new = []
-                any_change = False
-                for el in value:
-                    r = apply_at(el, path[1:], op0)
-                    if r is _Skip:
-                        new.append(el)
-                    else:
-                        any_change = True
-                        # unset of an element of a value being SET nulls it
-                        # in place (removal would shift sibling indices)
-                        new.append(None if r is _Remove else r)
-                return new if any_change else _Skip
-            if not isinstance(value, dict):
-                return _Skip
-            cur = value.get(seg)
-            if len(path) > 1 and not isinstance(cur, (dict, list)):
-                # missing intermediate containers are NOT auto-created
-                return _Skip
-            r = apply_at(cur, path[1:], op0, present=seg in value)
-            if r is _Skip:
-                return _Skip
-            d = dict(value)
-            if r is _Remove:
-                d.pop(seg, None)
-            else:
-                d[seg] = r
-            return d
-
-        matched = False
-        for k in list(ents):
-            op0, tok = ents[k]
-            kseg = k.split(".")
-            if len(kseg) > len(segs):
-                continue
-            if not all(map(_seg_match, segs, kseg)):
-                continue
-            matched = True
-            remaining = segs[len(kseg):]
-            decoded = decode_token(tok)
-            if op0 in ("$push", "$addToSet"):
-                # the entry value is ONE element (or $each items): the
-                # leading `$` of the remaining generic path is implicit
-                if not remaining or remaining[0] != "$":
-                    continue
-                rest = remaining[1:]
-                if isinstance(decoded, dict) and isinstance(
-                    decoded.get("$each"), list
-                ):
-                    # unset of a pushed item means "don't push it" — DROP
-                    # the item, mirroring the plain-$push branch dropping
-                    # the whole entry (the two one-item syntaxes agree)
-                    items, any_change = [], False
-                    for it in decoded["$each"]:
-                        r = apply_at(it, rest, op0)
-                        if r is _Skip:
-                            items.append(it)
-                        elif r is _Remove:
-                            any_change = True
-                        else:
-                            any_change = True
-                            items.append(r)
-                    if any_change:
-                        new = dict(decoded)
-                        new["$each"] = items
-                        ents[k] = (op0, _encode_json_value(new))
-                else:
-                    r = apply_at(decoded, rest, op0)
-                    if r is _Remove:
-                        ents.pop(k, None)
-                    elif r is not _Skip:
-                        ents[k] = (op0, _encode_json_value(r))
-            elif op0 in ("$set", "$setOnInsert"):
-                r = apply_at(decoded, remaining, op0)
-                if r is _Remove:
-                    ents.pop(k, None)
-                elif r is not _Skip:
-                    ents[k] = (op0, _encode_json_value(r))
-        if not matched and not upsert:
-            # would-be position (getPositionsForAutoValue.ts:135-147): no
-            # entry touches this key's subtree — not even partially, like
-            # a $set on a SIBLING leaf (`a.0.x` for field `a.$.y`, whose
-            # parent path ends in `.$` so no creating position exists) —
-            # yet the fn still runs ONCE, unset, under a synthesized
-            # `$set[<generic key>]` position.  The `$` stays generic in
-            # the emitted key, exactly as the reference's
-            # setValueForPosition('$set[a.$.y]') leaves it
-            # (AutoValueRunner.ts:137-146); upserts skip it.
-            res = run_fn(None, "$set", False)
-            if res is not _Skip and res is not _Remove:
-                ents[g] = entry(res, "$set")
-
-    def _seg_match(gs, ks):
-        return gs == ks or (gs == "$" and (ks == "$" or ks.isdigit()))
-
-    def _rel(ks, segs):
-        """entry key segs vs generic field segs: 'eq' (same position),
-        'extends' (entry creates the field's objects), 'prefix' (the field
-        lives inside the entry's value), or None (unrelated)."""
-        m = min(len(ks), len(segs))
-        if not all(_seg_match(segs[i], ks[i]) for i in range(m)):
-            return None
-        if len(ks) == len(segs):
-            return "eq"
-        return "extends" if len(ks) > len(segs) else "prefix"
-
-    def _leaf_slots(value, path):
-        """(container_dict, leaf_name) pairs for `path` resolved inside a
-        decoded JSON value — one per array element for `$` segments;
-        missing intermediates yield no slot (mongo-object position
-        semantics: only EXISTING parents give child positions)."""
-        if not path:
-            return []
-        if len(path) == 1:
-            return [(value, path[0])] if isinstance(value, dict) else []
-        seg = path[0]
-        if seg == "$":
-            if not isinstance(value, list):
-                return []
-            out = []
-            for el in value:
-                out.extend(_leaf_slots(el, path[1:]))
-            return out
-        if isinstance(value, dict) and seg in value:
-            return _leaf_slots(value[seg], path[1:])
-        return []
-
-    def run_default(g, dv, ents, upsert):
-        """Replay getDefaultAutoValueFunction × getPositionsForAutoValue
-        (SimpleSchema.ts:1148-1167, getPositionsForAutoValue.ts:42-148)
-        over the entry dict: inject into objects whose parent position is
-        set ($set objects, $push/$addToSet items), emit dotted
-        $setOnInsert rows on upsert when some entry creates the parent
-        path, $setOnInsert for unreferenced top-level keys on upsert."""
-        import copy
-
-        segs = g.split(".")
-        leaf = segs[-1]
-        if g in ents:  # exact entry (any op, incl. $unset) → isSet/done
-            return
-        slot_entries = []  # (entry_key, op0, root, slots)
-        for k in list(ents):
-            op0, tok = ents[k]
-            if op0 not in _VALUE_OPS:
-                continue
-            ks = k.split(".")
-            r = _rel(ks, segs)
-            if r in ("eq", "extends"):
-                # a real position exists (isSet → fn returns early) or the
-                # entry creates this key (no position → fn never runs)
-                return
-            if r == "prefix":
-                remaining = segs[len(ks):]
-                decoded = decode_token(tok)
-                if op0 in ("$push", "$addToSet"):
-                    if remaining[0] != "$":
-                        continue
-                    rest = remaining[1:]
-                    if not rest:
-                        return  # the pushed element IS the field → set
-                    if isinstance(decoded, dict) and isinstance(
-                        decoded.get("$each"), list
-                    ):
-                        roots = decoded["$each"]
-                        root_obj = decoded
-                    else:
-                        roots = [decoded]
-                        root_obj = decoded
-                else:
-                    rest = remaining
-                    roots = [decoded]
-                    root_obj = decoded
-                slots = []
-                for rt in roots:
-                    slots.extend(_leaf_slots(rt, rest))
-                if slots:
-                    slot_entries.append((k, op0, root_obj, slots))
-        if slot_entries:
-            # parent positions exist → inject the default where absent
-            for k, op0, root, slots in slot_entries:
-                changed = False
-                for cont, lf in slots:
-                    if lf not in cont:
-                        cont[lf] = copy.deepcopy(dv)
-                        changed = True
-                if changed:
-                    ents[k] = (op0, _encode_json_value(root))
-            return
-        if len(segs) == 1:
-            # top-level would-be $set[g]: parent (root) unset → upsert only
-            if upsert:
-                ents[g] = ("$setOnInsert", _encode_json_value(dv))
-            return
-        if segs[-2] == "$":
-            return  # parentPath ends '.$' → no creating-position synthesis
-        parent_segs = segs[:-1]
-        for k in list(ents):
-            op0, _tok = ents[k]
-            if op0 not in _VALUE_OPS:
-                continue
-            ks = k.split(".")
-            if _rel(ks, parent_segs) == "extends":
-                # would-be $set[<concrete parent>.<leaf>]: parent unset →
-                # {$setOnInsert: default} on upsert, dotted path notation
-                concrete = ".".join(ks[: len(parent_segs)] + [leaf])
-                if upsert and concrete not in ents:
-                    ents[concrete] = ("$setOnInsert", _encode_json_value(dv))
-                return
-
     def run(entries, upsert):
-        ents = {}
-        for e in entries:
-            ents.setdefault(e["key"], (e["op"], e["value"]))
-        orig = dict(ents)
-        for kind, k, fn, is_array in av_fns:
-            if kind == "default":
-                run_default(k, fn, ents, upsert)
-            elif is_array:
-                run_array(k, fn, ents, upsert)
-            else:
-                run_scalar(k, fn, ents, upsert)
-        acts = []
-        for k, (op_, val_) in ents.items():
-            if k not in orig:
-                acts.append({"key": k, "drop": False, "op": op_, "value": val_})
-            elif orig[k] != (op_, val_):
-                acts.append({"key": k, "drop": True, "op": op_, "value": val_})
-        for k in orig:
-            if k not in ents:
-                acts.append({"key": k, "drop": True, "op": None, "value": None})
-        return acts
+        doc = _Doc(entries, upsert)
+        for k, fn in fns:
+            doc.run(k, fn)
+        return doc.acts()
 
     udf = arrow_udf(partial(map, run), act_t)
 

@@ -135,3 +135,53 @@ def test_default_value_function_runs_on_the_context():
     upsert = FieldContext("b.n", None, row, operator="$set", is_upsert=True)
     assert fn(upsert) == {"$setOnInsert": 7}
     assert fn(FieldContext("n", None, {}, operator="$pull")) is doc.UNCHANGED
+
+
+def test_auto_values_write_the_same_in_both_cleaning_modes(spark):
+    # one document cleaned as a typed row and as non-upsert $set rows:
+    # a defaultValue inside an object, a defaultValue inside array items
+    # and a Python autoValue on array items write the same values.  A
+    # typed NULL is the modifier's absent key (columnar null is unset)
+    def upper(ctx):
+        return ctx.value.upper() if ctx.is_set else ctx.UNCHANGED
+
+    opt = {"optional": True}
+    ss = SimpleSchema({
+        "obj": {"type": dict, **opt},
+        "obj.a": {"type": float, **opt},
+        "obj.b": {"type": float, "defaultValue": 10, **opt},
+        "items": {"type": SimpleSchema.Array, **opt},
+        "items.$": {"type": dict},
+        "items.$.state": {"type": str, "defaultValue": "new", **opt},
+        "items.$.n": {"type": SimpleSchema.Integer, **opt},
+        "tags": {"type": SimpleSchema.Array, **opt},
+        "tags.$": {"type": str, "autoValue": upper},
+    })
+    doc = {
+        "obj": {"a": 1.0, "b": None},
+        "items": [{"state": "old", "n": 1}, {"state": None, "n": 2}],
+        "tags": ["a", "b"],
+    }
+    typed = spark.createDataFrame(
+        [doc],
+        "obj struct<a: double, b: double>, "
+        "items array<struct<state: string, n: bigint>>, tags array<string>",
+    )
+    typed_out = clean(typed, ss).collect()[0].asDict(recursive=True)
+
+    def present(v):
+        if isinstance(v, dict):
+            return {k: present(x) for k, x in v.items() if x is not None}
+        return [present(x) for x in v] if isinstance(v, list) else v
+
+    mods = spark.createDataFrame(
+        [(1, "$set", k, json.dumps(present(v)), False) for k, v in doc.items()], MOD_DDL
+    )
+    rows = clean_modifier_table(mods, ss).collect()
+    assert {r.op for r in rows} == {"$set"}
+    mod_out = {r.key_path: json.loads(r.value) for r in rows}
+    assert mod_out == present(typed_out) == {
+        "obj": {"a": 1, "b": 10},
+        "items": [{"state": "old", "n": 1}, {"state": "new", "n": 2}],
+        "tags": ["A", "B"],
+    }

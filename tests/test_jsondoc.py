@@ -222,3 +222,32 @@ class TestJsonCustomValidators:
         ss = SimpleSchema({"x": {"type": str, "optional": True, "custom": boom}})
         got = run(spark, ['{"x": '], ss)
         assert got == [(0, "$", "malformedJson")]
+
+
+class TestRequiredUnderOptionalObject:
+    """A required key under an optional object is required only where the
+    object is there, in JSON documents as in typed tables."""
+
+    def test_same_as_typed_table(self, spark):
+        from simpl_schema_spark.validation import violations_table
+
+        ss = SimpleSchema(
+            {
+                "name": {"type": str, "min": 2},
+                "meta": {"type": dict, "optional": True},
+                "meta.k": {"type": str},
+            }
+        )
+        typed = spark.createDataFrame(
+            [(0, "ab", None), (1, "ab", None), (2, "ab", {"k": None}), (3, "ab", {"k": "v"})],
+            "doc_id bigint, name string, meta struct<k: string>",
+        )
+        docs = [
+            '{"name": "ab"}',
+            '{"name": "ab", "meta": null}',
+            '{"name": "ab", "meta": {}}',
+            '{"name": "ab", "meta": {"k": "v"}}',
+        ]
+        table = violations_table(typed, ss, id_cols=["doc_id"], extra_key_policy="ignore")
+        got_typed = sorted((r.doc_id, r.name, r.type) for r in table.collect())
+        assert run(spark, docs, ss) == got_typed == [(2, "meta.k", "required")]

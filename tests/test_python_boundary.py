@@ -82,3 +82,13 @@ def test_one_row_context_class():
         if isinstance(node, ast.ClassDef) and _is_row_context(node)
     ]
     assert classes == [("compiler/validators.py", "FieldContext")]
+
+
+def test_modifiers_do_not_tell_default_values_apart():
+    # a defaultValue runs in modifier mode as the autoValue its definition
+    # synthesizes, so modifiers.py never reads the marks on that function
+    tree = ast.parse((PKG / "modifiers.py").read_text())
+    read = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+    read |= {n.attr for n in ast.walk(tree) if isinstance(n, ast.Attribute)}
+    read |= {n.value for n in ast.walk(tree) if isinstance(n, ast.Constant)}
+    assert not read & {"is_default", "default_value"}
