@@ -51,7 +51,7 @@ from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from .arrowsafe import arrow_inputs, resolve_dtype
 from .compiler.memo import compiled
-from .compiler.validators import FieldContext, arrow_udf, walk_items
+from .compiler.validators import FieldContext, array_levels, arrow_udf, walk_items
 from .schema.schema import SimpleSchema
 from .schema.types import (
     AnyType,
@@ -370,15 +370,6 @@ def _conforms_any(v: View, alts: list[dict]) -> "Column | bool":
     return reduce(lambda x, y: x | y, oks) if oks else False
 
 
-def _array_levels(key: str) -> tuple[str, list[str]]:
-    """``a.$.b.$.c`` → ``("a", ["b", "c"])``: the outer array path and the
-    per-level subpaths (last entry = leaf path inside the innermost
-    element, '' when the element itself is the value).  A key under no
-    array gives ``(key, [])``."""
-    segments = key.split(".$")
-    return segments[0], [s.lstrip(".") for s in segments[1:]]
-
-
 def _expression_auto_value(df: DataFrame, key: str, fn: Callable) -> DataFrame:
     """Write-back of a Column-valued autoValue (``@spark_auto_value``, or a
     defaultValue's coalesce) at every position of ``key``
@@ -386,7 +377,7 @@ def _expression_auto_value(df: DataFrame, key: str, fn: Callable) -> DataFrame:
     arrays, at ARBITRARY depth, one ``F.transform`` per array level
     rebuilding each element (structs rebuilt via withField).  A fn
     returning None leaves the value."""
-    head, levels = _array_levels(key)
+    head, levels = array_levels(key)
 
     def update(v: Column, level: int) -> "Column | None":
         if level == len(levels):
@@ -413,10 +404,10 @@ def _python_auto_value(df: DataFrame, key: str, fn: Callable) -> DataFrame:
     type and runs ``fn`` per position on a
     :class:`~.compiler.validators.FieldContext` (the reference's
     AutoValueRunner context, src/clean/AutoValueRunner.ts:42-147;
-    ``operator`` is None outside modifiers).  ``ctx.UNCHANGED`` leaves the
-    value, any other return (None too) sets it, ``ctx.unset()`` removes it
-    (NULL in columnar form)."""
-    head, levels = _array_levels(key)
+    ``operator`` is None outside modifiers).  ``ctx.unset()`` removes the
+    value (NULL in columnar form), and any return but ``ctx.UNCHANGED``
+    (None too) then sets it, as in modifier mode."""
+    head, levels = array_levels(key)
     cols, unpack = arrow_inputs(df.schema, head, fn, whole_array=bool(levels))
 
     def at(el: Any, path: str, row: dict) -> Any:
@@ -426,10 +417,10 @@ def _python_auto_value(df: DataFrame, key: str, fn: Callable) -> DataFrame:
             return None
         ctx = FieldContext(key, FieldContext.get(el, path), row)
         res = fn(ctx)
-        if ctx.unset_called:
+        if res is ctx.UNCHANGED:
+            if not ctx.unset_called:
+                return el
             res = None
-        elif res is ctx.UNCHANGED:
-            return el
         return _set_sub(el, path, res)
 
     def run(*inputs):

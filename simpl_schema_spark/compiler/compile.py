@@ -1,19 +1,30 @@
-"""Schema → Spark expression compiler for typed DataFrames.
+"""Schema → Spark expression compiler: the one key traversal.
 
-Compiles a :class:`~simpl_schema_spark.schema.SimpleSchema` against a concrete
-DataFrame schema into ONE Catalyst projection producing an
-``array<violation>`` column per row.  No shuffles, no row-at-a-time Python:
-the entire validator chain — required decision table, per-type checks
-(bounds/regex/NaN/integer), allowedValues, oneOf dispatch, array-item
-recursion with per-index violation naming — is pure Spark SQL expressions
-(higher-order functions for arrays), so whole-stage codegen fuses it with the
-scan.  Opaque Python ``custom`` validators ride Arrow-vectorized pandas UDFs.
+Compiles a :class:`~simpl_schema_spark.schema.SimpleSchema` into ONE
+Catalyst projection producing an ``array<violation>`` column per row.  No
+shuffles, no row-at-a-time Python: the entire validator chain — required
+decision table, per-type checks (bounds/regex/NaN/integer), allowedValues,
+oneOf dispatch, array-item recursion with per-index violation naming — is
+pure Spark SQL expressions (higher-order functions for arrays), so
+whole-stage codegen fuses it with the scan.
 
-This module owns the traversal (keys, objects, arrays, required, custom
-validators).  The per-value decision tables — type, string/number/date/array
-rules, allowedValues, oneOf — live in :mod:`.rules`, written once over a
-typed-column view (used here) and a JSON-token view (used by JSON documents
-and modifier rows).
+:class:`RuleCompiler` owns the traversal (keys, objects, arrays, required,
+custom validators, unknown keys) and walks a view of the document, asking
+it for each child (``field``), whether a value is missing (``missing``),
+an array's items (``items``/``item``) and an object's member names
+(``names``):
+
+- a typed table is a :class:`~.rules.ColumnView` of its columns;
+- a JSON document is a :class:`~.rules.TokenView` of its parsed variant
+  (``jsondoc``), whose declared keys are read once in decode projections.
+
+The per-value decision tables — type, string/number/date/array rules,
+allowedValues, oneOf — live in :mod:`.rules`, written once over both views.
+Python validators are inline Arrow UDF Columns (``validators.value_udf``,
+``validators.item_udf``) fed by the mode's shipping function.  A key
+under arrays gets one UDF over its outermost array, whose per-item results
+are zipped (``arrays_zip``) into each ``transform`` level: a Python UDF
+cannot be referenced inside a lambda.
 
 Semantics parity map (reference = longshotlabs/simpl-schema):
 
@@ -25,7 +36,7 @@ Semantics parity map (reference = longshotlabs/simpl-schema):
   missing-object promotion (required descendants of a missing *required*
   object fire; of a missing *optional* object don't):
   ``src/validation/validateField.ts:313-321`` → the ``opt_gate`` conjunction
-  of ``isNotNull`` over *optional* ancestors only.
+  of presence over *optional* ancestors only.
 - type checks and oneOf: :mod:`.rules` (``src/validation/typeValidator/*.ts``,
   ``src/validation/validateField.ts:171-256``); a column whose dtype does not
   conform fails at compile time, one ``expectedType`` per non-null value.
@@ -34,137 +45,95 @@ Semantics parity map (reference = longshotlabs/simpl-schema):
 - per-item array violations named with concrete indexes (``friends.0.name``):
   ``src/validation/validateField.ts:293-306`` → ``F.transform`` with index
   lambda; flatten.
+- unknown keys (``src/validation/validateField.ts:262-279``): a JSON object's
+  member names minus the declared ones, per document; a typed table's
+  top-level columns at compile time, under ``extra_key_policy``.
 """
 
 from __future__ import annotations
 
-import inspect
-from dataclasses import dataclass
+from functools import partial
 from typing import Any, Callable, Optional
 
 from pyspark.sql import Column, functions as F, types as T
 
+from ..arrowsafe import arrow_inputs
 from ..errors import ErrorTypes, VIOLATION_SCHEMA
 from ..schema.definition import make_key_generic
 from ..schema.schema import SimpleSchema
 from ..schema.types import AnyType, ArrayType, ObjectType
 from . import rules
-from .rules import ColumnView, check, violation
+from .rules import ColumnView, View, check, violation
+from .validators import (
+    RuleContext,
+    array_levels,
+    is_spark_rule,
+    item_udf,
+    spark_rule,
+    value_udf,
+    wants_context,
+)
 
 __all__ = ["RuleCompiler", "compile_violations", "spark_rule", "violation"]
 
-
-def spark_rule(fn: Callable) -> Callable:
-    """Mark a custom validator as a JVM-side Spark rule.
-
-    The function receives ``(value: Column, ctx: RuleContext)`` and returns a
-    Column evaluating to an error-type string (or NULL for valid).  This is
-    the fast path for custom validators whose logic is expressible in Spark
-    SQL — use instead of a Python callable whenever possible.
-    """
-    fn._is_spark_rule = True  # type: ignore[attr-defined]
-    return fn
+#: ``ship(view, path, fn, whole_array)`` → the input Columns of a Python
+#: validator on the value of ``view`` (at the dotted ``path``; for an item
+#: key, the whole outermost array) and ``unpack(*inputs) -> (value, row)``
+Ship = Callable[[View, str, Callable, bool], tuple[list[Column], Callable]]
 
 
-def is_spark_rule(fn: Callable) -> bool:
-    return getattr(fn, "_is_spark_rule", False)
-
-
-def wants_context(fn: Callable) -> bool:
-    """True if a Python custom validator takes a (value, ctx) pair.
-
-    One-parameter validators keep the value-only fast path; two-parameter
-    ones get the reference's cross-field ValidatorContext.
-    """
-    try:
-        params = [
-            p
-            for p in inspect.signature(fn).parameters.values()
-            if p.kind
-            in (p.POSITIONAL_ONLY, p.POSITIONAL_OR_KEYWORD, p.VAR_POSITIONAL)
-        ]
-    except (TypeError, ValueError):
-        return False
-    if any(p.kind == p.VAR_POSITIONAL for p in params):
-        return True
-    return len(params) >= 2
-
-
-@dataclass
-class RuleContext:
-    """Compile-time context handed to @spark_rule custom validators.
-
-    Mirrors the reference's ValidatorContext (src/types.ts:230-240):
-    ``field``/``sibling_field`` give cross-field access — here they resolve to
-    Column expressions, so the whole rule stays JVM-side (conditionally-
-    required fields, password-match, etc. compile into the same fused
-    projection as the built-in rules).
-    """
-
-    key: str                      # generic key path
-    name: Column                  # concrete key path (may embed array indexes)
-    definition: dict              # resolved alternative definition
-    row: Optional[Column] = None  # struct of all top-level columns, if needed
-
-    def field(self, path: str) -> Column:
-        """Column for any other document key (reference this.field())."""
-        return F.col(path)
-
-    def sibling_field(self, name: str) -> Column:
-        """Column for a key sharing this key's parent (this.siblingField())."""
-        parent, _, _ = self.key.rpartition(".")
-        return F.col(f"{parent}.{name}" if parent else name)
-
-
-@dataclass
-class _PandasRule:
-    """A deferred Arrow-vectorized Python validator: its UDF column is
-    added before the violations projection (``validation``).
-
-    ``path`` is the (dotted) column of the validated value, None when the
-    column is absent.  An ``elementwise`` rule (an array-item key) takes
-    the WHOLE outer array of its key instead and returns an error type per
-    item, nested one list level per array level of the key: no explode,
-    no shuffle."""
-
-    key: str
-    column_name: str              # output column holding the error type
-    fn: Callable
-    path: Optional[str] = None
-    elementwise: bool = False
+def _empty() -> Column:
+    return F.array().cast(T.ArrayType(VIOLATION_SCHEMA))
 
 
 class RuleCompiler:
-    """Compile one SimpleSchema against one DataFrame schema."""
+    """Compile one SimpleSchema over one root view.
+
+    With ``compact`` the caller drops the NULL violations of
+    :meth:`key_violations` (``array_compact``), so a key's error goes in
+    as a one-item array and its chain is evaluated once: the JSON forest
+    runs in an interpreted ``Generate``, where no common subexpression is
+    eliminated."""
 
     def __init__(
         self,
         schema: SimpleSchema,
-        df_schema: T.StructType,
+        root: View,
+        ship: Ship,
         *,
+        compact: bool = False,
         keys: Optional[list[str]] = None,
         ignore: Optional[list[str]] = None,
         extra_key_policy: str = "violation",  # violation | ignore | error
     ) -> None:
         self.schema = schema
-        self.df_schema = df_schema
+        self.root = root
+        self.ship = ship
+        self.compact = compact
         self.keys = [make_key_generic(k) for k in keys] if keys else None
         self.ignore = list(ignore or [])
         self.extra_key_policy = extra_key_policy
         self.merged = schema.merged_schema()
-        self.pandas_rules: list[_PandasRule] = []
-        self._pandas_counter = 0
-        # (generic, fn) → column name: the custom tail is compiled both for
-        # the value-present and value-null branches; register one UDF only
-        self._pandas_cache: dict[tuple[str, Callable], str] = {}
-        # index Columns of the array-item lambdas being compiled: Python
-        # validators on item keys pick their error type by index
-        self._lambda_indexes: list[Column] = []
+        # (generic key, fn) → the error Column of a row-level Python
+        # validator: its chain is compiled for both the value-present and
+        # the value-missing branch, and shares one UDF
+        self._udfs: dict[tuple[str, Callable], Column] = {}
+        # per enclosing item lambda: (item key, fn) → its Python validator's
+        # result for the current item, zipped along the array
+        self._frames: list[dict[tuple[str, Callable], Column]] = []
+        # while the items of an outermost array are first compiled: the
+        # Python validators found under it
+        self._found: Optional[list[tuple[str, Callable]]] = None
 
     # -------------------------------------------------------------- public
 
+    def key_violations(self) -> list[Column]:
+        """The ``array<violation>`` Columns of every key under the root
+        (with ``compact``, NULL violations among them)."""
+        return self._compile_children("", self.root, None, None)
+
     def violations_column(self) -> Column:
-        """The whole rule forest as one array<violation> Column.
+        """The typed table's whole rule forest as one array<violation> Column.
 
         Assembled with ``concat`` of conditional singleton arrays rather than
         ``array_compact(flatten(...))``: higher-order functions are
@@ -173,18 +142,9 @@ class RuleCompiler:
         (HOFs remain only inside array-item subtrees, where they are the
         right tool).
         """
-        arrays = self._compile_children(
-            prefix="",
-            value=None,
-            name_prefix=None,
-            dtype=self.df_schema,
-            opt_gate=None,
-            in_lambda=False,
-        )
-        arrays.extend(self._extra_key_violations())
-        empty = F.array().cast(T.ArrayType(VIOLATION_SCHEMA))
+        arrays = self.key_violations() + self._extra_key_violations()
         if not arrays:
-            return empty
+            return _empty()
         combined = F.concat(*arrays) if len(arrays) > 1 else arrays[0]
         if self.ignore:
             ig = [F.lit(t) for t in self.ignore]
@@ -231,61 +191,50 @@ class RuleCompiler:
     def _compile_children(
         self,
         prefix: str,
-        value: Optional[Column],
+        view: View,
         name_prefix: Optional[Column],
-        dtype: Optional[T.StructType],
         opt_gate: Optional[Column],
-        in_lambda: bool,
     ) -> list[Column]:
         arrays: list[Column] = []
-        for child in self._direct_children(prefix):
+        children = self._direct_children(prefix)
+        for child in children:
             if not self._should_emit(child):
                 continue
             leaf = child.split(".")[-1]
-            if dtype is not None and leaf in dtype.fieldNames():
-                child_dtype = dtype[leaf].dataType
-                child_value = (
-                    F.col(leaf) if value is None else value.getField(leaf)
-                )
-            else:
-                child_dtype = T.NullType()
-                child_value = F.lit(None)
             child_name = (
                 F.lit(leaf)
                 if name_prefix is None
                 else F.concat(name_prefix, F.lit("." + leaf))
             )
             arrays.extend(
-                self._compile_key(
-                    child, child_value, child_name, child_dtype, opt_gate, in_lambda
-                )
+                self._compile_key(child, view.field(leaf), child_name, opt_gate)
             )
+        if view.names is not None:
+            declared = [c.split(".")[-1] for c in children]
+            arrays.append(self._unknown_keys(view, name_prefix, declared))
         return arrays
 
     def _compile_key(
         self,
         generic: str,
-        value: Column,
+        view: View,
         name: Column,
-        dtype: T.DataType,
         opt_gate: Optional[Column],
-        in_lambda: bool,
     ) -> list[Column]:
         alternatives = self.schema.resolved_alternatives(generic)
         optional = rules.is_optional(alternatives)
-        view = ColumnView(value, dtype)
 
         arrays: list[Column] = []
 
         if self._emit_rules_for(generic):
             key_err = self._key_error(
-                generic, view, name, alternatives, optional, opt_gate, in_lambda
+                generic, view, name, alternatives, optional, opt_gate
             )
             if key_err is not None:
+                # an item's violations are compacted in its lambda
                 arrays.append(
-                    F.when(key_err.isNotNull(), F.array(key_err)).otherwise(
-                        F.array().cast(T.ArrayType(VIOLATION_SCHEMA))
-                    )
+                    F.array(key_err) if self.compact or self._frames
+                    else F.when(key_err.isNotNull(), F.array(key_err)).otherwise(_empty())
                 )
 
         # recursion — objects and arrays
@@ -296,83 +245,99 @@ class RuleCompiler:
         if not has_any and not is_blackbox:
             child_gate = opt_gate
             if optional:
-                present = value.isNotNull()
+                present = ~view.missing
                 child_gate = present if child_gate is None else (child_gate & present)
 
             if any(t is ObjectType or isinstance(t, SimpleSchema) for t in alt_types):
-                child_struct = dtype if isinstance(dtype, T.StructType) else None
-                arrays.extend(
-                    self._compile_children(
-                        prefix=generic,
-                        value=value,
-                        name_prefix=name,
-                        dtype=child_struct,
-                        opt_gate=child_gate,
-                        in_lambda=in_lambda,
-                    )
-                )
+                arrays.extend(self._compile_children(generic, view, name, child_gate))
 
-            if ArrayType in alt_types and isinstance(dtype, T.ArrayType):
-                item_generic = f"{generic}.$"
-                if item_generic in self.merged:
-                    arrays.append(
-                        self._compile_array_items(
-                            item_generic, value, name, dtype.elementType
-                        )
-                    )
+            item_generic = f"{generic}.$"
+            if ArrayType in alt_types and view.items is not None and item_generic in self.merged:
+                arrays.append(self._compile_array_items(item_generic, view, name))
         return arrays
 
-    def _compile_array_items(
+    def _compile_array_items(self, item_generic: str, view: View, name: Column) -> Column:
+        """Per-item violations, named with concrete indexes
+        (validateField.ts:293-306).
+
+        Python validators of the keys under an outermost array run once
+        over the whole array: a first pass over its items finds them, and
+        the second zips their results into the lambdas, level by level."""
+        if self._frames:
+            results = {
+                kf: r for kf, r in self._frames[-1].items()
+                if kf[0] == item_generic or kf[0].startswith(item_generic + ".")
+            }
+            return self._items(item_generic, view, name, results)
+        self._found = []
+        try:
+            col = self._items(item_generic, view, name, {})
+        finally:
+            found, self._found = self._found, None
+        if not found:
+            return col
+        head = item_generic[: -len(".$")]
+        results = {}
+        for key, fn in found:
+            cols, unpack = self.ship(view, head, fn, True)
+            results[(key, fn)] = item_udf(fn, key, array_levels(key)[1], unpack)(*cols)
+        return self._items(item_generic, view, name, results)
+
+    def _items(
         self,
         item_generic: str,
-        arr: Column,
-        arr_name: Column,
-        item_dtype: T.DataType,
+        view: View,
+        name: Column,
+        results: dict[tuple[str, Callable], Column],
     ) -> Column:
-        """Per-item violations, named with concrete indexes
-        (validateField.ts:293-306)."""
+        arr = view.items
+        kfs = list(results)
+        src = arr
+        if kfs:
+            src = F.arrays_zip(
+                arr.alias("v"), *[results[kf].alias(f"u{j}") for j, kf in enumerate(kfs)]
+            )
 
         def per_item(x: Column, i: Column) -> Column:
-            item_name = F.concat(arr_name, F.lit("."), i.cast("string"))
-            self._lambda_indexes.append(i)
+            item = view.item(x.getField("v") if kfs else x)
+            self._frames.append({kf: x.getField(f"u{j}") for j, kf in enumerate(kfs)})
             try:
                 item_arrays = self._compile_key(
                     item_generic,
-                    x,
-                    item_name,
-                    item_dtype,
-                    opt_gate=x.isNotNull(),
-                    in_lambda=True,
+                    item,
+                    F.concat(name, F.lit("."), i.cast("string")),
+                    opt_gate=~item.missing,
                 )
             finally:
-                self._lambda_indexes.pop()
+                self._frames.pop()
             if not item_arrays:
-                return F.array().cast(T.ArrayType(VIOLATION_SCHEMA))
+                return _empty()
             return F.array_compact(F.flatten(F.array(*item_arrays)))
 
-        result = F.when(
-            arr.isNotNull(), F.flatten(F.transform(arr, per_item))
-        ).otherwise(F.array().cast(T.ArrayType(VIOLATION_SCHEMA)))
-        return result
+        out = F.flatten(F.transform(src, per_item))
+        if kfs:
+            # NULL where the UDFs got no array: a deep typed array ships a
+            # dummy item for an empty one (``arrowsafe``)
+            out = F.coalesce(out, _empty())
+        return F.when(arr.isNotNull(), out).otherwise(_empty())
 
     # ------------------------------------------------------------ key rules
 
     def _key_error(
         self,
         generic: str,
-        view: ColumnView,
+        view: View,
         name: Column,
         alternatives: list[dict],
         optional: bool,
         opt_gate: Optional[Column],
-        in_lambda: bool,
     ) -> Optional[Column]:
-        value = view.value
+        missing = view.missing
         chain: list[Column] = []
 
         # V1 required (requiredValidator.ts:13-61, doc mode: null==missing)
         if not optional:
-            cond = value.isNull()
+            cond = missing
             if opt_gate is not None:
                 cond = cond & opt_gate
             chain.append(check(cond, violation(name, ErrorTypes.REQUIRED)))
@@ -384,7 +349,7 @@ class RuleCompiler:
             custom = alt.get("custom")
             tail = ([custom] if custom is not None else []) + self.schema.all_validators()
             return [
-                self._custom_error(generic, view, name, alt, fn, in_lambda)
+                self._custom_error(generic, view, name, alternatives, alt, fn)
                 for fn in tail
             ]
 
@@ -398,71 +363,61 @@ class RuleCompiler:
         custom_only = rules.one_of(alternatives, customs)
         if one_of is not None:
             chain.append(
-                F.when(value.isNotNull(), one_of).otherwise(
+                F.when(~missing, one_of).otherwise(
                     custom_only if custom_only is not None else rules.null_violation()
                 )
             )
         elif custom_only is not None:
-            chain.append(check(value.isNull(), custom_only))
+            chain.append(check(missing, custom_only))
 
         return rules.first(chain)
 
     def _custom_error(
         self,
         generic: str,
-        view: ColumnView,
+        view: View,
         name: Column,
+        alternatives: list[dict],
         alt: dict,
         custom: Callable,
-        in_lambda: bool,
     ) -> Column:
         if is_spark_rule(custom):
-            err_type = custom(view.value, RuleContext(key=generic, name=name, definition=alt))
+            ctx = RuleContext(key=generic, name=name, definition=alt)
+            err_type = custom(view.typed(alternatives), ctx)
         else:
-            err_type = F.col(self._pandas_rule(generic, view.dtype, custom, in_lambda))
-            for i in self._lambda_indexes:
-                err_type = F.get(err_type, i)
+            err_type = self._python_error(generic, view, custom)
         return check(err_type.isNotNull(), violation(name, err_type, value=view.display))
 
-    def _pandas_rule(
-        self, generic: str, dtype: T.DataType, custom: Callable, in_lambda: bool
-    ) -> str:
-        """Register a Python validator's Arrow UDF column (once per key and
-        fn: the custom tail is compiled for both the value-present and the
-        value-null branch) and return the column's name.
-
-        The validator DataFrame pass adds the column before the violations
-        projection.  Row-level keys ship the LEAF value (F.col resolves
-        dotted struct paths); two-argument validators also get a per-row
-        context with field()/sibling_field() resolved from a shipped struct
-        of context columns (reference ValidatorContext, src/types.ts:230-240;
-        ``arrowsafe.arrow_inputs`` chooses the columns).
-
-        Array-item keys (validateField.ts:293-306) ship the WHOLE outer
-        array: the UDF returns an error type per element, nested one array
-        level per lambda frame (array<string> for a.$.b,
-        array<array<string>> for a.$.b.$.c, and so on — the reference
-        recurses without bound, getPositionsForAutoValue.ts:43-148), and the
-        lambdas pick entries by index: no explode, no shuffle, violations
-        keep concrete-index names.
-        """
-        cache_key = (generic, custom)
-        if cache_key in self._pandas_cache:
-            return self._pandas_cache[cache_key]
-        self._pandas_counter += 1
-        col_name = (
-            f"__custom_{self._pandas_counter}_"
-            f"{generic.replace('.', '_').replace('$', 'I')}"
-        )
-        rule = _PandasRule(key=generic, column_name=col_name, fn=custom, elementwise=in_lambda)
-        if not in_lambda and not isinstance(dtype, T.NullType):
-            # absent column (NullType): a null literal is shipped instead
-            rule.path = generic
-        self.pandas_rules.append(rule)
-        self._pandas_cache[cache_key] = col_name
-        return col_name
+    def _python_error(self, generic: str, view: View, fn: Callable) -> Column:
+        """A Python validator's error type: an inline Arrow UDF at row
+        level, or inside item lambdas its zipped result for the item."""
+        kf = (generic, fn)
+        if self._found is not None:
+            if kf not in self._found:
+                self._found.append(kf)
+            return F.lit(None).cast("string")
+        if self._frames:
+            return self._frames[-1][kf]
+        if kf not in self._udfs:
+            cols, unpack = self.ship(view, generic, fn, False)
+            self._udfs[kf] = value_udf(fn, generic, unpack)(*cols)
+        return self._udfs[kf]
 
     # --------------------------------------------------------- extra keys
+
+    def _unknown_keys(self, view: View, name: Optional[Column], declared: list[str]) -> Column:
+        """KEY_NOT_IN_SCHEMA for the object's members found at runtime
+        minus the declared (and blackbox) names; below the root only for a
+        JSON object (an extended-JSON date is none)."""
+        declared_arr = F.array(*map(F.lit, sorted(declared))).cast("array<string>")
+        unknown = F.transform(
+            F.coalesce(F.array_except(view.names, declared_arr), F.array().cast("array<string>")),
+            lambda nm: violation(
+                nm if name is None else F.concat(name, F.lit("."), nm),
+                ErrorTypes.KEY_NOT_IN_SCHEMA,
+            ),
+        )
+        return unknown if name is None else F.when(view.is_object, unknown).otherwise(_empty())
 
     def _extra_key_violations(self) -> list[Column]:
         """KEY_NOT_IN_SCHEMA for DataFrame columns the schema doesn't allow
@@ -474,7 +429,7 @@ class RuleCompiler:
         if self.extra_key_policy == "ignore":
             return []
         out: list[Column] = []
-        for f in self.df_schema.fields:
+        for f in self.root.dtype.fields:
             if not self.schema.allows_key(f.name):
                 if self.extra_key_policy == "error":
                     raise ValueError(
@@ -490,16 +445,26 @@ class RuleCompiler:
                                 value=rules.stringify(F.col(f.name), f.dataType),
                             )
                         ),
-                    ).otherwise(F.array().cast(T.ArrayType(VIOLATION_SCHEMA)))
+                    ).otherwise(_empty())
                 )
         return out
+
+
+def _ship_columns(
+    df_schema: T.StructType, view: View, path: str, fn: Callable, whole_array: bool
+) -> tuple[list[Column], Callable]:
+    """A typed table's shipping: ``arrowsafe.arrow_inputs`` of the column
+    at ``path`` (a NULL when absent), with the row's columns for a
+    two-argument validator."""
+    absent = isinstance(view.dtype, T.NullType)
+    context = fn if wants_context(fn) else None
+    return arrow_inputs(df_schema, None if absent else path, context, whole_array=whole_array)
 
 
 def compile_violations(
     schema: SimpleSchema,
     df_schema: T.StructType,
     **kwargs: Any,
-) -> tuple[Column, list[_PandasRule]]:
-    compiler = RuleCompiler(schema, df_schema, **kwargs)
-    col = compiler.violations_column()
-    return col, compiler.pandas_rules
+) -> Column:
+    root = ColumnView(None, df_schema)
+    return RuleCompiler(schema, root, partial(_ship_columns, df_schema), **kwargs).violations_column()

@@ -295,10 +295,12 @@ _ENCODE = {
 
 class ColumnView:
     """A typed value: Column + Spark dtype.  Its kind is known at compile
-    time, so every cleaning decision is made while building the plan."""
+    time, so every cleaning decision is made while building the plan.  The
+    table's root is the view of its columns (``value`` None)."""
 
     bounds_gate: Optional[Column] = None  # number bounds always apply
     rebuilds_objects = True
+    names = None  # an object's members are fixed by its dtype
 
     def __init__(self, value: Column, dtype: T.DataType) -> None:
         self.value = value
@@ -309,6 +311,21 @@ class ColumnView:
         self.is_array = isinstance(dtype, T.ArrayType)
 
     as_str = as_num = as_date = property(lambda self: self.value)
+
+    @cached_property
+    def missing(self) -> Column:
+        return self.value.isNull()
+
+    @cached_property
+    def items(self) -> Optional[Column]:
+        """The array, when the dtype is one."""
+        return self.value if self.is_array else None
+
+    def item(self, x: Column) -> "ColumnView":
+        return ColumnView(x, self.dtype.elementType)
+
+    def typed(self, alts: list[dict]) -> Column:
+        return self.value
 
     @cached_property
     def count(self) -> Column:
@@ -353,7 +370,11 @@ class ColumnView:
         return [f.name for f in self.dtype.fields]
 
     def field(self, name: str) -> "ColumnView":
-        return ColumnView(self.value.getField(name), self.dtype[name].dataType)
+        """The member ``name``: a NULL of ``NullType`` when absent."""
+        if not self.is_object or name not in self.dtype.fieldNames():
+            return ColumnView(F.lit(None), T.NullType())
+        value = F.col(name) if self.value is None else self.value.getField(name)
+        return ColumnView(value, self.dtype[name].dataType)
 
     def rebuild_object(self, children: list) -> Column:
         if not children:
@@ -463,14 +484,31 @@ class TokenView:
         return self.is_kind(NULL)
 
     @cached_property
+    def missing(self) -> Column:
+        """Absent or JSON null (doc mode, requiredValidator.ts:28,34)."""
+        return self.var.isNull() | F.is_variant_null(self.var)
+
+    @cached_property
+    def items(self) -> Column:
+        return self.elements("$")
+
+    def item(self, x: Column) -> "TokenView":
+        return TokenView(x)
+
+    @cached_property
+    def names(self) -> Column:
+        """The object's member names (NULL when it is no object)."""
+        return F.map_keys(self._get("map<string,variant>"))
+
+    @cached_property
     def count(self) -> Column:
-        return F.size(self.elements("$"))
+        return F.size(self.items)
 
     @cached_property
     def display(self) -> Column:
         """Offending-value payload: JSON strings unquoted, else the JSON
         text trimmed."""
-        return F.when(self.kind == F.lit(STRING), self.as_str).otherwise(F.trim(self.json))
+        return F.coalesce(self.as_str, F.trim(self.json))
 
     @cached_property
     def bounds_gate(self) -> Optional[Column]:

@@ -8,14 +8,19 @@ order: the key's ``custom``, then schema-level, then global validators
 ``@spark_rule`` validators compile into the projection; Python ones ride
 the UDFs built here from per-row functions:
 
-- :func:`value_udf` — one validator on one value per row: a typed value
-  (shipped by ``arrowsafe.arrow_inputs``) or a JSON token.
-- :func:`item_udf` — one validator on every item of a typed array key
-  (``a.$.b.$.c``), its error types nested one list level per array level.
-- :func:`token_item_rules` — the per-element chain of a JSON array
-  (``$each`` and JSON-document arrays): Python UDF results cannot be
-  referenced inside higher-order-function lambdas, so the merge with the
-  expression violations runs in one UDF over the whole array.
+- :func:`value_udf` — one validator on one value per row.
+- :func:`item_udf` — one validator on every item of an array-item key
+  (``a.$.b.$.c``), run over the whole outer array, its error types nested
+  one list level per array level.
+
+The key traversal (``compile.RuleCompiler``) puts both inline in the
+forest, for typed tables and JSON documents alike; each mode ships the
+value (a typed column, or a JSON token's text) through its own shipping
+function.  Modifier rows keep a chain of their own over the row's token:
+:func:`token_custom_rules` (masked by the row's generic key) and, for
+``$each`` elements, :func:`token_item_rules`, which merges the expression
+and Python violations in one UDF over the whole array, since a Python
+UDF result cannot be referenced inside a higher-order-function lambda.
 
 Document validators (``validation``), autoValues (``cleaning``) and
 modifier autoValues (``modifiers``) pass their own per-row functions to
@@ -24,7 +29,9 @@ modifier autoValues (``modifiers``) pass their own per-row functions to
 
 from __future__ import annotations
 
+import inspect
 import json
+from dataclasses import dataclass
 from functools import partial
 from typing import Any, Callable, Iterable, Optional
 
@@ -33,18 +40,82 @@ import pandas as pd
 from pyspark.sql import Column, functions as F, types as T
 
 from ..errors import VIOLATION_FIELDS, VIOLATION_SCHEMA
-from .compile import RuleContext, is_spark_rule, wants_context
 from .rules import TokenView, check, first, null_violation, value_error, violation
 
 __all__ = [
     "FieldContext",
+    "RuleContext",
     "arrow_udf",
+    "array_levels",
+    "spark_rule",
     "value_udf",
     "item_udf",
     "walk_items",
     "token_custom_rules",
     "token_item_rules",
 ]
+
+
+def spark_rule(fn: Callable) -> Callable:
+    """Mark a custom validator as a JVM-side Spark rule.
+
+    The function receives ``(value: Column, ctx: RuleContext)`` and returns a
+    Column evaluating to an error-type string (or NULL for valid).  This is
+    the fast path for custom validators whose logic is expressible in Spark
+    SQL — use instead of a Python callable whenever possible.
+    """
+    fn._is_spark_rule = True  # type: ignore[attr-defined]
+    return fn
+
+
+def is_spark_rule(fn: Callable) -> bool:
+    return getattr(fn, "_is_spark_rule", False)
+
+
+def wants_context(fn: Callable) -> bool:
+    """True if a Python custom validator takes a (value, ctx) pair.
+
+    One-parameter validators keep the value-only fast path; two-parameter
+    ones get the reference's cross-field ValidatorContext.
+    """
+    try:
+        params = [
+            p
+            for p in inspect.signature(fn).parameters.values()
+            if p.kind
+            in (p.POSITIONAL_ONLY, p.POSITIONAL_OR_KEYWORD, p.VAR_POSITIONAL)
+        ]
+    except (TypeError, ValueError):
+        return False
+    if any(p.kind == p.VAR_POSITIONAL for p in params):
+        return True
+    return len(params) >= 2
+
+
+@dataclass
+class RuleContext:
+    """Compile-time context handed to @spark_rule custom validators.
+
+    Mirrors the reference's ValidatorContext (src/types.ts:230-240):
+    ``field``/``sibling_field`` give cross-field access — here they resolve to
+    Column expressions, so the whole rule stays JVM-side (conditionally-
+    required fields, password-match, etc. compile into the same fused
+    projection as the built-in rules).
+    """
+
+    key: str                      # generic key path
+    name: Column                  # concrete key path (may embed array indexes)
+    definition: dict              # resolved alternative definition
+    row: Optional[Column] = None  # struct of all top-level columns, if needed
+
+    def field(self, path: str) -> Column:
+        """Column for any other document key (reference this.field())."""
+        return F.col(path)
+
+    def sibling_field(self, name: str) -> Column:
+        """Column for a key sharing this key's parent (this.siblingField())."""
+        parent, _, _ = self.key.rpartition(".")
+        return F.col(f"{parent}.{name}" if parent else name)
 
 
 class FieldContext:
@@ -185,17 +256,26 @@ def value_udf(fn: Callable, key: str, unpack: Callable[..., tuple[Any, dict]]):
     return arrow_udf(run_batch if vectorized else partial(map, run), T.StringType())
 
 
+def array_levels(key: str) -> tuple[str, list[str]]:
+    """``a.$.b.$.c`` → ``("a", ["b", "c"])``: the outer array path and the
+    per-level subpaths (last entry = leaf path inside the innermost
+    element, '' when the element itself is the value).  A key under no
+    array gives ``(key, [])``."""
+    segments = key.split(".$")
+    return segments[0], [s.lstrip(".") for s in segments[1:]]
+
+
 def walk_items(arr: Any, levels: list[str], leaf: Callable[[Any, str], Any],
                rebuild: Optional[Callable[[Any, str, Any], Any]] = None) -> Any:
     """``leaf(element, path)`` at every innermost element of the nested
-    array ``arr`` (None stays None); ``levels[i]`` is the path from a level
+    array ``arr`` (None, or a value that is no array, stays None); ``levels[i]`` is the path from a level
     ``i`` element to the next array, the last one to the value.  Returns
     the leaf results nested like the arrays, or with ``rebuild(element,
     path, inner)`` each outer element rebuilt around its new inner array
     (an element without one is kept)."""
 
     def walk(arr, level):
-        if arr is None:
+        if arr is None or isinstance(arr, (str, bytes, dict)) or not hasattr(arr, "__len__"):
             return None
         path = levels[level]
         if level == len(levels) - 1:
@@ -213,8 +293,8 @@ def walk_items(arr: Any, levels: list[str], leaf: Callable[[Any, str], Any],
 def item_udf(fn: Callable, key: str, levels: list[str], unpack: Callable[..., tuple[Any, dict]]):
     """Arrow UDF over the WHOLE outer array of an array-item key: the error
     type of each item, nested one list level per array level of ``key``,
-    which the compiler's lambdas pick by index.  ``unpack`` gives the
-    row's ``(array, context row)``; a NULL array gives NULL."""
+    which the compiler zips into its lambdas.  ``unpack`` gives the row's
+    ``(array, context row)``; a NULL array gives NULL."""
     wants = wants_context(fn)
 
     def run(*inputs):
@@ -287,12 +367,11 @@ def token_item_rules(
     fns: list[Callable],
     *,
     op: Optional[Column] = None,
-    indexed: bool = False,
     context: Optional[tuple[Column, Callable[[Any], dict]]] = None,
 ) -> Column:
-    """Violations of the elements ``elems`` (``array<variant>``) of a JSON
-    array under the item key ``key``, named ``name.<i>`` when ``indexed``,
-    else ``name``.  Per element the built-in rules and ``@spark_rule`` fns
+    """Violations of the elements ``elems`` (``array<variant>``) of a
+    ``$each`` array under the item key ``key``, each named ``name``.  Per
+    element the built-in rules and ``@spark_rule`` fns
     give one coalesced error inside one ``transform`` lambda; where they
     give none, the first Python fn's error, from one Arrow UDF over the
     whole array.  ``op`` is the modifier operator of the row and
@@ -308,10 +387,7 @@ def token_item_rules(
         )
         return null_violation() if err is None else err
 
-    if indexed:
-        expr_arr = F.transform(elems, lambda e, i: elem_err(e, F.concat(name, F.lit("."), i.cast("string"))))
-    else:
-        expr_arr = F.transform(elems, lambda e: elem_err(e, name))
+    expr_arr = F.transform(elems, lambda e: elem_err(e, name))
     if not py_fns:
         return F.filter(expr_arr, lambda x: x.isNotNull())
 
@@ -334,8 +410,7 @@ def token_item_rules(
                 et = fn(val, FieldContext(key, val, row)) if w else fn(val)
                 if et is not None:
                     viol = dict.fromkeys(field_names)
-                    viol.update(name=f"{name}.{i}" if indexed else name, type=et,
-                                value=display_token(tok))
+                    viol.update(name=name, type=et, value=display_token(tok))
                     out.append(viol)
                     break
         return out

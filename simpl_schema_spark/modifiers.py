@@ -25,10 +25,12 @@ when the schema has required keys, ONE ``groupBy(doc)`` over the upsert
 and the keys with a value, and ``array_except`` of the compile-time
 required-key list against present ∪ ancestors(valued) is exploded into
 ``required`` rows — the relational form of getKeysWithValueInObj,
-``src/utility/index.ts:46-64``.  Object-valued ``$set`` expansion is a
-union of projections over the same input; the only other shuffle is the
-join that attaches a document's entries, paid only when a cross-field
-validator exists.
+``src/utility/index.ts:46-64``.  A key under optional objects is listed
+only where each of them is among ancestors(valued): an upsert creates no
+other object, as a document without it has none.  Object-valued ``$set``
+expansion is a union of projections over the same input; the only other
+shuffle is the join that attaches a document's entries, paid only when a
+cross-field validator exists.
 ``clean_modifier_table`` is one cleaning projection over the decoded
 table, plus,
 when autoValues exist, one ``groupBy(doc)`` that runs the Arrow UDF once
@@ -44,9 +46,9 @@ DataFrame operations run per call.
 The value rules of each key are the shared rule table
 (``compiler/rules.py``) over a JSON-token view that carries the row's
 operator: bounds are skipped under ``$inc`` and ``$currentDate`` checks
-``now``.  Custom validators run through the JSON-token chain of
-``compiler/validators.py``, shared with JSON documents.  Two-argument
-Python validators and autoValues get the one ``FieldContext``, whose
+``now``.  Custom validators run through the modifier rows' token chain
+of ``compiler/validators.py``.  Two-argument Python validators and
+autoValues get the one ``FieldContext``, whose
 ``field()``/``sibling_field()``/``parent_field()`` read the document's
 decoded operator entries (reference getFieldInfo over the mongoObject),
 dotted paths walking into object values.
@@ -56,13 +58,12 @@ from __future__ import annotations
 
 import copy
 import json
-from functools import partial
+from functools import partial, reduce
 from typing import Any, Callable, Iterable, Iterator, NamedTuple
 
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from .cleaning import _Cleaner, resolve_clean_options
-from .compiler.compile import is_spark_rule, wants_context
 from .compiler.memo import compiled
 from .compiler.rules import (
     OBJECT,
@@ -79,9 +80,11 @@ from .compiler.validators import (
     FieldContext,
     arrow_udf,
     decode_token,
+    is_spark_rule,
     token_custom_rules,
     token_customs,
     token_item_rules,
+    wants_context,
 )
 from .errors import ErrorTypes, VIOLATION_SCHEMA
 from .schema.schema import SimpleSchema
@@ -324,8 +327,14 @@ def _modifier_rule_forest(schema: SimpleSchema) -> dict:
     # ---- upsert required-injection -------------------------------------------
     # for upsert $set/$setOnInsert docs: every non-optional key neither set
     # non-null, nor ancestor-created ("a.b" with value ⇒ "a" satisfied),
-    # fires required (requiredValidator.ts:41-60 + doValidation.ts:64-70)
+    # fires required (requiredValidator.ts:41-60 + doValidation.ts:64-70),
+    # where each of its optional ancestors is created, as in documents
     required = [k for k in non_optional if "$" not in k]
+    optional_ancestors = {
+        k: [a for a in (k.rsplit(".", n)[0] for n in range(1, k.count(".") + 1))
+            if a in alts_of and is_optional(alts_of[a])]
+        for k in required
+    }
     upsert = None
     if required:
         # one aggregate per upsert document: keys explicitly set — even to
@@ -346,10 +355,16 @@ def _modifier_rule_forest(schema: SimpleSchema) -> dict:
                 lambda n: F.array_join(F.slice(segs, 1, n), "."),
             )
 
-        satisfied = F.array_union(
-            F.col("present"), F.flatten(F.transform(F.col("valued"), with_ancestors))
-        )
-        missing = F.array_except(F.array(*[F.lit(k) for k in required]), satisfied)
+        created = F.flatten(F.transform(F.col("valued"), with_ancestors))
+        satisfied = F.array_union(F.col("present"), created)
+        candidates = F.array(*[
+            F.when(reduce(lambda x, y: x & y, [F.array_contains(created, a) for a in ancs]), F.lit(k))
+            if ancs else F.lit(k)
+            for k, ancs in optional_ancestors.items()
+        ])
+        if any(optional_ancestors.values()):
+            candidates = F.array_compact(candidates)
+        missing = F.array_except(candidates, satisfied)
         rows = [
             F.explode(missing).alias("name"),
             F.lit(ErrorTypes.REQUIRED).alias("type"),

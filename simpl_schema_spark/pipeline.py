@@ -50,9 +50,9 @@ def clean_and_validate(
     converted = tuple((k, t.simpleString()) for k, t in cleaner.converted.items())
     origs = [f"__orig_{k}" for k in cleaner.converted]
 
-    def build() -> tuple[Column, list]:
+    def build() -> Column:
         rule_schema = T.StructType([f for f in cleaned.schema.fields if f.name not in origs])
-        viols, pandas_rules = compile_violations(
+        viols = compile_violations(
             schema, rule_schema, keys=keys, ignore=ignore, extra_key_policy=extra_key_policy
         )
         for key, orig_dtype in cleaner.converted.items():
@@ -73,12 +73,10 @@ def clean_and_validate(
                 ),
             )
             viols = F.when(conv_failed, patched).otherwise(viols)
-        return viols, pandas_rules
+        return viols
 
-    col, pandas_rules = compiled(
+    col = compiled(
         schema, "clean_and_validate", cleaned.schema.simpleString(),
         (keys, ignore, extra_key_policy, converted), build,
     )
-    return _attach_violations(
-        cleaned, schema, col, pandas_rules, violations_col, drop=origs
-    )
+    return _attach_violations(cleaned, schema, col, violations_col, drop=origs)

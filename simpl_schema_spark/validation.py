@@ -23,11 +23,10 @@ from typing import Any, Callable, Iterable, Optional
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from .arrowsafe import arrow_inputs
-from .cleaning import _array_levels
-from .compiler.compile import compile_violations, wants_context
+from .compiler.compile import compile_violations
 from .compiler.memo import compiled
 from .compiler.rules import generic_key
-from .compiler.validators import arrow_udf, item_udf, value_udf
+from .compiler.validators import arrow_udf
 from .errors import VIOLATION_FIELDS, VIOLATION_SCHEMA
 from .schema.schema import SimpleSchema
 
@@ -37,24 +36,6 @@ __all__ = [
     "ValidationResult",
     "validate",
 ]
-
-
-def _apply_pandas_rules(df: DataFrame, rules) -> DataFrame:
-    """Attach the Python validators' error-type columns, ONE Arrow UDF per
-    rule (``compiler/validators.py``).  The user fn runs per value (per
-    Series when marked ``vectorized``); an array-item rule runs it per item
-    of the whole outer array."""
-    for rule in rules:
-        context = rule.fn if wants_context(rule.fn) else None
-        if rule.elementwise:
-            head, levels = _array_levels(rule.key)
-            cols, unpack = arrow_inputs(df.schema, head, context, whole_array=True)
-            udf = item_udf(rule.fn, rule.key, levels, unpack)
-        else:
-            cols, unpack = arrow_inputs(df.schema, rule.path, context)
-            udf = value_udf(rule.fn, rule.key, unpack)
-        df = df.withColumn(rule.column_name, udf(*cols))
-    return df
 
 
 def with_violations(
@@ -71,30 +52,24 @@ def with_violations(
 
     The forest comes from the compile cache (``compiler/memo.py``), keyed
     on the schema's content, the input StructType and keys/ignore/policy."""
-    col, pandas_rules = compiled(
+    col = compiled(
         schema, "violations", df.schema.simpleString(), (keys, ignore, extra_key_policy),
         lambda: compile_violations(
             schema, df.schema, keys=keys, ignore=ignore, extra_key_policy=extra_key_policy
         ),
     )
-    return _attach_violations(df, schema, col, pandas_rules, violations_col)
+    return _attach_violations(df, schema, col, violations_col)
 
 
 def _attach_violations(
     df: DataFrame,
     schema: SimpleSchema,
     col: Column,
-    pandas_rules: list,
     violations_col: str,
     drop: Iterable[str] = (),
 ) -> DataFrame:
-    """``df`` plus the violations column: the Python-validator columns the
-    forest reads are added and dropped again, as are the ``drop`` helper
-    columns, and the doc validators' violations follow the field ones."""
-    drop = list(drop)
-    if pandas_rules:
-        df = _apply_pandas_rules(df, pandas_rules)
-        drop += [r.column_name for r in pandas_rules]
+    """``df`` plus the violations column, without the ``drop`` helper
+    columns; the doc validators' violations follow the field ones."""
     out = df.withColumn(violations_col, col)
     if drop:
         out = out.drop(*drop)

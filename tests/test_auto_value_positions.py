@@ -17,7 +17,8 @@ where the engine once had a walker per kind of key:
 - ``@spark_auto_value`` fns are skipped on every key.
 
 Document mode: an opaque Python autoValue may return an object for a
-struct column.
+struct column, and a value it returns after ``ctx.unset()`` is set, as in
+modifier mode.
 """
 
 import json
@@ -222,3 +223,25 @@ class TestStructAutoValue:
         assert dict(out.dtypes)["o"] == "struct<a:bigint>"
         got = {r.id: None if r.o is None else r.o.asDict() for r in out.collect()}
         assert got == {1: {"a": 7}, 2: {"a": 2}, 3: None, 4: None}
+
+
+class TestUnsetThenReturn:
+    def test_returned_value_wins_in_both_modes(self, spark):
+        # AutoValueRunner.ts:100-147: the unset removes the value, then the
+        # returned value is set
+        def replace(ctx):
+            if ctx.value == "old":
+                ctx.unset()
+                return "new"
+            return ctx.UNCHANGED
+
+        ss = SimpleSchema(
+            {
+                "id": {"type": SimpleSchema.Integer, "optional": True},
+                "s": {"type": str, "optional": True, "autoValue": replace},
+            }
+        )
+        typed = clean(spark.createDataFrame([(1, "old"), (2, "keep")], "id bigint, s string"), ss)
+        assert sorted((r.id, r.s) for r in typed.collect()) == [(1, "new"), (2, "keep")]
+        got = _cleaned(spark, [(1, "$set", "s", '"old"', False), (2, "$set", "s", '"keep"', False)], ss)
+        assert got == [(1, "$set", "s", '"new"'), (2, "$set", "s", '"keep"')]

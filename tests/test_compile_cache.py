@@ -99,7 +99,7 @@ class TestSharing:
         df = spark.createDataFrame([(2.0,)], "n double")
         for bound in (1, 1.0):
             ss = SimpleSchema({"n": {"type": float, "max": bound}})
-            col, _ = compile_violations(ss, df.schema)
+            col = compile_violations(ss, df.schema)
             fresh = _viols(df.withColumn("violations", col))
             assert _viols(with_violations(df, ss)) == fresh
         assert len(memo._entries) == 2
@@ -109,7 +109,7 @@ class TestSharing:
         got = []
         for flags in (0, re.IGNORECASE):
             ss = SimpleSchema({"a": {"type": str, "regEx": re.compile("^[a-z]+$", flags)}})
-            col, _ = compile_violations(ss, df.schema)
+            col = compile_violations(ss, df.schema)
             fresh = [(v.name, v.type) for r in df.withColumn("v", col).collect() for v in r.v]
             cached = [(v.name, v.type) for r in with_violations(df, ss).collect() for v in r.violations]
             assert cached == fresh

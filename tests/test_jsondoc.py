@@ -251,3 +251,35 @@ class TestRequiredUnderOptionalObject:
         table = violations_table(typed, ss, id_cols=["doc_id"], extra_key_policy="ignore")
         got_typed = sorted((r.doc_id, r.name, r.type) for r in table.collect())
         assert run(spark, docs, ss) == got_typed == [(2, "meta.k", "required")]
+
+
+class TestJsonArraysOfObjects:
+    """Keys under arrays of objects, checked by the typed tables' traversal."""
+
+    def test_python_item_validator_at_depth(self, spark):
+        # the validator's results are zipped into the lambdas level by
+        # level; a value that is no array, where the schema has one, is
+        # skipped like a NULL array
+        def odd(v):
+            return "notAllowed" if isinstance(v, int) and v % 2 else None
+
+        ss = SimpleSchema(
+            {
+                "items": SimpleSchema.Array,
+                "items.$": dict,
+                "items.$.tags": {"type": SimpleSchema.Array, "optional": True},
+                "items.$.tags.$": {"type": int, "custom": odd},
+            }
+        )
+        got = run(
+            spark,
+            ['{"items": [{"tags": [2, 3]}, {"tags": 5}, {"tags": [7, "x"]}, {}]}',
+             '{"items": []}', '{"items": [null]}'],
+            ss,
+        )
+        assert got == [
+            (0, "items.0.tags.1", "notAllowed"),
+            (0, "items.1.tags", "expectedType"),
+            (0, "items.2.tags.0", "notAllowed"),
+            (0, "items.2.tags.1", "expectedType"),
+        ]

@@ -1,10 +1,13 @@
-"""One scalar schema, one seeded record set, three input shapes.
+"""One schema, one seeded record set, several input shapes.
 
 The same records are validated as a typed table (``with_violations``), as
-JSON documents (``validate_json_column``) and as ``$set`` modifier rows
-(``validate_modifier_table``); the violation rows must agree field for
-field: ``(doc_id, name, type, value, dataType, min, max, regExp, minCount,
-maxCount)`` as multisets.
+JSON documents (``validate_json_column``) and, for scalar keys, as ``$set``
+modifier rows (``validate_modifier_table``); the violation rows must agree
+field for field: ``(doc_id, name, type, value, dataType, min, max, regExp,
+minCount, maxCount)`` as multisets.  Typed tables and JSON documents go
+through one key traversal, so their comparison also covers arrays of
+objects, a required key under an optional object, and Python (one- and
+two-argument) and ``@spark_rule`` validators on top-level and item keys.
 
 Mode-specific rules, left out of the comparison:
 
@@ -17,6 +20,8 @@ Mode-specific rules, left out of the comparison:
 - A whole-array ``$set`` checks the array's own rules (minCount/maxCount)
   but not its items; modifier mode validates items on concrete-index rows
   (``tags.0``), so the ``$set`` form carries one ``tags.<i>`` row per item.
+  Modifier rows are not compared on the validator schema: they keep a
+  forest of their own per generic key.
 - Modifier rows report an array's payload as the token was written, so the
   ``$set`` tokens are compact JSON (the JSON-document mode re-serializes
   its extraction, the typed mode renders ``to_json``).
@@ -25,7 +30,9 @@ Mode-specific rules, left out of the comparison:
   and ``$set`` tokens show ``40.0``; number payloads are compared as
   numbers between the typed and JSON modes.
 - KEY_NOT_IN_SCHEMA: no extra keys are generated; the typed table's
-  ``doc_id`` column is ignored with ``extra_key_policy="ignore"``.
+  ``doc_id`` column is ignored with ``extra_key_policy="ignore"``.  A typed
+  table checks its top-level columns only, a JSON document every declared
+  object, array items included.
 """
 
 import datetime as dt
@@ -34,6 +41,9 @@ import random
 import re
 from collections import Counter
 
+from pyspark.sql import functions as F
+
+from simpl_schema_spark.compiler.compile import spark_rule
 from simpl_schema_spark.errors import ErrorTypes
 from simpl_schema_spark.jsondoc import validate_json_column
 from simpl_schema_spark.modifiers import validate_modifier_table
@@ -188,3 +198,151 @@ def test_float_bound_payloads_render_like_js(spark):
         )
     ]
     assert got == [[("score", ErrorTypes.MAX_NUMBER, "2.5", "1")]] * 3
+
+
+@spark_rule
+def _not_zero(value, ctx):
+    return F.when(value == 0, F.lit("notAllowed"))
+
+
+def validator_schema() -> SimpleSchema:
+    # the Python validators are defined here so the UDFs pickle them by value
+    def _odd(v):
+        return "notAllowed" if v is not None and v % 2 else None
+
+    def _no_admin(v):
+        return "notAllowed" if v == "admin" else None
+
+    def _end_after_start(v, ctx):
+        start = ctx.field("start")
+        return "minNumber" if v is not None and start is not None and v < start else None
+
+    return SimpleSchema(
+        {
+            "user": {"type": str, "custom": _no_admin},
+            "start": {"type": SimpleSchema.Integer},
+            "end": {"type": SimpleSchema.Integer, "optional": True, "custom": _end_after_start},
+            "qty": {"type": SimpleSchema.Integer, "optional": True, "custom": _not_zero},
+            "meta": {"type": dict, "optional": True},
+            "meta.k": {"type": str},
+            "items": {"type": SimpleSchema.Array, "optional": True},
+            "items.$": dict,
+            "items.$.n": {"type": SimpleSchema.Integer, "max": 5, "custom": _odd},
+        }
+    )
+
+
+def validator_records(seed: int = 5, n: int = 120) -> list[dict]:
+    rng = random.Random(seed)
+
+    def maybe(value, p_null=0.15):
+        return None if rng.random() < p_null else value
+
+    def item():
+        return None if rng.random() < 0.1 else {"n": maybe(rng.randint(0, 9))}
+
+    return [
+        {
+            "doc_id": i,
+            "user": maybe(rng.choice(["admin", "bob", "eve"])),
+            "start": maybe(rng.randint(0, 10)),
+            "end": maybe(rng.randint(0, 10), 0.3),
+            "qty": maybe(rng.randint(0, 3), 0.3),
+            "meta": maybe({"k": maybe("v", 0.4)}, 0.4),
+            "items": maybe([item() for _ in range(rng.randint(0, 3))], 0.3),
+        }
+        for i in range(n)
+    ]
+
+
+def _json_doc(r: dict) -> str:
+    return json.dumps({k: v for k, v in r.items() if k != "doc_id" and v is not None})
+
+
+def test_typed_and_json_agree_with_validators_and_arrays_of_objects(spark):
+    ss = validator_schema()
+    recs = validator_records()
+    typed_df = spark.createDataFrame(
+        [tuple(r.values()) for r in recs],
+        "doc_id bigint, user string, start bigint, end bigint, qty bigint, "
+        "meta struct<k: string>, items array<struct<n: bigint>>",
+    )
+    typed = _rows(violations_table(typed_df, ss, id_cols=["doc_id"], extra_key_policy="ignore"))
+    docs = spark.createDataFrame(
+        [(r["doc_id"], _json_doc(r)) for r in recs], "doc_id bigint, json_blob string"
+    )
+    from_json = _rows(validate_json_column(docs, ss))
+
+    names = {(k[1].split(".")[0], k[2]) for k in typed}
+    assert names >= {
+        ("user", ErrorTypes.REQUIRED), ("user", ErrorTypes.VALUE_NOT_ALLOWED),
+        ("end", ErrorTypes.MIN_NUMBER), ("qty", ErrorTypes.VALUE_NOT_ALLOWED),
+        ("meta", ErrorTypes.REQUIRED), ("items", ErrorTypes.MAX_NUMBER),
+        ("items", ErrorTypes.VALUE_NOT_ALLOWED), ("items", ErrorTypes.REQUIRED),
+    }, names
+    assert from_json == typed
+
+
+def _typed_and_json(spark, ss, ddl, rows, docs):
+    typed = violations_table(
+        spark.createDataFrame(rows, ddl), ss, id_cols=["doc_id"], extra_key_policy="ignore"
+    )
+    blobs = spark.createDataFrame(
+        [(row[0], doc) for row, doc in zip(rows, docs)], "doc_id bigint, json_blob string"
+    )
+    return [
+        sorted((r.doc_id, r.name, r.type) for r in df.collect())
+        for df in (typed, validate_json_column(blobs, ss))
+    ]
+
+
+class TestOneTraversal:
+    """Outcomes the shared traversal settles for JSON documents as for
+    typed tables."""
+
+    def test_keys_under_arrays_of_objects(self, spark):
+        ss = SimpleSchema(
+            {"items": SimpleSchema.Array, "items.$": dict, "items.$.n": {"type": int, "max": 5}}
+        )
+        typed, docs = _typed_and_json(
+            spark, ss, "doc_id bigint, items array<struct<n: bigint>>",
+            [(0, [{"n": 9}, {"n": 2}])], ['{"items": [{"n": 9}, {"n": 2, "x": 1}]}'],
+        )
+        assert typed == [(0, "items.0.n", "maxNumber")]
+        # an undeclared member is found in a document only
+        assert docs == typed + [(0, "items.1.x", "keyNotInSchema")]
+
+    def test_null_element_of_an_array_of_objects_reports_nothing(self, spark):
+        ss = SimpleSchema({"items": SimpleSchema.Array, "items.$": dict, "items.$.n": int})
+        typed, docs = _typed_and_json(
+            spark, ss, "doc_id bigint, items array<struct<n: bigint>>",
+            [(0, [{"n": 1}, None])], ['{"items": [{"n": 1}, null]}'],
+        )
+        assert typed == docs == []
+
+    def test_missing_any_key_is_required(self, spark):
+        ss = SimpleSchema({"a": SimpleSchema.Any, "b": {"type": str, "optional": True}})
+        typed, docs = _typed_and_json(
+            spark, ss, "doc_id bigint, a string, b string", [(0, None, "x")], ['{"b": "x"}'],
+        )
+        assert typed == docs == [(0, "a", "required")]
+
+    def test_required_under_optional_object_in_every_mode(self, spark):
+        # an upsert creates only the objects its keys reach: `meta.k` is
+        # required where `meta` is created, as in a typed row or a document
+        ss = SimpleSchema(
+            {"name": str, "meta": {"type": dict, "optional": True}, "meta.k": str,
+             "meta.lang": {"type": str, "optional": True}}
+        )
+        typed, docs = _typed_and_json(
+            spark, ss, "doc_id bigint, name string, meta struct<k: string, lang: string>",
+            [(1, "ab", None), (2, "ab", {"k": None, "lang": "en"})],
+            ['{"name": "ab"}', '{"name": "ab", "meta": {"lang": "en"}}'],
+        )
+        mods = spark.createDataFrame(
+            [(1, "$set", "name", '"ab"', True),
+             (2, "$set", "meta.lang", '"en"', True), (2, "$set", "name", '"ab"', True)],
+            "doc_id bigint, op string, key_path string, value string, upsert boolean",
+        )
+        upserts = sorted((r.doc_id, r.name, r.type) for r in validate_modifier_table(mods, ss).collect())
+        assert typed == docs == upserts == [(2, "meta.k", "required")]

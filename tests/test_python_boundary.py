@@ -92,3 +92,37 @@ def test_modifiers_do_not_tell_default_values_apart():
     read |= {n.attr for n in ast.walk(tree) if isinstance(n, ast.Attribute)}
     read |= {n.value for n in ast.walk(tree) if isinstance(n, ast.Constant)}
     assert not read & {"is_default", "default_value"}
+
+
+def _imported_names(tree) -> set:
+    return {
+        a.name.rsplit(".", 1)[-1]
+        for n in ast.walk(tree) if isinstance(n, (ast.Import, ast.ImportFrom))
+        for a in n.names
+    }
+
+
+def _defined_names(tree) -> set:
+    return {
+        n.name for n in ast.walk(tree)
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+    }
+
+
+def test_json_documents_share_the_key_traversal():
+    # jsondoc builds no rules of its own: the required gate, the value
+    # rules and the custom-validator chains are the traversal's
+    # (compiler/compile.RuleCompiler), as for typed tables
+    tree = ast.parse((PKG / "jsondoc.py").read_text())
+    assert not _imported_names(tree) & {
+        "is_optional", "value_error", "token_custom_rules", "token_item_rules"
+    }
+
+
+def test_python_validators_have_one_inline_path():
+    # no deferred helper columns: every Python validator is an inline UDF
+    # Column of the forest
+    compile_tree = ast.parse((PKG / "compiler" / "compile.py").read_text())
+    validation_tree = ast.parse((PKG / "validation.py").read_text())
+    assert "_PandasRule" not in _defined_names(compile_tree)
+    assert "_apply_pandas_rules" not in _defined_names(validation_tree)

@@ -823,7 +823,10 @@ class TestVariantSparkRules:
             (r.doc_id, r.name, r.type)
             for r in validate_json_column(df, ss).collect()
         )
-        assert got == [(0, "v", "unlucky"), (1, "v", "unlucky")]
+        # no alternative passes, so the LAST one's error is reported
+        # (validateField.ts:253-255), as for typed tables: the string "13"
+        # fails the Integer alternative's type check
+        assert got == [(0, "v", "unlucky"), (1, "v", "expectedType")]
 
     def test_modifier_object_typed_key(self, spark):
         from pyspark.sql import functions as F
