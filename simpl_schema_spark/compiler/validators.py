@@ -268,14 +268,15 @@ def array_levels(key: str) -> tuple[str, list[str]]:
 def walk_items(arr: Any, levels: list[str], leaf: Callable[[Any, str], Any],
                rebuild: Optional[Callable[[Any, str, Any], Any]] = None) -> Any:
     """``leaf(element, path)`` at every innermost element of the nested
-    array ``arr`` (None, or a value that is no array, stays None); ``levels[i]`` is the path from a level
-    ``i`` element to the next array, the last one to the value.  Returns
+    array ``arr`` (None, or a value that is no array, stays None);
+    ``levels[i]`` is the path from a level ``i`` element to the next
+    array, the last one to the value.  Returns
     the leaf results nested like the arrays, or with ``rebuild(element,
     path, inner)`` each outer element rebuilt around its new inner array
     (an element without one is kept)."""
 
     def walk(arr, level):
-        if arr is None or isinstance(arr, (str, bytes, dict)) or not hasattr(arr, "__len__"):
+        if isinstance(arr, (str, bytes, dict)) or not hasattr(arr, "__len__"):
             return None
         path = levels[level]
         if level == len(levels) - 1:
